@@ -625,6 +625,16 @@ object IriCanonicalizer {
     verifyPairsTyped(raw, jaccardThreshold).distinct()
   }
 
+  /** Fresh-id count at or below which the stored band scan is pre-filtered
+    * by an EXPLICITLY broadcast semi join on the fresh band keys: 8 keys ×
+    * 16 B × hashed-relation overhead ≈ low tens of MB at the gate — the
+    * same byte-reasoned discipline as the pipeline's urlBroadcastKeyLimit.
+    * Above it (a bootstrap-sized increment) the hint would force a
+    * multi-hundred-MB broadcast past Spark's own estimator, so the stored
+    * side joins UNFILTERED — the shuffle the recompute path always paid,
+    * still minus its domain signature pass. */
+  val freshKeyBroadcastLimit: Long = 200000L
+
   /** [[verifiedPairs]](ids = stored ∪ fresh, leftIds = fresh) for the
     * incremental case where the accumulated side's signatures are
     * PERSISTED: candidate pairs touching a fresh id, with ZERO
@@ -645,16 +655,6 @@ object IriCanonicalizer {
     * scan of the store pre-filtered BEFORE the pair exchange + O(candidate
     * pairs) verification. Nothing scales with the accumulated domain
     * except the narrow scan's IO. */
-  /** Fresh-id count at or below which the stored band scan is pre-filtered
-    * by an EXPLICITLY broadcast semi join on the fresh band keys: 8 keys ×
-    * 16 B × hashed-relation overhead ≈ low tens of MB at the gate — the
-    * same byte-reasoned discipline as the pipeline's urlBroadcastKeyLimit.
-    * Above it (a bootstrap-sized increment) the hint would force a
-    * multi-hundred-MB broadcast past Spark's own estimator, so the stored
-    * side joins UNFILTERED — the shuffle the recompute path always paid,
-    * still minus its domain signature pass. */
-  val freshKeyBroadcastLimit: Long = 200000L
-
   def verifiedPairsStored(fresh: DataFrame, storedSigs: DataFrame,
                           jaccardThreshold: Double,
                           freshBroadcastLimit: Long = freshKeyBroadcastLimit): DataFrame = {

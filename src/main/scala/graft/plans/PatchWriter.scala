@@ -68,6 +68,7 @@ object PatchWriter {
   /** patches: (op + quad cols). Returns number of files written. */
   def write(spark: SparkSession, patches: DataFrame, outDir: String,
             checkpoint: String, maxq: Int = 100000): Long = {
+    import spark.implicits._
     val P = math.max(spark.sparkContext.defaultParallelism * 2, 16)
 
     val quadColumns = patches.columns.filter(_ != "bucket").map(col).toSeq
@@ -77,39 +78,39 @@ object PatchWriter {
 
     // pass 1: per-graph counts -> minimal data-proportional sub fan-out.
     // The graph dimension is tiny relative to the quads (one row per graph;
-    // even 10^6 graphs broadcast in tens of MB), so it rides along as a
-    // broadcast — never an exchange of the quad stream.
-    val gcounts = timed("patch.gcounts") { keyed0.groupBy("g_b64").agg(count(lit(1)).as("gcnt"))
-      .withColumn("nSubs",
-        greatest(ceil(col("gcnt") / lit(maxq.toDouble)), lit(1L)).cast("int"))
-      .select("g_b64", "nSubs")
-      .localCheckpoint() }
-    val keyed = keyed0.join(broadcast(gcounts), Seq("g_b64"))
-      .withColumn("sub", pmod(col("h"), col("nSubs")).cast("int"))
+    // even 10^6 graphs are tens of MB), so it is collected once and rides
+    // along as a broadcast — never an exchange of the quad stream.
+    val nSubs: Seq[(String, Int)] = timed("patch.gcounts") {
+      keyed0.groupBy("g_b64").agg(count(lit(1))).as[(String, Long)].collect().toSeq
+    }.map { case (g, n) => (g, math.max((n + maxq - 1) / maxq, 1L).toInt) }
 
     // pass 2: per-(graph, sub) counts -> first-serial offsets (prefix sum of
     // per-sub file counts over a tiny table: nSubs rows per graph, windowed
     // per graph => parallel across graphs). A single-sub graph's offset is
     // 0 by construction, so this pass scans ONLY the rows of graphs that
     // genuinely span multiple files — when no graph does (the common small-
-    // batch case), the second full scan disappears entirely.
-    val smallOffsets = gcounts.filter(col("nSubs") === 1)
-      .select(col("g_b64"), lit(0).cast("int").as("sub"), lit(0L).as("serial0"))
-    val bigGraphs = gcounts.filter(col("nSubs") > 1)
-    val offsets = timed("patch.offsets") {
-      (if (bigGraphs.isEmpty) smallOffsets
-       else {
-         val counts = keyed
-           .join(broadcast(bigGraphs.select("g_b64")), Seq("g_b64"), "left_semi")
-           .groupBy("g_b64", "sub").agg(count(lit(1)).as("cnt"))
-           .withColumn("nFiles", ceil(col("cnt") / lit(maxq.toDouble)).cast("long"))
-         val offW = Window.partitionBy("g_b64").orderBy("sub")
-           .rowsBetween(Window.unboundedPreceding, -1)
-         smallOffsets.unionByName(counts
-           .withColumn("serial0", coalesce(sum("nFiles").over(offW), lit(0L)))
-           .select("g_b64", "sub", "serial0"))
-       }).localCheckpoint()
-    }
+    // batch case), every row is sub 0 at serial 0 and the pass, with its
+    // join, disappears entirely.
+    val bigGraphs = nSubs.filter(_._2 > 1)
+    val keyed =
+      if (bigGraphs.isEmpty) keyed0.withColumn("sub", lit(0)).withColumn("serial0", lit(0L))
+      else timed("patch.offsets") {
+        val withSub = keyed0.join(broadcast(nSubs.toDF("g_b64", "nSubs")), Seq("g_b64"))
+          .withColumn("sub", pmod(col("h"), col("nSubs")).cast("int"))
+        val counts = withSub
+          .join(broadcast(bigGraphs.map(_._1).toDF("g_b64")), Seq("g_b64"), "left_semi")
+          .groupBy("g_b64", "sub").agg(count(lit(1)).as("cnt"))
+          .withColumn("nFiles", ceil(col("cnt") / lit(maxq.toDouble)).cast("long"))
+        val offW = Window.partitionBy("g_b64").orderBy("sub")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val smallOffsets = nSubs.filter(_._2 == 1).map { case (g, _) => (g, 0, 0L) }
+          .toDF("g_b64", "sub", "serial0")
+        val offsets = smallOffsets.unionByName(counts
+            .withColumn("serial0", coalesce(sum("nFiles").over(offW), lit(0L)))
+            .select("g_b64", "sub", "serial0"))
+          .localCheckpoint()
+        withSub.join(broadcast(offsets), Seq("g_b64", "sub"))
+      }
 
     // pass 3 — THE one full-data exchange: cluster by (graph, sub), sort,
     // stream each sub straight into its final files
@@ -124,7 +125,6 @@ object PatchWriter {
     val mq = maxq
 
     timed("patch.writePass") { keyed
-      .join(broadcast(offsets), Seq("g_b64", "sub"))
       .repartition(P, col("g_b64"), col("sub"))
       .sortWithinPartitions(col("g_b64"), col("sub"), col("h"))
       .withColumn("line", NQuadFormatter.patchLine(col("op"), col("s"), col("p"),

@@ -1,7 +1,7 @@
 package graft.publish
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -12,13 +12,18 @@ import java.nio.charset.StandardCharsets
   * capability-list.xml, .well-known/resourcesync) exactly as
   * zipsynchronizer.py:111-312 and syncdirector.py:70-123 do.
   *
-  * Spark-first shape: the file inventory is read with the `binaryFile`
-  * source (distributed, executor-local IO), checksums are `md5(content)`
-  * inside the scan stage, and batch windows are per-GRAPH row_numbers (the
-  * window partitions by graph_b64 — never a global single-task sort). Zip
-  * creation is a distributed foreachPartition keyed by (graph, batch): each
-  * task streams its member files straight into the final zip. Only the tiny
-  * per-zip summary returns to the driver for the XML writes.
+  * Spark-first shape: the file inventory is ONE driver-side Hadoop
+  * `listStatus` walk of the patch tree (names, lengths and mtimes only — a
+  * Spark file source would run one parallel-listing job per batch directory,
+  * each holding more graph dirs than Spark lists on the driver, so the
+  * inventory cost grew with every batch ever written). Resources already in
+  * complete zips are dropped before any byte is read; the rest are
+  * checksummed by executor tasks that stream each file through MD5. Batch
+  * windows are per-GRAPH (the window partitions by graph_b64 — never a
+  * global single-task sort). Zip creation is a distributed pass keyed by
+  * (graph, batch): each task streams its member files straight into the
+  * final zip. Only the tiny per-zip summary returns to the driver for the
+  * XML writes.
   *
   * The reference's complete `part_def_N` vs provisional `part_end_N` split
   * (zipsynchronizer.py:133-173) is the `is_complete` flag on the last
@@ -29,25 +34,72 @@ import java.nio.charset.StandardCharsets
   */
 object ManifestBuilder {
 
+  /** One patch file as the listing sees it, before any byte is read. */
+  final case class Listed(resource: String, graph_b64: String, length: Long, lastmod: String)
+
+  private val GraphDir = "g_b64=([^/]+)/".r
+  private[publish] val IsoUtc = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
+
+  /** Every `rdf_out_*` file under `patchDir`, found by one recursive
+    * `listStatus` walk on the driver. Same rows as the `binaryFile` source
+    * with `recursiveFileLookup` gave: `_`/`.` entries skipped, the file's
+    * qualified path string as `resource`, graph from the first `g_b64=`
+    * directory, and UTC `lastmod` to the second. The walk touches only names, lengths and
+    * mtimes — no permission lookup, no block locations, which on the local
+    * file system each cost a process spawn. F6 analogue (split-graphs.sh:
+    * 78-85): files with no graph (the dump-report trailer) are not
+    * publishable resources. */
+  def list(spark: SparkSession, patchDir: String): Seq[Listed] = {
+    val root = new Path(patchDir)
+    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Listed]
+    def walk(dir: Path): Unit = f.listStatus(dir).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) ()
+      else if (st.isDirectory) walk(st.getPath)
+      else if (name.startsWith("rdf_out_")) {
+        val res = st.getPath.toString
+        GraphDir.findFirstMatchIn(res).foreach(m => out += Listed(res, m.group(1),
+          st.getLen, IsoUtc.format(java.time.Instant.ofEpochMilli(st.getModificationTime))))
+      }
+    }
+    walk(f.makeQualified(root))
+    out.toSeq
+  }
+
+  /** `files` plus the md5 of each file's content, streamed by executor
+    * tasks — the only step that reads patch bytes. */
+  def checksummed(spark: SparkSession, files: Dataset[Listed]): DataFrame = {
+    import spark.implicits._
+    val hconf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    files.map { l =>
+      val p = new Path(l.resource)
+      (l.resource, l.graph_b64, l.length, md5Hex(p.getFileSystem(hconf.value), p), l.lastmod)
+    }.toDF("resource", "graph_b64", "length", "md5", "lastmod")
+  }
+
+  /** Hex MD5 of a file's bytes, streamed in 64 KB reads. */
+  private[publish] def md5Hex(f: FileSystem, p: Path): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val in = f.open(p)
+    val buf = new Array[Byte](65536)
+    try {
+      var n = in.read(buf)
+      while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
+    } finally in.close()
+    md.digest().map("%02x".format(_)).mkString
+  }
+
   /** Per-resource manifest over a committed patch directory:
     * (resource, graph_b64, length, md5, lastmod, batch, is_complete).
     * Batch ids are assigned per graph (partitioned window — the global
     * Window.orderBy of the first cut funneled every file through one task). */
   def build(spark: SparkSession, patchDir: String, filesPerBatch: Int = 1000): DataFrame = {
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "rdf_out_*")
-      .option("recursiveFileLookup", "true")
-      .load(patchDir)
+    import spark.implicits._
     val w = Window.partitionBy(col("graph_b64")).orderBy(col("resource"))
-    val inv = files.select(
-        col("path").as("resource"),
-        regexp_extract(col("path"), "g_b64=([^/]+)/", 1).as("graph_b64"),
-        col("length"),
-        md5(col("content")).as("md5"),
-        date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("lastmod"))
-      // F6 analogue (split-graphs.sh:78-85): info-only files with no graph
-      // (the dump-report trailer) are not publishable resources
-      .filter(col("graph_b64") =!= "")
+    val inv = checksummed(spark, list(spark, patchDir).toDS())
       .withColumn("rn", row_number().over(w))
       .withColumn("batch", floor((col("rn") - 1) / filesPerBatch).cast("long"))
     val totals = inv.groupBy("graph_b64", "batch").agg(count(lit(1)).as("n_in_batch"))
@@ -99,9 +151,6 @@ object ZipPublisher {
 
   private val XmlNs =
     """xmlns="http://www.sitemaps.org/schemas/sitemap/0.9" xmlns:rs="http://www.openarchives.org/rs/terms/""""
-
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -242,27 +291,28 @@ object ZipPublisher {
               onPublishedForTests: () => Unit = () => (),
               metadataThreads: Int = 8): Seq[ZipInfo] = {
     import spark.implicits._
-    val f = fs(spark, sinkDir)
+    val f = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.mkdirs(new Path(sinkDir))
     val stateDir = s"$sinkDir/_published"
     val hasState = graft.state.CompactedAppendTable.exists(spark, stateDir)
 
-    // inventory minus already-definitively-published resources; when the
-    // pipeline's graph-folder index is supplied, the fan-out is driven by it
-    // (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
-    val invAll = timed("inventory")(ManifestBuilder.build(spark, patchDir, filesPerZip))
-      .drop("batch", "is_complete")
-    val inv0 = graphIndex match {
-      case None => invAll
-      case Some(gi) => invAll.join(
+    // inventory minus already-definitively-published resources, pruned
+    // BEFORE the checksum pass so published files are never read again; when
+    // the pipeline's graph-folder index is supplied, the fan-out is driven
+    // by it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
+    val listed = timed("inventory")(ManifestBuilder.list(spark, patchDir)).toDF()
+    val inGraphs = graphIndex match {
+      case None => listed
+      case Some(gi) => listed.join(
         broadcast(gi.select(col("g_b64").as("graph_b64")).distinct()),
         Seq("graph_b64"), "left_semi")
     }
-    val inv =
-      if (!hasState) inv0
-      else inv0.join(
+    val unpublished =
+      if (!hasState) inGraphs
+      else inGraphs.join(
         graft.state.CompactedAppendTable.read(spark, stateDir).get.select("resource"),
         Seq("resource"), "left_anti")
+    val inv = ManifestBuilder.checksummed(spark, unpublished.as[ManifestBuilder.Listed])
 
     // Greedy per-graph windows over the unpublished remainder: a window
     // closes at `filesPerZip` files OR `maxZipBytes` member bytes, whichever
@@ -317,10 +367,8 @@ object ZipPublisher {
       windowed0.localCheckpoint() // consumed 3x below (end check, naming, zip build)
     }
 
-    // existing sink state: tiny per-graph maps (one entry per graph)
-    val prevEnd: Map[String, (Int, Set[String])] = timed("scanEndParts")(existingEndParts(spark, sinkDir))
-    val defIdx: Map[String, Int] = timed("scanDefIdx")(existingMaxIndex(spark, sinkDir, "part_def_"))
-    val endIdxMax: Map[String, Int] = existingMaxIndex(spark, sinkDir, "part_end_")
+    // existing sink state: one tiny entry per graph that holds a zip
+    val sinkGraphs: Map[String, SinkGraph] = timed("scanSink")(scanSink(f, sinkDir))
 
     // J3: per-graph end-part membership as (basename, md5) pairs — a member
     // whose CONTENT changed under the same name triggers a rebuild, exactly
@@ -335,15 +383,18 @@ object ZipPublisher {
       .as[(String, Seq[String])].collect()
       .map { case (g, m) => g -> m.toSet }.toMap
     val endChanged: Set[String] = endMembership.collect {
-      case (g, members) if !prevEnd.get(g).exists(_._2 == members) => g
+      case (g, members) if !sinkGraphs.get(g).flatMap(_.endMembers).contains(members) => g
     }.toSet
 
     // zip NAME assignment in the plan (reference max-index+1 semantics,
     // zipsynchronizer.py:274-281): def name = defBase(g) + batch,
     // end name = endBase(g); a tiny per-graph base table joined in
     val baseDf = broadcast(
-      (endMembership.keySet ++ defIdx.keySet ++ endIdxMax.keySet).toSeq
-        .map(g => (g, defIdx.getOrElse(g, -1) + 1, endIdxMax.getOrElse(g, -1) + 1))
+      (endMembership.keySet ++ sinkGraphs.keySet).toSeq
+        .map { g =>
+          val s = sinkGraphs.get(g)
+          (g, s.fold(0)(_.maxDef + 1), s.fold(0)(_.maxEnd + 1))
+        }
         .toDF("graph_b64", "defBase", "endBase"))
     val assigned = windowed.join(baseDf, Seq("graph_b64"), "left")
       .withColumn("defBase", coalesce(col("defBase"), lit(0)))
@@ -387,6 +438,18 @@ object ZipPublisher {
           }
         }
         groups.map { case (g, name, complete, members) =>
+          // a zip entry is named by the member's basename; two batches
+          // written under one checkpoint repeat `rdf_out_<ckpt>-<serial>`
+          // in a graph, which ZipOutputStream would reject opaquely
+          val byName = scala.collection.mutable.HashMap.empty[String, String]
+          members.foreach { case (res, _, _, _) =>
+            val base = res.substring(res.lastIndexOf('/') + 1)
+            byName.put(base, res).foreach { other =>
+              throw new IllegalStateException(s"graph $g: zip $name would hold two " +
+                s"members named $base: $other and $res (patch batches written " +
+                "under the same checkpoint)")
+            }
+          }
           val zfs = new Path(sink).getFileSystem(hconf.value)
           val gDir = new Path(sink, g)
           zfs.mkdirs(gDir)
@@ -415,14 +478,7 @@ object ZipPublisher {
           if (!zfs.rename(tmpPath, zipPath))
             sys.error(s"zip rename failed: $tmpPath -> $zipPath")
           val st = zfs.getFileStatus(zipPath)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val zin = zfs.open(zipPath)
-          val rbuf = new Array[Byte](65536)
-          try {
-            var n = zin.read(rbuf)
-            while (n >= 0) { if (n > 0) md.update(rbuf, 0, n); n = zin.read(rbuf) }
-          } finally zin.close()
-          val md5hex = md.digest().map("%02x".format(_)).mkString
+          val md5hex = ManifestBuilder.md5Hex(zfs, zipPath)
           // ONE summary line per zip returns — NOT the manifest body: the
           // manifest is O(zip members), so collecting it made the zip-build
           // collect O(total member rows) on the driver (~150 B/member —
@@ -502,8 +558,7 @@ object ZipPublisher {
       sidecarJob.count(): Unit
     }
 
-    val nowIso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val nowIso = ManifestBuilder.IsoUtc.format(java.time.Instant.now())
     val builtInfos: Seq[ZipInfo] = built.toSeq.map {
       case (g, name, complete, n, len, md5v, lastmod) =>
         ZipInfo(g, name, complete, n, len, md5v, lastmod)
@@ -686,16 +741,8 @@ object ZipPublisher {
                              complete: Boolean = true): ZipInfo = {
     val zipPath = new Path(gDir, s"$name.zip")
     val st = f.getFileStatus(zipPath)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = f.open(zipPath)
-    val buf = new Array[Byte](65536)
-    try {
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    val md5hex = md.digest().map("%02x".format(_)).mkString
-    val lastmod = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-      .withZone(java.time.ZoneOffset.UTC)
+    val md5hex = ManifestBuilder.md5Hex(f, zipPath)
+    val lastmod = ManifestBuilder.IsoUtc
       .format(java.time.Instant.ofEpochMilli(st.getModificationTime))
     // regenerate the manifest sidecar from the zip's embedded copy if missing
     val sidecar = new Path(gDir, s"manifest_$name.xml")
@@ -737,39 +784,36 @@ object ZipPublisher {
     }
   }
 
-  /** Existing end part per graph: (index, member "basename|md5" identity
-    * pairs parsed from the sidecar's rs:md hash attributes — J3 compares
-    * resource AND checksum, zipsynchronizer.py:149-156). */
-  private def existingEndParts(spark: SparkSession, sinkDir: String): Map[String, (Int, Set[String])] = {
-    val f = fs(spark, sinkDir)
-    if (!f.exists(new Path(sinkDir))) return Map.empty
+  /** What one graph dir of the sink already holds: its highest def and end
+    * zip indices (-1 when none) and, when an end zip exists, the current end
+    * part's members as "basename|md5" identity pairs parsed from its
+    * member-list sidecar's rs:md hash attributes — J3 compares resource AND
+    * checksum, zipsynchronizer.py:149-156 (empty when the sidecar is
+    * missing, so the end part is rebuilt). */
+  private final case class SinkGraph(maxDef: Int, maxEnd: Int, endMembers: Option[Set[String]])
+
+  /** One listing pass over the sink's graph dirs; graphs with no zip are
+    * absent. */
+  private def scanSink(f: FileSystem, sinkDir: String): Map[String, SinkGraph] = {
     val memberRx =
       """<url><loc>([^<]+)</loc><lastmod>[^<]*</lastmod><rs:md hash="md5:([0-9a-f]+)"""".r
     f.listStatus(new Path(sinkDir)).filter(_.isDirectory).flatMap { d =>
-      val ends = f.listStatus(d.getPath)
-        .map(_.getPath.getName).filter(n => n.startsWith("part_end_") && n.endsWith(".zip"))
-      if (ends.isEmpty) None
-      else {
-        val idx = ends.map(n => n.stripPrefix("part_end_").stripSuffix(".zip").toInt).max
-        val listPath = new Path(d.getPath, f"part_end_$idx%05d.xml")
-        val members: Set[String] =
-          if (!f.exists(listPath)) Set.empty
-          else memberRx.findAllMatchIn(readFile(f, listPath))
-            .map(m => m.group(1) + "|" + m.group(2)).toSet
-        // stored names are basenames; compare on basenames
-        Some(d.getPath.getName -> (idx, members))
-      }
-    }.toMap
-  }
-
-  private def existingMaxIndex(spark: SparkSession, sinkDir: String, prefix: String): Map[String, Int] = {
-    val f = fs(spark, sinkDir)
-    if (!f.exists(new Path(sinkDir))) return Map.empty
-    f.listStatus(new Path(sinkDir)).filter(_.isDirectory).flatMap { d =>
-      val idxs = f.listStatus(d.getPath).map(_.getPath.getName)
+      val names = f.listStatus(d.getPath).map(_.getPath.getName)
+      def maxIndex(prefix: String): Int = names
         .filter(n => n.startsWith(prefix) && n.endsWith(".zip"))
         .map(_.stripPrefix(prefix).stripSuffix(".zip").toInt)
-      if (idxs.isEmpty) None else Some(d.getPath.getName -> idxs.max)
+        .maxOption.getOrElse(-1)
+      val (maxDef, maxEnd) = (maxIndex("part_def_"), maxIndex("part_end_"))
+      if (maxDef < 0 && maxEnd < 0) None
+      else {
+        val listName = f"part_end_$maxEnd%05d.xml"
+        val endMembers =
+          if (maxEnd < 0) None
+          else if (!names.contains(listName)) Some(Set.empty[String])
+          else Some(memberRx.findAllMatchIn(readFile(f, new Path(d.getPath, listName)))
+            .map(m => m.group(1) + "|" + m.group(2)).toSet)
+        Some(d.getPath.getName -> SinkGraph(maxDef, maxEnd, endMembers))
+      }
     }.toMap
   }
 

@@ -1,8 +1,10 @@
 package graft.publish
 
 import graft.GraftSpec
-import graft.sources.PageGen
+import graft.sources.{ExpectedKg, PageGen}
 import graft.streaming.QuadLogPipeline
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -79,6 +81,135 @@ class PublishSpec extends GraftSpec {
       s"# at checkpoint  00000000000000\n+ <http://s$i> <http://p> <http://o> <http://graph.example.org/g1> .\n"
   }
   private def exists(p: String): Boolean = new java.io.File(p).exists()
+
+  test("listed inventory == the binaryFile formulation on a bootstrap-plus-batch tree") {
+    val root = tmpDir("publist")
+    val n = 60L
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
+      canonicalize = false, maxq = 40)
+    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000")
+    pipe.incremental(1L, "20240102000000",
+      spark.createDataset(ExpectedKg.changedIndices(n, 1).map(PageGen.pageFor(_, 1))),
+      spark.createDataset(ExpectedKg.deletedIndices(n, 1).map(PageGen.urlFor)))
+    val patchDir = s"$root/patches"
+    // the oracle: the Spark file source the inventory was first written with
+    val files = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "rdf_out_*")
+      .option("recursiveFileLookup", "true")
+      .load(patchDir)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("graph_b64")).orderBy(col("resource"))
+    val inv = files.select(
+        col("path").as("resource"),
+        regexp_extract(col("path"), "g_b64=([^/]+)/", 1).as("graph_b64"),
+        col("length"),
+        md5(col("content")).as("md5"),
+        date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("lastmod"))
+      .filter(col("graph_b64") =!= "") // the dump trailer names no graph
+      .withColumn("rn", row_number().over(w))
+      .withColumn("batch", floor((col("rn") - 1) / 3).cast("long"))
+    val totals = inv.groupBy("graph_b64", "batch").agg(count(lit(1)).as("n_in_batch"))
+    val oracle = inv.join(totals, Seq("graph_b64", "batch"))
+      .withColumn("is_complete", col("n_in_batch") === 3)
+      .drop("rn", "n_in_batch")
+    val got = ManifestBuilder.build(spark, patchDir, filesPerBatch = 3)
+    assert(got.schema.map(f => (f.name, f.dataType)) == oracle.schema.map(f => (f.name, f.dataType)))
+    val (gotRows, want) = (got.collect().toSet, oracle.collect().toSet)
+    assert(files.count() == want.size + 1, "the tree holds exactly one trailer")
+    assert(new java.io.File(s"$patchDir/batch_1").isDirectory && want.size > 60)
+    assert(gotRows == want, s"extra=${(gotRows -- want).take(2)} missing=${(want -- gotRows).take(2)}")
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by a listener. A
+    * marker job closes the count: the listener bus delivers events in
+    * order, so when the marker's start arrives every job of `body` has been
+    * seen. */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobCount"
+    val id = s"count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = scala.concurrent.Promise[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `id` => jobs.incrementAndGet()
+          case v if v == s"$id-end" => done.trySuccess(jobs.get)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, id)
+      body
+      sc.setLocalProperty(key, s"$id-end")
+      sc.parallelize(Seq(1), 1).count()
+      scala.concurrent.Await.result(done.future, scala.concurrent.duration.Duration(60, "s"))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("publish runs as many Spark jobs for 4 batch dirs as for 1 (no per-dir listing job)") {
+    // each batch dir holds 40 graph dirs, over Spark's 32-path threshold
+    // for listing on the driver, the shape of a pipeline batch
+    def tree(batches: Int): String = {
+      val src = tmpDir(s"pubj$batches")
+      for (b <- 0 until batches; gi <- 0 until 40) {
+        val g = java.util.Base64.getEncoder
+          .encodeToString(s"http://graph.example.org/j$gi".getBytes("UTF-8"))
+        val dir = Paths.get(src, s"batch_$b", s"g_b64=$g")
+        Files.createDirectories(dir)
+        Files.writeString(dir.resolve(f"rdf_out_$b%014d-00000000000000"),
+          s"+ <http://s$b> <http://p> <http://o> <http://graph.example.org/j$gi> .\n")
+      }
+      src
+    }
+    def publishJobs(batches: Int): Int = {
+      val src = tree(batches); val sink = tmpDir(s"pubj${batches}_sink")
+      var zips = 0
+      val n = jobsRunBy { zips = ZipPublisher.publish(spark, src, sink).size }
+      assert(zips == 40)
+      n
+    }
+    publishJobs(1) // first-call plan and codegen costs out of the comparison
+    val (one, four) = (publishJobs(1), publishJobs(4))
+    assert(one == four, s"jobs per publish: $one at 1 batch dir, $four at 4")
+  }
+
+  test("a publish whose files all sit in complete zips reads none of their bytes") {
+    val src = tmpDir("pubr_src"); val sink = tmpDir("pubr_sink")
+    val dir = Paths.get(src, s"g_b64=$g64")
+    Files.createDirectories(dir)
+    val line = "+ <http://s> <http://p> <http://o> <http://graph.example.org/g1> .\n"
+    val body = line * ((1 << 20) / line.length)
+    (0 until 4).foreach(i =>
+      Files.writeString(dir.resolve(f"rdf_out_00000000000000-$i%014d"), s"$body# $i\n"))
+    val r1 = ZipPublisher.publish(spark, src, sink, filesPerZip = 2)
+    assert(r1.map(_.zipName).sorted == Seq("part_def_00000", "part_def_00001"))
+    def bytesRead: Long = scala.jdk.CollectionConverters.ListHasAsScala(
+      FileSystem.getAllStatistics).asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val before = bytesRead
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 2).isEmpty)
+    // what a no-op publish may read: the _published state and sink metadata,
+    // kilobytes; one checksum pass over one member would be a megabyte
+    val read = bytesRead - before
+    assert(read < body.length / 8, s"no-op publish read $read bytes")
+  }
+
+  test("two batches under one checkpoint fail loudly, naming graph, zip and both files") {
+    val src = tmpDir("pubd_src"); val sink = tmpDir("pubd_sink")
+    Seq("batch_0", "batch_1").foreach(b => writePatch(s"$src/$b", 0))
+    val e = intercept[Exception](ZipPublisher.publish(spark, src, sink, filesPerZip = 10))
+    val msg = e.getMessage
+    Seq(g64, "part_end_00000", s"batch_0/g_b64=$g64/rdf_out_", s"batch_1/g_b64=$g64/rdf_out_")
+      .foreach(part => assert(msg.contains(part), s"'$part' missing from: $msg"))
+    // the failed run leaves nothing behind
+    val left = Option(new java.io.File(s"$sink/$g64").listFiles()).toSeq.flatten.map(_.getName)
+    assert(!left.exists(n => n.endsWith(".zip") || n.contains(".tmpzip")), s"leftovers: $left")
+  }
+
 
   test("driver boundary is bounded: one summary row per zip, sidecars on disk") {
     // the zip-build collect must return O(zips) summary ROWS — never the
