@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** J1 — the core operator: add/delete changelog between two quad states
@@ -45,6 +45,37 @@ object QuadDiff {
       .drop("pres")
   }
 
+  /** Null-safe equality of two column lists: `<=>` per pair. Every join
+    * on quad identity uses it — `oLex`/`oLang` are null on some quads (a
+    * page without a language), and under plain `=` such a quad never meets
+    * itself, so its transition or deletion was silently lost. */
+  private def nullSafeEq(left: Seq[String], right: Seq[String]): Column =
+    left.zip(right).map { case (l, r) => col(l) <=> col(r) }.reduce(_ && _)
+
+  /** state ⟗ delta on the quad key (null-safe), with the old and new
+    * support of every quad either side holds, and the patch rows: '+' on
+    * a 0 -> >0 transition, '-' on >0 -> 0. */
+  private def transition(state: DataFrame, delta: DataFrame): (DataFrame, DataFrame) = {
+    val stateKey = quadCols.map("_s_" + _)
+    val joined = state.select((quadCols.zip(stateKey).map { case (c, k) => col(c).as(k) }
+        :+ col("support")): _*)
+      .join(delta.select((quadCols.map(col) :+ col("d")): _*),
+        nullSafeEq(stateKey, quadCols), "full_outer")
+      // matched sides are equal (both null included), so coalescing picks
+      // whichever side is present
+      .select((quadCols.zip(stateKey).map { case (c, k) => coalesce(col(c), col(k)).as(c) }
+        ++ Seq(col("support"), col("d"))): _*)
+      .withColumn("oldSup", coalesce(col("support"), lit(0L)))
+      .withColumn("newSup", greatest(col("oldSup") + coalesce(col("d"), lit(0L)), lit(0L)))
+    val patches = joined
+      .withColumn("op",
+        when(col("oldSup") === 0L && col("newSup") > 0L, lit("+"))
+          .when(col("oldSup") > 0L && col("newSup") === 0L, lit("-")))
+      .filter(col("op").isNotNull)
+      .select((col("op") +: quadCols.map(col)): _*)
+    (joined, patches)
+  }
+
   /** Support-count transition diff, for facts contributed by many pages
     * (e.g. `entity rdf:type T` holds while ANY page supports it).
     *
@@ -57,16 +88,7 @@ object QuadDiff {
     * pruned to affected buckets only.
     */
   def supportTransition(state: DataFrame, delta: DataFrame): (DataFrame, DataFrame) = {
-    val joined = state.select((quadCols.map(col) :+ col("support")): _*)
-      .join(delta.select((quadCols.map(col) :+ col("d")): _*), quadCols, "full_outer")
-      .withColumn("oldSup", coalesce(col("support"), lit(0L)))
-      .withColumn("newSup", greatest(col("oldSup") + coalesce(col("d"), lit(0L)), lit(0L)))
-    val patches = joined
-      .withColumn("op",
-        when(col("oldSup") === 0L && col("newSup") > 0L, lit("+"))
-          .when(col("oldSup") > 0L && col("newSup") === 0L, lit("-")))
-      .filter(col("op").isNotNull)
-      .select((col("op") +: quadCols.map(col)): _*)
+    val (joined, patches) = transition(state, delta)
     val newState = joined.filter(col("newSup") > 0L)
       .select((quadCols.map(col) :+ col("newSup").as("support")): _*)
     (patches, newState)
@@ -79,16 +101,7 @@ object QuadDiff {
     * so callers may prune `state` loosely (e.g. a hash-key semi join with
     * false positives): a d-null row produces no patch and no addition. */
   def supportTransitionDelta(state: DataFrame, delta: DataFrame): (DataFrame, DataFrame) = {
-    val joined = state.select((quadCols.map(col) :+ col("support")): _*)
-      .join(delta.select((quadCols.map(col) :+ col("d")): _*), quadCols, "full_outer")
-      .withColumn("oldSup", coalesce(col("support"), lit(0L)))
-      .withColumn("newSup", greatest(col("oldSup") + coalesce(col("d"), lit(0L)), lit(0L)))
-    val patches = joined
-      .withColumn("op",
-        when(col("oldSup") === 0L && col("newSup") > 0L, lit("+"))
-          .when(col("oldSup") > 0L && col("newSup") === 0L, lit("-")))
-      .filter(col("op").isNotNull)
-      .select((col("op") +: quadCols.map(col)): _*)
+    val (joined, patches) = transition(state, delta)
     val changedState = joined
       .filter(col("d").isNotNull && col("newSup") > 0L)
       .select((quadCols.map(col) :+ col("newSup").as("support")): _*)
@@ -97,10 +110,12 @@ object QuadDiff {
 
   /** Patch application (property-test algebra: apply(diff(a,b), a) == b). */
   def apply(base: DataFrame, patch: DataFrame): DataFrame = {
+    val delKey = quadCols.map("_d_" + _)
     val adds = patch.filter(col("op") === "+").select(quadCols.map(col): _*)
-    val dels = patch.filter(col("op") === "-").select(quadCols.map(col): _*)
+    val dels = patch.filter(col("op") === "-")
+      .select(quadCols.zip(delKey).map { case (c, k) => col(c).as(k) }: _*)
     base.select(quadCols.map(col): _*)
-      .join(dels, quadCols, "left_anti")
+      .join(dels, nullSafeEq(quadCols, delKey), "left_anti")
       .unionByName(adds)
       .distinct()
   }

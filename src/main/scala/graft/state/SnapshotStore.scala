@@ -3,6 +3,7 @@ package graft.state
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
 
 /** Iceberg-lite bucketed table with atomic snapshot commits, copy-on-write
@@ -35,9 +36,14 @@ import java.nio.charset.StandardCharsets
   * Delta-commit contract: a batch's tombstones must cover its own
   * additions' `deleteKeys` (the natural MERGE shape — you delete the old
   * versions of exactly the keys you rewrite). Under that contract the fold
-  * is associative and implemented as ONE join: a row (tagged with its
-  * writing snapshot) survives iff no strictly-later delta tombstones its
-  * key.
+  * is associative and is ONE temporal anti-join: a row, tagged with the
+  * snapshot that wrote it, survives unless some tombstone has the same key
+  * (null-safe `<=>`, so a key with a null component still matches itself)
+  * and a strictly later tag.
+  *
+  * Every data dir records the schema it was written with (`_schema.json`
+  * beside the parquet), and every read is planned from that record: a read
+  * starts no footer-inference job, and a data dir without one is an error.
   *
   * Rename is atomic on HDFS-like filesystems (and the local FS used here);
   * an object-store deployment would swap this class for a real catalog —
@@ -109,16 +115,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   private def leasePath = new Path(root, "_lease")
 
-  private def readLease: Option[String] = {
+  private def readLease: Option[String] =
     if (!fs.exists(leasePath)) None
-    else {
-      val in = fs.open(leasePath)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8).trim)
-      catch { case _: java.io.IOException => None }
-      finally in.close()
-    }
-  }
+    else try Some(readText(leasePath).trim) catch { case _: java.io.IOException => None }
 
   /** Claim the writer lease for a mutating data operation. The store
     * assumes a SINGLE writer (vacuum, fold and manifest writes are not
@@ -210,13 +209,13 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   def latest: Option[Long] = {
     val p = new Path(root, "_latest")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(readText(p).trim.toLong)
+  }
+
+  private def readText(path: Path): String = {
+    val in = fs.open(path)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   private def writeAtomic(path: Path, content: String): Unit = {
@@ -236,10 +235,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * = all buckets, else comma-separated bucket ids). The legacy 2-field
     * form `D<TAB>snapId` (dir derived from the id, unscoped) still reads. */
   private def readManifest(id: Long): (Map[Int, String], Seq[DeltaRef]) = {
-    val in = fs.open(manifestPath(id))
-    val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      StandardCharsets.UTF_8) finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
+    val lines = readText(manifestPath(id)).split("\n").filter(_.nonEmpty)
     val base = lines.filterNot(_.startsWith("D\t")).map { l =>
       val Array(b, p) = l.split("\t", 2); b.toInt -> p
     }.toMap
@@ -274,6 +270,32 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         s"D\t${d.tag}\t${d.dir}\t" + d.scope.fold("*")(_.toSeq.sorted.mkString(","))
       }).mkString("\n")
 
+  // --- data dirs and their recorded schemas ----------------------------------
+
+  private def schemaName = "_schema.json"
+
+  /** Write `df` as bucket-partitioned parquet under `dir` and record, at
+    * `<dir>/_schema.json` (the `_` prefix keeps parquet listings blind to
+    * it), the schema a reader of `dir` gets back: the data columns, then
+    * the `bucket` partition column, all nullable as file sources read
+    * them. Reads pass it to `spark.read.schema`, so no read of a store
+    * runs a footer-inference job. */
+  private def writeData(df: DataFrame, dir: String): Unit = {
+    df.write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    val (part, data) = df.schema.fields.partition(_.name == "bucket")
+    writeAtomic(new Path(dir, schemaName),
+      StructType((data ++ part).map(_.copy(nullable = true))).json)
+  }
+
+  /** The schema [[writeData]] recorded for `dir`. A data dir without one
+    * fails loudly: every writer records it, and there is no inference
+    * fallback to drift silently into. */
+  private def recordedSchema(dir: String): StructType = {
+    val p = new Path(dir, schemaName)
+    if (!fs.exists(p)) sys.error(s"no recorded schema for store data dir $dir")
+    DataType.fromJson(readText(p)).asInstanceOf[StructType]
+  }
+
   // --- commits -------------------------------------------------------------
 
   /** Full (bootstrap) commit: writes every bucket. `df` must already carry
@@ -307,8 +329,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
                 assumePartitioned: Boolean = false): Unit = withLease {
     val dataDir = new Path(root, f"snap_$id%014d").toString
     val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
-    timed("full.write")(placed
-      .write.mode("overwrite").partitionBy("bucket").parquet(dataDir))
+    timed("full.write")(writeData(placed, dataDir))
     if (!deferSidecar) timed("full.sidecar")(writeTermSidecar(dataDir, dataDir))
     val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
     writeAtomic(manifestPath(id), manifestText(base, Seq.empty))
@@ -338,8 +359,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * here (measured as a third of the facts merge wall at bench shape:
     * the distinct re-shuffled a set the caller had just aggregated).
     * Duplicate tombstone keys with the flag wrongly set would only fold
-    * redundantly (the fold aggregates tombstones by key anyway), never
-    * corrupt, but the default stays defensive. */
+    * redundantly (the anti-join drops a row once however many tombstones
+    * match it), never corrupt, but the default stays defensive. */
   def stageDelta(additions: DataFrame, tombstones: DataFrame, id: Long,
                  tombstonesDistinct: Boolean = false): Unit = withLease {
     require(deleteKeys.nonEmpty, s"stageDelta on a COW-only store: $root")
@@ -360,18 +381,19 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       return // withLease's finally releases
     }
     val snapDir = new Path(root, f"snap_$id%014d").toString
-    // one exchange keyed by bucket -> ~one file per bucket per delta
-    // (additions are O(batch); a fixed fan-out would write tiny files)
-    timed("delta.add")(additions.repartition(numBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$snapDir/add"))
-    // same bucket-keyed exchange as additions: ~one file per bucket, and
-    // a 10^9-key tombstone set never funnels through one task (the
-    // earlier repartition(1) was a single-task write — fine for a bench
-    // batch, a bottleneck at target scale)
+    // Each side is hash-partitioned by `bucket` into as many tasks as the
+    // cores run at once, not one task per bucket: every bucket still lands
+    // whole in one task, so each bucket= dir gets exactly one file per
+    // side, while an O(batch) delta no longer pays numBuckets tasks of
+    // scheduling and deserialization to write a few hundred KB. The
+    // exchange also keeps a 10^9-key tombstone set from funnelling
+    // through one task.
+    val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
+    timed("delta.add")(writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add"))
     val tombRows = tombstones.select((deleteKeys :+ "bucket").map(col): _*)
-    timed("delta.tomb")((if (tombstonesDistinct) tombRows else tombRows.distinct())
-      .repartition(numBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$snapDir/tomb"))
+    timed("delta.tomb")(writeData(
+      (if (tombstonesDistinct) tombRows else tombRows.distinct())
+        .repartition(parts, col("bucket")), s"$snapDir/tomb"))
     timed("delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)
     if (chain.size <= maxDeltas)
@@ -443,17 +465,16 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       val quietSorted = quiet.toSeq.sorted
       val consDir = new Path(root, f"snap_$id%014d" + "C").toString
       assemble(Map.empty, chain, Some(quietSorted)).foreach { adds =>
-        adds.repartition(math.max(quietSorted.size, 1), col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$consDir/add")
+        writeData(adds.repartition(math.max(quietSorted.size, 1), col("bucket")),
+          s"$consDir/add")
       }
       writeTermSidecar(s"$consDir/add", consDir)
       val tombParts = chain.flatMap(d => loadDelta(s"${d.dir}/tomb", Some(quietSorted), d.scope))
       if (tombParts.nonEmpty) {
-        tombParts.map(_.select((deleteKeys :+ "bucket").map(col): _*))
+        writeData(tombParts.map(_.select((deleteKeys :+ "bucket").map(col): _*))
           .reduce(_ unionByName _)
           .distinct()
-          .repartition(math.max(quietSorted.size, 1), col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$consDir/tomb")
+          .repartition(math.max(quietSorted.size, 1), col("bucket")), s"$consDir/tomb")
       }
       val newBase = (0 until numBuckets).map { b =>
         b -> (if (written(b)) s"$baseDir/bucket=$b"
@@ -468,8 +489,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   /** Write base rows partitioned by bucket; returns the bucket ids that
     * actually materialized (a bucket emptied by tombstones writes none). */
   private def writeBase(df: DataFrame, dataDir: String, parts: Int): Set[Int] = {
-    df.repartition(math.max(parts, 1), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dataDir)
+    writeData(df.repartition(math.max(parts, 1), col("bucket")), dataDir)
     writeTermSidecar(dataDir, dataDir)
     val d = new Path(dataDir)
     if (!fs.exists(d)) Set.empty
@@ -528,7 +548,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         else {
           val counts = footerRowCounts(p).view
             .mapValues(n => math.max(n, 1L) * termsPerRowHint).toMap
-          val termsDf = spark.read.parquet(dataDir)
+          val termsDf = spark.read.schema(recordedSchema(dataDir)).parquet(dataDir)
             .select(col("bucket"), explode(te).as("_t"))
             .filter(col("_t").isNotNull)
             .select(col("bucket").cast("int"), col("_t").cast("string"))
@@ -636,9 +656,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       s"stageMerge over a non-empty delta chain (${chain.size} deltas): $root")
     val dataDir = new Path(root, f"snap_$id%014d").toString
     if (affected.nonEmpty) {
-      newBucketData
-        .repartition(math.max(affected.size, 1), col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(dataDir)
+      writeData(newBucketData.repartition(math.max(affected.size, 1), col("bucket")), dataDir)
       writeTermSidecar(dataDir, dataDir)
     }
     // a bucket can become empty: parquet partitionBy writes no dir for it,
@@ -670,8 +688,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     else {
       // ONE relation per distinct snapshot dir, not one per bucket: a
       // per-bucket `spark.read.parquet` union planned 32 separate file
-      // listings + footer schema inferences on the driver for EVERY store
-      // read — measured as seconds of non-scaling latency per batch. With
+      // listings on the driver for EVERY store read — measured as seconds
+      // of non-scaling latency per batch (the recorded schema removes the
+      // footer inference each relation also ran). With
       // `basePath` at the snap dir, partition discovery returns the
       // `bucket` column (int) and path-level pruning to exactly the
       // requested bucket dirs. After a merge-on-read fold or a full
@@ -681,7 +700,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         .groupBy(p => p.getParent.toString)
         .map { case (dir, ps) => dir -> ps.map(_.toString).toSeq }
       val dfs = byDir.toSeq.sortBy(_._1).map { case (dir, leafs) =>
-        spark.read.option("basePath", dir).parquet(leafs: _*)
+        spark.read.schema(recordedSchema(dir)).option("basePath", dir).parquet(leafs: _*)
       }
       Some(dfs.reduce(_ unionByName _))
     }
@@ -704,18 +723,23 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     if (!fs.exists(p) || !fs.listStatus(p).exists(_.getPath.getName.startsWith("bucket=")))
       None
     else {
-      val df = spark.read.parquet(dir)
+      val df = spark.read.schema(recordedSchema(dir)).parquet(dir)
       Some(eff.fold(df)(bs => df.filter(col("bucket").isin(bs.map(Integer.valueOf): _*))))
     }
   }
 
-  /** Fold base + delta chain into the current logical content. One join:
-    * every row is tagged with the snapshot that wrote it (base = -1), all
-    * tombstones aggregate to (key -> latest tombstoning snapshot), and a
-    * row survives iff written at-or-after that snapshot — correct under
-    * the stageDelta contract (a delta's tombstones cover its own
-    * additions). The tombstone side is churn-sized, never store-sized, so
-    * the join broadcasts at sane scales and AQE picks the strategy. */
+  /** Fold base + delta chain into the current logical content: ONE
+    * temporal anti-join. Every row is tagged with the snapshot that wrote
+    * it (base = -1), every tombstone with its delta's tag, and a row is
+    * dropped iff some tombstone has the same key (null-safe `<=>`) and a
+    * strictly later tag — correct under the stageDelta contract (a delta's
+    * tombstones cover its own additions). A key tombstoned in several
+    * deltas needs no max-tag aggregation first: an anti-join keeps or
+    * drops a row once, however many tombstones match it. The tombstone
+    * side is churn-sized, so under [[tombBroadcastBytes]] it is broadcast
+    * and the fold is one narrow pass over the store; past it the bloom
+    * split below sends only the rows whose key may be tombstoned through
+    * the same anti-join. */
   private def assemble(base: Map[Int, String], deltas: Seq[DeltaRef],
                        buckets: Option[Seq[Int]]): Option[DataFrame] = {
     val basePaths: Seq[(Int, String)] = buckets match {
@@ -730,9 +754,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val tombs = deltas.flatMap { d =>
       loadDelta(s"${d.dir}/tomb", buckets, d.scope).map(df => d.tag -> df)
     }
-    val tagged = (baseDf.map(df => -1L -> df).toSeq ++ adds).map { case (tag, df) =>
-      df.withColumn("_wtag", lit(tag))
-    }
+    val tagged = baseDf.map(df => -1L -> df).toSeq ++ adds
     if (tagged.isEmpty) return None
     // COMMON-schema projection (head's column order): a store whose chain
     // mixes schema generations — a base written before a column existed
@@ -740,49 +762,58 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     // folds to the columns EVERY generation has instead of crashing on the
     // head's superset (readers of evolved columns treat absence as "not
     // available" and fall back; the canon `sig` column is the live case).
-    // Key columns stay loud: deleteKeys/bucket are contractual in every
-    // generation, so a genuinely malformed delta still fails below.
-    val cols = tagged.map(_.columns.toSeq).reduce((a, b) => a.filter(b.contains))
-    val rows = tagged.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
-    if (tombs.isEmpty) return Some(rows.drop("_wtag"))
-    val tombMax = tombs.map { case (tag, df) =>
-      df.select(deleteKeys.map(col): _*).withColumn("_ttag", lit(tag))
+    // The schemas are the recorded ones, so this costs no job; each
+    // dropped column is logged with the snapshot that lacks it, so an
+    // accidental column loss is visible rather than silent. Key columns
+    // stay loud: deleteKeys/bucket are contractual in every generation,
+    // so a genuinely malformed delta still fails below.
+    val cols = tagged.map(_._2.columns.toSeq).reduce((a, b) => a.filter(b.contains))
+    tagged.foreach { case (tag, df) =>
+      df.columns.filterNot(cols.contains).foreach { c =>
+        SnapshotStore.log.warn(s"$root: column '$c' of snapshot " +
+          s"${if (tag < 0) "base" else tag.toString} dropped from the fold: " +
+          "another snapshot in the chain lacks it")
+      }
+    }
+    val rows = tagged.map { case (tag, df) =>
+      df.select(cols.map(col): _*).withColumn("_wtag", lit(tag))
     }.reduce(_ unionByName _)
-      .groupBy(deleteKeys.map(col): _*).agg(max("_ttag").as("_ttag"))
-    // tombstone side is churn-sized; broadcast it EXPLICITLY while its
-    // on-disk footprint is small (file-length sum — no extra job) so the
-    // fold join stays a narrow pass over the store-sized stream.
+    if (tombs.isEmpty) return Some(rows.drop("_wtag"))
+    // tombstone keys renamed `_t_<key>`, so the condition names each side
+    val tombKeys = deleteKeys.map("_t_" + _)
+    val tombAll = tombs.map { case (tag, df) =>
+      df.select(deleteKeys.zip(tombKeys).map { case (k, t) => col(k).as(t) }: _*)
+        .withColumn("_ttag", lit(tag))
+    }.reduce(_ unionByName _)
+    val laterTomb = deleteKeys.zip(tombKeys)
+      .map { case (k, t) => col(k) <=> col(t) }.reduce(_ && _) &&
+      col("_ttag") > col("_wtag")
+    // broadcast gate: the tombstones' on-disk size (file-length sum — no
+    // extra job)
     val tombBytes = deltas.map { d =>
       val p = new Path(s"${d.dir}/tomb")
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }.sum
     if (tombBytes <= tombBroadcastBytes)
-      Some(rows.join(broadcast(tombMax), deleteKeys, "left")
-        .filter(col("_ttag").isNull || col("_wtag") >= col("_ttag"))
-        .drop("_wtag", "_ttag"))
+      Some(rows.join(broadcast(tombAll), laterTomb, "left_anti").drop("_wtag"))
     else {
-      // Past the gate, do NOT shuffle the store-sized row stream (the old
-      // fallback dragged the whole base through an exchange). Bloom-split
-      // it instead: rows whose key fails a bloom over the tombstone keys
-      // provably have no tombstone — they bypass the join entirely on a
+      // Past the gate, do NOT shuffle the store-sized row stream. Bloom-
+      // split it instead: rows whose key fails a bloom over the tombstone
+      // keys provably have no tombstone — they bypass the anti-join on a
       // second narrow scan; only the bloom-hit subset (~tombstones + FPR)
-      // takes the exact join, so whatever strategy it picks moves
-      // ~tombstone-sized data. Two narrow scans of the store, zero
-      // store-sized exchange, at ANY tombstone volume. The bloom is sized
-      // from the on-disk byte count (parquet key rows compress to well
-      // over 16 B each, so bytes/16 over-counts keys — an oversized
-      // filter, capped at 64 MB of bits where it saturates gracefully).
-      val keyHash = xxhash64(deleteKeys.map(col): _*)
+      // takes it, so whatever strategy Spark picks moves ~tombstone-sized
+      // data. xxhash64 skips null inputs, so a key with a null component
+      // hashes the same on both sides. The bloom is sized from the on-disk
+      // byte count (parquet key rows compress to well over 16 B each, so
+      // bytes/16 over-counts keys — an oversized filter, capped at 64 MB
+      // of bits where it saturates gracefully).
       val bloomB = spark.sparkContext.broadcast(
         graft.functions.BloomProbe.build(
-          tombMax.select(xxhash64(deleteKeys.map(col): _*)),
+          tombAll.select(xxhash64(tombKeys.map(col): _*)),
           math.max(tombBytes / 16, 1L), maxBits = 1L << 29))
-      val pred = graft.functions.BloomProbe(bloomB, keyHash)
+      val pred = graft.functions.BloomProbe(bloomB, xxhash64(deleteKeys.map(col): _*))
       val cold = rows.filter(!pred).drop("_wtag")
-      val hot = rows.filter(pred)
-        .join(tombMax, deleteKeys, "left")
-        .filter(col("_ttag").isNull || col("_wtag") >= col("_ttag"))
-        .drop("_wtag", "_ttag")
+      val hot = rows.filter(pred).join(tombAll, laterTomb, "left_anti").drop("_wtag")
       Some(cold.unionByName(hot))
     }
   }
@@ -838,13 +869,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   /** Epoch handshake (reference vql_started_at.txt, T6 cascading reset). */
   def epoch: Option[String] = {
     val p = new Path(root, "_epoch")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(readText(p).trim)
   }
   def setEpoch(e: String): Unit = writeAtomic(new Path(root, "_epoch"), e)
 
@@ -854,6 +879,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 }
 
 object SnapshotStore {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotStore])
+
   /** One merge-on-read delta in the chain: `tag` orders the fold join
     * (rows written by later snapshots beat earlier tombstones), `dir`
     * holds the delta's `add/` and `tomb/` parquet, and `scope` is the

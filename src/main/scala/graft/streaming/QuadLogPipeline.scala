@@ -168,7 +168,9 @@ final class QuadLogPipeline(
     *    whole new map.
     *  - `remapped` = (oldRep -> newRep) pairs for superseded
     *    representatives, derived from `changed` (rep changes are a subset
-    *    of changed ids), so the comparison join is churn-sized.
+    *    of changed ids), so the comparison join is churn-sized. None when
+    *    no representative can have changed: at bootstrap, and in a batch
+    *    with no fresh id.
     *
     * The stored-map reads are TWO-TIER pruned, mirroring the contrib
     * remap scan: (1) when the batch's IRI set is driver-collectable, the
@@ -183,37 +185,33 @@ final class QuadLogPipeline(
     * invariant that every canonical value is also an id row, which every
     * map this pipeline writes satisfies (see extendChangedGivenFresh).
     * False positives only widen `view`/`oldPruned` by harmless rows that
-    * match nothing in the batch. */
+    * match nothing in the batch.
+    *
+    * A batch with no fresh id (the common churn batch) changes no cluster:
+    * its view is `oldPruned` itself, and the whole stored map is never
+    * read. Only a batch with fresh ids reads it, once: below
+    * [[canonCheckpointBytes]] (id, canonical, sig) is materialized one
+    * time and both the map and the signature scan of
+    * [[IriCanonicalizer.verifiedPairsStored]] derive from it. */
   private[graft] def extendedCanonMap(rawQuads: DataFrame)
-      : (DataFrame, Long, DataFrame, DataFrame) = {
+      : (DataFrame, Long, Option[DataFrame], DataFrame) = {
     import spark.implicits._
     val iris = timed("canon.iris")(candidateIris(rawQuads).localCheckpoint())
-    val old = canon.read()
-    old match {
+    canon.read() match {
       case None =>
         val cm = timed("canonicalMap")(
           IriCanonicalizer.canonicalMap(spark, iris).localCheckpoint())
         lastCanonBuckets = None
-        (cm, cm.count(), cm.limit(0), cm)
+        (cm, cm.count(), None, cm)
       case Some(full) =>
-        val o0 = full.select("id", "canonical")
         // Persisted signatures (`sig` column, written by every canon
-        // commit): a LAZY narrow (id, sig) view of the same fold, only
-        // evaluated when the batch brings fresh ids — it routes
-        // extendChangedGivenFresh through verifiedPairsStored, so no
-        // shingle/signature pass over the accumulated domain ever runs
-        // per batch. Stores written before the column existed fall back
-        // to the recompute path (None).
-        val storedSigs: Option[DataFrame] =
-          if (full.columns.contains("sig")) Some(full.select("id", "sig")) else None
-        lastCanonHasSig = storedSigs.isDefined
-        // Small stores: checkpoint the folded map once — the domain union,
-        // the touched-cluster splits and the remap join all scan it, and
-        // each lazy scan re-runs the merge-on-read fold. Past the byte
-        // gate the scans go to the store lazily: a per-batch O(map)
-        // materialization is exactly the cost this path exists to shed.
-        val o = if (canon.approxDataBytes <= canonCheckpointBytes)
-          timed("canon.readOld")(o0.localCheckpoint()) else o0
+        // commit) route extendChangedGivenFresh through
+        // verifiedPairsStored, so no shingle/signature pass over the
+        // accumulated domain ever runs per batch. Stores written before
+        // the column existed fall back to the recompute path. The column
+        // list is the recorded schema: knowing it costs no job.
+        lastCanonHasSig = full.columns.contains("sig")
+        val stored = full.select("id", "canonical")
         val nIris = iris.count()
         // tier 1 — sidecar bucket pruning (collect gate mirrors the remap
         // scan's: 100k strings ≈ a few MB on the driver)
@@ -223,10 +221,10 @@ final class QuadLogPipeline(
               case Some(bs) =>
                 lastCanonBuckets = Some(bs)
                 canon.readBuckets(bs).map(_.select("id", "canonical"))
-                  .getOrElse(o.limit(0))
-              case None => lastCanonBuckets = None; o
+                  .getOrElse(stored.limit(0))
+              case None => lastCanonBuckets = None; stored
             }
-          } else { lastCanonBuckets = None; o }
+          } else { lastCanonBuckets = None; stored }
         // tier 2 — bloom row pruning inside the scan (codegen predicate)
         val irisBloom = spark.sparkContext.broadcast(
           graft.functions.BloomProbe.build(
@@ -237,23 +235,36 @@ final class QuadLogPipeline(
         irisBloom.unpersist()
         val fresh = iris.join(oldPruned.select("id"), Seq("id"), "left_anti")
           .localCheckpoint()
-        val changed = timed("canonicalMap")(
-          (if (fresh.isEmpty) o.limit(0)
-           else IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
-             storedSigs = storedSigs))
-            .localCheckpoint())
-        // rewrite view: pruned old rows minus the ones `changed` replaces,
-        // plus the changed rows the batch can actually reference
-        val view = timed("canon.view")(
-          oldPruned.join(changed.select("id"), Seq("id"), "left_anti")
-            .unionByName(changed.join(iris, Seq("id"), "left_semi"))
-            .localCheckpoint())
-        val remapped = o
-          .join(changed.withColumnRenamed("canonical", "rep2"), Seq("id"))
-          .filter(col("canonical") =!= col("rep2"))
-          .select(col("canonical").as("id"), col("rep2").as("canonical"))
-          .distinct()
-        (view, view.count(), remapped, changed)
+        if (fresh.isEmpty) (oldPruned, oldPruned.count(), None, oldPruned.limit(0))
+        else {
+          // Small stores: materialize the folded map once — the domain
+          // union, the touched-cluster splits, the signature scan and the
+          // remap join all read it, and each lazy read re-runs the
+          // merge-on-read fold. Past the byte gate they go to the store
+          // lazily: a per-batch O(map) materialization is exactly the
+          // cost this path exists to shed.
+          val cols = if (lastCanonHasSig) Seq("id", "canonical", "sig") else Seq("id", "canonical")
+          val m =
+            if (canon.approxDataBytes > canonCheckpointBytes) full
+            else timed("canon.readOld")(full.select(cols.map(col): _*).localCheckpoint())
+          val o = m.select("id", "canonical")
+          val storedSigs = if (lastCanonHasSig) Some(m.select("id", "sig")) else None
+          val changed = timed("canonicalMap")(
+            IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh, storedSigs = storedSigs)
+              .localCheckpoint())
+          // rewrite view: pruned old rows minus the ones `changed`
+          // replaces, plus the changed rows the batch can actually reference
+          val view = timed("canon.view")(
+            oldPruned.join(changed.select("id"), Seq("id"), "left_anti")
+              .unionByName(changed.join(iris, Seq("id"), "left_semi"))
+              .localCheckpoint())
+          val remapped = o
+            .join(changed.withColumnRenamed("canonical", "rep2"), Seq("id"))
+            .filter(col("canonical") =!= col("rep2"))
+            .select(col("canonical").as("id"), col("rep2").as("canonical"))
+            .distinct()
+          (view, view.count(), Some(remapped), changed)
+        }
     }
   }
 
@@ -467,8 +478,7 @@ final class QuadLogPipeline(
     // the same bound as newSide below.
     val rawNew = timed("incr.rawNew")(rawQuads(changed).localCheckpoint())
     val (newContrib0, remapPairs) =
-      if (!canonicalize)
-        (rawNew, rawNew.limit(0).select(col("s").as("id"), col("s").as("canonical")))
+      if (!canonicalize) (rawNew, None)
       else {
         val (view, viewRows, remapped, canonChanged) = extendedCanonMap(rawNew)
         // STAGED, not committed: the extended map must move atomically with
@@ -500,13 +510,15 @@ final class QuadLogPipeline(
     // semi-join against it (auto-broadcast when small) instead of a driver
     // collect + isin literals, which one alias-heavy batch could blow up.
     // Only its count comes back to the driver. The scan is column-pruned
-    // to (url, s, oKind, oLex).
-    val remapPairsC = remapPairs.localCheckpoint()
-    val nRemap = remapPairsC.count()
+    // to (url, s, oKind, oLex). A batch with no fresh id has no pair set
+    // at all (None), so nothing is materialized or counted for it.
+    val remap: Option[(DataFrame, Long)] = remapPairs
+      .map { r => val c = r.localCheckpoint(); c -> c.count() }
+      .filter(_._2 > 0)
     val changedUrls = changed.toDF().select(col("url"))
-    val remapUrls: DataFrame =
-      if (nRemap == 0) changedUrls.limit(0)
-      else {
+    val remapUrls: DataFrame = remap match {
+      case None => changedUrls.limit(0)
+      case Some((remapPairsC, nRemap)) =>
         timed("incr.remapScan") {
           // BUCKET-PRUNED scan: the superseded representatives are a tiny
           // driver-known set (cluster merges are rare), so probe contrib's
@@ -537,7 +549,7 @@ final class QuadLogPipeline(
               .localCheckpoint()
           }
         }
-      }
+    }
 
     val touchedUrls = changedUrls
       .union(deletedUrls.toDF("url")).union(remapUrls).distinct()
@@ -592,19 +604,20 @@ final class QuadLogPipeline(
             .filter(graft.functions.BloomProbe(b, xxhash64(col("url"))))
             .join(urls, Seq("url"), "left_semi")
         }
-        if (nRemap == 0) touched
+        if (remap.isEmpty) touched
         else timed("incr.oldTouched")(touched.localCheckpoint())
       }
 
     // rewritten state of remap-affected urls = their stored rows passed
     // through the (oldRep -> newRep) map. remapUrls ⊆ touchedUrls, so the
     // checkpointed oldContrib already holds these rows.
-    val rewrittenOld =
-      if (nRemap == 0) newContrib.limit(0)
-      else IriCanonicalizer.canonicalizeAttributed(
+    val rewrittenOld = remap match {
+      case None => newContrib.limit(0)
+      case Some((remapPairsC, nRemap)) => IriCanonicalizer.canonicalizeAttributed(
           oldContrib.join(remapUrls, Seq("url"), "left_semi").drop("bucket"),
           remapPairsC, nRemap)
         .withColumn("bucket", contrib.bucketCol(col("url")))
+    }
     // Materialize the batch's new contributions ONCE: both the signed delta
     // and the contrib merge consume them, and lazily each consumer re-ran
     // the changed-page extraction + canonical rewrite (measured ~2x the

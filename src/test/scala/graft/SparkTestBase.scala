@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -22,6 +23,40 @@ abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit = { /* shared session: keep alive */ }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs, on any thread. Two marker jobs,
+    * tagged by a local property, bracket `body`; the scheduler numbers jobs
+    * in submission order, and the suites of the forked test JVM run one at
+    * a time, so the ids strictly between the markers' are `body`'s jobs —
+    * including those it submits from its own thread pools, which a
+    * thread-local tag would miss. */
+  def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobMarker"
+    val id = s"marker-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val done = scala.concurrent.Promise[Unit]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .filter(_.startsWith(id)).foreach { m =>
+            seen.put(m, e.jobId)
+            if (seen.size == 2) done.trySuccess(())
+          }
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(s"$id-start")
+      body
+      marker(s"$id-end")
+      scala.concurrent.Await.result(done.future, scala.concurrent.duration.Duration(60, "s"))
+      seen.get(s"$id-end") - seen.get(s"$id-start") - 1
+    } finally sc.removeSparkListener(l)
+  }
 
   /** Run `body` with SQL confs temporarily set, restoring priors after. */
   def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {

@@ -4,7 +4,6 @@ import graft.GraftSpec
 import graft.sources.{ExpectedKg, PageGen}
 import graft.streaming.QuadLogPipeline
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -118,37 +117,6 @@ class PublishSpec extends GraftSpec {
     assert(files.count() == want.size + 1, "the tree holds exactly one trailer")
     assert(new java.io.File(s"$patchDir/batch_1").isDirectory && want.size > 60)
     assert(gotRows == want, s"extra=${(gotRows -- want).take(2)} missing=${(want -- gotRows).take(2)}")
-  }
-
-  /** Spark jobs started by `body` on this thread, counted by a listener. A
-    * marker job closes the count: the listener bus delivers events in
-    * order, so when the marker's start arrives every job of `body` has been
-    * seen. */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobCount"
-    val id = s"count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val done = scala.concurrent.Promise[Int]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)).foreach {
-          case `id` => jobs.incrementAndGet()
-          case v if v == s"$id-end" => done.trySuccess(jobs.get)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(key, id)
-      body
-      sc.setLocalProperty(key, s"$id-end")
-      sc.parallelize(Seq(1), 1).count()
-      scala.concurrent.Await.result(done.future, scala.concurrent.duration.Duration(60, "s"))
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(l)
-    }
   }
 
   test("publish runs as many Spark jobs for 4 batch dirs as for 1 (no per-dir listing job)") {

@@ -495,4 +495,103 @@ class SnapshotStoreSpec extends GraftSpec {
     assert(st.read().get.select("k", "v").as[(String, Int)].collect().toMap ==
       Map("a" -> 10, "b" -> 2))
   }
+
+  test("planning read() and readBuckets() over a delta chain starts no Spark job") {
+    // every data dir records its schema, so planning a read runs no
+    // footer-inference job (one per relation before: base + 2 x 2 delta
+    // sides here), and a data dir that lost its record fails loudly
+    val root = tmpDir("store13")
+    val st = new SnapshotStore(spark, root, numBuckets = 16,
+      deleteKeys = Seq("k"), maxDeltas = 8)
+    def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    st.commitFull(rows((1 to 200).map(i => s"k$i" -> i)), 0L)
+    for (b <- 1 to 2) {
+      val adds = rows((1 to 40).map(i => s"k${i * b}" -> (1000 * b + i)))
+      st.commitDelta(adds, adds.select("k", "bucket"), b.toLong)
+    }
+    val jobs = jobsRunBy {
+      st.read().get
+      st.readBuckets(Seq(0, 5, 9)).get
+    }
+    assert(jobs == 0, s"read planning ran $jobs Spark jobs")
+    assert(st.read().get.count() == 200)
+    assert(new java.io.File(s"$root/snap_${f"${0L}%014d"}/_schema.json").delete())
+    val e = intercept[RuntimeException](st.read())
+    assert(e.getMessage.contains("no recorded schema"), e.getMessage)
+  }
+
+  test("anti-join fold == aggregate-then-join fold, null key components included") {
+    // Oracle: the fold's earlier formulation — aggregate every tombstone to
+    // (key -> latest tag), left-join the tagged rows, keep a row iff no tag
+    // or its own tag is at least that one — with the join made null-safe.
+    // Seeded chains cover tombstones repeated across deltas, keys re-added
+    // after their tombstone, pure deletes and null key components, on the
+    // broadcast path and on the bloom-split path (tombBroadcastBytes = 0).
+    val keyCols = Seq("k1", "k2")
+    val universe = for (a <- Seq("a", "b", "c", "d", "e", "f"); b <- Seq(null, "x", "y"))
+      yield (a, b)
+    for ((tbb, seed) <- Seq((64L << 20, 1), (0L, 2), (64L << 20, 3), (0L, 4))) {
+      val rnd = new scala.util.Random(seed)
+      val st = new SnapshotStore(spark, tmpDir(s"storeanti$seed") + "/t", numBuckets = 4,
+        deleteKeys = keyCols, maxDeltas = 10, tombBroadcastBytes = tbb)
+      def rows(kv: Seq[((String, String), Int)]) =
+        kv.map { case ((a, b), v) => (a, b, v) }.toDF("k1", "k2", "v")
+          .withColumn("bucket", st.bucketCol(col("k1"), col("k2")))
+      def keys(ks: Seq[(String, String)]) = ks.toDF("k1", "k2")
+        .withColumn("bucket", st.bucketCol(col("k1"), col("k2")))
+      val base = universe.filter(_ => rnd.nextInt(100) < 70).map(_ -> rnd.nextInt(1000))
+      st.commitFull(rows(base), 0L)
+      var model = base.toMap
+      var tagged = rows(base).withColumn("_wtag", lit(-1L))
+      var tombs = keys(Seq.empty).withColumn("_ttag", lit(0L))
+      var prevTombs = Seq.empty[(String, String)]
+      for (tag <- 1L to 5L) {
+        val adds = universe.filter(_ => rnd.nextInt(100) < 25).map(_ -> rnd.nextInt(1000))
+        val deletes = universe.filter(_ => rnd.nextInt(100) < 15)
+        val repeated = prevTombs.filter(_ => rnd.nextBoolean())
+        val tombKeys = (adds.map(_._1) ++ deletes ++ repeated).distinct
+        st.commitDelta(rows(adds), keys(tombKeys), tag)
+        model = (model -- tombKeys) ++ adds
+        tagged = tagged.unionByName(rows(adds).withColumn("_wtag", lit(tag)))
+        tombs = tombs.unionByName(keys(tombKeys).withColumn("_ttag", lit(tag)))
+        prevTombs = tombKeys
+        val tombMax = tombs.groupBy(keyCols.map(col): _*).agg(max("_ttag").as("_ttag"))
+          .select(col("k1").as("t1"), col("k2").as("t2"), col("_ttag"))
+        val oracle = tagged
+          .join(tombMax, col("k1") <=> col("t1") && col("k2") <=> col("t2"), "left")
+          .filter(col("_ttag").isNull || col("_wtag") >= col("_ttag"))
+          .select("k1", "k2", "v").as[(String, String, Int)].collect().toSet
+        val got = st.read().get.select("k1", "k2", "v").as[(String, String, Int)].collect().toSet
+        assert(got == oracle, s"seed=$seed tag=$tag: extra=${(got -- oracle).take(3)} " +
+          s"missing=${(oracle -- got).take(3)}")
+        assert(got == model.map { case ((a, b), v) => (a, b, v) }.toSet,
+          s"seed=$seed tag=$tag: the oracle itself disagrees with the plain model")
+      }
+      assert(model.keys.exists(_._2 == null) && tombs.filter(col("k2").isNull).count() > 0,
+        "chain must exercise null key components")
+    }
+  }
+
+  test("a 16-bucket delta write on local[4] leaves one parquet file per bucket dir") {
+    val root = tmpDir("store14")
+    val st = new SnapshotStore(spark, root, numBuckets = 16,
+      deleteKeys = Seq("k"), maxDeltas = 8)
+    def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    st.commitFull(rows((1 to 100).map(i => s"k$i" -> i)), 0L)
+    val adds = rows((1 to 400).map(i => s"n$i" -> i)).repartition(8)
+    st.commitDelta(adds, adds.select("k", "bucket"), 1L)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    for (side <- Seq("add", "tomb")) {
+      val dirs = new java.io.File(s"$root/snap_${f"${1L}%014d"}/$side").listFiles()
+        .filter(_.getName.startsWith("bucket="))
+      assert(dirs.length == 16, s"$side: ${dirs.length} bucket dirs")
+      dirs.foreach { d =>
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"$side/${d.getName}: ${files.mkString(",")}")
+      }
+    }
+    assert(st.read().get.count() == 500)
+  }
 }
