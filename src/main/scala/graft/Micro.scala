@@ -567,16 +567,8 @@ object Micro {
     time("pages.count warm2")(pages.count())
     val df = pages.toDF().cache()
     time("pages cache fill")(df.count())
-    val surfaces = graft.extract.MentionDetector.surfaceDim(spark)
-    val mentions = graft.extract.MentionDetector.detect(df, surfaces)
-    time("mentions.count")(mentions.count())
-    val links = graft.extract.EntityLinker.link(mentions, df, surfaces)
-    time("links.count")(links.count())
-    val quads = graft.extract.EntityLinker.toQuadsAttributed(links, df)
-    time("quads.count (modular)")(quads.count())
-    val fused = graft.extract.RowwiseExtractor.pageQuads(pages.toDF())
-    time("quads.count (fused) 1")(fused.count())
-    time("quads.count (fused) 2")(fused.count())
+    val quads = graft.extract.TypedExtractor.pageQuads(df)
+    time("quads.count (typed)")(quads.count())
     val qc = quads.cache()
     time("quads cache fill")(qc.count())
     val iris = qc.select(col("s").as("id"))

@@ -7,7 +7,7 @@ package graft
   *
   * The job is the full KG pipeline (bootstrap + incremental), whose
   * parallel structure (hash-partitioned extraction, one-exchange diff,
-  * bucketed copy-on-write commits) is what must scale.
+  * bucketed merge-on-read commits) is what must scale.
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {

@@ -466,12 +466,13 @@ object IriCanonicalizer {
     //    O(fresh + candidates) and the stored side is one narrow columnar
     //    scan, never a shingle/signature pass over the accumulated domain
     //    (see verifiedPairsStored; CanonSpec asserts equality).
-    //  - None: recompute over the whole domain (pre-sig stores, spec
-    //    callers). domain = map ids ∪ fresh — disjoint unions of
-    //    already-distinct sets, so no dedup exchange, and consumed exactly
-    //    once (verifiedPairs checkpoints its own signature frame; the
-    //    typed verification reads no domain-side toks), so no checkpoint
-    //    here either.
+    //  - None: recompute over the whole domain (extendMap, and the
+    //    reference CanonSpec compares the stored path against).
+    //    domain = map ids ∪ fresh — disjoint unions of already-distinct
+    //    sets, so no dedup exchange, and consumed exactly once
+    //    (verifiedPairs checkpoints its own signature frame; the typed
+    //    verification reads no domain-side toks), so no checkpoint here
+    //    either.
     val newEdges = ConnectedComponents.timed("ext.newEdges")((storedSigs match {
       case Some(ss) => verifiedPairsStored(fresh, ss, jaccardThreshold)
       case None =>
@@ -665,7 +666,15 @@ object IriCanonicalizer {
         .as(Seq("band", "bucket")))
     val freshBanded = banded(freshSigs).localCheckpoint()
     val freshKeys = freshBanded.select("band", "bucket").distinct()
-    val storedBanded = banded(storedSigs)
+    // A stored sig that is null or not sigHashes long would band into
+    // plausible but wrong keys (concat_ws skips missing elements): fail
+    // inside the banded projection, so the check starts no job of its own.
+    val sig = col("sig")
+    val checkedSig = when(size(sig) === sigHashes, sig).otherwise(raise_error(concat(
+      lit("stored canon sig of id "), col("id"), lit(" has "),
+      when(sig.isNull, lit("none")).otherwise(size(sig).cast("string")),
+      lit(s" hashes, expected $sigHashes"))))
+    val storedBanded = banded(storedSigs.select(col("id"), checkedSig.as("sig")))
     val storedPruned =
       if (freshSigs.count() <= freshBroadcastLimit)
         storedBanded.join(broadcast(freshKeys), Seq("band", "bucket"), "left_semi")

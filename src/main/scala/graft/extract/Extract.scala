@@ -1,10 +1,7 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.model.{Page, TermKind}
-import graft.sources.PageGen
 
 /** Stage 1 of the KG pipeline: html -> text, byte-identical per url
   * (BASELINE.json input_hint invariant; the analogue of the reference's
@@ -43,10 +40,9 @@ object TextExtractor {
       .withColumn("text_ok", col("extracted") === col("text"))
 }
 
-/** Stage 2: mention detection. Tokenize the page text and keep tokens that
-  * are dictionary surface forms. Declarative: split + posexplode + broadcast
-  * semi-join against the (tiny) surface-form dimension — no UDF, no shuffle
-  * of the pages themselves. */
+/** The quad vocabulary: the predicate and datatype IRIs every extracted
+  * quad is built from, shared by [[TypedExtractor]] and the closed-form
+  * oracle (`ExpectedKg`). */
 object MentionDetector {
   val mentionsPred = "http://kg.example.org/ontology/mentions"
   val typePred = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -55,152 +51,4 @@ object MentionDetector {
   val posPred = "http://kg.example.org/ontology/position"
   val XsdDateTime = "http://www.w3.org/2001/XMLSchema#dateTime"
   val XsdInteger = "http://www.w3.org/2001/XMLSchema#integer"
-
-  /** (surface, entity iri, context terms, etype, prior) rows — broadcastable. */
-  def surfaceDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    PageGen.dictionary.flatMap { e =>
-      e.surfaces.map(s => (s, e.iri, e.context, e.etype, 1.0 / e.surfaces.size))
-    }.toDF("surface", "entity", "context", "etype", "prior")
-  }
-
-  /** pages(url, text, lang, warc_ts, ...) -> mentions(url, g, surface, pos).
-    * Graph IRI = scheme+host of the url (one named graph per site — the
-    * reference's graph-partitioned output, split-graphs.sh:97). */
-  def detect(pages: DataFrame, surfaces: DataFrame): DataFrame = {
-    val toks = pages
-      .withColumn("g", regexp_extract(col("url"), "^(https?://[^/]+)", 1))
-      .select(col("url"), col("g"), col("lang"), col("warc_ts"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "surface")))
-    toks.join(broadcast(surfaces.select("surface").distinct()), Seq("surface"), "left_semi")
-      .select("url", "g", "surface", "pos")
-  }
-}
-
-/** Stage 3: entity linking — dictionary + context scoring (north_star).
-  * For an ambiguous surface (several candidate entities), score each
-  * candidate by |page-token-set ∩ candidate-context| + prior and keep the
-  * top-scoring entity per (url, pos) via a window — all declarative, the
-  * candidate dimension is broadcast, the only shuffle is the final window
-  * partitioned by url (co-partitioned with everything downstream).
-  */
-object EntityLinker {
-
-  /** mentions(url,g,surface,pos) × pages(url,text) -> links(url,g,surface,
-    * pos,entity,score).
-    *
-    * Disambiguation argmax = hash aggregation with `min_by` over the
-    * ordering struct (-score, entity): same semantics as a row_number
-    * window (max score, ties -> entity ascending) but with map-side partial
-    * aggregation and no sort — at web scale the per-(url,pos) candidate
-    * groups are tiny and a sort-based window would shuffle+sort the whole
-    * mention stream for nothing. */
-  def link(mentions: DataFrame, pages: DataFrame, surfaces: DataFrame): DataFrame = {
-    val pageTokens = pages.select(col("url"),
-      array_distinct(split(col("text"), " ")).as("toks"))
-    val cand = mentions
-      .join(broadcast(surfaces), Seq("surface"))
-      .join(pageTokens, Seq("url")) // co-located: mentions derive from pages
-      .withColumn("ctxScore",
-        size(array_intersect(col("toks"), col("context"))).cast("double"))
-      .withColumn("score", col("ctxScore") + col("prior"))
-    cand.groupBy(col("url"), col("g"), col("surface"), col("pos"))
-      .agg(min_by(
-        struct(col("entity"), col("etype"), col("score")),
-        struct((-col("score")).as("negScore"), col("entity"))).as("best"))
-      .select(col("url"), col("g"), col("surface"), col("pos"),
-        // alias-flavored sites (PageGen.aliasSiteSuffix) reference entities
-        // under /alt/ — emit what the source says; canonicalization merges
-        when(col("g").endsWith(PageGen.aliasSiteSuffix),
-          regexp_replace(col("best.entity"), "/entity/", "/alt/"))
-          .otherwise(col("best.entity")).as("entity"),
-        col("best.etype").as("etype"),
-        col("best.score").as("score"))
-  }
-
-  /** Like [[toQuads]] but keeps the contributing `url` column — the unit of
-    * incremental support counting in the pipeline (a quad may be emitted by
-    * many pages; global support = count of distinct contributing urls). */
-  def toQuadsAttributed(links: DataFrame, pages: DataFrame): DataFrame = {
-    import MentionDetector._
-    val iri = lit(TermKind.Iri); val litk = lit(TermKind.Literal)
-    val none = lit("")
-    val mentionQ = links.select(col("url"),
-      col("url").as("s"), lit(mentionsPred).as("p"),
-      col("entity").as("oLex"), iri.as("oKind"), none.as("oDtype"), none.as("oLang"),
-      col("g"))
-    val typeQ = links.select(col("url"),
-      col("entity").as("s"), lit(typePred).as("p"),
-      concat(lit("http://kg.example.org/class/"), col("etype")).as("oLex"),
-      iri.as("oKind"), none.as("oDtype"), none.as("oLang"), col("g"))
-    val pageMeta = pages
-      .withColumn("g", regexp_extract(col("url"), "^(https?://[^/]+)", 1))
-    val langQ = pageMeta.select(col("url"),
-      col("url").as("s"), lit(langPred).as("p"),
-      col("lang").as("oLex"), litk.as("oKind"), none.as("oDtype"),
-      col("lang").as("oLang"), col("g"))
-    val tsQ = pageMeta.select(col("url"),
-      col("url").as("s"), lit(crawledPred).as("p"),
-      date_format(col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("oLex"),
-      litk.as("oKind"), lit(XsdDateTime).as("oDtype"), none.as("oLang"), col("g"))
-    val posQ = links.select(col("url"),
-      concat(lit("_:m"), hex(abs(xxhash64(col("url"), col("pos"))))).as("s"),
-      lit(posPred).as("p"),
-      col("pos").cast("string").as("oLex"), litk.as("oKind"),
-      lit(XsdInteger).as("oDtype"), none.as("oLang"), col("g"))
-    mentionQ.unionByName(typeQ).unionByName(langQ).unionByName(tsQ).unionByName(posQ)
-      .dropDuplicates("url", "s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
-  }
-
-  /** links + pages -> quads (flat Quad columns). Emits:
-    *  - (url, kg:mentions, entityIri)            IRI object
-    *  - (entity, rdf:type, etypeIri)             IRI object
-    *  - (url, dct:language, "lang"@lang)         lang-tagged literal
-    *  - (url, kg:crawledAt, ts^^xsd:dateTime)    typed literal
-    *  - (_:m<hash>, kg:position, n^^xsd:integer) bnode subject + int literal
-    * covering every term kind in the reference serializer (utils.sql:35-66).
-    */
-  def toQuads(links: DataFrame, pages: DataFrame): DataFrame = {
-    import MentionDetector._
-    val iri = lit(TermKind.Iri); val litk = lit(TermKind.Literal)
-    val none = lit("")
-
-    val mentionQ = links.select(
-      col("url").as("s"), lit(mentionsPred).as("p"),
-      col("entity").as("oLex"), iri.as("oKind"), none.as("oDtype"), none.as("oLang"),
-      col("g"))
-    val typeQ = links.select(
-      col("entity").as("s"), lit(typePred).as("p"),
-      concat(lit("http://kg.example.org/class/"), col("etype")).as("oLex"),
-      iri.as("oKind"), none.as("oDtype"), none.as("oLang"), col("g"))
-    val pageMeta = pages
-      .withColumn("g", regexp_extract(col("url"), "^(https?://[^/]+)", 1))
-    val langQ = pageMeta.select(
-      col("url").as("s"), lit(langPred).as("p"),
-      col("lang").as("oLex"), litk.as("oKind"), none.as("oDtype"),
-      col("lang").as("oLang"), col("g"))
-    val tsQ = pageMeta.select(
-      col("url").as("s"), lit(crawledPred).as("p"),
-      date_format(col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("oLex"),
-      litk.as("oKind"), lit(XsdDateTime).as("oDtype"), none.as("oLang"), col("g"))
-    // store-scoped deterministic bnode ids (MOTIVATION.md:50-53 allows
-    // per-run minting as long as ids are internally consistent)
-    val posQ = links.select(
-      concat(lit("_:m"), hex(abs(xxhash64(col("url"), col("pos"))))).as("s"),
-      lit(posPred).as("p"),
-      col("pos").cast("string").as("oLex"), litk.as("oKind"),
-      lit(XsdInteger).as("oDtype"), none.as("oLang"), col("g"))
-
-    mentionQ.unionByName(typeQ).unionByName(langQ).unionByName(tsQ).unionByName(posQ)
-      .dropDuplicates("s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
-  }
-
-  /** Full extraction: pages -> canonical-ready quads. */
-  def extractQuads(spark: SparkSession, pages: Dataset[Page]): DataFrame = {
-    val df = pages.toDF()
-    val surfaces = MentionDetector.surfaceDim(spark)
-    val mentions = MentionDetector.detect(df, surfaces)
-    val links = link(mentions, df, surfaces)
-    toQuads(links, df)
-  }
 }

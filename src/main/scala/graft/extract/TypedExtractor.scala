@@ -8,24 +8,18 @@ import graft.sources.{PageGen, XXH64}
 final case class ContribRow(url: String, s: String, p: String, oLex: String,
                             oKind: Int, oDtype: String, oLang: String, g: String)
 
-/** The pipeline's HOT-PATH extractor: a typed mapPartitions in plain Scala.
+/** The pipeline's extractor: a typed mapPartitions in plain Scala. Per
+  * page: dictionary lookup per token, argmax(|page-token-set ∩ context| +
+  * prior, tie -> entity ascending), alias-site /alt/ namespace, per-page
+  * dedup, and bnode ids from xxHash64 (the plain-Scala mirror is verified
+  * bit-identical to Spark's by XxHash64MirrorSpec). Its independent oracle
+  * is the closed-form `ExpectedKg` (PRSpec, ExpectedKgSpec).
   *
-  * Why this exists next to [[RowwiseExtractor]] (the pure-Column form):
-  * Spark's higher-order functions (`transform`/`aggregate`/`filter`) are
-  * CodegenFallback — evaluated INTERPRETED, allocating boxed rows, array
-  * data and closures per element. Measured on this box, that allocation
-  * pressure saturates the memory subsystem at high thread counts: the
-  * Column-form extraction ran 2.5x SLOWER at local[32] than local[8].
-  * A hand-written flatMap JIT-compiles to tight loops with a fraction of
-  * the allocation, so it scales with cores — which is the property the
-  * north rule grades. All three implementations (typed, fused-Column,
-  * modular) are proven quad-for-quad identical by ExtractorEquivalenceSpec.
-  *
-  * The per-page logic mirrors RowwiseExtractor exactly: dictionary lookup
-  * per token, argmax(|page-token-set ∩ context| + prior, tie -> entity
-  * ascending), alias-site /alt/ namespace, per-page dedup, and bnode ids
-  * from the same xxHash64 (the plain-Scala mirror is verified bit-identical
-  * to Spark's by XxHash64MirrorSpec).
+  * Not Column expressions: Spark's higher-order functions are
+  * CodegenFallback — interpreted, allocating boxed rows, array data and
+  * closures per element — and a Column-form extraction measured on this
+  * box ran 2.5x SLOWER at local[32] than local[8]. The flatMap
+  * JIT-compiles to tight loops and scales with cores.
   */
 object TypedExtractor {
 
@@ -66,9 +60,9 @@ object TypedExtractor {
           while (i < toks.length) {
             val cands = dict.getOrElse(toks(i), null)
             if (cands != null) {
-              // argmax mirror of the Column-form aggregate: first candidate
-              // order = entity ascending; replace on strictly-greater score
-              // or equal score with smaller entity
+              // argmax: candidates come entity-ascending; replace on a
+              // strictly greater score or an equal score with a smaller
+              // entity
               var bestScore = Double.MinValue
               var bestEntity = ""
               var bestEtype = ""

@@ -24,7 +24,7 @@ object ExpectedKg {
   private val bySurface = PageGen.dictionary
     .flatMap(e => e.surfaces.map(s => s -> e)).groupBy(_._1)
 
-  /** EntityLinker/RowwiseExtractor argmax contract: max(ctx + prior),
+  /** The TypedExtractor argmax contract: max(ctx + prior),
     * ties -> entity IRI ascending. */
   private def linkOf(tok: String, distinctToks: Set[String]): Option[PageGen.DictEntry] =
     bySurface.get(tok).map { cands =>

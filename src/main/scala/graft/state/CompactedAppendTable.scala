@@ -27,10 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    table stays visible. A fully-written-but-unflipped `gen_<k+1>`
   *    resolving this way is equivalent content (the compaction is a
   *    full rewrite of the same rows).
-  *
-  * Legacy layout: a root dir holding flat `*.parquet` files (the
-  * pre-generation `mode("append")` layout) is migrated into `gen_0/` on
-  * first touch, so state written by earlier builds stays visible.
   */
 object CompactedAppendTable {
 
@@ -74,27 +70,10 @@ object CompactedAppendTable {
       .map(p => genIndex(p.getName)).toSeq
   }
 
-  /** One-time migration of the legacy flat layout (root-level `*.parquet`
-    * from a plain `mode("append")` writer) into `gen_0/`, so pre-generation
-    * state dirs stay visible instead of silently reading as empty. Per-file
-    * renames; a crash mid-loop leaves the remaining flat files at root and
-    * the next touch finishes the move. */
-  private def migrateLegacy(f: FileSystem, root: String): Unit = {
-    val rp = new Path(root)
-    if (!f.exists(rp)) return
-    val flat = f.listStatus(rp).filter(s => s.isFile &&
-      (s.getPath.getName.endsWith(".parquet") || s.getPath.getName == "_SUCCESS"))
-    if (!flat.exists(_.getPath.getName.endsWith(".parquet"))) return
-    val g0 = new Path(root, "gen_0")
-    f.mkdirs(g0)
-    flat.foreach(s => f.rename(s.getPath, new Path(g0, s.getPath.getName)))
-  }
-
   /** Current generation data dir. Resolution order: pointer file; else the
     * newest committed generation; else "gen_0" (empty table). */
   def currentDir(spark: SparkSession, root: String): String = {
     val f = fs(spark, root)
-    migrateLegacy(f, root)
     val gen = readPointer(f, root).getOrElse {
       committedGens(f, root).sorted.lastOption
         .map(k => s"gen_$k").getOrElse("gen_0")

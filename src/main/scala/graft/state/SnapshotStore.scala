@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
 
-/** Iceberg-lite bucketed table with atomic snapshot commits, copy-on-write
-  * full/bucket rewrites AND merge-on-read delta commits.
+/** Iceberg-lite bucketed table with atomic snapshot commits: full
+  * (bootstrap) writes and merge-on-read delta commits.
   *
   * No Iceberg jar ships in /opt/spark/jars, so we emulate the behaviors the
   * pipeline needs (SURVEY.md §7.3) behind this interface:
@@ -18,17 +18,10 @@ import java.nio.charset.StandardCharsets
   *     `_latest` -> manifest -> per-bucket paths; a crashed writer leaves
   *     only unreferenced files. This replaces the reference's sham-file /
   *     skip-last visibility protocol (generate-rdfpatch.sh:54, 259-261).
-  *  2. MERGE INTO — two physical strategies, as in a real lakehouse:
-  *     copy-on-write ([[stageMerge]]: rewrite whole touched buckets) and
-  *     merge-on-read ([[stageDelta]]: append O(batch) addition + tombstone
-  *     files; readers fold the chain). MOR is what makes incremental
-  *     batches O(batch): with a uniformly hash-bucketed key, ANY touched
-  *     url set hits every bucket, so bucket-granularity COW degenerates to
-  *     rewriting the entire store each batch — measured as over half the
-  *     incremental wall time, and at 10^12-document scale simply
-  *     impossible. Delta chains are bounded by `maxDeltas`: the commit
-  *     that would exceed it folds the chain into a fresh full base
-  *     (amortized O(store/maxDeltas) per batch).
+  *  2. MERGE INTO — merge-on-read ([[stageDelta]]: append O(batch)
+  *     addition + tombstone files; readers fold the chain), so an
+  *     incremental batch writes O(batch) bytes. Delta chains are bounded
+  *     by `maxDeltas`: the commit that would exceed it folds the chain.
   *  3. incremental reads — `readBuckets` loads (and folds) only named
   *     buckets; per-bucket parquet keeps min/max stats so pushed filters
   *     prune files.
@@ -63,8 +56,8 @@ import java.nio.charset.StandardCharsets
   * amortized O(store/maxDeltas) per batch, the exact write-amplification
   * shape MOR was introduced to kill.
   *
-  * @param deleteKeys columns identifying rows for MOR tombstones (empty =
-  *                   store is COW-only; stageDelta refuses)
+  * @param deleteKeys columns identifying rows for MOR tombstones (required,
+  *                   non-empty)
   * @param maxDeltas  delta-chain length that triggers a (partial) fold
   * @param foldBucketBytes per-bucket accumulated-delta-byte threshold above
   *                   which a fold event rewrites that bucket's base (0 =
@@ -87,11 +80,12 @@ import java.nio.charset.StandardCharsets
   *                   Exposed mainly so specs can force the bloom path.
   */
 final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int,
-                          val deleteKeys: Seq[String] = Seq.empty,
+                          val deleteKeys: Seq[String],
                           val maxDeltas: Int = 4,
                           val foldBucketBytes: Long = 8L << 20,
                           val termExpr: Option[org.apache.spark.sql.Column] = None,
                           val tombBroadcastBytes: Long = 64L << 20) {
+  require(deleteKeys.nonEmpty, s"SnapshotStore without deleteKeys: $root")
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
@@ -232,8 +226,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   /** Manifest: one `bucket<TAB>path` line per base bucket, plus zero or
     * more ordered delta lines — `D<TAB>tag<TAB>dir<TAB>scope` (scope `*`
-    * = all buckets, else comma-separated bucket ids). The legacy 2-field
-    * form `D<TAB>snapId` (dir derived from the id, unscoped) still reads. */
+    * = all buckets, else comma-separated bucket ids). */
   private def readManifest(id: Long): (Map[Int, String], Seq[DeltaRef]) = {
     val lines = readText(manifestPath(id)).split("\n").filter(_.nonEmpty)
     val base = lines.filterNot(_.startsWith("D\t")).map { l =>
@@ -242,11 +235,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val deltas = lines.filter(_.startsWith("D\t")).map { l =>
       // split with -1: String.split's default drops TRAILING empty fields,
       // so a 4-field delta line with an empty scope would silently parse
-      // as the 3-field shape (see the write-side require in manifestText)
+      // as a shorter shape (see the write-side require in manifestText)
       l.split("\t", -1) match {
-        case Array(_, t) =>
-          val tag = t.trim.toLong
-          DeltaRef(tag, s"$root/${f"snap_$tag%014d"}", None)
         case Array(_, t, dir, scope) =>
           if (scope.trim.isEmpty)
             sys.error(s"bad manifest delta line (empty scope): $l")
@@ -363,7 +353,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * match it), never corrupt, but the default stays defensive. */
   def stageDelta(additions: DataFrame, tombstones: DataFrame, id: Long,
                  tombstonesDistinct: Boolean = false): Unit = withLease {
-    require(deleteKeys.nonEmpty, s"stageDelta on a COW-only store: $root")
     val prevId = latest.getOrElse(sys.error("stageDelta on empty store"))
     val (base, deltas) = readManifest(prevId)
     // A no-op batch must not grow the chain: maxDeltas empty deltas would
@@ -636,50 +625,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   def isStagedNotFinal(id: Long): Boolean =
     fs.exists(manifestPath(id)) && !latest.exists(_ >= id)
 
-  /** Copy-on-write merge: replace ONLY `affected` buckets with the rows of
-    * `newBucketData` (which must contain exactly those buckets, with the
-    * `bucket` column set); all other buckets are carried forward by
-    * reference in the new manifest. */
-  def mergeBuckets(newBucketData: DataFrame, affected: Seq[Int], id: Long): Unit = {
-    stageMerge(newBucketData, affected, id)
-    finalizeCommit(id)
-  }
-
-  /** [[mergeBuckets]] without the `_latest` flip (see [[stageFull]]).
-    * COW path: requires an empty delta chain (a bucket rewrite would
-    * silently orphan chained deltas of other buckets) — delta-committing
-    * callers use [[stageDelta]], whose fold restores chain-free state. */
-  def stageMerge(newBucketData: DataFrame, affected: Seq[Int], id: Long): Unit = withLease {
-    val prevId = latest.getOrElse(sys.error("mergeBuckets on empty store"))
-    val (prev, chain) = readManifest(prevId)
-    require(chain.isEmpty,
-      s"stageMerge over a non-empty delta chain (${chain.size} deltas): $root")
-    val dataDir = new Path(root, f"snap_$id%014d").toString
-    if (affected.nonEmpty) {
-      writeData(newBucketData.repartition(math.max(affected.size, 1), col("bucket")), dataDir)
-      writeTermSidecar(dataDir, dataDir)
-    }
-    // a bucket can become empty: parquet partitionBy writes no dir for it,
-    // so point such buckets at an empty marker dir
-    val written: Set[Int] =
-      if (affected.isEmpty) Set.empty
-      else {
-        val d = new Path(dataDir)
-        if (fs.exists(d))
-          fs.listStatus(d).map(_.getPath.getName)
-            .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).toSet
-        else Set.empty
-      }
-    val entries = (0 until numBuckets).map { b =>
-      val path =
-        if (written.contains(b)) s"$dataDir/bucket=$b"
-        else if (affected.contains(b)) "" // emptied bucket
-        else prev.getOrElse(b, "")
-      s"$b\t$path"
-    }.mkString("\n")
-    writeAtomic(manifestPath(id), entries)
-  }
-
   // --- reads ---------------------------------------------------------------
 
   private def load(paths: Seq[(Int, String)]): Option[DataFrame] = {
@@ -756,27 +701,18 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     }
     val tagged = baseDf.map(df => -1L -> df).toSeq ++ adds
     if (tagged.isEmpty) return None
-    // COMMON-schema projection (head's column order): a store whose chain
-    // mixes schema generations — a base written before a column existed
-    // under deltas that carry it, or the reverse after a binary rollback —
-    // folds to the columns EVERY generation has instead of crashing on the
-    // head's superset (readers of evolved columns treat absence as "not
-    // available" and fall back; the canon `sig` column is the live case).
-    // The schemas are the recorded ones, so this costs no job; each
-    // dropped column is logged with the snapshot that lacks it, so an
-    // accidental column loss is visible rather than silent. Key columns
-    // stay loud: deleteKeys/bucket are contractual in every generation,
-    // so a genuinely malformed delta still fails below.
-    val cols = tagged.map(_._2.columns.toSeq).reduce((a, b) => a.filter(b.contains))
-    tagged.foreach { case (tag, df) =>
-      df.columns.filterNot(cols.contains).foreach { c =>
-        SnapshotStore.log.warn(s"$root: column '$c' of snapshot " +
-          s"${if (tag < 0) "base" else tag.toString} dropped from the fold: " +
-          "another snapshot in the chain lacks it")
-      }
+    // Every snapshot in the fold carries the head's column set, or the read
+    // fails naming the snapshot: folding to the common columns would drop
+    // a column from the whole store because one snapshot lacks it. The
+    // schemas are the recorded ones, so the check starts no job.
+    val headCols = tagged.head._2.columns.toSeq
+    tagged.tail.foreach { case (tag, df) =>
+      if (df.columns.toSet != headCols.toSet)
+        sys.error(s"$root: snapshot ${if (tag < 0) "base" else tag.toString} has columns " +
+          s"[${df.columns.mkString(", ")}], the fold's head has [${headCols.mkString(", ")}]")
     }
     val rows = tagged.map { case (tag, df) =>
-      df.select(cols.map(col): _*).withColumn("_wtag", lit(tag))
+      df.withColumn("_wtag", lit(tag))
     }.reduce(_ unionByName _)
     if (tombs.isEmpty) return Some(rows.drop("_wtag"))
     // tombstone keys renamed `_t_<key>`, so the condition names each side
@@ -879,8 +815,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 }
 
 object SnapshotStore {
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotStore])
-
   /** One merge-on-read delta in the chain: `tag` orders the fold join
     * (rows written by later snapshots beat earlier tombstones), `dir`
     * holds the delta's `add/` and `tomb/` parquet, and `scope` is the

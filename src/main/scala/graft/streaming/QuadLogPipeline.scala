@@ -66,10 +66,10 @@ final class QuadLogPipeline(
 
   graft.Preflight.assertSession(spark) // refuse to run misconfigured
 
-  // contrib/facts take MERGE-ON-READ deltas per batch (O(batch) commit
-  // writes; see SnapshotStore scaladoc — bucket-granularity COW rewrote the
-  // whole store every batch because touched urls hash into every bucket).
-  // Delete keys: contrib rows belong to a url; facts rows to a quad.
+  // Every store takes MERGE-ON-READ deltas per batch: O(batch) commit
+  // writes, where a bucket rewrite would rewrite the whole store because
+  // touched urls hash into every bucket. Delete keys: contrib rows belong
+  // to a url; facts rows to a quad.
   // contrib records per-bucket TermBloom sidecars over the IRI slots a
   // remap lookup probes (s, and oLex when the object is an IRI): a
   // cluster-merge batch plans a bucket-pruned scan via candidateBuckets
@@ -82,14 +82,13 @@ final class QuadLogPipeline(
       when(col("oKind") === graft.model.TermKind.Iri, col("oLex")))))
   val facts = new SnapshotStore(spark, s"$root/facts", numBuckets,
     deleteKeys = QuadDiff.quadCols, maxDeltas = maxDeltas)
-  // canon is MOR too: the accumulated map is O(all IRIs ever seen) — a
-  // full rewrite per batch (the old stageFull) is the same unbounded-write
-  // defect the contrib/facts COW had. Delta = the extendMapParts changed
-  // rows; tombstones = their ids. Per-bucket TermBloom sidecars over `id`
-  // (the store's own bucket key) let a batch plan BUCKET-PRUNED map reads:
-  // the fresh-id check and the rewrite view probe candidateBuckets with
-  // the batch's IRIs instead of reading the accumulated map (see
-  // extendedCanonMap — the map analogue of contrib's remap-scan pruning).
+  // canon: the accumulated map is O(all IRIs ever seen). Delta = the
+  // extendMapParts changed rows; tombstones = their ids. Per-bucket
+  // TermBloom sidecars over `id` (the store's own bucket key) let a batch
+  // plan BUCKET-PRUNED map reads: the fresh-id check and the rewrite view
+  // probe candidateBuckets with the batch's IRIs instead of reading the
+  // accumulated map (see extendedCanonMap — the map analogue of contrib's
+  // remap-scan pruning).
   val canon = new SnapshotStore(spark, s"$root/canon", math.min(numBuckets, 8),
     deleteKeys = Seq("id"), maxDeltas = maxDeltas,
     termExpr = Some(array(col("id"))))
@@ -207,10 +206,7 @@ final class QuadLogPipeline(
         // Persisted signatures (`sig` column, written by every canon
         // commit) route extendChangedGivenFresh through
         // verifiedPairsStored, so no shingle/signature pass over the
-        // accumulated domain ever runs per batch. Stores written before
-        // the column existed fall back to the recompute path. The column
-        // list is the recorded schema: knowing it costs no job.
-        lastCanonHasSig = full.columns.contains("sig")
+        // accumulated domain ever runs per batch.
         val stored = full.select("id", "canonical")
         val nIris = iris.count()
         // tier 1 — sidecar bucket pruning (collect gate mirrors the remap
@@ -243,14 +239,13 @@ final class QuadLogPipeline(
           // merge-on-read fold. Past the byte gate they go to the store
           // lazily: a per-batch O(map) materialization is exactly the
           // cost this path exists to shed.
-          val cols = if (lastCanonHasSig) Seq("id", "canonical", "sig") else Seq("id", "canonical")
           val m =
             if (canon.approxDataBytes > canonCheckpointBytes) full
-            else timed("canon.readOld")(full.select(cols.map(col): _*).localCheckpoint())
+            else timed("canon.readOld")(full.select("id", "canonical", "sig").localCheckpoint())
           val o = m.select("id", "canonical")
-          val storedSigs = if (lastCanonHasSig) Some(m.select("id", "sig")) else None
           val changed = timed("canonicalMap")(
-            IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh, storedSigs = storedSigs)
+            IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
+              storedSigs = Some(m.select("id", "sig")))
               .localCheckpoint())
           // rewrite view: pruned old rows minus the ones `changed`
           // replaces, plus the changed rows the batch can actually reference
@@ -284,19 +279,10 @@ final class QuadLogPipeline(
     * store) — observable plan-shape evidence for specs/benchmarks. */
   @volatile private[graft] var lastCanonBuckets: Option[Seq[Int]] = None
 
-  /** Whether the last canon-map read carried persisted signatures. Gates
-    * the incremental delta's sig attachment: a pre-sig store (written by
-    * an older binary) stays consistently sig-less — the read-side fold
-    * would drop a mixed-in column anyway (common-schema projection), so
-    * writing it would only burn kernel time and delta bytes forever.
-    * Migration is the next bootstrap/epoch reset, which always signs. */
-  @volatile private var lastCanonHasSig: Boolean = true
-
   /** Exact per-page contributions: quads tagged with the url that supports
     * them (a quad may appear under many urls; support = distinct urls).
-    * Uses the fused shuffle-free extractor (see RowwiseExtractor scaladoc);
-    * the modular MentionDetector/EntityLinker path computes identical quads
-    * (verified by ExtractorEquivalenceSpec). Pure — does not advance state. */
+    * Extraction is [[graft.extract.TypedExtractor]], checked against the
+    * closed-form `ExpectedKg` oracle. Pure — does not advance state. */
   def pageContributions(pages: Dataset[Page]): DataFrame = {
     // NOT cached: extraction is a narrow, CPU-bound, re-runnable pass; RAM-
     // caching 10^6+ deserialized rows costs more (alloc + GC bandwidth) than
@@ -488,12 +474,10 @@ final class QuadLogPipeline(
         // under superseded representatives would silently never be
         // rewritten. Staging keeps canon.read() on the OLD snapshot until
         // the single marker-guarded finalize below flips all three.
-        // MOR delta: only the CHANGED rows land (tombstones = their ids) —
-        // the old stageFull rewrote the whole accumulated map per batch.
+        // MOR delta: only the CHANGED rows land (tombstones = their ids).
         timed("incr.canonStage")(
           canon.stageDelta(
-            additions = (if (lastCanonHasSig)
-                IriCanonicalizer.withSignatures(canonChanged) else canonChanged)
+            additions = IriCanonicalizer.withSignatures(canonChanged)
               .withColumn("bucket", canon.bucketCol(col("id"))),
             tombstones = canonChanged.select(col("id"))
               .withColumn("bucket", canon.bucketCol(col("id"))),

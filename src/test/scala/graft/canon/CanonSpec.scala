@@ -252,6 +252,25 @@ class CanonicalizerSpec extends GraftSpec {
     assert(overGate == underGate && overGate.nonEmpty)
   }
 
+  test("verifiedPairsStored fails loudly on a short stored signature") {
+    // a 15-element stored sig would band into plausible but wrong keys
+    // (concat_ws skips the missing element); the read must fail naming the id
+    val d = graft.sources.PageGen.dictionary
+    val ids = d.take(4).map(_.iri)
+    val short = ids(2)
+    val storedSigs = ids.toDF("id")
+      .select(col("id"), IriCanonicalizer.signatureColumn(col("id")).as("sig"))
+      .withColumn("sig",
+        when(col("id") === short, slice(col("sig"), 1, 15)).otherwise(col("sig")))
+    val fresh = Seq(graft.sources.PageGen.aliasIri(d(0).iri)).toDF("id")
+    val e = intercept[Exception] {
+      IriCanonicalizer.verifiedPairsStored(fresh, storedSigs, 0.6).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"stored canon sig of id $short has 15 hashes, expected 16"), msgs)
+  }
+
   test("canonicalize rewrites subject and IRI-object but not literals") {
     val cmap = Seq(("http://kg.example.org/alt/X", "http://kg.example.org/entity/X"))
       .toDF("id", "canonical")

@@ -29,7 +29,7 @@ class PRSpec extends GraftSpec {
           val ctx = e.context.count(distinctToks.contains)
           (ctx + 1.0 / e.surfaces.size, e)
         }
-        // max score, tie-break entity IRI ascending (EntityLinker contract)
+        // max score, tie-break entity IRI ascending (TypedExtractor contract)
         scored.sortBy { case (score, e) => (-score, e.iri) }.head._2
       }
     }

@@ -72,20 +72,4 @@ class CompactedAppendTableSpec extends GraftSpec {
       Seq((b.toLong, "y")).toDF("batchId", "tag"), maxFiles = 4))
     assert(CompactedAppendTable.read(spark, root).get.count() == 20)
   }
-
-  test("legacy flat-layout dir (pre-generation mode-append) migrates on first touch") {
-    val root = tmpDir("cat5") + "/t"
-    // a previous build's layout: parquet files directly at the root
-    Seq((1L, "old"), (2L, "old")).toDF("batchId", "tag")
-      .write.mode("append").parquet(root)
-    assert(CompactedAppendTable.exists(spark, root),
-      "legacy state dir read as non-existent (would trigger full duplicate republish)")
-    assert(CompactedAppendTable.read(spark, root).get.count() == 2)
-    // appends land in the migrated table; nothing lost
-    CompactedAppendTable.append(spark, root,
-      Seq((3L, "new")).toDF("batchId", "tag"))
-    val data = CompactedAppendTable.read(spark, root).get
-    assert(data.count() == 3)
-    assert(data.filter(col("tag") === "old").count() == 2)
-  }
 }

@@ -8,7 +8,7 @@ class SnapshotStoreSpec extends GraftSpec {
 
   test("commit/read round trip with atomic latest pointer") {
     val root = tmpDir("store1")
-    val st = new SnapshotStore(spark, root, numBuckets = 4)
+    val st = new SnapshotStore(spark, root, numBuckets = 4, deleteKeys = Seq("k"))
     assert(st.latest.isEmpty)
     val df = (1 to 100).map(i => (s"k$i", i)).toDF("k", "v")
       .withColumn("bucket", st.bucketCol(col("k")))
@@ -17,17 +17,19 @@ class SnapshotStoreSpec extends GraftSpec {
     val back = st.read().get
     assert(back.count() == 100)
     assert(back.select(sum("v")).head().getLong(0) == 5050)
+    intercept[IllegalArgumentException] {
+      new SnapshotStore(spark, root + "_nokeys", numBuckets = 4, deleteKeys = Seq.empty)
+    }
   }
 
-  test("mixed-schema chain folds to the common columns, both directions") {
-    // schema evolution across binary generations (the canon `sig` column):
-    // a base without the evolved column under a delta that carries it — or
-    // the reverse, after a binary rollback wrote one old-format delta —
-    // must fold to the columns every generation has, never crash the read
-    // and never resurrect half-present values.
+  test("a chain whose snapshots disagree on columns fails loudly, both directions") {
+    // folding to the columns every snapshot has would silently drop a
+    // column from the whole store because one snapshot lacks it: a base
+    // without a column under a delta that carries it, or the reverse,
+    // must fail the read and name the snapshot that disagrees
     def mk(root: String) = new SnapshotStore(spark, root, numBuckets = 2,
       deleteKeys = Seq("k"), maxDeltas = 10)
-    // old base (k, v), new delta adds `extra`
+    // base (k, v), delta adds `extra`
     val st1 = mk(tmpDir("storeEvo1"))
     val base1 = (1 to 10).map(i => (s"k$i", i)).toDF("k", "v")
       .withColumn("bucket", st1.bucketCol(col("k")))
@@ -35,11 +37,10 @@ class SnapshotStoreSpec extends GraftSpec {
     val add1 = Seq(("k1", 100, "x")).toDF("k", "v", "extra")
       .withColumn("bucket", st1.bucketCol(col("k")))
     st1.commitDelta(add1, add1.select("k", "bucket"), 1L)
-    val back1 = st1.read().get
-    assert(back1.columns.toSeq == Seq("k", "v", "bucket"), back1.columns.mkString(","))
-    assert(back1.filter(col("k") === "k1").select("v").as[Int].head() == 100)
-    assert(back1.count() == 10)
-    // new base (k, v, extra), rolled-back delta without `extra`
+    val e1 = intercept[RuntimeException](st1.read())
+    assert(e1.getMessage.contains("snapshot 1 has columns [k, v, extra, bucket]") &&
+      e1.getMessage.contains("[k, v, bucket]"), e1.getMessage)
+    // base (k, v, extra), delta without `extra`
     val st2 = mk(tmpDir("storeEvo2"))
     val base2 = (1 to 10).map(i => (s"k$i", i, s"e$i")).toDF("k", "v", "extra")
       .withColumn("bucket", st2.bucketCol(col("k")))
@@ -47,48 +48,14 @@ class SnapshotStoreSpec extends GraftSpec {
     val add2 = Seq(("k2", 200)).toDF("k", "v")
       .withColumn("bucket", st2.bucketCol(col("k")))
     st2.commitDelta(add2, add2.select("k", "bucket"), 1L)
-    val back2 = st2.read().get
-    assert(back2.columns.toSeq == Seq("k", "v", "bucket"), back2.columns.mkString(","))
-    assert(back2.filter(col("k") === "k2").select("v").as[Int].head() == 200)
-    assert(back2.count() == 10)
-  }
-
-  test("mergeBuckets rewrites only affected buckets; others carried forward") {
-    val root = tmpDir("store2")
-    val st = new SnapshotStore(spark, root, numBuckets = 4)
-    val df = (1 to 100).map(i => (s"k$i", i)).toDF("k", "v")
-      .withColumn("bucket", st.bucketCol(col("k")))
-    st.commitFull(df, 0L)
-    // rewrite bucket of k1: replace contents with a single row
-    val b1 = df.filter(col("k") === "k1").select("bucket").as[Int].head()
-    val replacement = Seq(("k1", 999)).toDF("k", "v")
-      .withColumn("bucket", st.bucketCol(col("k")))
-    st.mergeBuckets(replacement, Seq(b1), 1L)
-    assert(st.latest.contains(1L))
-    val back = st.read().get.select("k", "v").as[(String, Int)].collect().toMap
-    assert(back("k1") == 999)
-    // untouched buckets intact
-    val untouched = df.filter(col("bucket") =!= b1).count()
-    assert(back.size == untouched + 1)
-    // bucket-pruned read returns only that bucket
-    val pruned = st.readBuckets(Seq(b1)).get
-    assert(pruned.select("bucket").distinct().as[Int].collect().toSeq == Seq(b1))
-  }
-
-  test("bucket can be emptied by a merge") {
-    val root = tmpDir("store3")
-    val st = new SnapshotStore(spark, root, numBuckets = 2)
-    val df = Seq(("a", 1), ("b", 2)).toDF("k", "v")
-      .withColumn("bucket", st.bucketCol(col("k")))
-    st.commitFull(df, 0L)
-    val allBuckets = df.select("bucket").distinct().as[Int].collect().toSeq
-    st.mergeBuckets(df.limit(0), allBuckets, 1L)
-    assert(st.read().isEmpty || st.read().get.count() == 0)
+    val e2 = intercept[RuntimeException](st2.readBuckets(Seq(0, 1)))
+    assert(e2.getMessage.contains("snapshot 1 has columns [k, v, bucket]") &&
+      e2.getMessage.contains("[k, v, extra, bucket]"), e2.getMessage)
   }
 
   test("epoch handshake") {
     val root = tmpDir("store4")
-    val st = new SnapshotStore(spark, root, numBuckets = 2)
+    val st = new SnapshotStore(spark, root, numBuckets = 2, deleteKeys = Seq("k"))
     assert(st.epoch.isEmpty)
     st.setEpoch("run-42")
     assert(st.epoch.contains("run-42"))
@@ -156,7 +123,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // schema inferences on EVERY store read — seconds of non-scaling
     // latency per pipeline batch
     val root = tmpDir("store8")
-    val st = new SnapshotStore(spark, root, numBuckets = 16)
+    val st = new SnapshotStore(spark, root, numBuckets = 16, deleteKeys = Seq("k"))
     val df = (1 to 200).map(i => (s"k$i", i)).toDF("k", "v")
       .withColumn("bucket", st.bucketCol(col("k")))
     st.commitFull(df, 0L)
@@ -175,7 +142,8 @@ class SnapshotStoreSpec extends GraftSpec {
 
   test("lease claim is atomic: racing claimants get exactly one winner") {
     val root = tmpDir("store_lease")
-    val stores = (0 until 8).map(_ => new SnapshotStore(spark, root, numBuckets = 2))
+    val stores = (0 until 8).map(_ =>
+      new SnapshotStore(spark, root, numBuckets = 2, deleteKeys = Seq("k")))
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(stores.size)
@@ -194,7 +162,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // winner can re-claim (retry path) and release; a new writer then claims
     val w = stores(results.indexWhere(_.get()))
     w.claimLease(); w.releaseLease()
-    val next = new SnapshotStore(spark, root, numBuckets = 2)
+    val next = new SnapshotStore(spark, root, numBuckets = 2, deleteKeys = Seq("k"))
     next.claimLease(); next.releaseLease()
   }
 
@@ -220,24 +188,6 @@ class SnapshotStoreSpec extends GraftSpec {
     val add = Seq(("c", 3)).toDF("k", "v").withColumn("bucket", st2.bucketCol(col("k")))
     st2.commitDelta(add, add.select("k", "bucket"), 2L)
     assert(st2.read().get.count() == 3)
-  }
-
-  test("stageDelta refuses on a COW-only store; stageMerge refuses over a live chain") {
-    val root = tmpDir("store6")
-    val cow = new SnapshotStore(spark, root + "/cow", numBuckets = 2)
-    val df = Seq(("a", 1)).toDF("k", "v").withColumn("bucket", cow.bucketCol(col("k")))
-    cow.commitFull(df, 0L)
-    intercept[IllegalArgumentException] {
-      cow.stageDelta(df, df.select("k", "bucket"), 1L)
-    }
-    val mor = new SnapshotStore(spark, root + "/mor", numBuckets = 2,
-      deleteKeys = Seq("k"), maxDeltas = 8)
-    mor.commitFull(df, 0L)
-    mor.commitDelta(Seq(("b", 2)).toDF("k", "v").withColumn("bucket", mor.bucketCol(col("k"))),
-      Seq("b").toDF("k").withColumn("bucket", mor.bucketCol(col("k"))), 1L)
-    intercept[IllegalArgumentException] {
-      mor.stageMerge(df, Seq(0, 1), 2L)
-    }
   }
 
   test("seeded fuzz: random delta sequences match the model across maxDeltas settings") {
@@ -434,7 +384,7 @@ class SnapshotStoreSpec extends GraftSpec {
       "missing sidecar must include all of that dir's buckets")
 
     // a store without termExpr has no index
-    val plain = new SnapshotStore(spark, root + "_plain", numBuckets = 2)
+    val plain = new SnapshotStore(spark, root + "_plain", numBuckets = 2, deleteKeys = Seq("k"))
     assert(plain.candidateBuckets(Seq("x")).isEmpty)
   }
 
