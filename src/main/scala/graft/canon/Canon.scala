@@ -2,6 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Timing.timed
 
 /** Connected components over an edge list via iterative DataFrame joins —
   * alternating large-star / small-star contraction (the O(log n)-round
@@ -26,15 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private[canon] def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing]   canon.$label%-29s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
-
   /** Below this many distinct edges, a driver-side union-find beats the
     * distributed rounds (each a shuffle + action) by seconds of fixed
     * latency. Above it, the iterative join path is the only thing that
@@ -55,14 +47,14 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
           smallGraphCutoff: Long = driverThreshold): DataFrame = {
     // undirected closure, self-edges dropped
-    val e0 = timed("cc.e0.checkpoint")(edges.select(col("src"), col("dst"))
+    val e0 = timed("canon.cc.e0.checkpoint")(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint())
 
     if (smallGraphCutoff > 0 && e0.count() <= smallGraphCutoff)
-      return timed("cc.driver")(runOnDriver(spark, e0))
+      return timed("canon.cc.driver")(runOnDriver(spark, e0))
 
     val vertices = e0.select(col("src").as("id")).distinct().localCheckpoint()
 
@@ -175,8 +167,8 @@ object MinHashBlocking {
       // Similarity.scala's scaladoc and the typed kernels in Dedup). That
       // is acceptable HERE ONLY because this path's input is the
       // churn-sized canon IRI shingle set (thousands of short arrays per
-      // batch), never a corpus-sized column — Micro's MINHASH_HOF probe
-      // pins the cost; do NOT copy this pattern onto document text.
+      // batch), never a corpus-sized column — 2.6x the typed kernel's cost
+      // at 200k rows (BENCH.md); do NOT copy this pattern onto document text.
       aggregate(
         transform(toks, t => xxhash64(t, lit(i))),
         lit(Long.MaxValue),
@@ -266,7 +258,7 @@ object IriCanonicalizer {
                    jaccardThreshold: Double = 0.6): DataFrame = {
     // size probe: limit(L+1) short-circuits on large domains, and under the
     // gate the probe rows ARE the whole domain (no second evaluation)
-    val probe = ConnectedComponents.timed("iris.probe")(
+    val probe = timed("canon.iris.probe")(
       iris.select(col("id")).limit(driverDomainLimit + 1).collect())
     if (probe.length <= driverDomainLimit) {
       val ids = probe.map(_.getString(0)).toSeq.distinct
@@ -284,7 +276,7 @@ object IriCanonicalizer {
     * the driver mirror is spec-asserted EQUAL against it). */
   private[canon] def canonicalMapDistributed(spark: SparkSession, iris: DataFrame,
                                              jaccardThreshold: Double): DataFrame = {
-    val irisC = ConnectedComponents.timed("iris.checkpoint")(iris.localCheckpoint())
+    val irisC = timed("canon.iris.checkpoint")(iris.localCheckpoint())
     mapFromEdges(spark, irisC, verifiedPairs(irisC, jaccardThreshold))
   }
 
@@ -473,7 +465,7 @@ object IriCanonicalizer {
     //    (verifiedPairs checkpoints its own signature frame; the typed
     //    verification reads no domain-side toks), so no checkpoint here
     //    either.
-    val newEdges = ConnectedComponents.timed("ext.newEdges")((storedSigs match {
+    val newEdges = timed("canon.ext.newEdges")((storedSigs match {
       case Some(ss) => verifiedPairsStored(fresh, ss, jaccardThreshold)
       case None =>
         val ids = oldMap.select(col("id")).union(fresh.select(col("id")))
@@ -481,20 +473,20 @@ object IriCanonicalizer {
     }).localCheckpoint())
     val endpoints = newEdges.select(col("src").as("id"))
       .union(newEdges.select(col("dst").as("id"))).distinct()
-    val touchedReps = ConnectedComponents.timed("ext.touchedReps")(oldMap
+    val touchedReps = timed("canon.ext.touchedReps")(oldMap
       .join(endpoints, Seq("id"), "left_semi")
       .select(col("canonical").as("rep")).distinct()
       .localCheckpoint())
     val touchedOld = oldMap
       .join(touchedReps.withColumnRenamed("rep", "canonical"), Seq("canonical"), "left_semi")
-    val touchedIds = ConnectedComponents.timed("ext.touchedIds")(touchedOld.select(col("id"))
+    val touchedIds = timed("canon.ext.touchedIds")(touchedOld.select(col("id"))
       .union(touchedOld.select(col("canonical").as("id")))
       .union(fresh.select(col("id")))
       .distinct().localCheckpoint())
     val edges = newEdges.unionByName(
       touchedOld.filter(col("id") =!= col("canonical"))
         .select(col("id").as("src"), col("canonical").as("dst")))
-    ConnectedComponents.timed("ext.mapFromEdges")(mapFromEdges(spark, touchedIds, edges))
+    timed("canon.ext.mapFromEdges")(mapFromEdges(spark, touchedIds, edges))
   }
 
   /** LSH geometry shared by every canon pair path (and the driver mirror's
@@ -569,7 +561,7 @@ object IriCanonicalizer {
     * toksColumn — CanonicalizerSpec; [[jaccardScala]] mirrors the size
     * arithmetic) but ~100x cheaper per pair: the Column toks tree is a HOF
     * transform (CodegenFallback, interpreted) that measured 237 s for a
-    * 13M-pair verification vs seconds typed (Micro CANON_VPS). The Column
+    * 13M-pair verification vs seconds typed (OPTIMIZATION_r07.md). The Column
     * `uni > 0` guard is vacuous here — shingleScala always yields at least
     * the singleton empty-string shingle, so uni >= 1 — but mirrored anyway. */
   private def verifyPairsTyped(pairs: DataFrame, th: Double): DataFrame = {
@@ -614,10 +606,10 @@ object IriCanonicalizer {
     // signatureColumn / verifyPairsTyped scaladocs) at a fraction of the
     // per-row cost. Verification runs on the RAW band pairs and the dedup
     // runs on the SURVIVORS: verification is a pure function of (a, b), so
-    // it commutes with distinct — the old shape shuffled the full candidate
-    // population (13M rows at the CANON_VPS probe shape) only to verify a
-    // few thousand of them; this shape re-verifies a pair once per extra
-    // shared band (bounded 8x, in practice ~1x) and shuffles only edges.
+    // it commutes with distinct — dedup-first would shuffle all 13M
+    // candidates (OPTIMIZATION_r07.md's 10M-id shape) to verify a few
+    // thousand; this shape re-verifies a pair once per extra shared band
+    // (bounded 8x, in practice ~1x) and shuffles only edges.
     // sigs is CHECKPOINTED because the band self-join consumes it on both
     // sides and Spark does no cross-branch CSE — un-materialized, the
     // domain signature kernel would run twice.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.rdf.NQuadFormatter
+import graft.Timing.timed
 
 /** S5/A2 — chunked RDF-patch file sink.
   *
@@ -56,14 +57,6 @@ object PatchWriter {
       s"# graph          $graph",
       s"# base64         $b64",
       s"# amount         $amount")
-
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing]   $label%-30s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
 
   /** patches: (op + quad cols). Returns number of files written. */
   def write(spark: SparkSession, patches: DataFrame, outDir: String,

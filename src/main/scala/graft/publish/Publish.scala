@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
+import graft.Timing.timed
 
 /** S7/W2 — the resourcesync-generator re-expressed: package committed patch
   * files into fixed-size zip batches with per-resource checksums, and publish
@@ -152,14 +153,6 @@ object ZipPublisher {
   private val XmlNs =
     """xmlns="http://www.sitemaps.org/schemas/sitemap/0.9" xmlns:rs="http://www.openarchives.org/rs/terms/""""
 
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing] publish.$label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
-
   /** Run independent per-graph filesystem work on a bounded thread pool
     * (Hadoop FileSystem handles are thread-safe; each task touches only
     * its own graph directory). Surfaces the first failure only after all
@@ -300,7 +293,7 @@ object ZipPublisher {
     // BEFORE the checksum pass so published files are never read again; when
     // the pipeline's graph-folder index is supplied, the fan-out is driven
     // by it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
-    val listed = timed("inventory")(ManifestBuilder.list(spark, patchDir)).toDF()
+    val listed = timed("publish.inventory")(ManifestBuilder.list(spark, patchDir)).toDF()
     val inGraphs = graphIndex match {
       case None => listed
       case Some(gi) => listed.join(
@@ -363,12 +356,12 @@ object ZipPublisher {
         windows.flatten
       }
       .toDF()
-    val windowedC = timed("windowedInventory") {
+    val windowedC = timed("publish.windowedInventory") {
       windowed0.localCheckpoint() // consumed 3x below (end check, naming, zip build)
     }
 
     // existing sink state: one tiny entry per graph that holds a zip
-    val sinkGraphs: Map[String, SinkGraph] = timed("scanSink")(scanSink(f, sinkDir))
+    val sinkGraphs: Map[String, SinkGraph] = timed("publish.scanSink")(scanSink(f, sinkDir))
 
     // J3: per-graph end-part membership as (basename, md5) pairs — a member
     // whose CONTENT changed under the same name triggers a rebuild, exactly
@@ -496,14 +489,14 @@ object ZipPublisher {
     // and including the state append deletes every artifact this run
     // created (def and end) and re-raises.
     val built = try {
-      val rows = timed("zipBuild")(buildJob.collect())
+      val rows = timed("publish.zipBuild")(buildJob.collect())
       if (rows.isEmpty) return Seq.empty
       onBuiltForTests(rows.map { case (g, name, complete, n, len, md5v, lastmod) =>
         ZipInfo(g, name, complete, n, len, md5v, lastmod) }.toSeq)
       // published-state bookkeeping: complete-zip members, written
       // distributed; compacted-append layout bounds the state's file count
       // across thousands of publish runs, sized ~4M member rows per file
-      timed("stateAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
+      timed("publish.stateAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
         assigned.filter(col("is_complete"))
           .select(col("resource"), col("zipName").as("zip")),
         targetFiles = rowsTotal => (rowsTotal / 4000000L + 1L).toInt))
@@ -526,7 +519,7 @@ object ZipPublisher {
     // unchanged — this pass runs after the state commit (the crash tests'
     // post-state window still sees zero metadata) and before the dump-xml
     // regeneration. Only a count returns.
-    timed("zipSidecars") {
+    timed("publish.zipSidecars") {
       val sidecarJob = assigned
         .select("graph_b64", "zipName", "is_complete", "resource", "md5", "length", "lastmod")
         .repartition(col("graph_b64"), col("zipName"))
@@ -571,7 +564,7 @@ object ZipPublisher {
     // run on a small thread pool: serially this driver loop is O(graphs)
     // of filesystem round-trips, the publish tail's bottleneck once the
     // graph count is large.
-    timed("graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
+    timed("publish.graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
       val gDir = new Path(sinkDir, g)
       val gUrl = s"$publishUrl$g/"
       // (per-zip sidecars were already written by the distributed pass
@@ -609,7 +602,7 @@ object ZipPublisher {
     // superseded part_end zips/sidecars and repair any dump xml whose end
     // entries disagree with the on-disk current end — the do_publish tail,
     // hardened against crashes in past runs' metadata windows.
-    timed("sweepStaleEnds")(sweepStaleEnds(f, sinkDir, publishUrl, summaries.toSeq, nowIso, maxItemsInList, metadataThreads))
+    timed("publish.sweepStaleEnds")(sweepStaleEnds(f, sinkDir, publishUrl, summaries.toSeq, nowIso, maxItemsInList, metadataThreads))
 
     // top-level source description over every graph dir with a capability list
     val graphs = f.listStatus(new Path(sinkDir)).filter(_.isDirectory)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
+import graft.Timing.timed
 
 /** Iceberg-lite bucketed table with atomic snapshot commits: full
   * (bootstrap) writes and merge-on-read delta commits.
@@ -90,14 +91,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
 
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing]   store.$label%-29s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
+  private val timingName = s"store[${new Path(root).getName}]"
 
   // --- single-writer lease (guard rail, not a distributed lock) ------------
 
@@ -319,8 +313,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
                 assumePartitioned: Boolean = false): Unit = withLease {
     val dataDir = new Path(root, f"snap_$id%014d").toString
     val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
-    timed("full.write")(writeData(placed, dataDir))
-    if (!deferSidecar) timed("full.sidecar")(writeTermSidecar(dataDir, dataDir))
+    timed(s"$timingName.full.write")(writeData(placed, dataDir))
+    if (!deferSidecar) timed(s"$timingName.full.sidecar")(writeTermSidecar(dataDir, dataDir))
     val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
     writeAtomic(manifestPath(id), manifestText(base, Seq.empty))
   }
@@ -334,7 +328,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val (base, _) = readManifest(id)
     val dirs: Set[String] = base.values.filter(_.nonEmpty)
       .map(p => new Path(p).getParent.toString).toSet
-    dirs.foreach(dir => timed("full.sidecar")(writeTermSidecar(dir, dir)))
+    dirs.foreach(dir => timed(s"$timingName.full.sidecar")(writeTermSidecar(dir, dir)))
   } }
 
   /** Stage a MERGE-ON-READ delta commit: O(batch) writes regardless of
@@ -378,17 +372,17 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     // exchange also keeps a 10^9-key tombstone set from funnelling
     // through one task.
     val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
-    timed("delta.add")(writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add"))
+    timed(s"$timingName.delta.add")(writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add"))
     val tombRows = tombstones.select((deleteKeys :+ "bucket").map(col): _*)
-    timed("delta.tomb")(writeData(
+    timed(s"$timingName.delta.tomb")(writeData(
       (if (tombstonesDistinct) tombRows else tombRows.distinct())
         .repartition(parts, col("bucket")), s"$snapDir/tomb"))
-    timed("delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
+    timed(s"$timingName.delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)
     if (chain.size <= maxDeltas)
       writeAtomic(manifestPath(id), manifestText(base, chain))
     else
-      timed("delta.fold")(foldChain(base, chain, id))
+      timed(s"$timingName.delta.fold")(foldChain(base, chain, id))
   }
 
   /** Cap on distinct snap dirs the base may fragment across: each distinct

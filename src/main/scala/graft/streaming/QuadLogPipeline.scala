@@ -1,12 +1,17 @@
 package graft.streaming
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Timing.timed
 import graft.model.Page
 import graft.canon.IriCanonicalizer
 import graft.plans.{PatchWriter, QuadDiff}
-import graft.state.SnapshotStore
+import graft.state.{SnapshotStore, TermBloom}
 
 /** The end-to-end KG changelog pipeline — the Spark re-expression of the
   * reference's three chained components (quad-logger -> graph-splitter ->
@@ -37,11 +42,13 @@ import graft.state.SnapshotStore
   *                 facts are rewritten and the change surfaces as ordinary
   *                 -/+ patches (remap flow in [[incremental]]).
   *
-  * Per batch, work is proportional to |changed pages|, not |table|:
-  *   changed pages -> extract+link -> new contributions
-  *   old contributions of exactly those urls (bucket-pruned read)
-  *   signed per-quad delta -> support transition vs facts store
-  *   -> RDF-patch files + facts/contrib merges + lineage append.
+  * An [[incremental]] batch runs as named phases, each timed as
+  * `incr.phase.<name>`, with work proportional to |changed pages|, not
+  * |table|: derive (extract, extend and stage the canon map, canonicalize),
+  * touchedUrls and touch (the touched urls and their stored contributions),
+  * delta (the signed per-quad support delta), transition (vs the pruned
+  * facts store), sinks (patch files, graph index, staged facts and contrib
+  * deltas, concurrently) and commit (tallies, lineage, marker, flips).
   *
   * Checkpoint/resume (reference T2, vql_lastlogsuffix.txt): the lineage
   * table records per-bucket url ranges, the batch watermark and counts; a
@@ -51,8 +58,12 @@ import graft.state.SnapshotStore
   * move together): merges are STAGED (data + manifest, no pointer flip),
   * then a single `_commit` marker is written, then both pointers flip.
   * [[recoverPartialCommit]] replays the flips from the marker, so a crash
-  * between the two finalizes can no longer leave contrib one batch behind
-  * facts with re-runs silently no-oping against stale contributions.
+  * between the two finalizes cannot leave contrib one batch behind facts
+  * with re-runs silently no-oping against stale contributions.
+  *
+  * `facts/_epoch` is [[bootstrap]]'s completion point: bootstrap writes it
+  * last, after the dump trailer and lineage, and [[incremental]] refuses
+  * to run without it.
   */
 final class QuadLogPipeline(
     spark: SparkSession,
@@ -116,10 +127,6 @@ final class QuadLogPipeline(
       .withColumn("firstBatch", lit(batchId))
       .withColumn("bucket", lit(0))
 
-  /** Bootstrap-only: the initial full write of the graph dimension. */
-  private def bootstrapGraphIndex(withG: DataFrame): Unit =
-    graphIdx.commitFull(graphDim(withG, 0L), 0L)
-
   /** Per-batch insert-if-absent as a MOR delta: additions = graphs first
     * seen this batch (anti-joined against the accumulated index — a READ
     * of the small dimension, never a rewrite); tombstones = the same keys
@@ -157,10 +164,7 @@ final class QuadLogPipeline(
     *  - `view`    = the EXTENDED map restricted to (a superset of) the
     *    batch's candidate IRIs — everything the batch rewrite can match.
     *    Churn-sized at ANY accumulated map size, so the rewrite join
-    *    stays a BROADCAST at target scale (the old path handed the full
-    *    map to the rewrite and fell back to a store-sized shuffle join
-    *    the moment the map outgrew broadcastRowLimit — i.e. at billions
-    *    of IRIs, every batch).
+    *    stays a BROADCAST at target scale.
     *  - `changed` = exactly the rows that differ from the stored map
     *    (fresh ids + members of clusters a new edge touched) — the canon
     *    store's merge-on-read delta. At bootstrap (empty store) it is the
@@ -194,7 +198,6 @@ final class QuadLogPipeline(
     * [[IriCanonicalizer.verifiedPairsStored]] derive from it. */
   private[graft] def extendedCanonMap(rawQuads: DataFrame)
       : (DataFrame, Long, Option[DataFrame], DataFrame) = {
-    import spark.implicits._
     val iris = timed("canon.iris")(candidateIris(rawQuads).localCheckpoint())
     canon.read() match {
       case None =>
@@ -211,16 +214,12 @@ final class QuadLogPipeline(
         val nIris = iris.count()
         // tier 1 — sidecar bucket pruning (collect gate mirrors the remap
         // scan's: 100k strings ≈ a few MB on the driver)
-        val oldView: DataFrame =
-          if (nIris <= canonProbeLimit) {
-            canon.candidateBuckets(iris.as[String].collect().toSeq) match {
-              case Some(bs) =>
-                lastCanonBuckets = Some(bs)
-                canon.readBuckets(bs).map(_.select("id", "canonical"))
-                  .getOrElse(stored.limit(0))
-              case None => lastCanonBuckets = None; stored
-            }
-          } else { lastCanonBuckets = None; stored }
+        val buckets =
+          if (nIris > canonProbeLimit) None
+          else canon.candidateBuckets(iris.as[String].collect().toSeq)
+        lastCanonBuckets = buckets
+        val oldView = buckets.fold(stored)(bs =>
+          canon.readBuckets(bs).map(_.select("id", "canonical")).getOrElse(stored.limit(0)))
         // tier 2 — bloom row pruning inside the scan (codegen predicate)
         val irisBloom = spark.sparkContext.broadcast(
           graft.functions.BloomProbe.build(
@@ -287,7 +286,7 @@ final class QuadLogPipeline(
     // NOT cached: extraction is a narrow, CPU-bound, re-runnable pass; RAM-
     // caching 10^6+ deserialized rows costs more (alloc + GC bandwidth) than
     // recomputing, and at real scale caching the corpus is impossible anyway.
-    val quads = graft.extract.TypedExtractor.pageQuads(pages.toDF())
+    val quads = rawQuads(pages)
     val out =
       if (!canonicalize) quads
       else {
@@ -334,7 +333,13 @@ final class QuadLogPipeline(
     * once into the contrib store; every downstream consumer reads committed
     * parquet back (columnar, splittable) instead of a RAM cache — at bench
     * scale the deserialized-row cache was the memory-bandwidth bottleneck,
-    * and at target scale caching the corpus is impossible regardless. */
+    * and at target scale caching the corpus is impossible regardless.
+    *
+    * Recovery is a re-run: bootstrap resets every store first. Its
+    * completion point is `facts/_epoch`, written last — after the trailer
+    * and lineage — so a dump that failed (an INVALID fingerprint re-check,
+    * a sink error, a crash) leaves no epoch and [[incremental]] refuses to
+    * run on top of it. */
   def bootstrap(pages: Dataset[Page], epoch: String, checkpoint: String): BatchResult = {
     val startedAtMs = System.currentTimeMillis()
     contrib.reset(); facts.reset(); canon.reset(); graphIdx.reset()
@@ -349,9 +354,6 @@ final class QuadLogPipeline(
     // read pre-drift rows — a torn snapshot would pass. The reference's
     // vql_check_trx window covers the whole dump with no such blind spot;
     // the small serial column-pruned scan is the price of that guarantee.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = sinkEc
     val fp0 = timed("bootstrap.fingerprint")(snapshotFingerprint(pages))
     val raw = rawQuads(pages)
     val contribData =
@@ -366,23 +368,14 @@ final class QuadLogPipeline(
           .withColumn("bucket", canon.bucketCol(col("id"))), 0L)
         rewriteIfNonTrivial(raw, view, viewRows)
       }
-    timed("bootstrap.commitContrib") {
-      // sidecar DEFERRED: its build (one column-pruned re-read of the just
-      // written parquet) is independent of the facts aggregation below, so
-      // it runs as an overlapped future instead of serializing the chain;
-      // absent-sidecar windows are the safe conservative fallback.
-      contrib.commitFull(contribData.withColumn("bucket", contrib.bucketCol(col("url"))), 0L,
-        deferSidecar = true)
-      contrib.setEpoch(epoch)
-    }
-    val fContribSidecar = Future(timed("bootstrap.contribSidecar") {
-      contrib.buildSidecarForLatest()
-    })
-    val cBack = contrib.read().get
-    timed("bootstrap.commitFacts") {
-      facts.commitFull(supportCounts(cBack), 0L, assumePartitioned = true)
-      facts.setEpoch(epoch)
-    }
+    // sidecar DEFERRED: its build (one column-pruned re-read of the just
+    // written parquet) is independent of everything after it, so it runs
+    // as one more sink below instead of serializing the chain;
+    // absent-sidecar windows are the safe conservative fallback.
+    timed("bootstrap.commitContrib")(contrib.commitFull(
+      contribData.withColumn("bucket", contrib.bucketCol(col("url"))), 0L, deferSidecar = true))
+    timed("bootstrap.commitFacts")(
+      facts.commitFull(supportCounts(contrib.read().get), 0L, assumePartitioned = true))
     // Patches dump from the COMMITTED facts parquet (cheap columnar scans —
     // measured: sourcing it from the `supports` plan re-ran the whole
     // support aggregation once per PatchWriter pass), overlapped with the
@@ -392,29 +385,19 @@ final class QuadLogPipeline(
     // measured scaling residual in BENCH.md §Scaling).
     val sBack = facts.read().get
     val patches = sBack.select((lit("+").as("op") +: quadCols.map(col)): _*)
-    val fFiles = Future(timed("bootstrap.patchFiles") {
-      PatchWriter.write(spark, patches, s"$root/patches/batch_0", checkpoint, maxq)
-    })
-    val fIdx = Future(bootstrapGraphIndex(sBack))
     // A4: the fingerprint re-check and the metadata count are independent
-    // read-only jobs over inputs the sinks never touch — submit them WITH
-    // the sinks (two more overlapped small jobs) but AWAIT them before the
-    // trailer below, which is the externally visible completion artifact
-    // (dump_nquads.sql:75-78 invalidates before declaring complete). A
-    // torn snapshot still raises while the trailer and lineage are absent;
-    // the store commits above are internal state a re-run overwrites.
-    val fAdded = Future(timed("bootstrap.addedCount")(sBack.count())) // parquet metadata count
-    val fRecheck = Future(timed("bootstrap.recheckFp")(assertSnapshotStable(pages, fp0)))
-    val (rFiles, rIdx, rAdded, rRecheck, rSidecar) =
-      (scala.util.Try(Await.result(fFiles, Duration.Inf)),
-        scala.util.Try(Await.result(fIdx, Duration.Inf)),
-        scala.util.Try(Await.result(fAdded, Duration.Inf)),
-        scala.util.Try(Await.result(fRecheck, Duration.Inf)),
-        scala.util.Try(Await.result(fContribSidecar, Duration.Inf)))
-    Seq(rRecheck, rFiles, rIdx, rAdded, rSidecar)
-      .collectFirst { case scala.util.Failure(e) => throw e }
-    val files = rFiles.get
-    val added = rAdded.get
+    // read-only jobs over inputs the sinks never touch — submitted WITH the
+    // sinks, but settled before the trailer below, which is the externally
+    // visible completion artifact (dump_nquads.sql:75-78 invalidates before
+    // declaring complete). A torn snapshot raises while the trailer,
+    // lineage and epoch are absent.
+    val Seq(_, files: Long, _, added: Long, _) = fanIn(
+      () => timed("bootstrap.recheckFp")(assertSnapshotStable(pages, fp0)),
+      () => timed("bootstrap.patchFiles")(
+        PatchWriter.write(spark, patches, s"$root/patches/batch_0", checkpoint, maxq)),
+      () => graphIdx.commitFull(graphDim(sBack, 0L), 0L),
+      () => timed("bootstrap.addedCount")(sBack.count()), // parquet metadata count
+      () => timed("bootstrap.contribSidecar")(contrib.buildSidecarForLatest()))
     // dump-report trailer file (dump_nquads.sql:58-83 / sample fixture)
     val isoNow = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
@@ -423,6 +406,7 @@ final class QuadLogPipeline(
       completed = isoNow.format(java.time.Instant.now()),
       quadCount = added, fileCount = files)
     timed("bootstrap.lineage")(writeLineage(epoch, 0L, pages, added, 0L, files))
+    facts.setEpoch(epoch) // the completion point: incremental reads it
     BatchResult(0L, added, 0L, files)
   }
 
@@ -450,20 +434,39 @@ final class QuadLogPipeline(
   /** Incremental batch (lifecycle 3.2). `changed` = pages whose current
     * revision is new since the watermark (adds + updates); `deletedUrls` =
     * pages removed from the source. Work scales with |changed|+|deleted|
-    * (+ the rare remap rewrite set when canonical clusters merge). */
+    * (+ the rare remap rewrite set when canonical clusters merge).
+    * The phases are listed in the class scaladoc. */
   def incremental(batchId: Long, checkpoint: String,
                   changed: Dataset[Page], deletedUrls: Dataset[String]): BatchResult = {
-    val epoch = contrib.epoch.getOrElse(sys.error("bootstrap first"))
+    val epoch = facts.epoch.getOrElse(sys.error("bootstrap first"))
     recoverPartialCommit()
     if (alreadyCommitted(batchId)) return BatchResult(batchId, 0, 0, 0) // idempotent re-run
+    val (newContrib, remap) = timed("incr.phase.derive")(derive(batchId, changed))
+    val (touchedUrls, remapUrls) =
+      timed("incr.phase.touchedUrls")(touchedUrlSet(remap, changed, deletedUrls))
+    try {
+      val (oldContrib, urlBloom) =
+        timed("incr.phase.touch")(touch(touchedUrls, newContrib, remap.isDefined))
+      val delta = timed("incr.phase.delta")(signedDelta(newContrib, oldContrib, remap, remapUrls))
+      urlBloom.foreach(_.unpersist()) // oldContrib consumers are materialized
+      val (patchesC, newFactRows) = timed("incr.phase.transition")(transition(delta))
+      val files = timed("incr.phase.sinks")(
+        sinks(batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, deletedUrls))
+      timed("incr.phase.commit")(commit(epoch, batchId, changed, patchesC, files))
+    } finally touchedUrls.unpersist()
+  }
 
+  /** Phase derive: the changed pages' canonical contributions and, after a
+    * cluster merge, the checkpointed (oldRep -> newRep) pairs and count. */
+  private def derive(batchId: Long, changed: Dataset[Page])
+      : (DataFrame, Option[(DataFrame, Long)]) = {
     // CHANGED-page extraction materialized ONCE: both the canon IRI pass
     // and the contribution rewrite consume it, and lazily each re-ran the
     // extraction kernel. Unlike bootstrap (corpus-sized — deliberately
     // recomputed, see rawQuads), this is O(batch) rows in the block store,
-    // the same bound as newSide below.
+    // the same bound as newSide in signedDelta.
     val rawNew = timed("incr.rawNew")(rawQuads(changed).localCheckpoint())
-    val (newContrib0, remapPairs) =
+    val (newContrib, remapPairs) =
       if (!canonicalize) (rawNew, None)
       else {
         val (view, viewRows, remapped, canonChanged) = extendedCanonMap(rawNew)
@@ -473,7 +476,7 @@ final class QuadLogPipeline(
         // against the already-extended map (empty remap set) — stored rows
         // under superseded representatives would silently never be
         // rewritten. Staging keeps canon.read() on the OLD snapshot until
-        // the single marker-guarded finalize below flips all three.
+        // the single marker-guarded finalize in commit flips all three.
         // MOR delta: only the CHANGED rows land (tombstones = their ids).
         timed("incr.canonStage")(
           canon.stageDelta(
@@ -485,20 +488,24 @@ final class QuadLogPipeline(
             tombstonesDistinct = true)) // one map row per id by construction
         (rewriteIfNonTrivial(rawNew, view, viewRows), remapped)
       }
-    val newContrib = newContrib0.withColumn("bucket", contrib.bucketCol(col("url")))
-
-    // remap flow: stored rows recorded under superseded representatives are
-    // rewritten and their urls treated as touched — their -old/+new falls
-    // out of the ordinary signed-delta machinery below. Cluster merges are
-    // rare so the pair set is usually tiny, but it stays DISTRIBUTED: a
-    // semi-join against it (auto-broadcast when small) instead of a driver
-    // collect + isin literals, which one alias-heavy batch could blow up.
-    // Only its count comes back to the driver. The scan is column-pruned
-    // to (url, s, oKind, oLex). A batch with no fresh id has no pair set
-    // at all (None), so nothing is materialized or counted for it.
-    val remap: Option[(DataFrame, Long)] = remapPairs
+    // Cluster merges are rare so the pair set is usually tiny, but it stays
+    // DISTRIBUTED: a semi-join against it (auto-broadcast when small)
+    // instead of a driver collect + isin literals, which one alias-heavy
+    // batch could blow up. Only its count comes back to the driver. A batch
+    // with no fresh id has no pair set at all (None), so nothing is
+    // materialized or counted for it.
+    val remap = remapPairs
       .map { r => val c = r.localCheckpoint(); c -> c.count() }
       .filter(_._2 > 0)
+    (newContrib.withColumn("bucket", contrib.bucketCol(col("url"))), remap)
+  }
+
+  /** Phase touchedUrls: changed, deleted and remap-affected urls (CACHED;
+    * the caller unpersists them), and the remap-affected ones. Their stored
+    * rows under superseded representatives are rewritten, so their -old/+new
+    * falls out of the signed delta. The scan reads (url, s, oKind, oLex). */
+  private def touchedUrlSet(remap: Option[(DataFrame, Long)], changed: Dataset[Page],
+                            deletedUrls: Dataset[String]): (DataFrame, DataFrame) = {
     val changedUrls = changed.toDF().select(col("url"))
     val remapUrls: DataFrame = remap match {
       case None => changedUrls.limit(0)
@@ -511,14 +518,11 @@ final class QuadLogPipeline(
           // back to the full read only when the remap set is too large to
           // collect (pathological) — bloom false positives already degrade
           // gracefully toward more buckets, never wrong rows.
-          val storedOpt: Option[DataFrame] =
-            if (nRemap <= remapIdProbeLimit) {
-              val ids = remapPairsC.select("id").as[String].collect().toSeq
-              contrib.candidateBuckets(ids) match {
-                case Some(bs) => lastRemapBuckets = Some(bs); contrib.readBuckets(bs)
-                case None     => lastRemapBuckets = None; contrib.read()
-              }
-            } else { lastRemapBuckets = None; contrib.read() }
+          val buckets =
+            if (nRemap > remapIdProbeLimit) None
+            else contrib.candidateBuckets(remapPairsC.select("id").as[String].collect().toSeq)
+          lastRemapBuckets = buckets
+          val storedOpt = buckets.fold(contrib.read())(contrib.readBuckets)
           storedOpt.fold(changedUrls.limit(0)) { stored =>
             val byS = stored
               .join(remapPairsC.select(col("id").as("s")), Seq("s"), "left_semi")
@@ -534,19 +538,24 @@ final class QuadLogPipeline(
           }
         }
     }
-
     val touchedUrls = changedUrls
       .union(deletedUrls.toDF("url")).union(remapUrls).distinct()
       .withColumn("bucket", contrib.bucketCol(col("url"))).cache()
+    (touchedUrls, remapUrls)
+  }
+
+  /** Phase touch: the touched urls' stored contributions, and the url bloom
+    * filter if the large-churn tier built one (the caller unpersists it). */
+  private def touch(touchedUrls: DataFrame, newContrib: DataFrame, remapping: Boolean)
+      : (DataFrame, Option[Broadcast[TermBloom]]) = {
     // ONE action yields both the bucket list and the url count the
-    // two-tier prune gate needs below (these were two separate jobs; the
-    // driver receives <= numBuckets rows either way)
+    // two-tier prune gate needs below (the driver receives <= numBuckets
+    // rows)
     val urlBucketCounts = timed("incr.affectedBuckets") {
       touchedUrls.groupBy("bucket").agg(count(lit(1)).as("n"))
         .as[(Int, Long)].collect()
     }
     val affectedBuckets = urlBucketCounts.map(_._1).toSeq.sorted
-
     val oldInBuckets = contrib.readBuckets(affectedBuckets)
       .getOrElse(spark.emptyDataFrame)
     // On a REMAP batch the touched-old rows feed TWO consumers (the signed
@@ -588,10 +597,16 @@ final class QuadLogPipeline(
             .filter(graft.functions.BloomProbe(b, xxhash64(col("url"))))
             .join(urls, Seq("url"), "left_semi")
         }
-        if (remap.isEmpty) touched
+        if (!remapping) touched
         else timed("incr.oldTouched")(touched.localCheckpoint())
       }
+    (oldContrib, urlBloom)
+  }
 
+  /** Phase delta: new (and remap-rewritten) contributions against the
+    * touched old ones, summed per quad. */
+  private def signedDelta(newContrib: DataFrame, oldContrib: DataFrame,
+                          remap: Option[(DataFrame, Long)], remapUrls: DataFrame): SignedDelta = {
     // rewritten state of remap-affected urls = their stored rows passed
     // through the (oldRep -> newRep) map. remapUrls ⊆ touchedUrls, so the
     // checkpointed oldContrib already holds these rows.
@@ -612,13 +627,10 @@ final class QuadLogPipeline(
     val newSide = timed("incr.newSide") {
       newContrib.unionByName(rewrittenOld).localCheckpoint()
     }
-
     // signed support delta per quad from the touched pages only. ONE
     // quad-key aggregation: contrib rows are distinct per (url, quad) by
     // construction, so summing ±1 directly per quad equals
-    // support_new - support_old — the earlier per-(url, quad) pre-stage
-    // computed the same net and cost a second full shuffle of the
-    // churn-sized union for nothing (map-side partial combine already
+    // support_new - support_old (map-side partial combine already
     // collapses each side's contribution per quad).
     val d = oldContrib.select(quadKey: _*).withColumn("w", lit(-1L))
       .unionByName(newSide.select(quadKey: _*).withColumn("w", lit(1L)))
@@ -629,14 +641,18 @@ final class QuadLogPipeline(
     val dC = timed("incr.delta") {
       d.localCheckpoint() // small net-delta set; cuts the extraction lineage
     }
-    urlBloom.foreach(_.unpersist()) // oldContrib consumers are materialized
-
     // one action for the bucket list AND the churn count the prune-tier
-    // gate reads below (was two jobs over the same checkpointed delta)
+    // gate in transition reads
     val deltaBucketCounts = timed("incr.factBuckets") {
       dC.groupBy("bucket").agg(count(lit(1)).as("n")).as[(Int, Long)].collect()
     }
-    val factBuckets = deltaBucketCounts.map(_._1).toSeq.sorted
+    SignedDelta(newSide, dC, deltaBucketCounts)
+  }
+
+  /** Phase transition: checkpointed patch rows and new facts rows. */
+  private def transition(delta: SignedDelta): (DataFrame, DataFrame) = {
+    val dC = delta.dC
+    val factBuckets = delta.bucketCounts.map(_._1).toSeq.sorted
     // PRUNE the old-facts side to the changed quads before the transition
     // join: unchanged rows contribute no patch and no new state, and under
     // merge-on-read they are carried forward by the base, untouched. The
@@ -653,29 +669,21 @@ final class QuadLogPipeline(
     //    53M keys at ~1% FPR; past the cap it saturates GRACEFULLY (FPR
     //    rises, the pruned set widens, nothing shuffles, nothing breaks).
     //
-    // The predecessor's single gate fell back to a shuffle semi past its
-    // byte bound — a cliff measured at +60s on a 40M-quad store the moment
-    // churn crossed it (BENCH.md round 6). Bloom false positives (and hash
-    // collisions, both tiers) are harmless by construction: the row passes
-    // the prune, the transition join finds no delta partner, marks it
-    // d-null, and supportTransitionDelta drops it from both patches and
-    // additions — correctness never depends on the filter. The pruned
-    // result is churn-sized; checkpoint it once so the transition join
-    // (two churn-sized sides) feeds both the patch set and the delta
-    // additions without re-running the scan per sink.
-    val nDelta = deltaBucketCounts.map(_._2).sum // from the factBuckets job
+    // Bloom false positives (and hash collisions, both tiers) are harmless
+    // by construction: the row passes the prune, the transition join finds
+    // no delta partner, marks it d-null, and supportTransitionDelta drops
+    // it from both patches and additions — correctness never depends on
+    // the filter. The pruned result is churn-sized; checkpoint it once so
+    // the transition join (two churn-sized sides) feeds both the patch set
+    // and the delta additions without re-running the scan per sink.
+    val nDelta = delta.bucketCounts.map(_._2).sum // from the factBuckets job
     val pruneKeys: DataFrame => DataFrame =
       if (nDelta <= broadcastKeyLimit) {
-        // small churn: exact broadcast semi on the 8-byte hash — cheaper
-        // than a bloom build's extra job at this size, and byte-safe
-        // (~32 B/key resident => <= 32 MB at the gate)
         val dKeysH = dC.select(xxhash64(quadKey: _*).as("_qh")).distinct()
         df => df.withColumn("_qh", xxhash64(quadKey: _*))
           .join(broadcast(dKeysH), Seq("_qh"), "left_semi")
           .drop("_qh")
       } else {
-        // large churn: bloom probe inside the scan — O(bits) broadcast,
-        // saturates gracefully, no plan-shape change at any size
         val churnBloom = spark.sparkContext.broadcast(
           graft.functions.BloomProbe.build(
             dC.select(xxhash64(quadKey: _*)), nDelta, factsPruneBloomMaxBits))
@@ -689,59 +697,42 @@ final class QuadLogPipeline(
           .drop("bucket"))
         .localCheckpoint()
     }
-    val (patches0, newFactRows) = QuadDiff.supportTransitionDelta(
+    val (patches, newFactRows) = QuadDiff.supportTransitionDelta(
       oldFacts, dC.drop("bucket"))
-    val patchesC = patches0.localCheckpoint() // small; read by write + tally
+    (patches.localCheckpoint(), newFactRows) // small; read by write + tally
+  }
 
-    // The four sink writes below are INDEPENDENT jobs over already-
-    // checkpointed/committed inputs and different directories — submitted
-    // concurrently so the stage that is IO-bound (patch files) overlaps the
-    // ones that are compute-bound (the contrib merge re-runs extraction).
-    // On a single box the kernel serializes the final write syscalls, but
-    // the compute under them proceeds in parallel (BENCH.md §Scaling
-    // residual: sequential `timed` phases wasted the idle cores).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = sinkEc
-    val fFiles = Future(timed("incr.patchFiles") {
-      PatchWriter.write(spark, patchesC, s"$root/patches/batch_$batchId", checkpoint, maxq)
-    })
-    // new graphs can only arrive with '+' patches — patchesC is checkpointed
-    // and tiny, so the index merge costs no extra extraction pass
-    val fIdx = Future(appendGraphIndex(patchesC, batchId))
-    // MERGE-ON-READ commits: O(batch) additions + tombstones, never a
-    // store-sized rewrite (SnapshotStore folds on read; every `maxDeltas`
-    // batches the chain folds into a fresh base). Tombstone coverage
-    // contract holds by construction: every newFactRows quad is in dC, and
+  /** Phase sinks: returns the number of patch files written. */
+  private def sinks(batchId: Long, checkpoint: String, patchesC: DataFrame,
+                    newFactRows: DataFrame, delta: SignedDelta, touchedUrls: DataFrame,
+                    deletedUrls: Dataset[String]): Long = {
+    // Independent jobs over checkpointed/committed inputs and different
+    // directories: the IO-bound patch files overlap the compute-bound
+    // merges (BENCH.md §Scaling residual: sequential phases idled cores).
+    // New graphs only arrive with '+' patches, so the index reads the tiny
+    // patchesC. MERGE-ON-READ commits: O(batch) additions + tombstones;
+    // coverage holds by construction: every newFactRows quad is in dC, and
     // every newSide url is in touchedUrls.
-    val fFacts = Future(timed("incr.mergeFacts") {
-      facts.stageDelta(
+    val Seq(files: Long, _*) = fanIn(
+      () => timed("incr.patchFiles")(
+        PatchWriter.write(spark, patchesC, s"$root/patches/batch_$batchId", checkpoint, maxq)),
+      () => appendGraphIndex(patchesC, batchId),
+      () => timed("incr.mergeFacts")(facts.stageDelta(
         additions = newFactRows.withColumn("bucket", facts.bucketCol(quadKey: _*)),
-        tombstones = dC.select((quadKey :+ col("bucket")): _*),
+        tombstones = delta.dC.select((quadKey :+ col("bucket")): _*),
         id = batchId,
-        tombstonesDistinct = true) // dC is a per-quad aggregation output
-    })
-    val fContrib = Future(timed("incr.mergeContrib") {
-      contrib.stageDelta(
-        additions = newSide.join(deletedUrls.toDF("url"), Seq("url"), "left_anti"),
+        tombstonesDistinct = true)), // dC is a per-quad aggregation output
+      () => timed("incr.mergeContrib")(contrib.stageDelta(
+        additions = delta.newSide.join(deletedUrls.toDF("url"), Seq("url"), "left_anti"),
         tombstones = touchedUrls,
         id = batchId,
-        tombstonesDistinct = true) // touchedUrls is a union-distinct
-    })
-    // Await EVERY sink to settle before surfacing any failure: a rethrow
-    // while sibling futures still run would let their zombie write jobs
-    // race an immediate same-batchId retry's staging dirs and patch files.
-    // Each Await below blocks until that future settles (success or
-    // failure), so by the time the first failure is rethrown no sink job
-    // from this attempt is still in flight.
-    val rFiles = scala.util.Try(Await.result(fFiles, Duration.Inf))
-    val rIdx = scala.util.Try(Await.result(fIdx, Duration.Inf))
-    val rFacts = scala.util.Try(Await.result(fFacts, Duration.Inf))
-    val rContrib = scala.util.Try(Await.result(fContrib, Duration.Inf))
-    Seq(rFiles, rIdx, rFacts, rContrib)
-      .collectFirst { case scala.util.Failure(e) => throw e }
-    val files = rFiles.get
+        tombstonesDistinct = true))) // touchedUrls is a union-distinct
+    files
+  }
 
+  /** Phase commit. */
+  private def commit(epoch: String, batchId: Long, changed: Dataset[Page],
+                     patchesC: DataFrame, files: Long): BatchResult = {
     // one job for both tallies (checkpointed patches)
     val tallies = timed("incr.tallies")(patchesC.groupBy("op").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap)
@@ -761,9 +752,19 @@ final class QuadLogPipeline(
     // bases, superseded full rewrites) — disk stays O(live state), not
     // O(history). Single writer, everything finalized: safe window.
     Seq(canon, facts, contrib, graphIdx).foreach(_.vacuum())
-
-    touchedUrls.unpersist()
     BatchResult(batchId, added, deleted, files)
+  }
+
+  /** Runs each sink on [[sinkEc]] and returns their results in argument
+    * order. EVERY sink settles (success or failure) before the first
+    * failure, in argument order, is rethrown: a rethrow while sibling
+    * sinks still run would let their zombie write jobs race an immediate
+    * same-batchId retry's staging dirs and patch files. */
+  private def fanIn(sinks: (() => Any)*): Seq[Any] = {
+    val running = sinks.map(s => Future(s())(sinkEc))
+    val settled = running.map(f => Try(Await.result(f, Duration.Inf)))
+    settled.collectFirst { case Failure(e) => throw e }
+    settled.map(_.get)
   }
 
   /** Pool for concurrent sink-write job submission (Spark job submission is
@@ -774,15 +775,6 @@ final class QuadLogPipeline(
       java.util.concurrent.Executors.newFixedThreadPool(4, r => {
         val t = new Thread(r, "graft-sink"); t.setDaemon(true); t
       }))
-
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing] $label%-32s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
 
   /** Quad-identity bucket key: the columns themselves — bucketCol hashes
     * them variadically (xxhash64(s,p,...)), never a concatenated string. */
@@ -964,3 +956,8 @@ final class QuadLogPipeline(
 }
 
 final case class BatchResult(batchId: Long, added: Long, deleted: Long, files: Long)
+
+/** The delta phase's hand-off: new contribution rows, the checkpointed
+  * non-zero per-quad support delta `dC` and its rows per facts bucket. */
+private final case class SignedDelta(newSide: DataFrame, dC: DataFrame,
+                                     bucketCounts: Array[(Int, Long)])

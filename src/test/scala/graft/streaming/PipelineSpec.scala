@@ -385,6 +385,22 @@ class PipelineSpec extends GraftSpec {
     assert(QuadDiff.diff(pipe.currentQuads, pipe.extractedQuads(s1)).count() == 0)
   }
 
+  test("an INVALID bootstrap dump leaves no epoch, so incremental refuses to run") {
+    import graft.model.Page
+    val root = tmpDir("graft_torn")
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4, canonicalize = false)
+    // warc_ts is evaluated anew by every query, so the end-of-dump
+    // fingerprint re-check always sees a snapshot that changed
+    val drifting = PageGen.snapshot(spark, 30, 0)
+      .withColumn("warc_ts", current_timestamp()).as[Page]
+    val e = intercept[RuntimeException](pipe.bootstrap(drifting, "e1", "00000000000000"))
+    assert(e.getMessage.contains("INVALID"), e.getMessage)
+    assert(pipe.facts.epoch.isEmpty)
+    val e2 = intercept[RuntimeException](pipe.incremental(1L, "20240102000000",
+      PageGen.snapshot(spark, 30, 1).limit(5), spark.emptyDataset[String]))
+    assert(e2.getMessage.contains("bootstrap first"), e2.getMessage)
+  }
+
   test("resume: re-running from committed state equals single-run output") {
     val rootA = tmpDir("graft_resumeA")
     val rootB = tmpDir("graft_resumeB")
