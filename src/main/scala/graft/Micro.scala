@@ -72,10 +72,9 @@ object Micro {
       // stretch #8): G graphs x F patch files, filesPerZip=2 -> G*F/2 zips.
       // What must stay bounded on the driver: the zip-build collect (one
       // summary ROW per zip — the manifest bodies, O(members) each, are
-      // written executor-side by the distributed sidecar pass) and the
-      // per-graph metadata maps (O(graphs)). GRAFT_TIMING prints the
-      // publish-internal phase split (inventory/zipBuild/zipSidecars/
-      // graphMetadata/sweep).
+      // staged executor-side by the zip build) and the per-graph metadata
+      // maps (O(graphs)). GRAFT_TIMING prints the publish-internal phase
+      // split (inventory/zipBuild/graphMetadata/sweep).
       val graphs = sys.env("PUBLISH_SCALE").toInt
       val filesPerGraph = 10
       val root = Bench.scratchRoot("micro_pub")
@@ -95,7 +94,7 @@ object Micro {
               s"https://g$g.example.org/".getBytes("UTF-8"))
             val p = new org.apache.hadoop.fs.Path(
               s"$patchDir/g_b64=$gb64/rdf_out_00000000000000-$k%014d")
-            val out = fs.create(p, true)
+            val out = graft.FsWrite.create(fs, p)
             try out.write(
               (s"+ <http://kg.example.org/e$i> <http://kg.example.org/p> " +
                 s"<http://kg.example.org/o$k> <https://g$g.example.org/> .\n")
@@ -172,7 +171,7 @@ object Micro {
       }
       // --- NEW shape ---
       val newRewrite = {
-        val (view, viewRows, _, _) = time("NEW extendedCanonMap (pruned view + fresh check)")(
+        val (view, viewRows, _, _, _) = time("NEW extendedCanonMap (pruned view + fresh check)")(
           pipe.extendedCanonMap(batch))
         println(s"[micro] canon view rows: $viewRows of $n (buckets: " +
           s"${pipe.lastCanonBuckets.map(_.size).getOrElse(-1)}/${pipe.canon.numBuckets})")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.rdf.NQuadFormatter
+import graft.FsWrite
 import graft.Timing.timed
 
 /** S5/A2 — chunked RDF-patch file sink.
@@ -114,7 +115,7 @@ object PatchWriter {
     val fsRoot = new Path(out)
     val fs0 = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs0.exists(fsRoot)) fs0.delete(fsRoot, true) // idempotent rewrite (T7)
-    fs0.mkdirs(fsRoot)
+    FsWrite.mkdirs(fs0, fsRoot)
     val mq = maxq
 
     timed("patch.writePass") { keyed
@@ -132,13 +133,14 @@ object PatchWriter {
         def flushFile(): Unit = if (curKey != null && !buf.isEmpty) {
           val b64 = curKey._1
           val p = new Path(new Path(out, s"g_b64=$b64"), f"rdf_out_$checkpoint-$nextSerial%014d")
-          // 1 MB writer buffer over a 1 MB stream buffer (hadoop's create()
-          // default is 4 KB): a maxq-row chunk leaves in a handful of large
-          // write syscalls instead of thousands of page-sized ones — the
-          // syscall path is the one resource that does not scale with
-          // cores on a single box (BENCH.md §Scaling residual)
+          // 1 MB writer buffer over a 1 MB stream buffer: a maxq-row chunk
+          // leaves in a handful of large write syscalls instead of
+          // thousands of page-sized ones — the syscall path is the one
+          // resource that does not scale with cores on a single box
+          // (BENCH.md §Scaling residual)
           val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            fs.create(p, true, 1 << 20), java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
+            FsWrite.create(fs, p, bufferSize = 1 << 20),
+            java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
           headerLines(checkpoint, curG, b64, buf.size).foreach { l => w.write(l); w.write('\n') }
           val n = buf.size
           var i = 0
@@ -178,7 +180,7 @@ object PatchWriter {
       s"# file count     $fileCount").mkString("", "\n", "\n")
     val p = new Path(outDir, f"rdf_out_$checkpoint-${99999999999998L}%014d")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val out = FsWrite.create(fs, p)
     try out.write(lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }

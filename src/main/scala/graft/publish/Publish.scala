@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
+import graft.FsWrite
 import graft.Timing.timed
 
 /** S7/W2 — the resourcesync-generator re-expressed: package committed patch
@@ -173,16 +174,9 @@ object ZipPublisher {
     } finally pool.shutdown()
   }
 
-  /** Atomic metadata write: tmp + rename. A crash mid-write can no longer
-    * leave a torn resource-dump.xml that the next run's read-modify-write
-    * trusts (zipsynchronizer.py:69-109's cleanup concern). */
-  private def writeFile(f: FileSystem, p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp" + System.nanoTime())
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p)) sys.error(s"atomic rename failed: $tmp -> $p")
-  }
+  /** A zip's sidecar XMLs: its manifest, and an end part's member list. */
+  private def sidecarNames(zip: String, complete: Boolean): Seq[String] =
+    s"manifest_$zip.xml" +: (if (complete) Nil else Seq(s"$zip.xml"))
 
   private def readFile(f: FileSystem, p: Path): String = {
     val in = f.open(p)
@@ -285,7 +279,7 @@ object ZipPublisher {
               metadataThreads: Int = 8): Seq[ZipInfo] = {
     import spark.implicits._
     val f = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(new Path(sinkDir))
+    FsWrite.mkdirs(f, new Path(sinkDir))
     val stateDir = s"$sinkDir/_published"
     val hasState = graft.state.CompactedAppendTable.exists(spark, stateDir)
 
@@ -445,17 +439,15 @@ object ZipPublisher {
           }
           val zfs = new Path(sink).getFileSystem(hconf.value)
           val gDir = new Path(sink, g)
-          zfs.mkdirs(gDir)
           val zipPath = new Path(gDir, s"$name.zip")
           // task-attempt-unique temp + rename-on-commit: a speculative or
           // retried task never exposes a half-written final zip
-          val tmpPath = new Path(gDir,
-            s"$name.zip.tmpzip${java.util.UUID.randomUUID().toString.take(8)}")
+          val stage = s".tmpzip${java.util.UUID.randomUUID().toString.take(8)}"
+          val tmpPath = new Path(gDir, s"$name.zip$stage")
           val manifest = manifestXml(members.map { case (res, m, len, lm) =>
             (res.substring(res.lastIndexOf('/') + 1), m, len, lm)
           })
-          val os = zfs.create(tmpPath, true)
-          val zos = new java.util.zip.ZipOutputStream(os)
+          val zos = new java.util.zip.ZipOutputStream(FsWrite.create(zfs, tmpPath))
           zos.setLevel(1) // speed over ratio: patch text compresses well anyway
           zos.putNextEntry(new java.util.zip.ZipEntry("manifest.xml"))
           zos.write(manifest.getBytes(StandardCharsets.UTF_8)); zos.closeEntry()
@@ -467,18 +459,23 @@ object ZipPublisher {
             zos.closeEntry()
           }
           zos.close()
-          if (zfs.exists(zipPath)) zfs.delete(zipPath, false)
-          if (!zfs.rename(tmpPath, zipPath))
-            sys.error(s"zip rename failed: $tmpPath -> $zipPath")
+          FsWrite.replace(zfs, tmpPath, zipPath)
           val st = zfs.getFileStatus(zipPath)
           val md5hex = ManifestBuilder.md5Hex(zfs, zipPath)
-          // ONE summary line per zip returns — NOT the manifest body: the
-          // manifest is O(zip members), so collecting it made the zip-build
-          // collect O(total member rows) on the driver (~150 B/member —
-          // multi-GB driver ingress at a 50k-zip publish). Sidecar XMLs are
-          // written distributed in a second pass below.
-          (g, name, complete, members.size.toLong, st.getLen, md5hex,
-            members.map(_._4).max)
+          // the sidecar XMLs (manifest_<zip>.xml, plus <zip>.xml for an end
+          // part) are written here, where the member rows are, but STAGED
+          // under the zip's temp suffix: the driver renames them into place
+          // after the state commit (the crash tests' post-state window still
+          // sees zero metadata). ONE summary line per zip returns — NOT the
+          // manifest body: the manifest is O(zip members), so collecting it
+          // made the zip-build collect O(total member rows) on the driver
+          // (~150 B/member — multi-GB driver ingress at a 50k-zip publish).
+          sidecarNames(name, complete).foreach { n =>
+            val out = FsWrite.create(zfs, new Path(gDir, n + stage))
+            try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
+          }
+          (ZipInfo(g, name, complete, members.size.toLong, st.getLen, md5hex,
+            members.map(_._4).max), stage)
         }
       }
 
@@ -491,8 +488,7 @@ object ZipPublisher {
     val built = try {
       val rows = timed("publish.zipBuild")(buildJob.collect())
       if (rows.isEmpty) return Seq.empty
-      onBuiltForTests(rows.map { case (g, name, complete, n, len, md5v, lastmod) =>
-        ZipInfo(g, name, complete, n, len, md5v, lastmod) }.toSeq)
+      onBuiltForTests(rows.map(_._1).toSeq)
       // published-state bookkeeping: complete-zip members, written
       // distributed; compacted-append layout bounds the state's file count
       // across thousands of publish runs, sized ~4M member rows per file
@@ -511,51 +507,9 @@ object ZipPublisher {
     // (orphan recovery in the dump-xml regeneration)
     onPublishedForTests()
 
-    // per-zip sidecar XMLs (manifest_<zip>.xml + <zip>.xml for end parts)
-    // are written DISTRIBUTED, where the member rows are: the manifest body
-    // is O(zip members), so both collecting it to the driver (the old
-    // zip-build collect) and writing it from a driver thread pool scale
-    // with total published members, not zips. The ordering contract is
-    // unchanged — this pass runs after the state commit (the crash tests'
-    // post-state window still sees zero metadata) and before the dump-xml
-    // regeneration. Only a count returns.
-    timed("publish.zipSidecars") {
-      val sidecarJob = assigned
-        .select("graph_b64", "zipName", "is_complete", "resource", "md5", "length", "lastmod")
-        .repartition(col("graph_b64"), col("zipName"))
-        .sortWithinPartitions("graph_b64", "zipName", "resource")
-        .mapPartitions { it =>
-          val buf = it.buffered
-          val groups = new Iterator[Int] {
-            def hasNext: Boolean = buf.hasNext
-            def next(): Int = {
-              val h = buf.head
-              val (g, name, complete) = (h.getString(0), h.getString(1), h.getBoolean(2))
-              val members = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, String)]
-              while (buf.hasNext && buf.head.getString(0) == g && buf.head.getString(1) == name) {
-                val r = buf.next()
-                members += ((r.getString(3), r.getString(4), r.getLong(5), r.getString(6)))
-              }
-              val zfs = new Path(sink).getFileSystem(hconf.value)
-              val gDir = new Path(sink, g)
-              val manifest = manifestXml(members.toSeq.map { case (res, m, len, lm) =>
-                (res.substring(res.lastIndexOf('/') + 1), m, len, lm)
-              })
-              writeFile(zfs, new Path(gDir, s"manifest_$name.xml"), manifest)
-              if (!complete) writeFile(zfs, new Path(gDir, s"$name.xml"), manifest)
-              1
-            }
-          }
-          groups
-        }(org.apache.spark.sql.Encoders.scalaInt)
-      sidecarJob.count(): Unit
-    }
-
     val nowIso = ManifestBuilder.IsoUtc.format(java.time.Instant.now())
-    val builtInfos: Seq[ZipInfo] = built.toSeq.map {
-      case (g, name, complete, n, len, md5v, lastmod) =>
-        ZipInfo(g, name, complete, n, len, md5v, lastmod)
-    }
+    val builtInfos: Seq[ZipInfo] = built.toSeq.map(_._1)
+    val stages: Map[ZipInfo, String] = built.toMap
     val summaries = scala.collection.mutable.ArrayBuffer.empty[ZipInfo]
     summaries ++= builtInfos
 
@@ -567,8 +521,11 @@ object ZipPublisher {
     timed("publish.graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
       val gDir = new Path(sinkDir, g)
       val gUrl = s"$publishUrl$g/"
-      // (per-zip sidecars were already written by the distributed pass
-      // above — create_zip write_list=True semantics, executor-side)
+      // the sidecars the zip build staged go into place first, so the dump
+      // xml below never names a missing one (create_zip write_list=True)
+      zs.foreach(z => sidecarNames(z.zipName, z.complete).foreach { n =>
+        FsWrite.replace(f, new Path(gDir, n + stages(z)), new Path(gDir, n))
+      })
       val already: Seq[ZipInfo] = readDump(f, gDir, g)
       // EVERY listed end part is provisional by definition: this run
       // recomputed the full unpublished inventory, so an end entry it did
@@ -594,7 +551,7 @@ object ZipPublisher {
       writeDump(f, gDir, gUrl, keep ++ orphans ++ zs.toSeq, nowIso, maxItemsInList)
       val capaPath = new Path(gDir, "capability-list.xml")
       if (!f.exists(capaPath))
-        writeFile(f, capaPath,
+        FsWrite.atomic(f, capaPath,
           capabilityListXml(gUrl, s"$publishUrl.well-known/resourcesync"))
     })
 
@@ -608,8 +565,7 @@ object ZipPublisher {
     val graphs = f.listStatus(new Path(sinkDir)).filter(_.isDirectory)
       .map(_.getPath.getName).filterNot(_.startsWith("_")).filterNot(_.startsWith("."))
       .filter(g => f.exists(new Path(new Path(sinkDir, g), "capability-list.xml")))
-    f.mkdirs(new Path(sinkDir, ".well-known"))
-    writeFile(f, new Path(sinkDir, ".well-known/resourcesync"),
+    FsWrite.atomic(f, new Path(sinkDir, ".well-known/resourcesync"),
       sourceDescriptionXml(graphs.toSeq.map(g => s"$publishUrl$g/capability-list.xml")))
 
     summaries.toSeq
@@ -629,7 +585,7 @@ object ZipPublisher {
       if (sorted.size <= maxItems) Seq.empty
       else sorted.grouped(maxItems).zipWithIndex.map { case (chunk, i) =>
         val n = f"resource-dump-$i%05d.xml"
-        writeFile(f, new Path(gDir, n), resourceDumpXml(gUrl, chunk, at))
+        FsWrite.atomic(f, new Path(gDir, n), resourceDumpXml(gUrl, chunk, at))
         n
       }.toSeq
     // drop chunks beyond this write's count (shrink/regroup leftovers)
@@ -641,7 +597,7 @@ object ZipPublisher {
     val top =
       if (chunkNames.isEmpty) resourceDumpXml(gUrl, sorted, at)
       else resourceDumpIndexXml(gUrl, chunkNames, at)
-    writeFile(f, new Path(gDir, "resource-dump.xml"), top)
+    FsWrite.atomic(f, new Path(gDir, "resource-dump.xml"), top)
   }
 
   /** Read a graph's published zip rows back, transparently following the
@@ -693,7 +649,10 @@ object ZipPublisher {
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       .toSeq, threads) { gDir =>
         val g = gDir.getName
-        val ends = f.listStatus(gDir).map(_.getPath.getName)
+        val names = f.listStatus(gDir).map(_.getPath.getName)
+        // temps a crashed run left (this run renamed all of its own above)
+        names.filter(_.contains(".tmpzip")).foreach(n => f.delete(new Path(gDir, n), false))
+        val ends = names
           .filter(n => n.startsWith("part_end_") && n.endsWith(".zip"))
           .map(_.stripSuffix(".zip")).toSeq
         // current end: what this run just published for a touched graph
@@ -748,10 +707,10 @@ object ZipPublisher {
           val content = new String(
             org.apache.commons.io.IOUtils.toByteArray(zin), StandardCharsets.UTF_8)
           nResources = "<url>".r.findAllMatchIn(content).size.toLong
-          if (!f.exists(sidecar)) writeFile(f, sidecar, content)
+          if (!f.exists(sidecar)) FsWrite.atomic(f, sidecar, content)
           // an end part also carries the member-list sidecar (write_list)
           val listSidecar = new Path(gDir, s"$name.xml")
-          if (!complete && !f.exists(listSidecar)) writeFile(f, listSidecar, content)
+          if (!complete && !f.exists(listSidecar)) FsWrite.atomic(f, listSidecar, content)
         }
         e = zin.getNextEntry
       }

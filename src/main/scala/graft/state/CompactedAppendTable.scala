@@ -48,15 +48,6 @@ object CompactedAppendTable {
     }
   }
 
-  private def writePointer(f: FileSystem, root: String, gen: String): Unit = {
-    val tmp = new Path(root, s"_current.tmp${System.nanoTime()}")
-    val out = f.create(tmp, true)
-    try out.write(gen.getBytes("UTF-8")) finally out.close()
-    val p = pointer(root)
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p)) sys.error(s"pointer rename failed: $root -> $gen")
-  }
-
   /** Generation indices whose dirs carry a `_SUCCESS` commit marker (Spark
     * writes one per successful parquet job; a compaction that crashed
     * mid-write has none and must not be resolved to). */
@@ -119,7 +110,7 @@ object CompactedAppendTable {
     val rows = data.count()
     data.repartition(math.max(1, targetFiles(rows)))
       .write.mode("overwrite").parquet(s"$root/$nextGen")
-    writePointer(f, root, nextGen)
+    graft.FsWrite.atomic(f, pointer(root), nextGen)
     // sweep every non-current generation (incl. stale dirs from crashed
     // compactions of past runs)
     f.listStatus(new Path(root)).filter(_.isDirectory)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
+import graft.FsWrite
 import graft.Timing.timed
 
 /** Iceberg-lite bucketed table with atomic snapshot commits: full
@@ -107,44 +108,29 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     if (!fs.exists(leasePath)) None
     else try Some(readText(leasePath).trim) catch { case _: java.io.IOException => None }
 
+  /** Atomic create-exclusive of the lease file ([[graft.FsWrite.create]]
+    * without overwrite: O_CREAT|O_EXCL locally — Hadoop's own local
+    * `create(path, overwrite=false)` is check-then-act, and racing creators
+    * can all pass its exists probe, which the StoreSpec race test catches —
+    * and the namenode's arbitration on HDFS-like schemes). The writerId body
+    * lands right after the claim — a reader in that window sees an empty
+    * holder, which is treated as a foreign in-progress claim (safe). */
+  private def atomicCreateLease(): Boolean =
+    try {
+      val out = FsWrite.create(fs, leasePath, overwrite = false)
+      try out.write(writerId.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      true
+    } catch { case _: java.io.IOException => false } // incl. an existing lease
+
   /** Claim the writer lease for a mutating data operation. The store
     * assumes a SINGLE writer (vacuum, fold and manifest writes are not
     * concurrency-safe); this makes a second concurrent writer FAIL LOUDLY
     * instead of silently corrupting manifests. The claim itself is ATOMIC:
-    * `fs.create(path, overwrite=false)` lets the filesystem arbitrate
-    * racing claimants (exactly one create succeeds on HDFS-like and local
-    * filesystems) — the previous check-then-write had a window where two
-    * sanely-interleaved writers could both conclude the lease was free.
+    * a create-exclusive lets the filesystem arbitrate racing claimants
+    * (exactly one create succeeds on HDFS-like and local filesystems).
     * A lease left by a crashed writer expires after [[leaseTimeoutMs]]
     * (or [[breakLease]] forces it). Re-claiming one's own lease always
     * succeeds, so a retry after a failed stage is never blocked. */
-  /** Atomic create-exclusive of the lease file. On `file:` schemes Hadoop's
-    * `create(path, overwrite=false)` is itself check-then-act (racing
-    * creators can all pass the exists probe — the StoreSpec race test
-    * catches exactly this), so the local path goes through the OS-level
-    * O_CREAT|O_EXCL via `Files.createFile`; HDFS-like schemes keep
-    * `fs.create`, whose namenode arbitration is atomic. The writerId body
-    * lands right after the claim — a reader in that window sees an empty
-    * holder, which is treated as a foreign in-progress claim (safe). */
-  private def atomicCreateLease(): Boolean = {
-    if ("file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse("file"))) {
-      try {
-        val p = java.nio.file.Paths.get(leasePath.toUri.getPath)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.createFile(p) // O_CREAT|O_EXCL
-        java.nio.file.Files.write(p, writerId.getBytes(StandardCharsets.UTF_8))
-        true
-      } catch { case _: java.io.IOException => false } // incl. FileAlreadyExists
-    } else {
-      try {
-        val out = fs.create(leasePath, false) // atomic on HDFS-like schemes
-        try out.write(writerId.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    }
-  }
-
   private[state] def claimLease(): Unit = {
     var attempts = 0
     while (true) {
@@ -206,14 +192,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     finally in.close()
   }
 
-  private def writeAtomic(path: Path, content: String): Unit = {
-    val tmp = new Path(path.getParent, path.getName + ".tmp" + System.nanoTime())
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (fs.exists(path)) fs.delete(path, false)
-    if (!fs.rename(tmp, path)) sys.error(s"atomic rename failed: $tmp -> $path")
-  }
-
   private def manifestPath(id: Long) = new Path(root, f"manifest_$id%014d.txt")
 
   import SnapshotStore.DeltaRef
@@ -267,7 +245,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   private def writeData(df: DataFrame, dir: String): Unit = {
     df.write.mode("overwrite").partitionBy("bucket").parquet(dir)
     val (part, data) = df.schema.fields.partition(_.name == "bucket")
-    writeAtomic(new Path(dir, schemaName),
+    FsWrite.atomic(fs, new Path(dir, schemaName),
       StructType((data ++ part).map(_.copy(nullable = true))).json)
   }
 
@@ -316,7 +294,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     timed(s"$timingName.full.write")(writeData(placed, dataDir))
     if (!deferSidecar) timed(s"$timingName.full.sidecar")(writeTermSidecar(dataDir, dataDir))
     val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
-    writeAtomic(manifestPath(id), manifestText(base, Seq.empty))
+    FsWrite.atomic(fs, manifestPath(id), manifestText(base, Seq.empty))
   }
 
   /** Build the term-bloom sidecars for the LATEST snapshot's base dirs —
@@ -344,8 +322,11 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * the distinct re-shuffled a set the caller had just aggregated).
     * Duplicate tombstone keys with the flag wrongly set would only fold
     * redundantly (the anti-join drops a row once however many tombstones
-    * match it), never corrupt, but the default stays defensive. */
-  def stageDelta(additions: DataFrame, tombstones: DataFrame, id: Long,
+    * match it), never corrupt, but the default stays defensive.
+    *
+    * `tombstoneRows` is the row count of `tombstones`, which every caller
+    * already holds, so the empty-delta test below runs no Spark job. */
+  def stageDelta(additions: DataFrame, tombstones: DataFrame, tombstoneRows: Long, id: Long,
                  tombstonesDistinct: Boolean = false): Unit = withLease {
     val prevId = latest.getOrElse(sys.error("stageDelta on empty store"))
     val (base, deltas) = readManifest(prevId)
@@ -355,12 +336,11 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     // (metadata-only), keeping the stage/finalize protocol uniform. Under
     // the coverage contract empty tombstones imply empty additions; the
     // require turns a violation (additions that would otherwise be
-    // silently dropped here) into a loud error. One tiny job on the
-    // common path — callers pass checkpointed/cached tombstone sets.
-    if (tombstones.isEmpty) {
+    // silently dropped here) into a loud error.
+    if (tombstoneRows == 0) {
       require(additions.isEmpty,
         s"stageDelta contract violated: additions without covering tombstones: $root")
-      writeAtomic(manifestPath(id), manifestText(base, deltas))
+      FsWrite.atomic(fs, manifestPath(id), manifestText(base, deltas))
       return // withLease's finally releases
     }
     val snapDir = new Path(root, f"snap_$id%014d").toString
@@ -380,7 +360,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     timed(s"$timingName.delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)
     if (chain.size <= maxDeltas)
-      writeAtomic(manifestPath(id), manifestText(base, chain))
+      FsWrite.atomic(fs, manifestPath(id), manifestText(base, chain))
     else
       timed(s"$timingName.delta.fold")(foldChain(base, chain, id))
   }
@@ -436,7 +416,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       val written = writeBase(folded, baseDir, numBuckets)
       val newBase = (0 until numBuckets)
         .map(b => b -> (if (written(b)) s"$baseDir/bucket=$b" else "")).toMap
-      writeAtomic(manifestPath(id), manifestText(newBase, Seq.empty))
+      FsWrite.atomic(fs, manifestPath(id), manifestText(newBase, Seq.empty))
     } else {
       val hotSorted = hot.toSeq.sorted
       val written: Set[Int] =
@@ -464,7 +444,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
               else if (hot.contains(b)) "" // hot bucket emptied by its tombstones
               else base.getOrElse(b, ""))
       }.toMap
-      writeAtomic(manifestPath(id),
+      FsWrite.atomic(fs, manifestPath(id),
         manifestText(newBase, Seq(DeltaRef(id, consDir, Some(quiet)))))
     }
   }
@@ -604,15 +584,16 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   }.getOrElse(0L)
 
   /** [[stageDelta]] + pointer flip. */
-  def commitDelta(additions: DataFrame, tombstones: DataFrame, id: Long): Unit = {
-    stageDelta(additions, tombstones, id)
+  def commitDelta(additions: DataFrame, tombstones: DataFrame, tombstoneRows: Long,
+                  id: Long): Unit = {
+    stageDelta(additions, tombstones, tombstoneRows, id)
     finalizeCommit(id)
   }
 
   /** Flip `_latest` to a previously staged snapshot (idempotent). */
   def finalizeCommit(id: Long): Unit = {
     require(fs.exists(manifestPath(id)), s"finalize of unstaged snapshot $id")
-    writeAtomic(new Path(root, "_latest"), id.toString)
+    FsWrite.atomic(fs, new Path(root, "_latest"), id.toString)
   }
 
   /** True iff snapshot `id` is staged (manifest exists) but not yet latest. */
@@ -801,7 +782,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val p = new Path(root, "_epoch")
     if (!fs.exists(p)) None else Some(readText(p).trim)
   }
-  def setEpoch(e: String): Unit = writeAtomic(new Path(root, "_epoch"), e)
+  def setEpoch(e: String): Unit = FsWrite.atomic(fs, new Path(root, "_epoch"), e)
 
   /** Wipe the store (epoch-mismatch reset — split-graphs.sh:171's `rm -Rf`,
     * but only ever invoked on explicit epoch change). */

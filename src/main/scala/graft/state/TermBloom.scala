@@ -83,10 +83,9 @@ object TermBloom {
     * either the previous sidecar or none — a truncated file would decode
     * as garbage (see the bounds checks in [[read]], the second line of
     * defense). */
-  def write(fs: FileSystem, path: Path, blooms: Map[Int, TermBloom]): Unit = {
-    val tmp = new Path(path.getParent, path.getName + ".tmp" + System.nanoTime())
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try {
+  def write(fs: FileSystem, path: Path, blooms: Map[Int, TermBloom]): Unit =
+    graft.FsWrite.atomic(fs, path) { os =>
+      val out = new java.io.DataOutputStream(os)
       out.writeInt(Magic)
       out.writeInt(blooms.size)
       blooms.toSeq.sortBy(_._1).foreach { case (b, bl) =>
@@ -95,10 +94,7 @@ object TermBloom {
         out.writeInt(bl.bits.length)
         bl.bits.foreach(out.writeLong)
       }
-    } finally out.close()
-    if (fs.exists(path)) fs.delete(path, false)
-    if (!fs.rename(tmp, path)) sys.error(s"sidecar rename failed: $tmp -> $path")
-  }
+    }
 
   /** Widest sidecar entry the reader will allocate for: 2^27 bits / 64 =
     * 2M words per bucket (the [[sized]] default cap), with headroom for a

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.FsWrite
 import graft.Timing.timed
 import graft.model.Page
 import graft.canon.IriCanonicalizer
@@ -136,8 +137,9 @@ final class QuadLogPipeline(
     val gs = graphDim(withG, batchId)
     val existing = graphIdx.read().map(_.select("g"))
       .getOrElse(sys.error("graph index missing: bootstrap first"))
-    val fresh = gs.join(existing, Seq("g"), "left_anti").localCheckpoint()
-    graphIdx.commitDelta(fresh, fresh.select("g", "bucket"), batchId)
+    // lazy checkpoint: the count materializes it, in one job
+    val fresh = gs.join(existing, Seq("g"), "left_anti").localCheckpoint(eager = false)
+    graphIdx.commitDelta(fresh, fresh.select("g", "bucket"), fresh.count(), batchId)
   }
 
   // --- extraction front-end ------------------------------------------------
@@ -160,7 +162,7 @@ final class QuadLogPipeline(
 
   /** Extend the persisted canonical map with this batch's IRIs.
     *
-    * Returns (view, viewRows, remapped, changed):
+    * Returns (view, viewRows, remapped, changed, changedRows):
     *  - `view`    = the EXTENDED map restricted to (a superset of) the
     *    batch's candidate IRIs — everything the batch rewrite can match.
     *    Churn-sized at ANY accumulated map size, so the rewrite join
@@ -168,7 +170,7 @@ final class QuadLogPipeline(
     *  - `changed` = exactly the rows that differ from the stored map
     *    (fresh ids + members of clusters a new edge touched) — the canon
     *    store's merge-on-read delta. At bootstrap (empty store) it is the
-    *    whole new map.
+    *    whole new map. `changedRows` is its row count.
     *  - `remapped` = (oldRep -> newRep) pairs for superseded
     *    representatives, derived from `changed` (rep changes are a subset
     *    of changed ids), so the comparison join is churn-sized. None when
@@ -197,14 +199,15 @@ final class QuadLogPipeline(
     * time and both the map and the signature scan of
     * [[IriCanonicalizer.verifiedPairsStored]] derive from it. */
   private[graft] def extendedCanonMap(rawQuads: DataFrame)
-      : (DataFrame, Long, Option[DataFrame], DataFrame) = {
+      : (DataFrame, Long, Option[DataFrame], DataFrame, Long) = {
     val iris = timed("canon.iris")(candidateIris(rawQuads).localCheckpoint())
     canon.read() match {
       case None =>
         val cm = timed("canonicalMap")(
           IriCanonicalizer.canonicalMap(spark, iris).localCheckpoint())
         lastCanonBuckets = None
-        (cm, cm.count(), None, cm)
+        val n = cm.count()
+        (cm, n, None, cm, n)
       case Some(full) =>
         // Persisted signatures (`sig` column, written by every canon
         // commit) route extendChangedGivenFresh through
@@ -230,7 +233,7 @@ final class QuadLogPipeline(
         irisBloom.unpersist()
         val fresh = iris.join(oldPruned.select("id"), Seq("id"), "left_anti")
           .localCheckpoint()
-        if (fresh.isEmpty) (oldPruned, oldPruned.count(), None, oldPruned.limit(0))
+        if (fresh.isEmpty) (oldPruned, oldPruned.count(), None, oldPruned.limit(0), 0L)
         else {
           // Small stores: materialize the folded map once — the domain
           // union, the touched-cluster splits, the signature scan and the
@@ -242,10 +245,11 @@ final class QuadLogPipeline(
             if (canon.approxDataBytes > canonCheckpointBytes) full
             else timed("canon.readOld")(full.select("id", "canonical", "sig").localCheckpoint())
           val o = m.select("id", "canonical")
-          val changed = timed("canonicalMap")(
-            IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
+          // lazy checkpoint: the count materializes it, in one job
+          val changed = IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
               storedSigs = Some(m.select("id", "sig")))
-              .localCheckpoint())
+            .localCheckpoint(eager = false)
+          val changedRows = timed("canonicalMap")(changed.count())
           // rewrite view: pruned old rows minus the ones `changed`
           // replaces, plus the changed rows the batch can actually reference
           val view = timed("canon.view")(
@@ -257,7 +261,7 @@ final class QuadLogPipeline(
             .filter(col("canonical") =!= col("rep2"))
             .select(col("canonical").as("id"), col("rep2").as("canonical"))
             .distinct()
-          (view, view.count(), Some(remapped), changed)
+          (view, view.count(), Some(remapped), changed, changedRows)
         }
     }
   }
@@ -290,7 +294,7 @@ final class QuadLogPipeline(
     val out =
       if (!canonicalize) quads
       else {
-        val (view, viewRows, _, _) = extendedCanonMap(quads)
+        val (view, viewRows, _, _, _) = extendedCanonMap(quads)
         rewriteIfNonTrivial(quads, view, viewRows)
       }
     out.withColumn("bucket", contrib.bucketCol(col("url")))
@@ -343,6 +347,7 @@ final class QuadLogPipeline(
   def bootstrap(pages: Dataset[Page], epoch: String, checkpoint: String): BatchResult = {
     val startedAtMs = System.currentTimeMillis()
     contrib.reset(); facts.reset(); canon.reset(); graphIdx.reset()
+    hfs.delete(new Path(lineageDir), true) // lineage rows are per epoch
     if (hfs.exists(markerPath)) hfs.delete(markerPath, false)
     // A4 (vql_check_trx, dump_nquads.sql:75-78, 98-143): fingerprint the
     // input snapshot at the START of the dump; re-checked before the
@@ -363,7 +368,7 @@ final class QuadLogPipeline(
         // `sig` is persisted at write time (a deterministic function of the
         // id string) so no later batch ever recomputes signatures over the
         // accumulated domain — see extendedCanonMap / verifiedPairsStored.
-        val (view, viewRows, _, changed) = extendedCanonMap(raw)
+        val (view, viewRows, _, changed, _) = extendedCanonMap(raw)
         canon.commitFull(IriCanonicalizer.withSignatures(changed)
           .withColumn("bucket", canon.bucketCol(col("id"))), 0L)
         rewriteIfNonTrivial(raw, view, viewRows)
@@ -445,13 +450,14 @@ final class QuadLogPipeline(
     val (touchedUrls, remapUrls) =
       timed("incr.phase.touchedUrls")(touchedUrlSet(remap, changed, deletedUrls))
     try {
-      val (oldContrib, urlBloom) =
+      val (oldContrib, urlBloom, nTouched) =
         timed("incr.phase.touch")(touch(touchedUrls, newContrib, remap.isDefined))
       val delta = timed("incr.phase.delta")(signedDelta(newContrib, oldContrib, remap, remapUrls))
       urlBloom.foreach(_.unpersist()) // oldContrib consumers are materialized
       val (patchesC, newFactRows) = timed("incr.phase.transition")(transition(delta))
       val files = timed("incr.phase.sinks")(
-        sinks(batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, deletedUrls))
+        sinks(batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, nTouched,
+          deletedUrls))
       timed("incr.phase.commit")(commit(epoch, batchId, changed, patchesC, files))
     } finally touchedUrls.unpersist()
   }
@@ -469,7 +475,7 @@ final class QuadLogPipeline(
     val (newContrib, remapPairs) =
       if (!canonicalize) (rawNew, None)
       else {
-        val (view, viewRows, remapped, canonChanged) = extendedCanonMap(rawNew)
+        val (view, viewRows, remapped, canonChanged, canonChangedRows) = extendedCanonMap(rawNew)
         // STAGED, not committed: the extended map must move atomically with
         // the facts/contrib stores. A crash after an early canon commit but
         // before the batch marker would make the re-run derive remapPairs
@@ -484,6 +490,7 @@ final class QuadLogPipeline(
               .withColumn("bucket", canon.bucketCol(col("id"))),
             tombstones = canonChanged.select(col("id"))
               .withColumn("bucket", canon.bucketCol(col("id"))),
+            tombstoneRows = canonChangedRows,
             id = batchId,
             tombstonesDistinct = true)) // one map row per id by construction
         (rewriteIfNonTrivial(rawNew, view, viewRows), remapped)
@@ -544,10 +551,11 @@ final class QuadLogPipeline(
     (touchedUrls, remapUrls)
   }
 
-  /** Phase touch: the touched urls' stored contributions, and the url bloom
-    * filter if the large-churn tier built one (the caller unpersists it). */
+  /** Phase touch: the touched urls' stored contributions, the url bloom
+    * filter if the large-churn tier built one (the caller unpersists it),
+    * and the touched url count. */
   private def touch(touchedUrls: DataFrame, newContrib: DataFrame, remapping: Boolean)
-      : (DataFrame, Option[Broadcast[TermBloom]]) = {
+      : (DataFrame, Option[Broadcast[TermBloom]], Long) = {
     // ONE action yields both the bucket list and the url count the
     // two-tier prune gate needs below (the driver receives <= numBuckets
     // rows)
@@ -600,7 +608,7 @@ final class QuadLogPipeline(
         if (!remapping) touched
         else timed("incr.oldTouched")(touched.localCheckpoint())
       }
-    (oldContrib, urlBloom)
+    (oldContrib, urlBloom, nTouched)
   }
 
   /** Phase delta: new (and remap-rewritten) contributions against the
@@ -705,7 +713,7 @@ final class QuadLogPipeline(
   /** Phase sinks: returns the number of patch files written. */
   private def sinks(batchId: Long, checkpoint: String, patchesC: DataFrame,
                     newFactRows: DataFrame, delta: SignedDelta, touchedUrls: DataFrame,
-                    deletedUrls: Dataset[String]): Long = {
+                    nTouched: Long, deletedUrls: Dataset[String]): Long = {
     // Independent jobs over checkpointed/committed inputs and different
     // directories: the IO-bound patch files overlap the compute-bound
     // merges (BENCH.md §Scaling residual: sequential phases idled cores).
@@ -720,11 +728,13 @@ final class QuadLogPipeline(
       () => timed("incr.mergeFacts")(facts.stageDelta(
         additions = newFactRows.withColumn("bucket", facts.bucketCol(quadKey: _*)),
         tombstones = delta.dC.select((quadKey :+ col("bucket")): _*),
+        tombstoneRows = delta.bucketCounts.map(_._2).sum,
         id = batchId,
         tombstonesDistinct = true)), // dC is a per-quad aggregation output
       () => timed("incr.mergeContrib")(contrib.stageDelta(
         additions = delta.newSide.join(deletedUrls.toDF("url"), Seq("url"), "left_anti"),
         tombstones = touchedUrls,
+        tombstoneRows = nTouched,
         id = batchId,
         tombstonesDistinct = true))) // touchedUrls is a union-distinct
     files
@@ -744,7 +754,7 @@ final class QuadLogPipeline(
     // The marker-guarded finalize flips ALL staged stores (canon included —
     // it moves atomically with the data it canonicalizes).
     timed("incr.lineage")(writeLineage(epoch, batchId, changed, added, deleted, files))
-    writeCommitMarker(batchId)
+    FsWrite.atomic(hfs, markerPath, batchId.toString)
     if (canonicalize) canon.finalizeCommit(batchId)
     facts.finalizeCommit(batchId)
     contrib.finalizeCommit(batchId)
@@ -881,14 +891,6 @@ final class QuadLogPipeline(
 
   private def markerPath = new Path(root, "_commit")
   private def hfs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeCommitMarker(batchId: Long): Unit = {
-    val tmp = new Path(root, s"_commit.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    if (hfs.exists(markerPath)) hfs.delete(markerPath, false)
-    if (!hfs.rename(tmp, markerPath)) sys.error(s"marker rename failed for batch $batchId")
-  }
 
   private def commitMarker: Option[Long] = {
     if (!hfs.exists(markerPath)) None

@@ -330,6 +330,7 @@ class PublishSpec extends GraftSpec {
     assert(exists(s"$sink/$g64/part_def_00000.zip"))
     assert(exists(s"$sink/_published"))
     assert(!exists(s"$sink/$g64/resource-dump.xml"), "metadata writes never ran")
+    assert(!exists(s"$sink/$g64/manifest_part_def_00000.xml"), "sidecars stay staged")
     // the retry republishes the (sidecar-less) end part and must reconcile
     // the committed-but-unlisted def zip into the dump xml + regenerate its
     // manifest sidecar from the zip's embedded copy
@@ -340,6 +341,8 @@ class PublishSpec extends GraftSpec {
     assert(dump.contains("part_end_00001.zip"))
     assert(exists(s"$sink/$g64/manifest_part_def_00000.xml"), "sidecar regenerated")
     assert(!exists(s"$sink/$g64/part_end_00000.zip"), "superseded end removed")
+    val temps = new java.io.File(s"$sink/$g64").list().filter(_.contains(".tmpzip"))
+    assert(temps.isEmpty, s"the crashed run's staged temps were not swept: ${temps.toSeq}")
     // steady state afterwards
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
   }

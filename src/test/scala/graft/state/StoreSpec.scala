@@ -36,7 +36,7 @@ class SnapshotStoreSpec extends GraftSpec {
     st1.commitFull(base1, 0L)
     val add1 = Seq(("k1", 100, "x")).toDF("k", "v", "extra")
       .withColumn("bucket", st1.bucketCol(col("k")))
-    st1.commitDelta(add1, add1.select("k", "bucket"), 1L)
+    st1.commitDelta(add1, add1.select("k", "bucket"), add1.count(), 1L)
     val e1 = intercept[RuntimeException](st1.read())
     assert(e1.getMessage.contains("snapshot 1 has columns [k, v, extra, bucket]") &&
       e1.getMessage.contains("[k, v, bucket]"), e1.getMessage)
@@ -47,7 +47,7 @@ class SnapshotStoreSpec extends GraftSpec {
     st2.commitFull(base2, 0L)
     val add2 = Seq(("k2", 200)).toDF("k", "v")
       .withColumn("bucket", st2.bucketCol(col("k")))
-    st2.commitDelta(add2, add2.select("k", "bucket"), 1L)
+    st2.commitDelta(add2, add2.select("k", "bucket"), add2.count(), 1L)
     val e2 = intercept[RuntimeException](st2.readBuckets(Seq(0, 1)))
     assert(e2.getMessage.contains("snapshot 1 has columns [k, v, bucket]") &&
       e2.getMessage.contains("[k, v, extra, bucket]"), e2.getMessage)
@@ -86,7 +86,8 @@ class SnapshotStoreSpec extends GraftSpec {
       val tombKeys = (adds.keys ++ dead).toSeq.distinct
       model = (model -- tombKeys) ++ adds
       st.commitDelta(rows(adds.toSeq),
-        tombKeys.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), b.toLong)
+        tombKeys.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), tombKeys.size,
+        b.toLong)
       val back = st.read().get.select("k", "v").as[(String, Int)].collect().toMap
       assert(back == model, s"fold mismatch after batch $b")
     }
@@ -181,12 +182,12 @@ class SnapshotStoreSpec extends GraftSpec {
       .toDF("k", "v")
       .withColumn("bucket", st.bucketCol(col("k")))
     intercept[Exception] {
-      st.stageDelta(bad, bad.select("k", "bucket"), 1L)
+      st.stageDelta(bad, bad.select("k", "bucket"), 1L, 1L) // one tombstone row: "c"
     }
     // a DIFFERENT writer instance must be able to mutate immediately
     val st2 = new SnapshotStore(spark, root, numBuckets = 2, deleteKeys = Seq("k"))
     val add = Seq(("c", 3)).toDF("k", "v").withColumn("bucket", st2.bucketCol(col("k")))
-    st2.commitDelta(add, add.select("k", "bucket"), 2L)
+    st2.commitDelta(add, add.select("k", "bucket"), add.count(), 2L)
     assert(st2.read().get.count() == 3)
   }
 
@@ -224,7 +225,8 @@ class SnapshotStoreSpec extends GraftSpec {
         val tombKeys = (adds.keys ++ pureDeletes ++ ghosts).toSeq.distinct
         model = (model -- tombKeys) ++ adds
         st.commitDelta(rows(adds.toSeq),
-          tombKeys.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), b.toLong)
+          tombKeys.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), tombKeys.size,
+          b.toLong)
         val back = st.read().get.select("k", "v").as[(String, Int)].collect().toMap
         assert(back == model,
           s"maxDeltas=$maxD batch=$b: extra=${(back.toSet -- model.toSet).take(3)} " +
@@ -264,7 +266,8 @@ class SnapshotStoreSpec extends GraftSpec {
         quietKeys.slice(2 * b, 2 * b + 2).map(k => k -> s"small$b")).toMap
       model = model ++ adds
       st.commitDelta(rows(adds.toSeq),
-        adds.keys.toSeq.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), b.toLong)
+        adds.keys.toSeq.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), adds.size,
+        b.toLong)
       assert(st.read().get.select("k", "v").as[(String, String)].collect().toMap == model,
         s"fold mismatch after batch $b")
     }
@@ -289,7 +292,8 @@ class SnapshotStoreSpec extends GraftSpec {
       val adds = Map(quietKeys(b) -> s"later$b", hotKeys(b) -> s"later$b")
       model = model ++ adds
       st.commitDelta(rows(adds.toSeq),
-        adds.keys.toSeq.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), b.toLong)
+        adds.keys.toSeq.toDF("k").withColumn("bucket", st.bucketCol(col("k"))), adds.size,
+        b.toLong)
     }
     st.vacuum()
     assert(st.read().get.select("k", "v").as[(String, String)].collect().toMap == model)
@@ -310,7 +314,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // maxDeltas(=2)+3 empty batches: were these appended, the chain bound
     // would have tripped a pointless fold-to-base
     for (b <- 1 to 5)
-      st.commitDelta(empty, empty.select("k", "bucket"), b.toLong)
+      st.commitDelta(empty, empty.select("k", "bucket"), 0L, b.toLong)
     assert(st.latest.contains(5L))
     val manifest = java.nio.file.Files.readString(java.nio.file.Paths.get(
       s"$root/manifest_${f"${5L}%014d"}.txt"))
@@ -323,7 +327,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // contract check still bites: additions without covering tombstones
     intercept[IllegalArgumentException] {
       st.commitDelta(Seq(("c", 3)).toDF("k", "v")
-        .withColumn("bucket", st.bucketCol(col("k"))), empty.select("k", "bucket"), 6L)
+        .withColumn("bucket", st.bucketCol(col("k"))), empty.select("k", "bucket"), 0L, 6L)
     }
   }
 
@@ -363,7 +367,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // delta adds extend the index: a brand-new term in a delta is findable
     val adds = Seq(("k100", "delta_term", null: String))
     st.commitDelta(rows(adds),
-      Seq("k100").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 1L)
+      Seq("k100").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 1L, 1L)
     val cand2 = st.candidateBuckets(Seq("delta_term")).get
     val b100 = rows(adds).select("bucket").as[Int].head()
     assert(cand2.contains(b100), "delta-added term's bucket pruned away")
@@ -371,7 +375,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // delete-only delta writes an EMPTY authoritative sidecar: the delta
     // contributes no candidates (instead of conservatively its full scope)
     st.commitDelta(rows(Seq.empty),
-      Seq("k5").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 2L)
+      Seq("k5").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 1L, 2L)
     assert(new java.io.File(s"$root/snap_${f"${2L}%014d"}/_terms.bloom").exists(),
       "delete-only delta must land an empty sidecar")
     assert(st.candidateBuckets(Seq("still_absent_term")).get.size < nb)
@@ -401,7 +405,7 @@ class SnapshotStoreSpec extends GraftSpec {
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/._lease.crc"))
     val adds = Seq(("c", 3)).toDF("k", "v").withColumn("bucket", st.bucketCol(col("k")))
     val tombs = Seq("c").toDF("k").withColumn("bucket", st.bucketCol(col("k")))
-    val e = intercept[RuntimeException] { st.stageDelta(adds, tombs, 1L) }
+    val e = intercept[RuntimeException] { st.stageDelta(adds, tombs, tombs.count(), 1L) }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
     intercept[RuntimeException] { st.stageFull(base, 1L) }
     intercept[RuntimeException] { st.vacuum() }
@@ -412,7 +416,7 @@ class SnapshotStoreSpec extends GraftSpec {
     // operator break -> the stage proceeds; a completed stage releases the
     // lease so the next writer is never blocked
     st.breakLease()
-    st.commitDelta(adds, tombs, 1L)
+    st.commitDelta(adds, tombs, tombs.count(), 1L)
     assert(!new java.io.File(s"$root/_lease").exists(), "lease not released")
     assert(st.read().get.select("k", "v").as[(String, Int)].collect().toMap ==
       Map("a" -> 1, "b" -> 2, "c" -> 3))
@@ -420,7 +424,7 @@ class SnapshotStoreSpec extends GraftSpec {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/_lease"), st.writerId)
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/._lease.crc"))
     st.commitDelta(Seq(("d", 4)).toDF("k", "v").withColumn("bucket", st.bucketCol(col("k"))),
-      Seq("d").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 2L)
+      Seq("d").toDF("k").withColumn("bucket", st.bucketCol(col("k"))), 1L, 2L)
     assert(st.read().get.count() == 4)
   }
 
@@ -434,13 +438,13 @@ class SnapshotStoreSpec extends GraftSpec {
     val adds = Seq(("a", 10)).toDF("k", "v").withColumn("bucket", st.bucketCol(col("k")))
     val tombs = Seq("a").toDF("k").withColumn("bucket", st.bucketCol(col("k")))
     // crash window: staged but never finalized -> readers still see snap 0
-    st.stageDelta(adds, tombs, 1L)
+    st.stageDelta(adds, tombs, tombs.count(), 1L)
     assert(st.latest.contains(0L))
     assert(st.read().get.select("k", "v").as[(String, Int)].collect().toMap ==
       Map("a" -> 1, "b" -> 2))
     assert(st.isStagedNotFinal(1L))
     // re-run re-stages the same id (overwrite), then finalizes
-    st.stageDelta(adds, tombs, 1L)
+    st.stageDelta(adds, tombs, tombs.count(), 1L)
     st.finalizeCommit(1L)
     assert(st.read().get.select("k", "v").as[(String, Int)].collect().toMap ==
       Map("a" -> 10, "b" -> 2))
@@ -458,7 +462,7 @@ class SnapshotStoreSpec extends GraftSpec {
     st.commitFull(rows((1 to 200).map(i => s"k$i" -> i)), 0L)
     for (b <- 1 to 2) {
       val adds = rows((1 to 40).map(i => s"k${i * b}" -> (1000 * b + i)))
-      st.commitDelta(adds, adds.select("k", "bucket"), b.toLong)
+      st.commitDelta(adds, adds.select("k", "bucket"), adds.count(), b.toLong)
     }
     val jobs = jobsRunBy {
       st.read().get
@@ -501,7 +505,7 @@ class SnapshotStoreSpec extends GraftSpec {
         val deletes = universe.filter(_ => rnd.nextInt(100) < 15)
         val repeated = prevTombs.filter(_ => rnd.nextBoolean())
         val tombKeys = (adds.map(_._1) ++ deletes ++ repeated).distinct
-        st.commitDelta(rows(adds), keys(tombKeys), tag)
+        st.commitDelta(rows(adds), keys(tombKeys), tombKeys.size, tag)
         model = (model -- tombKeys) ++ adds
         tagged = tagged.unionByName(rows(adds).withColumn("_wtag", lit(tag)))
         tombs = tombs.unionByName(keys(tombKeys).withColumn("_ttag", lit(tag)))
@@ -531,7 +535,7 @@ class SnapshotStoreSpec extends GraftSpec {
       .withColumn("bucket", st.bucketCol(col("k")))
     st.commitFull(rows((1 to 100).map(i => s"k$i" -> i)), 0L)
     val adds = rows((1 to 400).map(i => s"n$i" -> i)).repartition(8)
-    st.commitDelta(adds, adds.select("k", "bucket"), 1L)
+    st.commitDelta(adds, adds.select("k", "bucket"), adds.count(), 1L)
     assert(spark.sparkContext.defaultParallelism == 4)
     for (side <- Seq("add", "tomb")) {
       val dirs = new java.io.File(s"$root/snap_${f"${1L}%014d"}/$side").listFiles()

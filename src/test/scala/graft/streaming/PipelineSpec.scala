@@ -385,6 +385,18 @@ class PipelineSpec extends GraftSpec {
     assert(QuadDiff.diff(pipe.currentQuads, pipe.extractedQuads(s1)).count() == 0)
   }
 
+  test("bootstrap resets lineage with the stores: the watermark is the new epoch's") {
+    val root = tmpDir("graft_epoch_lineage")
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4, canonicalize = false)
+    pipe.bootstrap(PageGen.snapshot(spark, 30, 2), "epoch-1", "00000000000000")
+    // the new epoch's snapshot is the OLDER one, so a leftover epoch-1 row
+    // would raise the watermark past it
+    val s0 = PageGen.snapshot(spark, 30, 0)
+    pipe.bootstrap(s0, "epoch-2", "00000000000001")
+    assert(pipe.lineage.select("epoch").distinct().as[String].collect().toSeq == Seq("epoch-2"))
+    assert(pipe.watermark.contains(s0.agg(max("warc_ts")).head().getTimestamp(0)))
+  }
+
   test("an INVALID bootstrap dump leaves no epoch, so incremental refuses to run") {
     import graft.model.Page
     val root = tmpDir("graft_torn")
