@@ -32,19 +32,6 @@ final case class Quad(
     oLang: String,  // "" = none; lang wins over dtype (utils.sql:57-62)
     g: String)
 
-/** A quad tagged with a patch op: '+' add / '-' delete
-  * (reference utils.sql:23-31; opcode mapping parse_trx_logs.sql:6-23). */
-final case class PatchRow(
-    op: String,
-    s: String,
-    p: String,
-    oLex: String,
-    oKind: Int,
-    oDtype: String,
-    oLang: String,
-    g: String,
-    checkpoint: String)
-
 /** Input web page, shape fixed by BASELINE.json input_hint:
   * (url, warc_ts, html, text, lang). `text` must be a byte-identical pure
   * function of `html` per url. */
@@ -54,34 +41,3 @@ final case class Page(
     html: Array[Byte],
     text: String,
     lang: String)
-
-/** An entity mention detected in a page (typed Dataset transform output). */
-final case class Mention(
-    url: String,
-    g: String,
-    surface: String,
-    pos: Int)
-
-/** A scored entity link: mention resolved to a dictionary entity. */
-final case class Link(
-    url: String,
-    g: String,
-    surface: String,
-    pos: Int,
-    entity: String,
-    score: Double)
-
-/** Per-batch, per-partition lineage row (BASELINE.json: "checkpoint-resumable
-  * with per-partition lineage (url range, warc_ts watermark, quad counts)").
-  * Mirrors the reference's state files vql_lastlogsuffix/nquads_count/
-  * files_count (generate-rdfpatch.sh:44-63) as a proper table. */
-final case class LineageRow(
-    epoch: String,     // handshake analogue (vql_started_at.txt)
-    batchId: Long,     // run mark (generate-rdfpatch.sh:355-356)
-    partitionId: Int,  // bucket id of the state table
-    urlLo: String,
-    urlHi: String,
-    watermark: Timestamp,
-    added: Long,
-    deleted: Long,
-    files: Long)

@@ -2,7 +2,6 @@ package graft.publish
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import graft.FsWrite
@@ -93,40 +92,6 @@ object ManifestBuilder {
     } finally in.close()
     md.digest().map("%02x".format(_)).mkString
   }
-
-  /** Per-resource manifest over a committed patch directory:
-    * (resource, graph_b64, length, md5, lastmod, batch, is_complete).
-    * Batch ids are assigned per graph (partitioned window — the global
-    * Window.orderBy of the first cut funneled every file through one task). */
-  def build(spark: SparkSession, patchDir: String, filesPerBatch: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy(col("graph_b64")).orderBy(col("resource"))
-    val inv = checksummed(spark, list(spark, patchDir).toDS())
-      .withColumn("rn", row_number().over(w))
-      .withColumn("batch", floor((col("rn") - 1) / filesPerBatch).cast("long"))
-    val totals = inv.groupBy("graph_b64", "batch").agg(count(lit(1)).as("n_in_batch"))
-    inv.join(totals, Seq("graph_b64", "batch"))
-      .withColumn("is_complete", col("n_in_batch") === filesPerBatch)
-      .drop("rn", "n_in_batch")
-  }
-
-  /** J3 — end-part identity comparison (zipsynchronizer.py:149-156):
-    * resources in the new provisional window that were NOT in the previously
-    * published one (left_anti by resource+md5) — republish only if nonempty. */
-  def changedEndPart(newManifest: DataFrame, oldManifest: DataFrame): DataFrame =
-    newManifest.filter(!col("is_complete"))
-      .join(oldManifest.select(col("resource"), col("md5")),
-        Seq("resource", "md5"), "left_anti")
-
-  /** Capability-list analogue: one summary row per batch (the sitemap
-    * entries; the ≤50k items / ≤50 MB limits from zipsynchronizer.py:26-31
-    * are enforced on the publish path by [[ZipPublisher.publish]]'s count
-    * AND byte window caps). */
-  def batchSummary(manifest: DataFrame): DataFrame =
-    manifest.groupBy("graph_b64", "batch", "is_complete")
-      .agg(count(lit(1)).as("n_resources"),
-        sum("length").as("total_bytes"),
-        max("lastmod").as("lastmod"))
 }
 
 /** One inventory file with its greedy window assignment (typed row for the

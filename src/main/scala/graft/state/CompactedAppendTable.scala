@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Append-mostly parquet table with bounded file count — the backing layout
   * for the pipeline's per-batch bookkeeping tables (lineage, published-zip
@@ -27,6 +28,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    table stays visible. A fully-written-but-unflipped `gen_<k+1>`
   *    resolving this way is equivalent content (the compaction is a
   *    full rewrite of the same rows).
+  *
+  * The table's first append records its schema at `root/_schema.json`,
+  * before any data lands; every read, the compaction's included, is
+  * planned from it, so none runs a footer-inference job, and an append
+  * whose columns differ fails loudly.
   */
 object CompactedAppendTable {
 
@@ -78,25 +84,53 @@ object CompactedAppendTable {
 
   def read(spark: SparkSession, root: String): Option[DataFrame] =
     if (!exists(spark, root)) None
-    else Some(spark.read.parquet(currentDir(spark, root)))
+    else Some(spark.read.schema(tableSchema(spark, root)).parquet(currentDir(spark, root)))
+
+  private def schemaPath(root: String) = new Path(root, "_schema.json")
+
+  /** The schema a reader of `df`'s rows gets back: nullable, as file
+    * sources read every column. */
+  private def readSchema(df: DataFrame): StructType =
+    StructType(df.schema.fields.map(_.copy(nullable = true)))
+
+  /** The schema the table's first append recorded. Data without one fails
+    * loudly: the record lands before any data. */
+  private def tableSchema(spark: SparkSession, root: String): StructType = {
+    val f = fs(spark, root)
+    val in = try f.open(schemaPath(root)) catch {
+      case _: java.io.FileNotFoundException => sys.error(s"no recorded schema for table $root")
+    }
+    try DataType.fromJson(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
+      .asInstanceOf[StructType]
+    finally in.close()
+  }
 
   /** Append `df` to the current generation, then compact if the generation
     * has outgrown `maxFiles`. `targetFiles` sizes the compacted rewrite
     * (1 for small tables; callers with multi-GB tables pass a row-derived
-    * count so one file never exceeds executor-friendly sizes). */
+    * count so one file never exceeds executor-friendly sizes). The first
+    * append records the table's schema; a later one must match it. */
   def append(spark: SparkSession, root: String, df: DataFrame,
              maxFiles: Int = DefaultMaxFiles,
              targetFiles: Long => Int = _ => 1): Unit = {
+    val f = fs(spark, root)
+    val schema = readSchema(df)
+    if (!f.exists(schemaPath(root))) graft.FsWrite.atomic(f, schemaPath(root), schema.json)
+    else {
+      val recorded = tableSchema(spark, root)
+      if (recorded != schema)
+        sys.error(s"append to $root with columns ${schema.simpleString}, " +
+          s"the table records ${recorded.simpleString}")
+    }
     df.write.mode("append").parquet(currentDir(spark, root))
-    compactIfNeeded(spark, root, maxFiles, targetFiles)
+    compactIfNeeded(spark, root, schema, maxFiles, targetFiles)
   }
 
   private def genIndex(name: String): Int =
     name.stripPrefix("gen_").toInt
 
-  def compactIfNeeded(spark: SparkSession, root: String,
-                      maxFiles: Int = DefaultMaxFiles,
-                      targetFiles: Long => Int = _ => 1): Unit = {
+  private def compactIfNeeded(spark: SparkSession, root: String, schema: StructType,
+                              maxFiles: Int, targetFiles: Long => Int): Unit = {
     val f = fs(spark, root)
     val cur = currentDir(spark, root)
     val curPath = new Path(cur)
@@ -106,7 +140,7 @@ object CompactedAppendTable {
     if (nFiles <= maxFiles) return
     val curGen = genIndex(curPath.getName)
     val nextGen = s"gen_${curGen + 1}"
-    val data = spark.read.parquet(cur)
+    val data = spark.read.schema(schema).parquet(cur)
     val rows = data.count()
     data.repartition(math.max(1, targetFiles(rows)))
       .write.mode("overwrite").parquet(s"$root/$nextGen")

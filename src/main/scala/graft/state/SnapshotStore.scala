@@ -36,9 +36,13 @@ import graft.Timing.timed
   * (null-safe `<=>`, so a key with a null component still matches itself)
   * and a strictly later tag.
   *
-  * Every data dir records the schema it was written with (`_schema.json`
-  * beside the parquet), and every read is planned from that record: a read
-  * starts no footer-inference job, and a data dir without one is an error.
+  * Every data dir carries a record (`_record.txt` beside the parquet),
+  * written once, right after its parquet: the schema it was written with
+  * and, per bucket, its part files and their byte lengths. Reads, folds,
+  * sidecar builds and size gates are planned from the record alone: Spark
+  * gets the recorded files by name, so a read lists no dir, probes no
+  * path, infers no footer schema and never reads a file the commit did
+  * not record. A data dir without a record is an error.
   *
   * Rename is atomic on HDFS-like filesystems (and the local FS used here);
   * an object-store deployment would swap this class for a real catalog —
@@ -232,31 +236,78 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         s"D\t${d.tag}\t${d.dir}\t" + d.scope.fold("*")(_.toSeq.sorted.mkString(","))
       }).mkString("\n")
 
-  // --- data dirs and their recorded schemas ----------------------------------
+  // --- data dirs and their records ------------------------------------------
 
-  private def schemaName = "_schema.json"
+  private def recordName = "_record.txt"
 
-  /** Write `df` as bucket-partitioned parquet under `dir` and record, at
-    * `<dir>/_schema.json` (the `_` prefix keeps parquet listings blind to
-    * it), the schema a reader of `dir` gets back: the data columns, then
-    * the `bucket` partition column, all nullable as file sources read
-    * them. Reads pass it to `spark.read.schema`, so no read of a store
-    * runs a footer-inference job. */
-  private def writeData(df: DataFrame, dir: String): Unit = {
+  /** What [[writeData]] recorded for the data dir `dir`: the schema its
+    * files read back with, and per bucket the part files (paths relative to
+    * `dir`) with their byte lengths. Every question about a data dir — what
+    * a read scans, how many bytes a bucket holds, which buckets a write
+    * produced — is answered from it, never from the filesystem. */
+  private final class DataRecord(val dir: String, val schema: StructType,
+                                 val files: Map[Int, Seq[(String, Long)]]) {
+    def bytes(keep: Int => Boolean): Long =
+      files.collect { case (b, parts) if keep(b) => parts.map(_._2).sum }.sum
+
+    /** Spark read of the recorded files of the buckets `keep` passes, by
+      * name, with `basePath` at the dir so the `bucket` partition column
+      * comes back from the layout: no listing, no existence check, no
+      * footer inference, and a file the record does not name is never
+      * read. None when no such bucket holds a file. */
+    def read(keep: Int => Boolean): Option[DataFrame] = {
+      val paths = files.toSeq.filter(f => keep(f._1)).sortBy(_._1)
+        .flatMap(_._2).map { case (f, _) => s"$dir/$f" }
+      if (paths.isEmpty) None
+      else Some(spark.read.schema(schema).option("basePath", dir).parquet(paths: _*))
+    }
+  }
+
+  /** `<dir>/_record.txt` (the `_` prefix keeps parquet listings blind to
+    * it): the schema's JSON, then one `bucket<TAB>bytes<TAB>file` line per
+    * part file. */
+  private def writeRecord(rec: DataRecord): Unit =
+    FsWrite.atomic(fs, new Path(rec.dir, recordName),
+      (rec.schema.json +: rec.files.toSeq.sortBy(_._1).flatMap { case (b, parts) =>
+        parts.map { case (f, n) => s"$b\t$n\t$f" }
+      }).mkString("\n"))
+
+  /** The record of `dir`. A data dir without one fails loudly: every
+    * writer records one, and there is no listing fallback to drift into. */
+  private def record(dir: String): DataRecord = {
+    val lines = try readText(new Path(dir, recordName)).split("\n") catch {
+      case _: java.io.FileNotFoundException => sys.error(s"no data record for store data dir $dir")
+    }
+    new DataRecord(dir, DataType.fromJson(lines.head).asInstanceOf[StructType],
+      lines.tail.toSeq.map { l =>
+        val Array(b, n, f) = l.split("\t", 3); b.toInt -> (f -> n.toLong)
+      }.groupMap(_._1)(_._2))
+  }
+
+  /** Write `df` as bucket-partitioned parquet under `dir`, walk what was
+    * written once, and record it. The recorded schema is the one a reader
+    * of `dir` gets back: the data columns, then the `bucket` partition
+    * column, all nullable as file sources read them. */
+  private def writeData(df: DataFrame, dir: String): DataRecord = {
     df.write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    val files = fs.listStatus(new Path(dir)).toSeq
+      .filter(_.getPath.getName.startsWith("bucket="))
+      .map { d =>
+        val b = d.getPath.getName.stripPrefix("bucket=").toInt
+        b -> fs.listStatus(d.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+          .map(f => s"bucket=$b/${f.getPath.getName}" -> f.getLen)
+      }.toMap
     val (part, data) = df.schema.fields.partition(_.name == "bucket")
-    FsWrite.atomic(fs, new Path(dir, schemaName),
-      StructType((data ++ part).map(_.copy(nullable = true))).json)
+    val rec = new DataRecord(dir, StructType((data ++ part).map(_.copy(nullable = true))), files)
+    writeRecord(rec)
+    rec
   }
 
-  /** The schema [[writeData]] recorded for `dir`. A data dir without one
-    * fails loudly: every writer records it, and there is no inference
-    * fallback to drift silently into. */
-  private def recordedSchema(dir: String): StructType = {
-    val p = new Path(dir, schemaName)
-    if (!fs.exists(p)) sys.error(s"no recorded schema for store data dir $dir")
-    DataType.fromJson(readText(p)).asInstanceOf[StructType]
-  }
+  /** The manifest's base buckets that `keep` passes, grouped by the data
+    * dir holding them, in dir order. */
+  private def baseByDir(base: Map[Int, String], keep: Int => Boolean): Seq[(String, Set[Int])] =
+    base.toSeq.collect { case (b, p) if p.nonEmpty && keep(b) => new Path(p).getParent.toString -> b }
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (d, bs) => d -> bs.toSet }
 
   // --- commits -------------------------------------------------------------
 
@@ -304,9 +355,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * never vacuumed and readers treat a missing sidecar conservatively. */
   def buildSidecarForLatest(): Unit = latest.foreach { id => withLease {
     val (base, _) = readManifest(id)
-    val dirs: Set[String] = base.values.filter(_.nonEmpty)
-      .map(p => new Path(p).getParent.toString).toSet
-    dirs.foreach(dir => timed(s"$timingName.full.sidecar")(writeTermSidecar(dir, dir)))
+    baseByDir(base, _ => true).foreach { case (dir, _) =>
+      timed(s"$timingName.full.sidecar")(writeTermSidecar(dir, dir))
+    }
   } }
 
   /** Stage a MERGE-ON-READ delta commit: O(batch) writes regardless of
@@ -392,15 +443,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   private def foldChain(base: Map[Int, String], chain: Seq[DeltaRef], id: Long): Unit = {
     val bytesPerBucket: Map[Int, Long] =
       chain.flatMap { d =>
-        Seq("add", "tomb").flatMap { sub =>
-          val p = new Path(s"${d.dir}/$sub")
-          if (!fs.exists(p)) Seq.empty[(Int, Long)]
-          else fs.listStatus(p).toSeq
-            .filter(_.getPath.getName.startsWith("bucket="))
-            .map(s => s.getPath.getName.stripPrefix("bucket=").toInt ->
-              fs.getContentSummary(s.getPath).getLength)
-            .filter { case (b, _) => d.scope.forall(_.contains(b)) }
-        }
+        Seq("add", "tomb").flatMap(sub => record(s"${d.dir}/$sub").files.toSeq)
+          .collect { case (b, files) if d.scope.forall(_(b)) => b -> files.map(_._2).sum }
       }.groupMapReduce(_._1)(_._2)(_ + _)
     val withData = bytesPerBucket.keySet
     val hot = withData.filter(b => bytesPerBucket(b) >= foldBucketBytes)
@@ -427,18 +471,21 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         }
       val quietSorted = quiet.toSeq.sorted
       val consDir = new Path(root, f"snap_$id%014d" + "C").toString
-      assemble(Map.empty, chain, Some(quietSorted)).foreach { adds =>
-        writeData(adds.repartition(math.max(quietSorted.size, 1), col("bucket")),
-          s"$consDir/add")
+      // a side with no quiet rows still gets a record, with no files: every
+      // delta side a manifest names has one
+      def consolidate(side: String, rows: Option[DataFrame]): Unit = rows match {
+        case Some(df) =>
+          writeData(df.repartition(math.max(quietSorted.size, 1), col("bucket")), s"$consDir/$side")
+        case None =>
+          writeRecord(new DataRecord(s"$consDir/$side", record(s"${chain.last.dir}/$side").schema,
+            Map.empty))
       }
+      consolidate("add", assemble(Map.empty, chain, Some(quietSorted)))
       writeTermSidecar(s"$consDir/add", consDir)
-      val tombParts = chain.flatMap(d => loadDelta(s"${d.dir}/tomb", Some(quietSorted), d.scope))
-      if (tombParts.nonEmpty) {
-        writeData(tombParts.map(_.select((deleteKeys :+ "bucket").map(col): _*))
-          .reduce(_ unionByName _)
-          .distinct()
-          .repartition(math.max(quietSorted.size, 1), col("bucket")), s"$consDir/tomb")
-      }
+      consolidate("tomb", chain
+        .flatMap(d => record(s"${d.dir}/tomb").read(b => quiet(b) && d.scope.forall(_(b))))
+        .map(_.select((deleteKeys :+ "bucket").map(col): _*))
+        .reduceOption(_ unionByName _).map(_.distinct()))
       val newBase = (0 until numBuckets).map { b =>
         b -> (if (written(b)) s"$baseDir/bucket=$b"
               else if (hot.contains(b)) "" // hot bucket emptied by its tombstones
@@ -452,12 +499,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   /** Write base rows partitioned by bucket; returns the bucket ids that
     * actually materialized (a bucket emptied by tombstones writes none). */
   private def writeBase(df: DataFrame, dataDir: String, parts: Int): Set[Int] = {
-    writeData(df.repartition(math.max(parts, 1), col("bucket")), dataDir)
+    val rec = writeData(df.repartition(math.max(parts, 1), col("bucket")), dataDir)
     writeTermSidecar(dataDir, dataDir)
-    val d = new Path(dataDir)
-    if (!fs.exists(d)) Set.empty
-    else fs.listStatus(d).map(_.getPath.getName)
-      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).toSet
+    rec.files.keySet
   }
 
   // --- term-membership summaries (bucket-pruned point lookups) -------------
@@ -470,22 +514,18 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * pipeline indexes. */
   private val termsPerRowHint = 2
 
-  /** Per-bucket row counts from parquet FOOTERS — driver-side metadata
-    * reads (one open per file, no Spark job). */
-  private def footerRowCounts(dataDir: Path): Map[Int, Long] =
-    fs.listStatus(dataDir).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix("bucket=").toInt
-        val n = fs.listStatus(d.getPath).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf))
-            try r.getRecordCount finally r.close()
-          }.sum
-        b -> n
-      }.toMap
+  /** Per-bucket row counts from the parquet FOOTERS of the recorded files
+    * — driver-side metadata reads (one open per file, no Spark job). */
+  private def footerRowCounts(rec: DataRecord): Map[Int, Long] =
+    rec.files.map { case (b, files) =>
+      b -> files.map { case (f, n) =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            new org.apache.hadoop.fs.FileStatus(n, false, 1, 0, 0, new Path(s"${rec.dir}/$f")),
+            hconf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
 
   /** Build per-bucket [[TermBloom]]s from the parquet just written at
     * `dataDir` and land them at `<sidecarAt>/_terms.bloom` (the `_` prefix
@@ -503,15 +543,13 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * scope. No-op when [[termExpr]] is unset. */
   private def writeTermSidecar(dataDir: String, sidecarAt: String): Unit =
     termExpr.foreach { te =>
-      val p = new Path(dataDir)
-      val hasData = fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.startsWith("bucket="))
-      val blooms: Map[Int, TermBloom] =
-        if (!hasData) Map.empty
-        else {
-          val counts = footerRowCounts(p).view
+      val rec = record(dataDir)
+      val blooms: Map[Int, TermBloom] = rec.read(_ => true) match {
+        case None => Map.empty
+        case Some(data) =>
+          val counts = footerRowCounts(rec).view
             .mapValues(n => math.max(n, 1L) * termsPerRowHint).toMap
-          val termsDf = spark.read.schema(recordedSchema(dataDir)).parquet(dataDir)
+          val termsDf = data
             .select(col("bucket"), explode(te).as("_t"))
             .filter(col("_t").isNotNull)
             .select(col("bucket").cast("int"), col("_t").cast("string"))
@@ -550,15 +588,12 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       def probe(blooms: Map[Int, TermBloom], b: Int): Boolean =
         blooms.get(b).exists(bl => hs.exists(bl.mightContain))
       val cand = scala.collection.mutable.SortedSet.empty[Int]
-      // NOTE: go through Seq — a Map-shaped collect would key by parent dir
-      // and silently drop all but one bucket per dir from the candidates
-      base.toSeq.collect { case (b, p) if p.nonEmpty => (new Path(p).getParent.toString, b) }
-        .groupBy(_._1).foreach { case (dir, entries) =>
-          TermBloom.read(fs, new Path(dir, sidecarName)) match {
-            case None         => cand ++= entries.map(_._2)
-            case Some(blooms) => cand ++= entries.map(_._2).filter(probe(blooms, _))
-          }
+      baseByDir(base, _ => true).foreach { case (dir, bs) =>
+        TermBloom.read(fs, new Path(dir, sidecarName)) match {
+          case None         => cand ++= bs
+          case Some(blooms) => cand ++= bs.filter(probe(blooms, _))
         }
+      }
       deltas.foreach { d =>
         val scope = d.scope.getOrElse((0 until numBuckets).toSet)
         TermBloom.read(fs, new Path(d.dir, sidecarName)) match {
@@ -570,17 +605,15 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     }
   }
 
-  /** Approximate on-disk data bytes of the latest snapshot (base dirs +
-    * delta add dirs) — driver-side fs metadata only, never a Spark job.
-    * 0 for an empty store. Callers use it as a byte-derived gate for
-    * "is this store small enough to materialize per batch". */
+  /** Approximate data bytes of the latest snapshot (the part files of its
+    * base buckets + its deltas' add files), summed from the data-dir
+    * records: never a Spark job, never a listing. 0 for an empty store.
+    * Callers use it as a byte-derived gate for "is this store small enough
+    * to materialize per batch". */
   def approxDataBytes: Long = latest.map { id =>
     val (base, deltas) = readManifest(id)
-    val dirs = base.values.filter(_.nonEmpty)
-      .map(p => new Path(p).getParent).toSet ++
-      deltas.map(d => new Path(s"${d.dir}/add"))
-    dirs.toSeq.map(p =>
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L).sum
+    baseByDir(base, _ => true).map { case (dir, bs) => record(dir).bytes(bs) }.sum +
+      deltas.map(d => record(s"${d.dir}/add").bytes(b => d.scope.forall(_(b)))).sum
   }.getOrElse(0L)
 
   /** [[stageDelta]] + pointer flip. */
@@ -602,52 +635,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   // --- reads ---------------------------------------------------------------
 
-  private def load(paths: Seq[(Int, String)]): Option[DataFrame] = {
-    val nonEmpty = paths.filter(_._2.nonEmpty).filter { case (_, p) => fs.exists(new Path(p)) }
-    if (nonEmpty.isEmpty) None
-    else {
-      // ONE relation per distinct snapshot dir, not one per bucket: a
-      // per-bucket `spark.read.parquet` union planned 32 separate file
-      // listings on the driver for EVERY store read — measured as seconds
-      // of non-scaling latency per batch (the recorded schema removes the
-      // footer inference each relation also ran). With
-      // `basePath` at the snap dir, partition discovery returns the
-      // `bucket` column (int) and path-level pruning to exactly the
-      // requested bucket dirs. After a merge-on-read fold or a full
-      // commit all buckets share one snap dir, so this is ONE relation.
-      val byDir: Map[String, Seq[String]] = nonEmpty
-        .map { case (_, p) => new Path(p) }
-        .groupBy(p => p.getParent.toString)
-        .map { case (dir, ps) => dir -> ps.map(_.toString).toSeq }
-      val dfs = byDir.toSeq.sortBy(_._1).map { case (dir, leafs) =>
-        spark.read.schema(recordedSchema(dir)).option("basePath", dir).parquet(leafs: _*)
-      }
-      Some(dfs.reduce(_ unionByName _))
-    }
-  }
-
-  /** Bucket-pruned read of one delta dir (None when absent/empty, or when
-    * the requested buckets miss the delta's `scope` entirely). The
-    * `bucket` partition column comes back from the directory layout, so
-    * the isin filter prunes whole subdirs at planning time. */
-  private def loadDelta(dir: String, buckets: Option[Seq[Int]],
-                        scope: Option[Set[Int]] = None): Option[DataFrame] = {
-    val eff: Option[Seq[Int]] = (buckets, scope) match {
-      case (None, None)         => None
-      case (Some(bs), None)     => Some(bs)
-      case (None, Some(s))      => Some(s.toSeq.sorted)
-      case (Some(bs), Some(s))  => Some(bs.filter(s.contains))
-    }
-    if (eff.exists(_.isEmpty)) return None
-    val p = new Path(dir)
-    if (!fs.exists(p) || !fs.listStatus(p).exists(_.getPath.getName.startsWith("bucket=")))
-      None
-    else {
-      val df = spark.read.schema(recordedSchema(dir)).parquet(dir)
-      Some(eff.fold(df)(bs => df.filter(col("bucket").isin(bs.map(Integer.valueOf): _*))))
-    }
-  }
-
   /** Fold base + delta chain into the current logical content: ONE
     * temporal anti-join. Every row is tagged with the snapshot that wrote
     * it (base = -1), every tombstone with its delta's tag, and a row is
@@ -662,18 +649,17 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * the same anti-join. */
   private def assemble(base: Map[Int, String], deltas: Seq[DeltaRef],
                        buckets: Option[Seq[Int]]): Option[DataFrame] = {
-    val basePaths: Seq[(Int, String)] = buckets match {
-      case None => (0 until numBuckets).map(b => b -> base.getOrElse(b, ""))
-      case Some(bs) => bs.distinct.sorted.map(b => b -> base.getOrElse(b, ""))
-    }
-    val baseDf = load(basePaths)
+    val wanted: Int => Boolean = buckets.fold((_: Int) => true)(_.toSet)
+    // ONE relation per base data dir (after a full commit or a full fold
+    // every bucket shares one), not one per bucket
+    val baseDf = baseByDir(base, wanted).flatMap { case (dir, bs) => record(dir).read(bs) }
+      .reduceOption(_ unionByName _)
     if (deltas.isEmpty) return baseDf
-    val adds = deltas.flatMap { d =>
-      loadDelta(s"${d.dir}/add", buckets, d.scope).map(df => d.tag -> df)
-    }
-    val tombs = deltas.flatMap { d =>
-      loadDelta(s"${d.dir}/tomb", buckets, d.scope).map(df => d.tag -> df)
-    }
+    def inDelta(d: DeltaRef)(b: Int): Boolean = wanted(b) && d.scope.forall(_(b))
+    def side(sub: String): Seq[(Long, DataFrame)] =
+      deltas.flatMap(d => record(s"${d.dir}/$sub").read(inDelta(d)).map(d.tag -> _))
+    val adds = side("add")
+    val tombs = side("tomb")
     val tagged = baseDf.map(df => -1L -> df).toSeq ++ adds
     if (tagged.isEmpty) return None
     // Every snapshot in the fold carries the head's column set, or the read
@@ -699,12 +685,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val laterTomb = deleteKeys.zip(tombKeys)
       .map { case (k, t) => col(k) <=> col(t) }.reduce(_ && _) &&
       col("_ttag") > col("_wtag")
-    // broadcast gate: the tombstones' on-disk size (file-length sum — no
-    // extra job)
-    val tombBytes = deltas.map { d =>
-      val p = new Path(s"${d.dir}/tomb")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
+    // broadcast gate: the recorded bytes of the tombstone files this fold
+    // reads (no extra job)
+    val tombBytes = deltas.map(d => record(s"${d.dir}/tomb").bytes(inDelta(d))).sum
     if (tombBytes <= tombBroadcastBytes)
       Some(rows.join(broadcast(tombAll), laterTomb, "left_anti").drop("_wtag"))
     else {

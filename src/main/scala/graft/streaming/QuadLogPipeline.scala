@@ -132,14 +132,16 @@ final class QuadLogPipeline(
     * seen this batch (anti-joined against the accumulated index — a READ
     * of the small dimension, never a rewrite); tombstones = the same keys
     * (the coverage contract; they match nothing, being new). A batch with
-    * no new graphs commits a metadata-only manifest (empty-delta skip). */
+    * no new graphs commits nothing: the index is committed on its own,
+    * outside the commit marker, and no batch reads its `latest`. */
   private def appendGraphIndex(withG: DataFrame, batchId: Long): Unit = {
     val gs = graphDim(withG, batchId)
     val existing = graphIdx.read().map(_.select("g"))
       .getOrElse(sys.error("graph index missing: bootstrap first"))
     // lazy checkpoint: the count materializes it, in one job
     val fresh = gs.join(existing, Seq("g"), "left_anti").localCheckpoint(eager = false)
-    graphIdx.commitDelta(fresh, fresh.select("g", "bucket"), fresh.count(), batchId)
+    val n = fresh.count()
+    if (n > 0) graphIdx.commitDelta(fresh, fresh.select("g", "bucket"), n, batchId)
   }
 
   // --- extraction front-end ------------------------------------------------

@@ -1,0 +1,75 @@
+package graft
+
+import org.apache.hadoop.fs.{ContentSummary, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+/** The local file system under its own scheme, `countfs:`, counting the
+  * calls made on it: listings of a directory (`listStatus` on a file, which
+  * Spark's file index issues for every path it is handed, is not a
+  * listing), content summaries, status probes (`exists`, `getFileStatus`),
+  * creates, renames and deletes. The test session registers it as
+  * `fs.countfs.impl`; a spec roots its data at `countfs://` + a local path
+  * and compares [[CountingFileSystem.counts]] before and after the code it
+  * pins. Counts are JVM-wide, and specs run one at a time. */
+class CountingFileSystem extends RawLocalFileSystem {
+  import CountingFileSystem._
+
+  override def getUri: java.net.URI = Uri
+  override def getScheme: String = Uri.getScheme
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    if (pathToFile(f).isDirectory) bump(DirListing)
+    super.listStatus(f)
+  }
+  override def getContentSummary(f: Path): ContentSummary = {
+    bump(ContentSummaries); super.getContentSummary(f)
+  }
+  override def exists(f: Path): Boolean = { bump(StatusProbes); super.exists(f) }
+  override def getFileStatus(f: Path): FileStatus = { bump(StatusProbes); super.getFileStatus(f) }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    bump(Creates); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    bump(Creates)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = { bump(Renames); super.rename(src, dst) }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    bump(Deletes); super.delete(f, recursive)
+  }
+}
+
+object CountingFileSystem {
+  val Uri: java.net.URI = java.net.URI.create("countfs:///")
+
+  val DirListing = "listStatus(dir)"
+  val ContentSummaries = "getContentSummary"
+  val StatusProbes = "exists/getFileStatus"
+  val Creates = "create"
+  val Renames = "rename"
+  val Deletes = "delete"
+
+  private val counters = new ConcurrentHashMap[String, AtomicLong]()
+  private def bump(k: String): Unit =
+    counters.computeIfAbsent(k, _ => new AtomicLong()).incrementAndGet()
+
+  /** A snapshot of every counter (absent = 0). */
+  def counts: Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    counters.asScala.map { case (k, v) => k -> v.get }.toMap.withDefaultValue(0L)
+  }
+
+  /** Counter deltas over `body`. */
+  def during(body: => Unit): Map[String, Long] = {
+    val before = counts
+    body
+    val after = counts
+    after.map { case (k, v) => k -> (v - before(k)) }.withDefaultValue(0L)
+  }
+}

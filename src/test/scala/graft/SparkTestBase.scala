@@ -14,6 +14,7 @@ object SparkTestBase {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.countfs.impl", classOf[CountingFileSystem].getName)
     .getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
 }

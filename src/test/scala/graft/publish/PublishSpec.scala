@@ -10,38 +10,6 @@ import java.nio.file.{Files, Paths}
 class PublishSpec extends GraftSpec {
   import spark.implicits._
 
-  test("manifest inventories committed patch files with md5/length/lastmod") {
-    val root = tmpDir("publish1")
-    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
-      canonicalize = false, maxq = 40)
-    val r = pipe.bootstrap(PageGen.snapshot(spark, 30, 0), "e1", "00000000000000")
-    val manifest = ManifestBuilder.build(spark, s"$root/patches/batch_0", filesPerBatch = 3)
-    assert(manifest.count() == r.files)
-    val row = manifest.orderBy("resource").head()
-    assert(row.getAs[String]("md5").length == 32)
-    assert(row.getAs[Long]("length") > 0)
-    assert(row.getAs[String]("graph_b64").nonEmpty)
-    // per-GRAPH window packaging: at most one incomplete batch per graph
-    val summary = ManifestBuilder.batchSummary(manifest).collect()
-    val incompletePerGraph = summary.filter(!_.getAs[Boolean]("is_complete"))
-      .groupBy(_.getAs[String]("graph_b64")).view.mapValues(_.length)
-    assert(incompletePerGraph.values.forall(_ <= 1))
-  }
-
-  test("end-part republish only when content changed (J3 anti-join)") {
-    val root = tmpDir("publish2")
-    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
-      canonicalize = false, maxq = 40)
-    pipe.bootstrap(PageGen.snapshot(spark, 30, 0), "e1", "00000000000000")
-    val m1 = ManifestBuilder.build(spark, s"$root/patches/batch_0", 3).cache()
-    // unchanged republish -> empty delta
-    assert(ManifestBuilder.changedEndPart(m1, m1).count() == 0)
-    // vs empty old manifest -> the whole provisional window
-    val none = m1.limit(0)
-    val endSize = m1.filter(!col("is_complete")).count()
-    assert(ManifestBuilder.changedEndPart(m1, none).count() == endSize)
-  }
-
   test("per-graph fan-out is driven by the pipeline's graph-folder index (A8)") {
     val root = tmpDir("publish3")
     val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
@@ -96,22 +64,14 @@ class PublishSpec extends GraftSpec {
       .option("pathGlobFilter", "rdf_out_*")
       .option("recursiveFileLookup", "true")
       .load(patchDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("graph_b64")).orderBy(col("resource"))
-    val inv = files.select(
+    val oracle = files.select(
         col("path").as("resource"),
         regexp_extract(col("path"), "g_b64=([^/]+)/", 1).as("graph_b64"),
         col("length"),
         md5(col("content")).as("md5"),
         date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("lastmod"))
       .filter(col("graph_b64") =!= "") // the dump trailer names no graph
-      .withColumn("rn", row_number().over(w))
-      .withColumn("batch", floor((col("rn") - 1) / 3).cast("long"))
-    val totals = inv.groupBy("graph_b64", "batch").agg(count(lit(1)).as("n_in_batch"))
-    val oracle = inv.join(totals, Seq("graph_b64", "batch"))
-      .withColumn("is_complete", col("n_in_batch") === 3)
-      .drop("rn", "n_in_batch")
-    val got = ManifestBuilder.build(spark, patchDir, filesPerBatch = 3)
+    val got = ManifestBuilder.checksummed(spark, ManifestBuilder.list(spark, patchDir).toDS())
     assert(got.schema.map(f => (f.name, f.dataType)) == oracle.schema.map(f => (f.name, f.dataType)))
     val (gotRows, want) = (got.collect().toSet, oracle.collect().toSet)
     assert(files.count() == want.size + 1, "the tree holds exactly one trailer")

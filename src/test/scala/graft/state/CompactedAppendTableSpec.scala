@@ -50,6 +50,19 @@ class CompactedAppendTableSpec extends GraftSpec {
     assert(CompactedAppendTable.read(spark, root).isEmpty)
   }
 
+  test("reads are planned from the schema the first append recorded") {
+    val root = tmpDir("cat5") + "/t"
+    CompactedAppendTable.append(spark, root, Seq((1L, "a")).toDF("batchId", "tag"))
+    assert(jobsRunBy(CompactedAppendTable.read(spark, root).get) == 0,
+      "the read planned a schema-inference job")
+    val e = intercept[RuntimeException] {
+      CompactedAppendTable.append(spark, root, Seq((2L, 3)).toDF("batchId", "n"))
+    }
+    assert(e.getMessage.contains("the table records"), e.getMessage)
+    assert(CompactedAppendTable.read(spark, root).get.as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a")))
+  }
+
   test("lost pointer resolves to the newest committed generation, not gen_0") {
     val root = tmpDir("cat4") + "/t"
     // enough appends to force at least one compaction (pointer written,

@@ -1,6 +1,6 @@
 package graft.state
 
-import graft.GraftSpec
+import graft.{CountingFileSystem, GraftSpec}
 import org.apache.spark.sql.functions._
 
 class SnapshotStoreSpec extends GraftSpec {
@@ -451,11 +451,14 @@ class SnapshotStoreSpec extends GraftSpec {
   }
 
   test("planning read() and readBuckets() over a delta chain starts no Spark job") {
-    // every data dir records its schema, so planning a read runs no
-    // footer-inference job (one per relation before: base + 2 x 2 delta
-    // sides here), and a data dir that lost its record fails loudly
-    val root = tmpDir("store13")
-    val st = new SnapshotStore(spark, root, numBuckets = 16,
+    // every data dir records its schema and part files, so planning a read
+    // runs no footer-inference job (one per relation before: base + 2 x 2
+    // delta sides here) and asks the filesystem nothing about a data dir:
+    // counted on the counting file system, no dir listing and no content
+    // summary (the read and the size gate used to probe and list every
+    // bucket dir); and a data dir that lost its record fails loudly
+    val local = tmpDir("store13")
+    val st = new SnapshotStore(spark, s"countfs://$local", numBuckets = 16,
       deleteKeys = Seq("k"), maxDeltas = 8)
     def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
       .withColumn("bucket", st.bucketCol(col("k")))
@@ -464,15 +467,67 @@ class SnapshotStoreSpec extends GraftSpec {
       val adds = rows((1 to 40).map(i => s"k${i * b}" -> (1000 * b + i)))
       st.commitDelta(adds, adds.select("k", "bucket"), adds.count(), b.toLong)
     }
-    val jobs = jobsRunBy {
-      st.read().get
-      st.readBuckets(Seq(0, 5, 9)).get
+    var jobs = -1
+    val calls = CountingFileSystem.during {
+      jobs = jobsRunBy {
+        st.read().get
+        st.readBuckets(Seq(0, 5, 9)).get
+        assert(st.approxDataBytes > 0)
+      }
     }
     assert(jobs == 0, s"read planning ran $jobs Spark jobs")
+    assert(calls(CountingFileSystem.DirListing) == 0 &&
+      calls(CountingFileSystem.ContentSummaries) == 0, s"read planning called $calls")
     assert(st.read().get.count() == 200)
-    assert(new java.io.File(s"$root/snap_${f"${0L}%014d"}/_schema.json").delete())
+    assert(new java.io.File(s"$local/snap_${f"${0L}%014d"}/_record.txt").delete())
     val e = intercept[RuntimeException](st.read())
-    assert(e.getMessage.contains("no recorded schema"), e.getMessage)
+    assert(e.getMessage.contains("no data record"), e.getMessage)
+  }
+
+  test("a part file the commit did not record is never read: reads and the fold") {
+    // a stray copy of a part file in a base bucket dir and in a delta's
+    // add/ bucket dir (a crashed writer's leftover, a manual copy) must
+    // not surface: reads, bucket-pruned reads and the fold that rewrites
+    // the base read exactly the files each commit recorded
+    val root = tmpDir("store15")
+    val st = new SnapshotStore(spark, root, numBuckets = 4,
+      deleteKeys = Seq("k"), maxDeltas = 2, foldBucketBytes = 0L)
+    def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    var model: Map[String, Int] = (1 to 40).map(i => s"k$i" -> i).toMap
+    def commit(id: Long, adds: Seq[(String, Int)]): Unit = {
+      st.commitDelta(rows(adds), rows(adds).select("k", "bucket"), adds.size, id)
+      model = model ++ adds
+    }
+    def stray(dir: String): Int = {
+      val d = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("bucket=")).minBy(_.getName)
+      val part = d.listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, new java.io.File(d, "part-99999-stray.parquet").toPath)
+      d.getName.stripPrefix("bucket=").toInt
+    }
+    def back(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
+      df.select("k", "v").as[(String, Int)].collect().toSeq.sorted
+    st.commitFull(rows(model.toSeq), 0L)
+    commit(1L, (1 to 10).map(i => s"n$i" -> i))
+    val strays = Seq(stray(s"$root/snap_${f"${0L}%014d"}"),
+      stray(s"$root/snap_${f"${1L}%014d"}/add")).distinct
+    val bucketOf = rows(model.toSeq).select("k", "bucket").as[(String, Int)].collect().toMap
+    def check(when: String): Unit = {
+      assert(back(st.read().get) == model.toSeq.sorted, s"read $when")
+      strays.foreach { b =>
+        assert(back(st.readBuckets(Seq(b)).get) == model.toSeq.filter(kv => bucketOf(kv._1) == b).sorted,
+          s"readBuckets($b) $when")
+      }
+    }
+    check("before the fold")
+    commit(2L, Seq("k1" -> 100))
+    commit(3L, Seq("k2" -> 200)) // chain 1..3 > maxDeltas: the full fold runs
+    val manifest = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      s"$root/manifest_${f"${3L}%014d"}.txt"))
+    assert(!manifest.contains("D\t") && manifest.contains("snap_00000000000003B"),
+      s"the fold did not rewrite the base: $manifest")
+    check("after the fold")
   }
 
   test("anti-join fold == aggregate-then-join fold, null key components included") {
