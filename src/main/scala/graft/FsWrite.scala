@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataOutputStream, FileSystem, Path}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** The one write path for the files the engine writes itself: patch files,
   * publish zips and XML, store manifests, pointers, markers, sidecars and
@@ -28,15 +28,18 @@ object FsWrite {
     case None => fs.create(path, overwrite, bufferSize)
     case Some(p) =>
       Files.createDirectories(p.getParent)
-      fs match { // a Hadoop-written .crc would not match the new bytes
-        case c: ChecksumFileSystem if overwrite =>
-          local(fs, c.getChecksumFile(path)).foreach(Files.deleteIfExists)
-        case _ =>
-      }
+      if (overwrite) dropCrc(fs, path)
       val out = if (overwrite) Files.newOutputStream(p)
         else Files.newOutputStream(p, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       new FSDataOutputStream(new java.io.BufferedOutputStream(out, bufferSize),
         FileSystem.getStatistics(fs.getUri.getScheme, fs.getClass))
+  }
+
+  /** Delete a Hadoop-written `.crc` of `path`, which would not match the
+    * bytes a nio write puts there. */
+  private def dropCrc(fs: FileSystem, path: Path): Unit = fs match {
+    case c: ChecksumFileSystem => local(fs, c.getChecksumFile(path)).foreach(Files.deleteIfExists)
+    case _ =>
   }
 
   def mkdirs(fs: FileSystem, path: Path): Unit = local(fs, path) match {
@@ -58,10 +61,18 @@ object FsWrite {
   def atomic(fs: FileSystem, path: Path, text: String): Unit =
     atomic(fs, path)(_.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
-  /** Move a finished temp file onto `path`, deleting the old one first (an
-    * HDFS rename does not overwrite). */
-  def replace(fs: FileSystem, tmp: Path, path: Path): Unit = {
-    if (fs.exists(path)) fs.delete(path, false)
-    if (!fs.rename(tmp, path)) sys.error(s"rename failed: $tmp -> $path")
+  /** Move a finished temp file onto `path`. On `file:` this is one
+    * rename(2), which replaces `path` atomically: a reader or a crash sees
+    * the old file or the new one, never neither (stale `.crc`s of either
+    * name are dropped first). Other schemes delete the old file, then
+    * rename, since an HDFS rename does not overwrite: a crash between the
+    * two leaves no `path`. */
+  def replace(fs: FileSystem, tmp: Path, path: Path): Unit = (local(fs, tmp), local(fs, path)) match {
+    case (Some(t), Some(p)) =>
+      Seq(tmp, path).foreach(dropCrc(fs, _))
+      Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
+    case _ =>
+      if (fs.exists(path)) fs.delete(path, false)
+      if (!fs.rename(tmp, path)) sys.error(s"rename failed: $tmp -> $path")
   }
 }

@@ -128,6 +128,20 @@ object ConnectedComponents {
   private def runOnDriver(spark: SparkSession, e0: DataFrame): DataFrame = {
     import spark.implicits._
     val pairs = e0.as[(String, String)].collect()
+    val find = UnionFind.components(pairs)
+    val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    ids.map(id => (id, find(id))).toSeq.toDF("id", "component")
+  }
+}
+
+/** Driver-side union-find with path compression, shared by the small-graph
+  * components path and the driver-tier canonical map. A union keeps the
+  * smaller root, so every component is labelled by its minimum id, the same
+  * label the distributed [[ConnectedComponents]] gives. */
+private[canon] object UnionFind {
+  /** The root lookup after every edge is unioned; an id on no edge is its
+    * own root. */
+  def components(edges: Iterable[(String, String)]): String => String = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -136,12 +150,11 @@ object ConnectedComponents {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    pairs.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-    ids.map(id => (id, find(id))).toSeq.toDF("id", "component")
+    find
   }
 }
 
@@ -370,18 +383,7 @@ object IriCanonicalizer {
   private[canon] def canonicalMapScala(ids: Seq[String],
                                        th: Double): Option[Seq[(String, String)]] =
     verifiedPairsScala(ids, th).map { edges =>
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
+      val find = UnionFind.components(edges)
       ids.map(id => id -> find(id))
     }
 
@@ -618,15 +620,17 @@ object IriCanonicalizer {
     verifyPairsTyped(raw, jaccardThreshold).distinct()
   }
 
-  /** Fresh-id count at or below which the stored band scan is pre-filtered
-    * by an EXPLICITLY broadcast semi join on the fresh band keys: 8 keys ×
-    * 16 B × hashed-relation overhead ≈ low tens of MB at the gate — the
-    * same byte-reasoned discipline as the pipeline's urlBroadcastKeyLimit.
-    * Above it (a bootstrap-sized increment) the hint would force a
-    * multi-hundred-MB broadcast past Spark's own estimator, so the stored
-    * side joins UNFILTERED — the shuffle the recompute path always paid,
-    * still minus its domain signature pass. */
-  val freshKeyBroadcastLimit: Long = 200000L
+  /** Band-key count at or below which the stored band scan is pre-filtered
+    * by an EXPLICITLY broadcast semi join on the fresh band keys. What is
+    * broadcast is up to `sigBands` (band, bucket) rows per fresh id, so the
+    * gate counts fresh ids × `sigBands`: 16 B × hashed-relation overhead
+    * per key ≈ low tens of MB at the gate — the same byte-reasoned
+    * discipline as the pipeline's urlBroadcastKeyLimit. Above it (a
+    * bootstrap-sized increment) the hint would force a multi-hundred-MB
+    * broadcast past Spark's own estimator, so the stored side joins
+    * UNFILTERED — the shuffle the recompute path always paid, still minus
+    * its domain signature pass. */
+  val freshKeyBroadcastLimit: Long = 1600000L
 
   /** [[verifiedPairs]](ids = stored ∪ fresh, leftIds = fresh) for the
     * incremental case where the accumulated side's signatures are
@@ -668,7 +672,7 @@ object IriCanonicalizer {
       lit(s" hashes, expected $sigHashes"))))
     val storedBanded = banded(storedSigs.select(col("id"), checkedSig.as("sig")))
     val storedPruned =
-      if (freshSigs.count() <= freshBroadcastLimit)
+      if (freshSigs.count() * sigBands <= freshBroadcastLimit)
         storedBanded.join(broadcast(freshKeys), Seq("band", "bucket"), "left_semi")
       else storedBanded
     val l = freshBanded.select(col("band"), col("bucket"), col("id").as("a"))
@@ -706,7 +710,8 @@ object IriCanonicalizer {
   private def maybeBroadcast(canon: DataFrame, canonRows: Long): DataFrame =
     if (canonRows >= 0 && canonRows <= broadcastRowLimit) broadcast(canon) else canon
 
-  /** [[canonicalize]] for url-attributed contribution rows (keeps `url`).
+  /** Rewrite the subject and IRI-object of url-attributed contribution
+    * rows through the canonical map (keeps `url`; literals stay).
     * `canonRows` defaults to -1 (= unknown) so the default can never
     * broadcast an unsized map — callers that want the broadcast fast path
     * must pass a real count.
@@ -822,25 +827,5 @@ object IriCanonicalizer {
         seen.add(k.toString)
       }
     }(enc)
-  }
-
-  /** Rewrite quad subject/object IRIs through the canonical map.
-    * Same size-gated broadcast rule as [[canonicalizeAttributed]]: the
-    * default `canonRows = -1` (unknown) never broadcasts. */
-  def canonicalize(quads: DataFrame, canon: DataFrame,
-                   canonRows: Long = -1L): DataFrame = {
-    val cm = maybeBroadcast(canon, canonRows)
-    quads
-      .join(cm.withColumnRenamed("id", "s").withColumnRenamed("canonical", "sCanon"),
-        Seq("s"), "left")
-      .join(cm.withColumnRenamed("id", "oLex").withColumnRenamed("canonical", "oCanon"),
-        Seq("oLex"), "left")
-      .select(
-        coalesce(col("sCanon"), col("s")).as("s"),
-        col("p"),
-        when(col("oKind") === lit(graft.model.TermKind.Iri),
-          coalesce(col("oCanon"), col("oLex"))).otherwise(col("oLex")).as("oLex"),
-        col("oKind"), col("oDtype"), col("oLang"), col("g"))
-      .dropDuplicates("s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
   }
 }

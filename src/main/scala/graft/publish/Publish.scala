@@ -1,7 +1,7 @@
 package graft.publish
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import graft.FsWrite
@@ -32,6 +32,14 @@ import graft.Timing.timed
   * its membership changed (J3 identity comparison, zipsynchronizer.py:
   * 149-156), and indices increase monotonically across runs exactly like
   * create_zip's max-index+1 scan (zipsynchronizer.py:274-281).
+  *
+  * What the sink holds is known from one place, the publish record
+  * `sinkDir/_published` that [[ZipPublisher.publish]] appends to: every
+  * built zip with its summary, members and run. Indices, J3 and every XML
+  * document derive from it; nothing publish wrote is read back from disk,
+  * and no publish lists a graph dir it does not rewrite. The reference
+  * scrubs crashed runs by scanning the sink; here the record's append is
+  * the commit point, and the next publish finishes a crashed run's tail.
   */
 object ManifestBuilder {
 
@@ -143,12 +151,6 @@ object ZipPublisher {
   private def sidecarNames(zip: String, complete: Boolean): Seq[String] =
     s"manifest_$zip.xml" +: (if (complete) Nil else Seq(s"$zip.xml"))
 
-  private def readFile(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** resourcedump-manifest XML (the reference's manifest_*.xml,
     * PREFIX_MANIFEST sidecars): one <url> per packaged resource. */
   def manifestXml(rows: Seq[(String, String, Long, String)]): String = {
@@ -214,22 +216,67 @@ object ZipPublisher {
        |</urlset>""".stripMargin
   }
 
+  /** One packaged resource as the publish record holds it, in the zip's
+    * manifest order. */
+  final case class Member(resource: String, md5: String, length: Long, lastmod: String)
+
+  /** The name families the publisher writes into a graph dir: zips, their
+    * sidecars and staged temps, and the resource dump documents. */
+  private val OwnedPrefixes = Seq("part_", "manifest_part_", "resource-dump")
+
+  /** The zips a consumer sees in one graph: every def zip, plus the end
+    * part of the latest run that built into the graph (none when that
+    * run's windows all closed). `zips` carries each zip's run. */
+  private def live(zips: Seq[(ZipInfo, Long)]): Seq[ZipInfo] = {
+    val last = zips.map(_._2).max
+    zips.collect { case (z, r) if z.complete || r == last => z }
+  }
+
+  /** A resource's file name: its zip entry and manifest `<loc>`. */
+  private def baseName(resource: String): String =
+    resource.substring(resource.lastIndexOf('/') + 1)
+
+  /** A member's J3 identity: its file name and md5. */
+  private def identity(resource: Column, md5: Column): Column =
+    concat_ws("|", regexp_extract(resource, "([^/]+)$", 1), md5)
+
+  /** One digest of a set of member identities, so the record hands the
+    * driver 32 characters per end part instead of its member list. */
+  private def membershipDigest(identities: Column): Column =
+    md5(concat_ws("\n", sort_array(identities)))
+
+  /** Highest `part_def`/`part_end` index among `zips` (-1 when none). */
+  private def maxIndex(zips: Seq[ZipInfo], complete: Boolean): Int = zips
+    .collect { case z if z.complete == complete => z.zipName.split('_').last.toInt }
+    .maxOption.getOrElse(-1)
+
   /** Publish one committed patch directory into `sinkDir`:
     *
     *  - complete windows of `filesPerZip` resources -> `part_def_N.zip`
     *    (immutable; never rewritten once present);
-    *  - the remainder -> `part_end_N.zip`, rebuilt ONLY when its membership
-    *    changed (old end zip + sidecars removed, index bumped — exactly
-    *    do_publish's evolution);
+    *  - the remainder -> `part_end_N.zip`, rebuilt under a new index when its
+    *    membership changed or its graph gained a def zip (the old end and
+    *    its sidecars are removed — do_publish's evolution);
     *  - every zip embeds `manifest.xml` and gets a `manifest_<zip>.xml`
     *    sidecar; per-graph `resource-dump.xml` + `capability-list.xml`; one
     *    top-level `.well-known/resourcesync` over all graphs.
     *
     * Zip bytes are written by executors (foreachPartition over
     * (graph, batch) groups); the driver only writes the small XML set.
-    * Published state (which resources sit in which complete zip) lives in a
-    * parquet table `sinkDir/_published` — the Spark-native stand-in for the
-    * reference's move-files-out-of-source-dir bookkeeping.
+    *
+    * The publish record, the compacted-append table `sinkDir/_published`,
+    * is the only source of truth about the sink. Each run that builds zips
+    * appends one row per zip — its [[ZipInfo]], its [[Member]]s and the
+    * run's sequence number — and that append is the run's commit point;
+    * `_published/_done` names the last run whose metadata tail finished.
+    * Every index, J3's end membership, every XML document and every
+    * deletion derives from the record: no sink XML or sidecar is read back
+    * and no graph dir is listed except the ones this run rewrites. Those
+    * are the graphs it built zips into plus the graphs of any recorded run
+    * later than `_done` (a crash after the append), whose sidecars are
+    * rewritten from the recorded members. A rewritten graph dir keeps
+    * exactly its live zips, their sidecars and its dump documents: a zip
+    * no commit recorded is never listed, and is deleted there.
     *
     * Returns per-zip summary rows for this run (empty if nothing changed).
     */
@@ -246,7 +293,40 @@ object ZipPublisher {
     val f = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     FsWrite.mkdirs(f, new Path(sinkDir))
     val stateDir = s"$sinkDir/_published"
-    val hasState = graft.state.CompactedAppendTable.exists(spark, stateDir)
+    val donePath = new Path(stateDir, "_done")
+
+    // the record: one small row per recorded zip comes back — its summary,
+    // run, and for an end part the digest of its membership (members stay
+    // in the table) — plus the last run whose metadata tail finished
+    val record = graft.state.CompactedAppendTable.read(spark, stateDir)
+    val recordedRows: Seq[(ZipInfo, Long, String)] = timed("publish.readRecord") {
+      record.toSeq.flatMap { r =>
+        val zipCols = r.columns.filterNot(Set("run", "members")).map(col)
+        r.select(struct(zipCols: _*), col("run"),
+          when(!col("complete"), membershipDigest(
+            transform(col("members"), m => identity(m("resource"), m("md5"))))))
+          .as[(ZipInfo, Long, String)].collect()
+      }
+    }
+    val recorded: Seq[(ZipInfo, Long)] = recordedRows.map(r => (r._1, r._2))
+    val done = if (record.isEmpty) -1L else try {
+      val in = f.open(donePath)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong finally in.close()
+    } catch { case _: java.io.FileNotFoundException => -1L }
+    val run = recorded.map(_._2).maxOption.fold(0L)(_ + 1)
+    val byGraph: Map[String, Seq[(ZipInfo, Long)]] = recorded.groupBy(_._1.graph_b64)
+    // members of the zips of runs whose metadata tail never finished: the
+    // sidecars they staged are rewritten from these (a crash-recovery read)
+    val pending = recorded.filter(_._2 > done)
+    val pendingManifests: Map[(String, String), String] = record match {
+      case Some(r) if pending.nonEmpty =>
+        r.filter(col("run") > done).select("graph_b64", "zipName", "members")
+          .as[(String, String, Seq[Member])].collect()
+          .map { case (g, z, ms) =>
+            (g, z) -> manifestXml(ms.map(m => (baseName(m.resource), m.md5, m.length, m.lastmod)))
+          }.toMap
+      case _ => Map.empty
+    }
 
     // inventory minus already-definitively-published resources, pruned
     // BEFORE the checksum pass so published files are never read again; when
@@ -259,11 +339,9 @@ object ZipPublisher {
         broadcast(gi.select(col("g_b64").as("graph_b64")).distinct()),
         Seq("graph_b64"), "left_semi")
     }
-    val unpublished =
-      if (!hasState) inGraphs
-      else inGraphs.join(
-        graft.state.CompactedAppendTable.read(spark, stateDir).get.select("resource"),
-        Seq("resource"), "left_anti")
+    val unpublished = record.fold(inGraphs)(r => inGraphs.join(
+      r.filter(col("complete")).select(explode(col("members.resource")).as("resource")),
+      Seq("resource"), "left_anti"))
     val inv = ManifestBuilder.checksummed(spark, unpublished.as[ManifestBuilder.Listed])
 
     // Greedy per-graph windows over the unpublished remainder: a window
@@ -315,64 +393,56 @@ object ZipPublisher {
         windows.flatten
       }
       .toDF()
-    val windowedC = timed("publish.windowedInventory") {
-      windowed0.localCheckpoint() // consumed 3x below (end check, naming, zip build)
+    val windowed = timed("publish.windowedInventory") {
+      windowed0.localCheckpoint() // consumed 3x below (J3 check, zip build, record)
     }
 
-    // existing sink state: one tiny entry per graph that holds a zip
-    val sinkGraphs: Map[String, SinkGraph] = timed("publish.scanSink")(scanSink(f, sinkDir))
+    // J3: a graph is rebuilt when it has a complete window or its end
+    // membership, as (basename, md5) pairs, differs from its recorded
+    // current end's — a member whose CONTENT changed under the same name
+    // triggers a rebuild, exactly the reference's resource+checksum identity
+    // (zipsynchronizer.py:149-156). Both sides are membership digests: ONE
+    // small row per graph comes back, never the file rows.
+    val liveByGraph: Map[String, Seq[ZipInfo]] = byGraph.map { case (g, zs) => g -> live(zs) }
+    val endDigest: Map[ZipInfo, String] =
+      recordedRows.collect { case (z, _, d) if !z.complete => z -> d }.toMap
+    val currentEnd: Map[String, String] = liveByGraph.flatMap { case (g, zs) =>
+      zs.find(!_.complete).map(z => g -> endDigest(z))
+    }
+    val rebuilt: Seq[(String, Long, Boolean)] = windowed.groupBy("graph_b64").agg(
+        coalesce(max(when(col("is_complete"), col("batch") + 1)), lit(0L)).as("nDefs"),
+        collect_list(when(!col("is_complete"), identity(col("resource"), col("md5")))).as("end"))
+      .select(col("graph_b64"), col("nDefs"), membershipDigest(col("end")), size(col("end")) > 0)
+      .as[(String, Long, String, Boolean)].collect().toSeq
+      .collect { case (g, nDefs, end, hasEnd)
+        if nDefs > 0 || !currentEnd.get(g).contains(end) => (g, nDefs, hasEnd) }
 
-    // J3: per-graph end-part membership as (basename, md5) pairs — a member
-    // whose CONTENT changed under the same name triggers a rebuild, exactly
-    // the reference's resource+checksum identity (zipsynchronizer.py:
-    // 149-156). ONE small row per graph comes back, never the file rows.
-    val windowed = windowedC
-    val endMembership = windowed.filter(!col("is_complete"))
-      .withColumn("base", regexp_extract(col("resource"), "([^/]+)$", 1))
-      .select(col("graph_b64"), concat_ws("|", col("base"), col("md5")).as("m"))
-      .groupBy("graph_b64")
-      .agg(sort_array(collect_list(col("m"))).as("members"))
-      .as[(String, Seq[String])].collect()
-      .map { case (g, m) => g -> m.toSet }.toMap
-    val endChanged: Set[String] = endMembership.collect {
-      case (g, members) if !sinkGraphs.get(g).flatMap(_.endMembers).contains(members) => g
-    }.toSet
-
-    // zip NAME assignment in the plan (reference max-index+1 semantics,
-    // zipsynchronizer.py:274-281): def name = defBase(g) + batch,
-    // end name = endBase(g); a tiny per-graph base table joined in
-    val baseDf = broadcast(
-      (endMembership.keySet ++ sinkGraphs.keySet).toSeq
-        .map { g =>
-          val s = sinkGraphs.get(g)
-          (g, s.fold(0)(_.maxDef + 1), s.fold(0)(_.maxEnd + 1))
-        }
-        .toDF("graph_b64", "defBase", "endBase"))
-    val assigned = windowed.join(baseDf, Seq("graph_b64"), "left")
-      .withColumn("defBase", coalesce(col("defBase"), lit(0)))
-      .withColumn("endBase", coalesce(col("endBase"), lit(0)))
-      .filter(col("is_complete") ||
-        col("graph_b64").isin(endChanged.toSeq: _*))
-      .withColumn("zipName",
-        when(col("is_complete"),
-          format_string("part_def_%05d", (col("defBase") + col("batch")).cast("int")))
-          .otherwise(format_string("part_end_%05d", col("endBase"))))
-
-    // every zip this run intends to write — the crash-cleanup manifest
-    // (zipsynchronizer.py:69-109: on failure delete every provisional
-    // artifact of the failed run, then re-raise)
-    val plannedZips: Seq[(String, String)] = assigned
-      .select("graph_b64", "zipName").distinct()
-      .as[(String, String)].collect().toSeq
+    // zip NAMES, max-index+1 over the graph's live zips (reference
+    // semantics, zipsynchronizer.py:274-281): window k of a rebuilt graph is
+    // part_def_<defBase + k>, its trailing incomplete window part_end_<endBase>.
+    // They double as the crash-cleanup manifest (zipsynchronizer.py:69-109:
+    // on failure delete every provisional artifact of the failed run, then
+    // re-raise).
+    val planned: Seq[(String, Long, String)] = rebuilt.flatMap { case (g, nDefs, hasEnd) =>
+      val zs = liveByGraph.getOrElse(g, Nil)
+      val (defBase, endBase) = (maxIndex(zs, complete = true) + 1, maxIndex(zs, complete = false) + 1)
+      (0L until nDefs).map(k => (g, k, f"part_def_${defBase + k}%05d")) ++
+        (if (hasEnd) Seq((g, nDefs, f"part_end_$endBase%05d")) else Nil)
+    }
+    val plannedZips = planned.map { case (g, _, name) => (g, name) }
+    val assigned = windowed
+      .join(broadcast(planned.toDF("graph_b64", "batch", "zipName")), Seq("graph_b64", "batch"))
 
     // distributed zip build: stream each (graph, zip) group's files straight
-    // into the final zip; only the one-line summary per zip returns
+    // into the final zip; only the one-line summary per zip returns. The
+    // explicit partition count keeps adaptive execution from coalescing
+    // the build into one task.
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val sink = sinkDir
     val buildJob = assigned
       .select("graph_b64", "zipName", "is_complete", "resource", "md5", "length", "lastmod")
-      .repartition(col("graph_b64"), col("zipName"))
+      .repartition(spark.sparkContext.defaultParallelism, col("graph_b64"), col("zipName"))
       .sortWithinPartitions("graph_b64", "zipName", "resource")
       .mapPartitions { it =>
         val groups = new Iterator[(String, String, Boolean, Seq[(String, String, Long, String)])] {
@@ -395,7 +465,7 @@ object ZipPublisher {
           // in a graph, which ZipOutputStream would reject opaquely
           val byName = scala.collection.mutable.HashMap.empty[String, String]
           members.foreach { case (res, _, _, _) =>
-            val base = res.substring(res.lastIndexOf('/') + 1)
+            val base = baseName(res)
             byName.put(base, res).foreach { other =>
               throw new IllegalStateException(s"graph $g: zip $name would hold two " +
                 s"members named $base: $other and $res (patch batches written " +
@@ -410,7 +480,7 @@ object ZipPublisher {
           val stage = s".tmpzip${java.util.UUID.randomUUID().toString.take(8)}"
           val tmpPath = new Path(gDir, s"$name.zip$stage")
           val manifest = manifestXml(members.map { case (res, m, len, lm) =>
-            (res.substring(res.lastIndexOf('/') + 1), m, len, lm)
+            (baseName(res), m, len, lm)
           })
           val zos = new java.util.zip.ZipOutputStream(FsWrite.create(zfs, tmpPath))
           zos.setLevel(1) // speed over ratio: patch text compresses well anyway
@@ -430,11 +500,12 @@ object ZipPublisher {
           // the sidecar XMLs (manifest_<zip>.xml, plus <zip>.xml for an end
           // part) are written here, where the member rows are, but STAGED
           // under the zip's temp suffix: the driver renames them into place
-          // after the state commit (the crash tests' post-state window still
-          // sees zero metadata). ONE summary line per zip returns — NOT the
-          // manifest body: the manifest is O(zip members), so collecting it
-          // made the zip-build collect O(total member rows) on the driver
-          // (~150 B/member — multi-GB driver ingress at a 50k-zip publish).
+          // after the record commit (the crash tests' post-commit window
+          // still sees zero metadata). ONE summary line per zip returns —
+          // NOT the manifest body: the manifest is O(zip members), so
+          // collecting it made the zip-build collect O(total member rows) on
+          // the driver (~150 B/member — multi-GB driver ingress at a
+          // 50k-zip publish).
           sidecarNames(name, complete).foreach { n =>
             val out = FsWrite.create(zfs, new Path(gDir, n + stage))
             try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -445,95 +516,85 @@ object ZipPublisher {
       }
 
     // crash/retry discipline (zipsynchronizer.py:69-109): zips build first;
-    // the _published state commits BEFORE any destructive step or metadata
+    // the record append commits BEFORE any destructive step or metadata
     // write, so a crash in between re-runs against consistent state — the
-    // left_anti prune sees exactly the completed zips. Any failure up to
-    // and including the state append deletes every artifact this run
-    // created (def and end) and re-raises.
+    // left_anti prune sees exactly the completed zips, and the next run
+    // finishes this one's metadata tail. Any failure up to and including
+    // the append deletes every artifact this run created and re-raises.
     val built = try {
-      val rows = timed("publish.zipBuild")(buildJob.collect())
-      if (rows.isEmpty) return Seq.empty
-      onBuiltForTests(rows.map(_._1).toSeq)
-      // published-state bookkeeping: complete-zip members, written
-      // distributed; compacted-append layout bounds the state's file count
-      // across thousands of publish runs, sized ~4M member rows per file
-      timed("publish.stateAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
-        assigned.filter(col("is_complete"))
-          .select(col("resource"), col("zipName").as("zip")),
-        targetFiles = rowsTotal => (rowsTotal / 4000000L + 1L).toInt))
-      rows
+      val rows = if (planned.isEmpty) Array.empty[(ZipInfo, String)]
+        else timed("publish.zipBuild")(buildJob.collect())
+      if (rows.nonEmpty) {
+        onBuiltForTests(rows.map(_._1).toSeq)
+        // one row per built zip, its members gathered from the windows in
+        // manifest order; compacted-append layout bounds the record's file
+        // count across thousands of publish runs, ~4M members per file
+        val members = assigned
+          .groupBy("graph_b64", "zipName")
+          .agg(sort_array(collect_list(struct(col("resource"), col("md5"), col("length"),
+            col("lastmod")))).as("members"))
+        timed("publish.recordAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
+          rows.map(_._1).toSeq.toDF().join(members, Seq("graph_b64", "zipName"))
+            .withColumn("run", lit(run)),
+          targetFiles = zips => (zips / 4000L + 1L).toInt))
+      }
+      rows.toSeq
     } catch {
       case e: Throwable =>
         cleanupPlanned(f, sinkDir, plannedZips)
         throw e
     }
-    // beyond this point zips + state are COMMITTED: a crash below leaves a
-    // consistent sink whose metadata the next touching run reconciles
-    // (orphan recovery in the dump-xml regeneration)
+    if (built.isEmpty && pending.isEmpty) return Seq.empty
+    // beyond this point zips + record are COMMITTED: a crash below leaves
+    // a run later than `_done`, whose graphs the next publish rewrites
     onPublishedForTests()
 
     val nowIso = ManifestBuilder.IsoUtc.format(java.time.Instant.now())
-    val builtInfos: Seq[ZipInfo] = built.toSeq.map(_._1)
+    val builtInfos: Seq[ZipInfo] = built.map(_._1)
     val stages: Map[ZipInfo, String] = built.toMap
-    val summaries = scala.collection.mutable.ArrayBuffer.empty[ZipInfo]
-    summaries ++= builtInfos
+    val zipsOf: Map[String, Seq[(ZipInfo, Long)]] =
+      (recorded ++ builtInfos.map(_ -> run)).groupBy(_._1.graph_b64)
+    val rewrite = (builtInfos ++ pending.map(_._1)).map(_.graph_b64).distinct
 
-    // per-graph resource-dump.xml (accumulating: previous defs stay listed).
-    // Graphs are independent (disjoint directories) — the metadata writes
-    // run on a small thread pool: serially this driver loop is O(graphs)
-    // of filesystem round-trips, the publish tail's bottleneck once the
-    // graph count is large.
-    timed("publish.graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
+    // per-graph metadata. Graphs are independent (disjoint directories), so
+    // the writes run on a small thread pool: serially this driver loop is
+    // O(rewritten graphs) of filesystem round-trips, the publish tail's
+    // bottleneck once the graph count is large.
+    timed("publish.graphMetadata")(forEachParallel(rewrite, metadataThreads) { g =>
       val gDir = new Path(sinkDir, g)
       val gUrl = s"$publishUrl$g/"
-      // the sidecars the zip build staged go into place first, so the dump
-      // xml below never names a missing one (create_zip write_list=True)
-      zs.foreach(z => sidecarNames(z.zipName, z.complete).foreach { n =>
-        FsWrite.replace(f, new Path(gDir, n + stages(z)), new Path(gDir, n))
-      })
-      val already: Seq[ZipInfo] = readDump(f, gDir, g)
-      // EVERY listed end part is provisional by definition: this run
-      // recomputed the full unpublished inventory, so an end entry it did
-      // not re-emit is superseded (not just prevEnd's max index — a crash
-      // between a past run's state append and its metadata tail can leave
-      // older part_end_K entries behind; carrying them forward would show
-      // consumers a stale end zip forever)
-      val keep = already.filter(_.complete)
-        .filterNot(z => zs.exists(_.zipName == z.zipName))
-      // crash-recovery reconciliation: a def zip ON DISK but listed nowhere
-      // was committed (state appended) by a run that died before its
-      // metadata writes — without this, the re-run prunes its members via
-      // _published and the dump xml stays silently stale. Its row (and a
-      // missing manifest sidecar) re-derive from the zip itself, which
-      // embeds manifest.xml. Rare path: only runs for unlisted leftovers.
-      val listedNames = (keep ++ zs.toSeq).map(_.zipName).toSet
-      val orphans = f.listStatus(gDir).map(_.getPath.getName)
-        .filter(n => n.startsWith("part_def_") && n.endsWith(".zip"))
-        .map(_.stripSuffix(".zip"))
-        .filterNot(listedNames.contains)
-        .toSeq.sorted
-        .map(n => recoverZipInfo(f, gDir, g, n))
-      writeDump(f, gDir, gUrl, keep ++ orphans ++ zs.toSeq, nowIso, maxItemsInList)
-      val capaPath = new Path(gDir, "capability-list.xml")
-      if (!f.exists(capaPath))
-        FsWrite.atomic(f, capaPath,
+      val zips = live(zipsOf(g))
+      // sidecars go into place first, so the dump xml below never names a
+      // missing one (create_zip write_list=True): this run's staged ones
+      // by rename, a crashed run's rewritten from its recorded members
+      zips.foreach { z =>
+        val names = sidecarNames(z.zipName, z.complete)
+        stages.get(z) match {
+          case Some(stage) =>
+            names.foreach(n => FsWrite.replace(f, new Path(gDir, n + stage), new Path(gDir, n)))
+          case None => pendingManifests.get((g, z.zipName)).foreach(xml =>
+            names.foreach(n => FsWrite.atomic(f, new Path(gDir, n), xml)))
+        }
+      }
+      val dumpDocs = writeDump(f, gDir, gUrl, zips, nowIso, maxItemsInList)
+      val keep = zips.flatMap(z => s"${z.zipName}.zip" +: sidecarNames(z.zipName, z.complete))
+        .toSet ++ dumpDocs
+      val names = f.listStatus(gDir).map(_.getPath.getName)
+      if (!names.contains("capability-list.xml"))
+        FsWrite.atomic(f, new Path(gDir, "capability-list.xml"),
           capabilityListXml(gUrl, s"$publishUrl.well-known/resourcesync"))
+      // superseded end parts, zips no commit recorded, temps a crashed run
+      // left and chunk documents this write no longer has (do_publish tail)
+      names.filter(n => OwnedPrefixes.exists(n.startsWith) && !keep(n))
+        .foreach(n => f.delete(new Path(gDir, n), false))
     })
 
-    // stale-end sweep over EVERY graph dir (not just this run's): delete
-    // superseded part_end zips/sidecars and repair any dump xml whose end
-    // entries disagree with the on-disk current end — the do_publish tail,
-    // hardened against crashes in past runs' metadata windows.
-    timed("publish.sweepStaleEnds")(sweepStaleEnds(f, sinkDir, publishUrl, summaries.toSeq, nowIso, maxItemsInList, metadataThreads))
-
-    // top-level source description over every graph dir with a capability list
-    val graphs = f.listStatus(new Path(sinkDir)).filter(_.isDirectory)
-      .map(_.getPath.getName).filterNot(_.startsWith("_")).filterNot(_.startsWith("."))
-      .filter(g => f.exists(new Path(new Path(sinkDir, g), "capability-list.xml")))
+    // top-level source description over every recorded graph
     FsWrite.atomic(f, new Path(sinkDir, ".well-known/resourcesync"),
-      sourceDescriptionXml(graphs.toSeq.map(g => s"$publishUrl$g/capability-list.xml")))
+      sourceDescriptionXml(zipsOf.keys.toSeq.map(g => s"$publishUrl$g/capability-list.xml")))
+    FsWrite.atomic(f, donePath, (if (built.nonEmpty) run else pending.map(_._2).max).toString)
 
-    summaries.toSeq
+    builtInfos
   }
 
   /** Write a graph's resource dump metadata, splitting into a
@@ -541,10 +602,9 @@ object ZipPublisher {
     * community item cap (syncdirector.py:53-55). Chunk files are named
     * `resource-dump-%05d.xml`; the top `resource-dump.xml` is either the
     * single urlset (common case) or the `<sitemapindex>` over the chunks.
-    * Stale chunk files from a previous (larger or differently-split) write
-    * are removed so a reader never sees orphaned chunks. */
+    * Returns the names written; the caller deletes any other chunk. */
   private def writeDump(f: FileSystem, gDir: Path, gUrl: String,
-                        zips: Seq[ZipInfo], at: String, maxItems: Int): Unit = {
+                        zips: Seq[ZipInfo], at: String, maxItems: Int): Seq[String] = {
     val sorted = zips.sortBy(_.zipName)
     val chunkNames: Seq[String] =
       if (sorted.size <= maxItems) Seq.empty
@@ -553,134 +613,11 @@ object ZipPublisher {
         FsWrite.atomic(f, new Path(gDir, n), resourceDumpXml(gUrl, chunk, at))
         n
       }.toSeq
-    // drop chunks beyond this write's count (shrink/regroup leftovers)
-    if (f.exists(gDir))
-      f.listStatus(gDir).map(_.getPath.getName)
-        .filter(n => n.startsWith("resource-dump-") && n.endsWith(".xml"))
-        .filterNot(chunkNames.contains)
-        .foreach(n => f.delete(new Path(gDir, n), false))
     val top =
       if (chunkNames.isEmpty) resourceDumpXml(gUrl, sorted, at)
       else resourceDumpIndexXml(gUrl, chunkNames, at)
     FsWrite.atomic(f, new Path(gDir, "resource-dump.xml"), top)
-  }
-
-  /** Read a graph's published zip rows back, transparently following the
-    * sitemapindex layering ([[writeDump]]'s inverse). */
-  private def readDump(f: FileSystem, gDir: Path, g: String): Seq[ZipInfo] = {
-    val dumpPath = new Path(gDir, "resource-dump.xml")
-    if (!f.exists(dumpPath)) return Seq.empty
-    val top = readFile(f, dumpPath)
-    if (!top.contains("<sitemapindex")) parseDumpZips(top, g)
-    else {
-      // lenient chunk resolution: any <loc> inside a <sitemap> element,
-      // tolerating attributes/whitespace/newlines — a byte-exact regex
-      // silently returned ZERO entries for any formatting variation, which
-      // downstream is indistinguishable from an empty dump and would
-      // orphan-relist every published zip. Zero entries from a document
-      // that declares itself a sitemapindex is therefore a loud failure.
-      // ...but scoped to ONE <sitemap> element at a time: split on the
-      // close tag, then take the first <loc> within each element. A
-      // cross-element (?s) .*? would pair a loc-less <sitemap> with the
-      // NEXT element's <loc>, silently skipping an entry.
-      val locRx = """(?s)<sitemap\b[^>]*>.*?<loc\b[^>]*>\s*([^<]+?)\s*</loc>""".r
-      val names = top.split("</sitemap>").toSeq
-        .flatMap(el => locRx.findFirstMatchIn(el).map(_.group(1).split('/').last))
-      if (names.isEmpty)
-        // our own writer only emits a sitemapindex when it has chunk names
-        // (writeDump), so zero entries = corrupt metadata, not a legal
-        // empty dump — fail loudly rather than orphan-relist every zip
-        sys.error(s"sitemapindex at $dumpPath yielded no <sitemap><loc> chunk entries; " +
-          "refusing to treat a non-empty index as an empty dump")
-      names.flatMap { n =>
-        val p = new Path(gDir, n)
-        if (f.exists(p)) parseDumpZips(readFile(f, p), g) else Seq.empty
-      }
-    }
-  }
-
-  /** Delete every superseded on-disk `part_end_` zip (anything that is not
-    * the graph's CURRENT end part) and repair dump xmls whose end entries
-    * disagree with disk. Runs over every graph dir each publish: past
-    * crashes between a state append and the metadata tail can strand stale
-    * end zips for graphs the current run does not otherwise touch. */
-  private def sweepStaleEnds(f: FileSystem, sinkDir: String, publishUrl: String,
-                             summaries: Seq[ZipInfo], at: String,
-                             maxItems: Int, threads: Int = 8): Unit = {
-    val sinkPath = new Path(sinkDir)
-    if (!f.exists(sinkPath)) return
-    val touched = summaries.map(_.graph_b64).toSet
-    forEachParallel(f.listStatus(sinkPath).filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .toSeq, threads) { gDir =>
-        val g = gDir.getName
-        val names = f.listStatus(gDir).map(_.getPath.getName)
-        // temps a crashed run left (this run renamed all of its own above)
-        names.filter(_.contains(".tmpzip")).foreach(n => f.delete(new Path(gDir, n), false))
-        val ends = names
-          .filter(n => n.startsWith("part_end_") && n.endsWith(".zip"))
-          .map(_.stripSuffix(".zip")).toSeq
-        // current end: what this run just published for a touched graph
-        // (possibly none — the old end got absorbed into complete zips);
-        // the max index for an untouched graph
-        val current: Option[String] =
-          if (touched.contains(g))
-            summaries.collectFirst { case z if z.graph_b64 == g && !z.complete => z.zipName }
-          else if (ends.nonEmpty)
-            Some(ends.maxBy(_.stripPrefix("part_end_").toInt))
-          else None
-        ends.filterNot(current.contains).foreach { n =>
-          Seq(s"$n.zip", s"$n.xml", s"manifest_$n.xml")
-            .foreach(s => f.delete(new Path(gDir, s), false))
-        }
-        // dump repair only off the touched path (touched graphs' xml was
-        // just rewritten consistently above)
-        if (!touched.contains(g)) {
-          val listed = readDump(f, gDir, g)
-          if (listed.nonEmpty) {
-            val endListed = listed.filterNot(_.complete).map(_.zipName).toSet
-            if (endListed != current.toSet) {
-              val defs = listed.filter(_.complete)
-              val cur = current.toSeq
-                .map(n => recoverZipInfo(f, gDir, g, n, complete = false))
-              writeDump(f, gDir, s"$publishUrl$g/", defs ++ cur, at, maxItems)
-            }
-          }
-        }
-      }
-  }
-
-  /** Re-derive a committed-but-unlisted zip's metadata row from the zip
-    * file itself (length/lastmod from the file status, md5 by streaming,
-    * member manifest from the embedded manifest.xml — regenerating the
-    * sidecar if the dying run never wrote it). */
-  private def recoverZipInfo(f: FileSystem, gDir: Path, g: String, name: String,
-                             complete: Boolean = true): ZipInfo = {
-    val zipPath = new Path(gDir, s"$name.zip")
-    val st = f.getFileStatus(zipPath)
-    val md5hex = ManifestBuilder.md5Hex(f, zipPath)
-    val lastmod = ManifestBuilder.IsoUtc
-      .format(java.time.Instant.ofEpochMilli(st.getModificationTime))
-    // regenerate the manifest sidecar from the zip's embedded copy if missing
-    val sidecar = new Path(gDir, s"manifest_$name.xml")
-    var nResources = 0L
-    val zin = new java.util.zip.ZipInputStream(f.open(zipPath))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (e.getName == "manifest.xml") {
-          val content = new String(
-            org.apache.commons.io.IOUtils.toByteArray(zin), StandardCharsets.UTF_8)
-          nResources = "<url>".r.findAllMatchIn(content).size.toLong
-          if (!f.exists(sidecar)) FsWrite.atomic(f, sidecar, content)
-          // an end part also carries the member-list sidecar (write_list)
-          val listSidecar = new Path(gDir, s"$name.xml")
-          if (!complete && !f.exists(listSidecar)) FsWrite.atomic(f, listSidecar, content)
-        }
-        e = zin.getNextEntry
-      }
-    } finally zin.close()
-    ZipInfo(g, name, complete, nResources, st.getLen, md5hex, lastmod)
+    "resource-dump.xml" +: chunkNames
   }
 
   /** Failed-run cleanup: delete every zip (and sidecars, and any orphaned
@@ -700,48 +637,4 @@ object ZipPublisher {
       } catch { case _: Exception => }
     }
   }
-
-  /** What one graph dir of the sink already holds: its highest def and end
-    * zip indices (-1 when none) and, when an end zip exists, the current end
-    * part's members as "basename|md5" identity pairs parsed from its
-    * member-list sidecar's rs:md hash attributes — J3 compares resource AND
-    * checksum, zipsynchronizer.py:149-156 (empty when the sidecar is
-    * missing, so the end part is rebuilt). */
-  private final case class SinkGraph(maxDef: Int, maxEnd: Int, endMembers: Option[Set[String]])
-
-  /** One listing pass over the sink's graph dirs; graphs with no zip are
-    * absent. */
-  private def scanSink(f: FileSystem, sinkDir: String): Map[String, SinkGraph] = {
-    val memberRx =
-      """<url><loc>([^<]+)</loc><lastmod>[^<]*</lastmod><rs:md hash="md5:([0-9a-f]+)"""".r
-    f.listStatus(new Path(sinkDir)).filter(_.isDirectory).flatMap { d =>
-      val names = f.listStatus(d.getPath).map(_.getPath.getName)
-      def maxIndex(prefix: String): Int = names
-        .filter(n => n.startsWith(prefix) && n.endsWith(".zip"))
-        .map(_.stripPrefix(prefix).stripSuffix(".zip").toInt)
-        .maxOption.getOrElse(-1)
-      val (maxDef, maxEnd) = (maxIndex("part_def_"), maxIndex("part_end_"))
-      if (maxDef < 0 && maxEnd < 0) None
-      else {
-        val listName = f"part_end_$maxEnd%05d.xml"
-        val endMembers =
-          if (maxEnd < 0) None
-          else if (!names.contains(listName)) Some(Set.empty[String])
-          else Some(memberRx.findAllMatchIn(readFile(f, new Path(d.getPath, listName)))
-            .map(m => m.group(1) + "|" + m.group(2)).toSet)
-        Some(d.getPath.getName -> SinkGraph(maxDef, maxEnd, endMembers))
-      }
-    }.toMap
-  }
-
-  /** Minimal parse of our own resource-dump.xml back into ZipInfo rows. */
-  private def parseDumpZips(xml: String, g: String): Seq[ZipInfo] = {
-    val url = ("""<url><loc>[^<]*/([^/<]+)\.zip</loc><lastmod>([^<]*)</lastmod>""" +
-      """<rs:md hash="md5:([0-9a-f]+)" length="(\d+)" type="application/zip"/>""").r
-    url.findAllMatchIn(xml).map { m =>
-      ZipInfo(g, m.group(1), m.group(1).startsWith("part_def_"),
-        0L, m.group(4).toLong, m.group(3), m.group(2))
-    }.toSeq
-  }
-
 }

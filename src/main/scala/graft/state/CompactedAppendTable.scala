@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    `gen_<k>` — the next compaction overwrites it;
   *  - after the flip, before the old-generation delete: stale `gen_<j>`
   *    dirs — swept on every subsequent compaction (delete all != current);
-  *  - pointer lost mid-replace (the delete-then-rename window, or manual
-  *    damage): readers resolve to the NEWEST generation dir carrying
+  *  - pointer lost (the delete-then-rename window of a non-`file:`
+  *    replace, see [[graft.FsWrite.replace]], or manual damage): readers resolve to the NEWEST generation dir carrying
   *    Spark's `_SUCCESS` commit marker — never a swept gen_0 — so the
   *    table stays visible. A fully-written-but-unflipped `gen_<k+1>`
   *    resolving this way is equivalent content (the compaction is a

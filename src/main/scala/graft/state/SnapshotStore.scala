@@ -311,24 +311,13 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   // --- commits -------------------------------------------------------------
 
-  /** Full (bootstrap) commit: writes every bucket. `df` must already carry
-    * an int `bucket` column. `deferSidecar = true` skips the term-bloom
-    * sidecar build (one extra column-pruned read of the written data) —
-    * the caller overlaps it with other work via [[buildSidecarForLatest]];
-    * an absent sidecar is always the safe conservative fallback
-    * (candidateBuckets includes the whole dir), so a crash in the window
-    * costs pruning, never correctness. */
-  def commitFull(df: DataFrame, id: Long, deferSidecar: Boolean = false,
-                 assumePartitioned: Boolean = false): Unit = {
-    stageFull(df, id, deferSidecar, assumePartitioned)
-    finalizeCommit(id)
-  }
-
-  /** Stage a full snapshot: data + manifest land on disk but `_latest` is
-    * NOT flipped — readers still see the previous snapshot. A coordinator
-    * that writes several stores atomically stages each, writes its own
-    * commit marker, then [[finalizeCommit]]s all of them; a crash in
-    * between is repaired by replaying the finalize (metadata-only).
+  /** Full (bootstrap) commit: writes every bucket, then flips `_latest`.
+    * `df` must already carry an int `bucket` column. `deferSidecar = true`
+    * skips the term-bloom sidecar build (one extra column-pruned read of
+    * the written data) — the caller overlaps it with other work via
+    * [[buildSidecarForLatest]]; an absent sidecar is always the safe
+    * conservative fallback (candidateBuckets includes the whole dir), so a
+    * crash in the window costs pruning, never correctness.
     *
     * `assumePartitioned = true` skips the bucket exchange: the caller
     * asserts `df` is ALREADY partitioned such that each physical partition
@@ -338,14 +327,17 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * way; skipping the exchange just avoids re-shuffling a store-sized
     * stream that is already where it needs to be (guide §2.4: two
     * operations keyed the same way share one exchange). */
-  def stageFull(df: DataFrame, id: Long, deferSidecar: Boolean = false,
-                assumePartitioned: Boolean = false): Unit = withLease {
-    val dataDir = new Path(root, f"snap_$id%014d").toString
-    val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
-    timed(s"$timingName.full.write")(writeData(placed, dataDir))
-    if (!deferSidecar) timed(s"$timingName.full.sidecar")(writeTermSidecar(dataDir, dataDir))
-    val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
-    FsWrite.atomic(fs, manifestPath(id), manifestText(base, Seq.empty))
+  def commitFull(df: DataFrame, id: Long, deferSidecar: Boolean = false,
+                 assumePartitioned: Boolean = false): Unit = {
+    withLease {
+      val dataDir = new Path(root, f"snap_$id%014d").toString
+      val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
+      timed(s"$timingName.full.write")(writeData(placed, dataDir))
+      if (!deferSidecar) timed(s"$timingName.full.sidecar")(writeTermSidecar(dataDir, dataDir))
+      val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
+      FsWrite.atomic(fs, manifestPath(id), manifestText(base, Seq.empty))
+    }
+    finalizeCommit(id)
   }
 
   /** Build the term-bloom sidecars for the LATEST snapshot's base dirs —
@@ -366,19 +358,15 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * additions' keys (see class doc). When the chain would exceed
     * `maxDeltas` the fold runs — bucket-local, see [[foldChain]].
     *
-    * `tombstonesDistinct = true` asserts the caller's tombstone set is
-    * already distinct per (deleteKeys, bucket) — an aggregation output or
-    * an explicit union-distinct — and skips the defensive dedup exchange
-    * here (measured as a third of the facts merge wall at bench shape:
-    * the distinct re-shuffled a set the caller had just aggregated).
-    * Duplicate tombstone keys with the flag wrongly set would only fold
-    * redundantly (the anti-join drops a row once however many tombstones
-    * match it), never corrupt, but the default stays defensive.
+    * `tombstones` must be distinct per (deleteKeys, bucket): every caller
+    * passes an aggregation output or an explicit distinct, so no dedup
+    * exchange runs here. A duplicate would only be written twice — the
+    * fold's anti-join drops a row once however many tombstones match it.
     *
     * `tombstoneRows` is the row count of `tombstones`, which every caller
     * already holds, so the empty-delta test below runs no Spark job. */
-  def stageDelta(additions: DataFrame, tombstones: DataFrame, tombstoneRows: Long, id: Long,
-                 tombstonesDistinct: Boolean = false): Unit = withLease {
+  def stageDelta(additions: DataFrame, tombstones: DataFrame, tombstoneRows: Long,
+                 id: Long): Unit = withLease {
     val prevId = latest.getOrElse(sys.error("stageDelta on empty store"))
     val (base, deltas) = readManifest(prevId)
     // A no-op batch must not grow the chain: maxDeltas empty deltas would
@@ -404,9 +392,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     // through one task.
     val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
     timed(s"$timingName.delta.add")(writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add"))
-    val tombRows = tombstones.select((deleteKeys :+ "bucket").map(col): _*)
     timed(s"$timingName.delta.tomb")(writeData(
-      (if (tombstonesDistinct) tombRows else tombRows.distinct())
+      tombstones.select((deleteKeys :+ "bucket").map(col): _*)
         .repartition(parts, col("bucket")), s"$snapDir/tomb"))
     timed(s"$timingName.delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)

@@ -493,8 +493,7 @@ final class QuadLogPipeline(
             tombstones = canonChanged.select(col("id"))
               .withColumn("bucket", canon.bucketCol(col("id"))),
             tombstoneRows = canonChangedRows,
-            id = batchId,
-            tombstonesDistinct = true)) // one map row per id by construction
+            id = batchId)) // one map row per id by construction
         (rewriteIfNonTrivial(rawNew, view, viewRows), remapped)
       }
     // Cluster merges are rare so the pair set is usually tiny, but it stays
@@ -731,14 +730,12 @@ final class QuadLogPipeline(
         additions = newFactRows.withColumn("bucket", facts.bucketCol(quadKey: _*)),
         tombstones = delta.dC.select((quadKey :+ col("bucket")): _*),
         tombstoneRows = delta.bucketCounts.map(_._2).sum,
-        id = batchId,
-        tombstonesDistinct = true)), // dC is a per-quad aggregation output
+        id = batchId)), // dC is a per-quad aggregation output
       () => timed("incr.mergeContrib")(contrib.stageDelta(
         additions = delta.newSide.join(deletedUrls.toDF("url"), Seq("url"), "left_anti"),
         tombstones = touchedUrls,
         tombstoneRows = nTouched,
-        id = batchId,
-        tombstonesDistinct = true))) // touchedUrls is a union-distinct
+        id = batchId))) // touchedUrls is a union-distinct
     files
   }
 

@@ -13,7 +13,7 @@ import java.util.concurrent.atomic.AtomicLong
   * creates, renames and deletes. The test session registers it as
   * `fs.countfs.impl`; a spec roots its data at `countfs://` + a local path
   * and compares [[CountingFileSystem.counts]] before and after the code it
-  * pins. Counts are JVM-wide, and specs run one at a time. */
+  * pins, or asks which dirs it listed. Counts are JVM-wide, and specs run one at a time. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -21,7 +21,10 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = Uri.getScheme
 
   override def listStatus(f: Path): Array[FileStatus] = {
-    if (pathToFile(f).isDirectory) bump(DirListing)
+    if (pathToFile(f).isDirectory) {
+      bump(DirListing)
+      listed.add(makeQualified(f).toUri.getPath.stripSuffix("/"))
+    }
     super.listStatus(f)
   }
   override def getContentSummary(f: Path): ContentSummary = {
@@ -56,6 +59,7 @@ object CountingFileSystem {
   val Deletes = "delete"
 
   private val counters = new ConcurrentHashMap[String, AtomicLong]()
+  private val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private def bump(k: String): Unit =
     counters.computeIfAbsent(k, _ => new AtomicLong()).incrementAndGet()
 
@@ -63,6 +67,13 @@ object CountingFileSystem {
   def counts: Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     counters.asScala.map { case (k, v) => k -> v.get }.toMap.withDefaultValue(0L)
+  }
+
+  /** The local paths of the dirs `body` listed, in listing order. */
+  def dirsListedDuring(body: => Unit): Seq[String] = {
+    listed.clear()
+    body
+    scala.jdk.CollectionConverters.CollectionHasAsScala(listed).asScala.toSeq
   }
 
   /** Counter deltas over `body`. */

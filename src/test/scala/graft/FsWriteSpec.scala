@@ -49,6 +49,25 @@ class FsWriteSpec extends AnyFunSuite {
     assert(read(fs, p) == "gen_2")
   }
 
+  test("atomic over an existing file on file: replaces it without deleting it first") {
+    // a delete-then-rename leaves no file between its two steps, so a crash
+    // there loses a pointer the store cannot rebuild; one rename(2) cannot
+    val deletes = new java.util.concurrent.atomic.AtomicInteger()
+    val fs = new org.apache.hadoop.fs.LocalFileSystem {
+      override def delete(f: Path, recursive: Boolean): Boolean = {
+        deletes.incrementAndGet(); super.delete(f, recursive)
+      }
+    }
+    fs.initialize(new java.net.URI("file:///"), new Configuration())
+    val p = new Path(tmp(), "_latest")
+    write(fs.create(p, true), "1") // a Hadoop-written file, with its .crc
+    FsWrite.atomic(fs, p, "2")
+    assert(deletes.get == 0)
+    assert(read(fs, p) == "2")
+    assert(!new java.io.File(fs.getChecksumFile(p).toUri.getPath).exists(), "stale .crc left")
+    assert(new java.io.File(p.getParent.toUri.getPath).list().toSeq == Seq("_latest"))
+  }
+
   test("bytes written count in the filesystem's statistics") {
     val fs = localFs()
     val stats = FileSystem.getStatistics("file", fs.getClass)

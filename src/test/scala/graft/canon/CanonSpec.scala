@@ -94,8 +94,8 @@ class CanonicalizerSpec extends GraftSpec {
 
   test("default canonRows (unknown size) NEVER plans a broadcast join") {
     // the map's true size is unknown at the default call sites — guessing a
-    // broadcast is the canonical 100 TB driver-OOM; both public rewrite
-    // entry points must fall back to shuffle joins by default
+    // broadcast is the canonical 100 TB driver-OOM; the rewrite must fall
+    // back to shuffle joins by default
     val cmap = Seq(("http://kg.example.org/alt/X", "http://kg.example.org/entity/X"))
       .toDF("id", "canonical")
     val quads = Seq(
@@ -106,10 +106,7 @@ class CanonicalizerSpec extends GraftSpec {
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val attributed = IriCanonicalizer.canonicalizeAttributed(quads, cmap)
         .queryExecution.executedPlan.toString
-      val plain = IriCanonicalizer.canonicalize(quads.drop("url"), cmap)
-        .queryExecution.executedPlan.toString
       assert(!attributed.contains("BroadcastHashJoin"), attributed)
-      assert(!plain.contains("BroadcastHashJoin"), plain)
       // and a real count DOES broadcast (the fast path still exists)
       val sized = IriCanonicalizer.canonicalizeAttributed(quads, cmap, canonRows = 1L)
         .queryExecution.executedPlan.toString
@@ -275,10 +272,10 @@ class CanonicalizerSpec extends GraftSpec {
     val cmap = Seq(("http://kg.example.org/alt/X", "http://kg.example.org/entity/X"))
       .toDF("id", "canonical")
     val quads = Seq(
-      ("http://kg.example.org/alt/X", "http://p", "http://kg.example.org/alt/X", 0, "", "", "http://g"),
-      ("http://s", "http://p", "http://kg.example.org/alt/X", 2, "", "", "http://g")) // literal!
-      .toDF("s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
-    val out = IriCanonicalizer.canonicalize(quads, cmap)
+      ("u1", "http://kg.example.org/alt/X", "http://p", "http://kg.example.org/alt/X", 0, "", "", "http://g"),
+      ("u1", "http://s", "http://p", "http://kg.example.org/alt/X", 2, "", "", "http://g")) // literal!
+      .toDF("url", "s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
+    val out = IriCanonicalizer.canonicalizeAttributed(quads, cmap)
       .select("s", "oLex", "oKind").as[(String, String, Int)].collect().toSet
     assert(out == Set(
       ("http://kg.example.org/entity/X", "http://kg.example.org/entity/X", 0),

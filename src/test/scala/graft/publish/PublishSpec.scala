@@ -275,14 +275,13 @@ class PublishSpec extends GraftSpec {
     assert(r.map(_.zipName).sorted == Seq("part_def_00000", "part_end_00000"))
     assert(exists(s"$sink/$g64/part_def_00000.zip"))
     assert(exists(s"$sink/$g64/part_end_00000.zip"))
-    // and is idempotent afterwards
-    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
+    assertSettled(src, sink, filesPerZip = 3)
   }
 
   test("crash after state, before metadata: next run reconciles orphaned def zips") {
     val src = tmpDir("pubo_src"); val sink = tmpDir("pubo_sink")
     (0 until 5).foreach(writePatch(src, _))
-    // crash AFTER zips + _published state committed, BEFORE sidecars/XMLs
+    // crash AFTER zips + the record committed, BEFORE sidecars/XMLs
     intercept[RuntimeException] {
       ZipPublisher.publish(spark, src, sink, filesPerZip = 3,
         onPublishedForTests = () => throw new RuntimeException("post-state crash"))
@@ -291,20 +290,33 @@ class PublishSpec extends GraftSpec {
     assert(exists(s"$sink/_published"))
     assert(!exists(s"$sink/$g64/resource-dump.xml"), "metadata writes never ran")
     assert(!exists(s"$sink/$g64/manifest_part_def_00000.xml"), "sidecars stay staged")
-    // the retry republishes the (sidecar-less) end part and must reconcile
-    // the committed-but-unlisted def zip into the dump xml + regenerate its
-    // manifest sidecar from the zip's embedded copy
-    val r = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
-    assert(r.map(_.zipName) == Seq("part_end_00001"), s"got ${r.map(_.zipName)}")
-    val dump = Files.readString(Paths.get(s"$sink/$g64/resource-dump.xml"))
-    assert(dump.contains("part_def_00000.zip"), "orphaned def zip must be listed")
-    assert(dump.contains("part_end_00001.zip"))
-    assert(exists(s"$sink/$g64/manifest_part_def_00000.xml"), "sidecar regenerated")
-    assert(!exists(s"$sink/$g64/part_end_00000.zip"), "superseded end removed")
-    val temps = new java.io.File(s"$sink/$g64").list().filter(_.contains(".tmpzip"))
-    assert(temps.isEmpty, s"the crashed run's staged temps were not swept: ${temps.toSeq}")
-    // steady state afterwards
+    // the retry builds nothing: the record already holds both zips, and the
+    // end's recorded members match the window (J3); it writes the crashed
+    // run's metadata, sidecars rewritten from the recorded members
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
+    assertSettled(src, sink, filesPerZip = 3)
+    assert(liveZips(sink, g64) == Set("part_def_00000", "part_end_00000"))
+    val (zip, sidecar) = (new java.util.zip.ZipFile(s"$sink/$g64/part_def_00000.zip"),
+      Files.readString(Paths.get(s"$sink/$g64/manifest_part_def_00000.xml")))
+    try assert(new String(zip.getInputStream(zip.getEntry("manifest.xml")).readAllBytes(),
+      "UTF-8") == sidecar, "rewritten sidecar == the zip's own manifest")
+    finally zip.close()
+  }
+
+  test("crash inside the metadata tail: the run past `_done` is finished by the next publish") {
+    val src = tmpDir("pubt_src"); val sink = tmpDir("pubt_sink")
+    (0 until 5).foreach(writePatch(src, _))
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).size == 2)
+    // the state a tail that died half way leaves: `_done` not yet written,
+    // one sidecar still staged, the dump document not yet replaced
+    val gDir = Paths.get(s"$sink/$g64")
+    Files.delete(Paths.get(s"$sink/_published/_done"))
+    Files.move(gDir.resolve("manifest_part_end_00000.xml"),
+      gDir.resolve("manifest_part_end_00000.xml.tmpzip1234abcd"))
+    Files.delete(gDir.resolve("resource-dump.xml"))
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
+    assertSettled(src, sink, filesPerZip = 3)
+    assert(liveZips(sink, g64) == Set("part_def_00000", "part_end_00000"))
   }
 
   test("sitemap-index layering: >max_items_in_list zips split into resourcedump-index + chunks") {
@@ -397,57 +409,6 @@ class PublishSpec extends GraftSpec {
       f"parallel metadata tail ${parTail}%.2fs not clearly under serial ${serialTail}%.2fs")
   }
 
-  test("sitemapindex read tolerates attribute/whitespace variation; empty index fails loudly") {
-    val src = tmpDir("publ_src"); val sink = tmpDir("publ_sink")
-    (0 until 7).foreach(writePatch(src, _))
-    ZipPublisher.publish(spark, src, sink, filesPerZip = 1, maxItemsInList = 3)
-    val dumpPath = Paths.get(s"$sink/$g64/resource-dump.xml")
-    val top = Files.readString(dumpPath)
-    assert(top.contains("<sitemapindex"))
-    // reformat the index the way another ResourceSync producer might:
-    // attributes on <sitemap>, <loc> split across lines with padding. The
-    // old byte-exact regex parsed this as ZERO chunks == an empty dump ->
-    // every published zip re-listed as an orphan.
-    val varied = top
-      .replace("<sitemap><loc>", "<sitemap lastmod=\"2024-01-01\">\n    <loc >\n      ")
-      .replace("</loc></sitemap>", "\n    </loc>\n  </sitemap>")
-    // (writes below bypass hadoop's LocalFileSystem, so drop its .crc
-    // sidecar or readback trips ChecksumException instead of parsing)
-    def rawWrite(content: String): Unit = {
-      Files.writeString(dumpPath, content)
-      Files.deleteIfExists(Paths.get(s"$sink/$g64/.resource-dump.xml.crc"))
-    }
-    rawWrite(varied)
-    // touch the graph with one new patch: the metadata rewrite reads the
-    // reformatted index back (readDump) and must still see all 7 prior
-    // defs — a misparse-as-empty would re-list them as orphans/dupes
-    writePatch(src, 7)
-    val r = ZipPublisher.publish(spark, src, sink, filesPerZip = 1,
-      maxItemsInList = 3)
-    assert(r.size == 1, s"expected exactly the one new zip, got $r")
-    val members = {
-      val t = Files.readString(dumpPath)
-      val locRx = """(?s)<loc\b[^>]*>\s*([^<]+?)\s*</loc>""".r
-      locRx.findAllMatchIn(t).map(_.group(1).split('/').last).toSeq.flatMap { n =>
-        val zipRx = """<loc>[^<]*/([^/<]+\.zip)</loc>""".r
-        zipRx.findAllMatchIn(Files.readString(Paths.get(s"$sink/$g64/$n"))).map(_.group(1))
-      }
-    }
-    assert(members.sorted == (0 until 8).map(i => f"part_def_$i%05d.zip").sorted)
-    assert(members.distinct.size == members.size, "duplicates after lenient re-read")
-
-    // a self-declared sitemapindex with no resolvable entries is a loud
-    // failure, never silently an empty dump
-    rawWrite(
-      "<?xml version=\"1.0\"?><sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\"></sitemapindex>")
-    writePatch(src, 8)
-    val e = intercept[Exception] {
-      ZipPublisher.publish(spark, src, sink, filesPerZip = 1, maxItemsInList = 3)
-    }
-    assert(e.getMessage != null && e.getMessage.contains("sitemapindex"),
-      s"wrong failure: $e")
-  }
-
   test("crash after state with a PRIOR end part: the older superseded end is purged too") {
     val src = tmpDir("pubp_src"); val sink = tmpDir("pubp_sink")
     // run 1 (clean): 2 files -> part_end_00000 with full metadata
@@ -455,9 +416,7 @@ class PublishSpec extends GraftSpec {
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
       .map(_.zipName) == Seq("part_end_00000"))
     // run 2: 2 more files (4 total -> def_00000 + end_00001) crashes AFTER
-    // the state append, BEFORE the metadata tail — the window the r3 advice
-    // flagged: prevEnd on retry only sees the max end index (00001), so
-    // part_end_00000 used to leak forever
+    // the record append, BEFORE the metadata tail
     (2 until 4).foreach(writePatch(src, _))
     intercept[RuntimeException] {
       ZipPublisher.publish(spark, src, sink, filesPerZip = 3,
@@ -465,48 +424,125 @@ class PublishSpec extends GraftSpec {
     }
     assert(exists(s"$sink/$g64/part_end_00000.zip"), "old end still present pre-retry")
     assert(exists(s"$sink/$g64/part_end_00001.zip"), "crashed run's end committed")
-    // retry: rebuilds the end (sidecar-less 00001 fails J3) as 00002 and
-    // must purge BOTH superseded ends, on disk and in the dump xml
-    val r = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
-    assert(r.exists(z => !z.complete && z.zipName == "part_end_00002"), s"got $r")
-    assert(!exists(s"$sink/$g64/part_end_00000.zip"), "PRIOR superseded end purged")
-    assert(!exists(s"$sink/$g64/part_end_00001.zip"), "crashed run's end purged")
-    assert(!exists(s"$sink/$g64/manifest_part_end_00000.xml"))
-    val dump = Files.readString(Paths.get(s"$sink/$g64/resource-dump.xml"))
-    assert(dump.contains("part_def_00000.zip") && dump.contains("part_end_00002.zip"))
-    assert(!dump.contains("part_end_00000.zip") && !dump.contains("part_end_00001.zip"))
-    // steady state afterwards
+    // retry: the recorded end_00001 still matches its window, so nothing is
+    // rebuilt; the superseded end_00000 goes, on disk and in the dump xml
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
+    assertSettled(src, sink, filesPerZip = 3)
+    assert(liveZips(sink, g64) == Set("part_def_00000", "part_end_00001"))
+    Seq("part_end_00000.zip", "part_end_00000.xml", "manifest_part_end_00000.xml")
+      .foreach(n => assert(!exists(s"$sink/$g64/$n"), s"$n not purged"))
   }
 
-  test("sweep repairs a graph the current run does not touch") {
+  test("a zip no commit recorded is never listed, and goes when its graph is rewritten") {
     val gB = java.util.Base64.getEncoder
       .encodeToString("http://graph.example.org/g2".getBytes("UTF-8"))
-    val srcA = tmpDir("pubs_srcA"); val srcB = tmpDir("pubs_srcB")
-    val sink = tmpDir("pubs_sink")
-    // graph A: consistent publish of part_end_00000
+    val srcA = tmpDir("pubh_srcA"); val srcB = tmpDir("pubh_srcB")
+    val sink = tmpDir("pubh_sink")
     (0 until 2).foreach(writePatch(srcA, _))
     assert(ZipPublisher.publish(spark, srcA, sink, filesPerZip = 3)
       .map(_.zipName) == Seq("part_end_00000"))
-    // simulate a past crashed run's leftover: a newer end zip on disk with
-    // no sidecars and a dump xml still pointing at the old end
-    Files.copy(Paths.get(s"$sink/$g64/part_end_00000.zip"),
-      Paths.get(s"$sink/$g64/part_end_00001.zip"))
-    // publish graph B only — graph A is untouched by this run
+    // zips copied in by hand under names no run recorded
+    val gDir = Paths.get(s"$sink/$g64")
+    Seq("part_end_00009.zip", "part_def_00004.zip")
+      .foreach(n => Files.copy(gDir.resolve("part_end_00000.zip"), gDir.resolve(n)))
+    val dumpBefore = Files.readString(gDir.resolve("resource-dump.xml"))
+    // a publish into graph B leaves graph A alone
     val dirB = Paths.get(srcB, s"g_b64=$gB")
     Files.createDirectories(dirB)
     Files.writeString(dirB.resolve(f"rdf_out_00000000000000-${0}%014d"),
       "# at checkpoint  00000000000000\n+ <http://s> <http://p> <http://o> <http://graph.example.org/g2> .\n")
-    val r = ZipPublisher.publish(spark, srcB, sink, filesPerZip = 3)
-    assert(r.nonEmpty && r.forall(_.graph_b64 == gB))
-    // the sweep must have reconciled graph A: old end deleted, dump xml
-    // repaired to list the surviving (max-index) end part
-    assert(!exists(s"$sink/$g64/part_end_00000.zip"), "stale end purged on untouched graph")
-    assert(exists(s"$sink/$g64/part_end_00001.zip"))
-    val dumpA = Files.readString(Paths.get(s"$sink/$g64/resource-dump.xml"))
-    assert(dumpA.contains("part_end_00001.zip") && !dumpA.contains("part_end_00000.zip"))
-    assert(exists(s"$sink/$g64/manifest_part_end_00001.xml"), "sidecar regenerated")
-    assert(exists(s"$sink/$g64/part_end_00001.xml"), "member-list sidecar regenerated")
+    assert(ZipPublisher.publish(spark, srcB, sink, filesPerZip = 3).forall(_.graph_b64 == gB))
+    assert(Files.readString(gDir.resolve("resource-dump.xml")) == dumpBefore)
+    // a publish into graph A rewrites it: listed are the recorded zips only,
+    // and the copies are gone
+    writePatch(srcA, 2)
+    assert(ZipPublisher.publish(spark, srcA, sink, filesPerZip = 3)
+      .map(_.zipName) == Seq("part_def_00000"))
+    assertSettled(srcA, sink, filesPerZip = 3)
+    assert(liveZips(sink, g64) == Set("part_def_00000"))
+    assert(!exists(s"$sink/$g64/part_end_00009.zip") && !exists(s"$sink/$g64/part_def_00004.zip"))
+    assert(Files.readString(Paths.get(s"$sink/.well-known/resourcesync"))
+      .contains(s"$gB/capability-list.xml"))
+  }
+
+  test("a publish that builds into 4 of 40 graphs lists no graph dir it does not rewrite") {
+    def gOf(i: Int) = java.util.Base64.getEncoder
+      .encodeToString(s"http://graph.example.org/c$i".getBytes("UTF-8"))
+    val src = tmpDir("pubc40_src"); val local = tmpDir("pubc40_sink")
+    def patch(i: Int, serial: Int): Unit = {
+      val dir = Paths.get(src, s"g_b64=${gOf(i)}")
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve(f"rdf_out_00000000000000-$serial%014d"),
+        s"+ <http://s$serial> <http://p> <http://o> <http://graph.example.org/c$i> .\n")
+    }
+    (0 until 40).foreach(patch(_, 0))
+    val sink = s"countfs://$local"
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).size == 40)
+    val touched = Seq(3, 11, 22, 37)
+    touched.foreach(patch(_, 1))
+    var out = Seq.empty[ZipPublisher.ZipInfo]
+    val listed = graft.CountingFileSystem.dirsListedDuring {
+      out = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
+    }
+    assert(out.map(_.graph_b64).toSet == touched.map(gOf).toSet)
+    val graphDirs = listed.filter(_.startsWith(local)).map(_.stripPrefix(local))
+      .filterNot(_.startsWith("/_published"))
+    assert(graphDirs.sorted == touched.map(i => s"/${gOf(i)}").sorted,
+      s"listed outside the rewritten graphs: $graphDirs")
+  }
+
+  test("under adaptive execution the zip build of 8 zips runs in more than one task") {
+    val src = tmpDir("pubq_src"); val sink = tmpDir("pubq_sink")
+    (0 until 8).foreach(writePatch(src, _))
+    // (scopes of the stage's RDDs, tasks) per completed stage
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Int)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo.rddInfos.flatMap(_.scope.map(_.name)) -> e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try withSQLConf("spark.sql.adaptive.enabled" -> "true") {
+      // a marker job after the publish: its start is delivered after every
+      // stage event of the publish, so the listener has seen them all
+      jobsRunBy(assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 1).size == 8))
+    } finally spark.sparkContext.removeSparkListener(l)
+    // two stages of a publish run a typed mapPartitions: the window cut,
+    // then the zip build, the last one (the record append after it runs none)
+    val typed = scala.jdk.CollectionConverters.CollectionHasAsScala(stages).asScala
+      .filter(_._1.contains("MapPartitions")).toSeq
+    assert(typed.size == 2, s"stages: $stages")
+    assert(typed.last._2 > 1, s"zip build ran in ${typed.last._2} task(s)")
+  }
+
+  /** The recorded live zips of graph `g`: every def zip plus the end part
+    * of the graph's latest run. */
+  private def liveZips(sink: String, g: String): Set[String] = {
+    val rec = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
+      .filter(col("graph_b64") === g)
+      .select("zipName", "complete", "run").as[(String, Boolean, Long)].collect()
+    val last = rec.map(_._3).max
+    rec.collect { case (z, c, r) if c || r == last => z }.toSet
+  }
+
+  /** The state every crash window ends in, one publish later: each graph's
+    * dump lists exactly its recorded live zips, each with its sidecars; the
+    * dir holds no other zip and no temp; a further publish builds nothing. */
+  private def assertSettled(src: String, sink: String, filesPerZip: Int): Unit = {
+    val graphs = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
+      .select("graph_b64").distinct().as[String].collect()
+    graphs.foreach { g =>
+      val live = liveZips(sink, g)
+      val dump = Files.readString(Paths.get(s"$sink/$g/resource-dump.xml"))
+      assert("""<loc>[^<]*/([^/<]+)\.zip</loc>""".r.findAllMatchIn(dump).map(_.group(1)).toSet == live)
+      val files = new java.io.File(s"$sink/$g").list().toSet
+      assert(files.filter(_.endsWith(".zip")) == live.map(_ + ".zip"), s"zips on disk: $files")
+      live.foreach { z =>
+        assert(files(s"manifest_$z.xml"), s"no manifest sidecar for $z")
+        if (z.startsWith("part_end_")) assert(files(s"$z.xml"), s"no member list for $z")
+      }
+      assert(!files.exists(_.contains(".tmp")), s"temps left: $files")
+    }
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = filesPerZip).isEmpty)
   }
 
   private implicit class IterOps[T](it: java.util.Iterator[T]) {

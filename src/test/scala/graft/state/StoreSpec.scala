@@ -407,7 +407,7 @@ class SnapshotStoreSpec extends GraftSpec {
     val tombs = Seq("c").toDF("k").withColumn("bucket", st.bucketCol(col("k")))
     val e = intercept[RuntimeException] { st.stageDelta(adds, tombs, tombs.count(), 1L) }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
-    intercept[RuntimeException] { st.stageFull(base, 1L) }
+    intercept[RuntimeException] { st.commitFull(base, 1L) }
     intercept[RuntimeException] { st.vacuum() }
     // store unharmed: pointer and content unchanged
     assert(st.latest.contains(0L))
