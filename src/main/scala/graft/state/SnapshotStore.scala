@@ -38,11 +38,16 @@ import graft.Timing.timed
   *
   * Every data dir carries a record (`_record.txt` beside the parquet),
   * written once, right after its parquet: the schema it was written with
-  * and, per bucket, its part files and their byte lengths. Reads, folds,
-  * sidecar builds and size gates are planned from the record alone: Spark
-  * gets the recorded files by name, so a read lists no dir, probes no
-  * path, infers no footer schema and never reads a file the commit did
-  * not record. A data dir without a record is an error.
+  * and, per bucket, its part files and their byte lengths. The record is
+  * built from what the write's tasks return ([[BucketWrite]]: each writes
+  * its buckets' parquet under final names, with no output committer, and
+  * returns each file's bucket, name and length, plus its term bloom for a
+  * [[termExpr]] store), so a write neither walks the dir nor reads its
+  * parquet back. Reads, folds and size gates are planned from the record
+  * alone: Spark gets the recorded files by name, so a read lists no dir,
+  * probes no path, infers no footer schema and never reads a file the
+  * commit did not record — a failed or retried task's file included. A
+  * data dir without a record is an error.
   *
   * Rename is atomic on HDFS-like filesystems (and the local FS used here);
   * an object-store deployment would swap this class for a real catalog —
@@ -284,22 +289,25 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       }.groupMap(_._1)(_._2))
   }
 
-  /** Write `df` as bucket-partitioned parquet under `dir`, walk what was
-    * written once, and record it. The recorded schema is the one a reader
-    * of `dir` gets back: the data columns, then the `bucket` partition
-    * column, all nullable as file sources read them. */
-  private def writeData(df: DataFrame, dir: String): DataRecord = {
-    df.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-    val files = fs.listStatus(new Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("bucket="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix("bucket=").toInt
-        b -> fs.listStatus(d.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => s"bucket=$b/${f.getPath.getName}" -> f.getLen)
-      }.toMap
+  /** Write `df` as bucket-partitioned parquet under `dir`, replacing
+    * whatever a previous stage of the same id left there, and record the
+    * files the write tasks returned ([[BucketWrite]]: one job, no committer,
+    * no walk). The recorded schema is the one a reader of `dir` gets back:
+    * the data columns, then the `bucket` partition column, all nullable as
+    * file sources read them. With `sidecarAt` and a [[termExpr]], the
+    * tasks' term blooms land as the sidecar there. Each bucket must lie in
+    * one task: two parts of one bucket fail the write. */
+  private def writeData(df: DataFrame, dir: String, sidecarAt: Option[String] = None): DataRecord = {
+    fs.delete(new Path(dir), true)
+    val parts = BucketWrite(df, dir, sidecarAt.flatMap(_ => termExpr), termsPerRowHint)
+    parts.groupBy(_.bucket).collectFirst { case (b, ps) if ps.size > 1 =>
+      sys.error(s"bucket $b written by ${ps.size} tasks under $dir: ${ps.map(_.file).mkString(", ")}")
+    }
     val (part, data) = df.schema.fields.partition(_.name == "bucket")
-    val rec = new DataRecord(dir, StructType((data ++ part).map(_.copy(nullable = true))), files)
+    val rec = new DataRecord(dir, StructType((data ++ part).map(_.copy(nullable = true))),
+      parts.map(p => p.bucket -> Seq(p.file -> p.bytes)).toMap)
     writeRecord(rec)
+    sidecarAt.foreach(writeTermSidecar(_, parts.flatMap(p => p.bloom.map(p.bucket -> _)).toMap))
     rec
   }
 
@@ -312,12 +320,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   // --- commits -------------------------------------------------------------
 
   /** Full (bootstrap) commit: writes every bucket, then flips `_latest`.
-    * `df` must already carry an int `bucket` column. `deferSidecar = true`
-    * skips the term-bloom sidecar build (one extra column-pruned read of
-    * the written data) — the caller overlaps it with other work via
-    * [[buildSidecarForLatest]]; an absent sidecar is always the safe
-    * conservative fallback (candidateBuckets includes the whole dir), so a
-    * crash in the window costs pruning, never correctness.
+    * `df` must already carry an int `bucket` column.
     *
     * `assumePartitioned = true` skips the bucket exchange: the caller
     * asserts `df` is ALREADY partitioned such that each physical partition
@@ -327,30 +330,16 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     * way; skipping the exchange just avoids re-shuffling a store-sized
     * stream that is already where it needs to be (guide §2.4: two
     * operations keyed the same way share one exchange). */
-  def commitFull(df: DataFrame, id: Long, deferSidecar: Boolean = false,
-                 assumePartitioned: Boolean = false): Unit = {
+  def commitFull(df: DataFrame, id: Long, assumePartitioned: Boolean = false): Unit = {
     withLease {
       val dataDir = new Path(root, f"snap_$id%014d").toString
       val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
-      timed(s"$timingName.full.write")(writeData(placed, dataDir))
-      if (!deferSidecar) timed(s"$timingName.full.sidecar")(writeTermSidecar(dataDir, dataDir))
+      timed(s"$timingName.full.write")(writeData(placed, dataDir, Some(dataDir)))
       val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
       FsWrite.atomic(fs, manifestPath(id), manifestText(base, Seq.empty))
     }
     finalizeCommit(id)
   }
-
-  /** Build the term-bloom sidecars for the LATEST snapshot's base dirs —
-    * the deferred half of `commitFull(deferSidecar = true)`. Idempotent
-    * (rewrites the sidecar from the committed parquet); safe after the
-    * pointer flip because a snap dir referenced by the latest manifest is
-    * never vacuumed and readers treat a missing sidecar conservatively. */
-  def buildSidecarForLatest(): Unit = latest.foreach { id => withLease {
-    val (base, _) = readManifest(id)
-    baseByDir(base, _ => true).foreach { case (dir, _) =>
-      timed(s"$timingName.full.sidecar")(writeTermSidecar(dir, dir))
-    }
-  } }
 
   /** Stage a MERGE-ON-READ delta commit: O(batch) writes regardless of
     * store size. `additions` must carry the store schema incl. `bucket`;
@@ -391,11 +380,11 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     // exchange also keeps a 10^9-key tombstone set from funnelling
     // through one task.
     val parts = math.min(numBuckets, spark.sparkContext.defaultParallelism)
-    timed(s"$timingName.delta.add")(writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add"))
+    timed(s"$timingName.delta.add")(
+      writeData(additions.repartition(parts, col("bucket")), s"$snapDir/add", Some(snapDir)))
     timed(s"$timingName.delta.tomb")(writeData(
       tombstones.select((deleteKeys :+ "bucket").map(col): _*)
         .repartition(parts, col("bucket")), s"$snapDir/tomb"))
-    timed(s"$timingName.delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)
     if (chain.size <= maxDeltas)
       FsWrite.atomic(fs, manifestPath(id), manifestText(base, chain))
@@ -458,21 +447,24 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
         }
       val quietSorted = quiet.toSeq.sorted
       val consDir = new Path(root, f"snap_$id%014d" + "C").toString
-      // a side with no quiet rows still gets a record, with no files: every
-      // delta side a manifest names has one
-      def consolidate(side: String, rows: Option[DataFrame]): Unit = rows match {
-        case Some(df) =>
-          writeData(df.repartition(math.max(quietSorted.size, 1), col("bucket")), s"$consDir/$side")
-        case None =>
-          writeRecord(new DataRecord(s"$consDir/$side", record(s"${chain.last.dir}/$side").schema,
-            Map.empty))
-      }
-      consolidate("add", assemble(Map.empty, chain, Some(quietSorted)))
-      writeTermSidecar(s"$consDir/add", consDir)
+      // a side with no quiet rows still gets a record, with no files (and
+      // the add side an empty sidecar): every delta side a manifest names
+      // has one
+      def consolidate(side: String, rows: Option[DataFrame], sidecarAt: Option[String]): Unit =
+        rows match {
+          case Some(df) =>
+            writeData(df.repartition(math.max(quietSorted.size, 1), col("bucket")),
+              s"$consDir/$side", sidecarAt)
+          case None =>
+            writeRecord(new DataRecord(s"$consDir/$side", record(s"${chain.last.dir}/$side").schema,
+              Map.empty))
+            sidecarAt.foreach(writeTermSidecar(_, Map.empty))
+        }
+      consolidate("add", assemble(Map.empty, chain, Some(quietSorted)), Some(consDir))
       consolidate("tomb", chain
         .flatMap(d => record(s"${d.dir}/tomb").read(b => quiet(b) && d.scope.forall(_(b))))
         .map(_.select((deleteKeys :+ "bucket").map(col): _*))
-        .reduceOption(_ unionByName _).map(_.distinct()))
+        .reduceOption(_ unionByName _).map(_.distinct()), None)
       val newBase = (0 until numBuckets).map { b =>
         b -> (if (written(b)) s"$baseDir/bucket=$b"
               else if (hot.contains(b)) "" // hot bucket emptied by its tombstones
@@ -486,9 +478,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   /** Write base rows partitioned by bucket; returns the bucket ids that
     * actually materialized (a bucket emptied by tombstones writes none). */
   private def writeBase(df: DataFrame, dataDir: String, parts: Int): Set[Int] = {
-    val rec = writeData(df.repartition(math.max(parts, 1), col("bucket")), dataDir)
-    writeTermSidecar(dataDir, dataDir)
-    rec.files.keySet
+    writeData(df.repartition(math.max(parts, 1), col("bucket")), dataDir, Some(dataDir)).files.keySet
   }
 
   // --- term-membership summaries (bucket-pruned point lookups) -------------
@@ -496,67 +486,21 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   private def sidecarName = "_terms.bloom"
 
   /** Upper bound on terms a single row's [[termExpr]] array yields — sizes
-    * the per-bucket blooms from footer row counts. Oversizing is cheap
+    * the per-bucket blooms from the bucket's row count. Oversizing is cheap
     * (bits), undersizing raises FPR; 2 fits the IRI-slot arrays the
     * pipeline indexes. */
   private val termsPerRowHint = 2
 
-  /** Per-bucket row counts from the parquet FOOTERS of the recorded files
-    * — driver-side metadata reads (one open per file, no Spark job). */
-  private def footerRowCounts(rec: DataRecord): Map[Int, Long] =
-    rec.files.map { case (b, files) =>
-      b -> files.map { case (f, n) =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-            new org.apache.hadoop.fs.FileStatus(n, false, 1, 0, 0, new Path(s"${rec.dir}/$f")),
-            hconf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }
-
-  /** Build per-bucket [[TermBloom]]s from the parquet just written at
-    * `dataDir` and land them at `<sidecarAt>/_terms.bloom` (the `_` prefix
-    * keeps parquet listings blind to it). ONE column-pruned pass over the
-    * written data: filters are pre-sized from parquet footer row counts
-    * (driver-side metadata, no job), then the hash pass runs with map-side
-    * partial blooms OR-reduced per bucket — the shuffle moves
-    * numPartitions x numBuckets filters, never row data.
-    *
-    * A write with NO data (delete-only delta) still lands an EMPTY sidecar:
-    * the sidecar's presence means "authoritative for this dir" — a
-    * tombstone-only delta can never introduce a term, so an empty summary
-    * (no candidate buckets) is exact, while an absent one would force
-    * [[candidateBuckets]] to conservatively include the delta's whole
+  /** Land the per-bucket [[TermBloom]]s a write's tasks built at
+    * `<sidecarAt>/_terms.bloom` (the `_` prefix keeps parquet listings
+    * blind to it). A write with NO term (a delete-only delta) still lands
+    * an EMPTY sidecar: the sidecar's presence means "authoritative for this
+    * dir" — a tombstone-only delta can never introduce a term, so an empty
+    * summary (no candidate buckets) is exact, while an absent one would
+    * force [[candidateBuckets]] to conservatively include the delta's whole
     * scope. No-op when [[termExpr]] is unset. */
-  private def writeTermSidecar(dataDir: String, sidecarAt: String): Unit =
-    termExpr.foreach { te =>
-      val rec = record(dataDir)
-      val blooms: Map[Int, TermBloom] = rec.read(_ => true) match {
-        case None => Map.empty
-        case Some(data) =>
-          val counts = footerRowCounts(rec).view
-            .mapValues(n => math.max(n, 1L) * termsPerRowHint).toMap
-          val termsDf = data
-            .select(col("bucket"), explode(te).as("_t"))
-            .filter(col("_t").isNotNull)
-            .select(col("bucket").cast("int"), col("_t").cast("string"))
-          termsDf
-            .as(org.apache.spark.sql.Encoders.tuple(
-              org.apache.spark.sql.Encoders.scalaInt, org.apache.spark.sql.Encoders.STRING))
-            .rdd
-            .mapPartitions { it =>
-              val acc = scala.collection.mutable.HashMap.empty[Int, TermBloom]
-              it.foreach { case (b, t) =>
-                acc.getOrElseUpdate(b, TermBloom.sized(counts.getOrElse(b, 1024L)))
-                  .put(TermBloom.hash(t))
-              }
-              acc.iterator
-            }
-            .reduceByKey(_ orWith _)
-            .collect().toMap
-        }
-      TermBloom.write(fs, new Path(sidecarAt, sidecarName), blooms)
-    }
+  private def writeTermSidecar(sidecarAt: String, blooms: Map[Int, TermBloom]): Unit =
+    if (termExpr.isDefined) TermBloom.write(fs, new Path(sidecarAt, sidecarName), blooms)
 
   /** Buckets that CAN contain rows mentioning any of `terms` — the union,
     * over the base dirs and the delta chain's ADD sides, of buckets whose

@@ -62,18 +62,64 @@ object TermBloom {
     * equivalence is ever load-bearing). */
   def hash(term: String): Long = graft.sources.XXH64.hashString(term, 42L)
 
+  private val MaxBits = 1L << 27
+
   /** Size a bloom for ~n elements at ~10 bits/element (k=7 -> ~1% FPR),
     * clamped to [2^10, maxBits] and rounded up to a whole word count. At
     * extreme per-bucket cardinalities the cap saturates the filter and
     * pruning degrades toward "all buckets" — graceful, never wrong. */
-  def sized(n: Long, maxBits: Long = 1L << 27): TermBloom = {
+  def sized(n: Long, maxBits: Long = MaxBits): TermBloom = {
     new TermBloom(new Array[Long](((sizedBits(n, maxBits) + 63) / 64).toInt), 7)
   }
 
   /** Bit count [[sized]] would allocate — lets callers budget partial
     * filters (bytes = bits/8) without allocating one. */
-  def sizedBits(n: Long, maxBits: Long = 1L << 27): Long =
+  def sizedBits(n: Long, maxBits: Long = MaxBits): Long =
     math.max(1L << 10, math.min(maxBits, n * 10))
+
+  /** One bucket's filter, built while its rows stream past: [[sized]] for
+    * `termsPerRow` × rows, a row count known only at the bucket's end. The
+    * hashes wait in a buffer until then, or until the rows or the buffered
+    * hashes reach the element count at which [[sized]] hits its cap; from
+    * there the cap-sized filter takes them directly, so the buffer never
+    * holds more than that count. [[result]] is None when no term was put. */
+  final class Builder(termsPerRow: Int) {
+    private val capElements = (MaxBits + 9) / 10 // the least n sized caps
+    private var rows = 0L
+    private var buf = new Array[Long](64)
+    private var n = 0
+    private var any = false
+    private var capped: TermBloom = null
+
+    def row(): Unit = {
+      rows += 1
+      if (capped == null && rows * termsPerRow >= capElements) cap()
+    }
+
+    def put(h: Long): Unit = {
+      any = true
+      if (capped != null) capped.put(h)
+      else {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+        buf(n) = h
+        n += 1
+        if (n >= capElements) cap()
+      }
+    }
+
+    private def cap(): Unit = { capped = sized(capElements); drain(capped) }
+
+    private def drain(bl: TermBloom): Unit = {
+      var i = 0
+      while (i < n) { bl.put(buf(i)); i += 1 }
+      buf = null
+    }
+
+    def result: Option[TermBloom] =
+      if (!any) None
+      else if (capped != null) Some(capped)
+      else { val bl = sized(math.max(rows, 1L) * termsPerRow); drain(bl); Some(bl) }
+  }
 
   private val Magic = 0x47424C31 // "GBL1"
 

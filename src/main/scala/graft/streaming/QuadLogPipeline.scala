@@ -375,12 +375,8 @@ final class QuadLogPipeline(
           .withColumn("bucket", canon.bucketCol(col("id"))), 0L)
         rewriteIfNonTrivial(raw, view, viewRows)
       }
-    // sidecar DEFERRED: its build (one column-pruned re-read of the just
-    // written parquet) is independent of everything after it, so it runs
-    // as one more sink below instead of serializing the chain;
-    // absent-sidecar windows are the safe conservative fallback.
     timed("bootstrap.commitContrib")(contrib.commitFull(
-      contribData.withColumn("bucket", contrib.bucketCol(col("url"))), 0L, deferSidecar = true))
+      contribData.withColumn("bucket", contrib.bucketCol(col("url"))), 0L))
     timed("bootstrap.commitFacts")(
       facts.commitFull(supportCounts(contrib.read().get), 0L, assumePartitioned = true))
     // Patches dump from the COMMITTED facts parquet (cheap columnar scans —
@@ -398,13 +394,12 @@ final class QuadLogPipeline(
     // visible completion artifact (dump_nquads.sql:75-78 invalidates before
     // declaring complete). A torn snapshot raises while the trailer,
     // lineage and epoch are absent.
-    val Seq(_, files: Long, _, added: Long, _) = fanIn(
+    val Seq(_, files: Long, _, added: Long) = fanIn(
       () => timed("bootstrap.recheckFp")(assertSnapshotStable(pages, fp0)),
       () => timed("bootstrap.patchFiles")(
         PatchWriter.write(spark, patches, s"$root/patches/batch_0", checkpoint, maxq)),
       () => graphIdx.commitFull(graphDim(sBack, 0L), 0L),
-      () => timed("bootstrap.addedCount")(sBack.count()), // parquet metadata count
-      () => timed("bootstrap.contribSidecar")(contrib.buildSidecarForLatest()))
+      () => timed("bootstrap.addedCount")(sBack.count())) // parquet metadata count
     // dump-report trailer file (dump_nquads.sql:58-83 / sample fixture)
     val isoNow = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)

@@ -10,7 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (`BloomFilterMightContain`) is internal-only, unregistered in the SQL
   * function registry — so [[graft.functions.BloomProbe]], a codegen'd
   * predicate, needs this two-line shim. Deliberately minimal: nothing else
-  * in the repo reaches into `org.apache.spark.sql` internals. */
+  * in the repo needs a `private[sql]` member (the store's parquet writer,
+  * `graft.state.BucketWrite`, uses public execution-layer classes). */
 object ExprColumn {
   def apply(e: Expression): Column = ExpressionUtils.column(e)
   def expr(c: Column): Expression = ExpressionUtils.expression(c)

@@ -10,10 +10,12 @@ import java.util.concurrent.atomic.AtomicLong
   * calls made on it: listings of a directory (`listStatus` on a file, which
   * Spark's file index issues for every path it is handed, is not a
   * listing), content summaries, status probes (`exists`, `getFileStatus`),
-  * creates, renames and deletes. The test session registers it as
+  * creates, renames, deletes and mkdirs. The test session registers it as
   * `fs.countfs.impl`; a spec roots its data at `countfs://` + a local path
   * and compares [[CountingFileSystem.counts]] before and after the code it
-  * pins, or asks which dirs it listed. Counts are JVM-wide, and specs run one at a time. */
+  * pins, or asks which paths it listed, created, renamed or made dirs of
+  * ([[CountingFileSystem.pathsDuring]]). Counts are JVM-wide, and specs run
+  * one at a time. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -21,10 +23,7 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = Uri.getScheme
 
   override def listStatus(f: Path): Array[FileStatus] = {
-    if (pathToFile(f).isDirectory) {
-      bump(DirListing)
-      listed.add(makeQualified(f).toUri.getPath.stripSuffix("/"))
-    }
+    if (pathToFile(f).isDirectory) note(DirListing, f)
     super.listStatus(f)
   }
   override def getContentSummary(f: Path): ContentSummary = {
@@ -34,17 +33,26 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getFileStatus(f: Path): FileStatus = { bump(StatusProbes); super.getFileStatus(f) }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
                       blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    bump(Creates); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    note(Creates, f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
                       replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
-    bump(Creates)
+    note(Creates, f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
-  override def rename(src: Path, dst: Path): Boolean = { bump(Renames); super.rename(src, dst) }
+  override def rename(src: Path, dst: Path): Boolean = { note(Renames, src); super.rename(src, dst) }
   override def delete(f: Path, recursive: Boolean): Boolean = {
     bump(Deletes); super.delete(f, recursive)
+  }
+  override def mkdirs(f: Path): Boolean = { note(Mkdirs, f); super.mkdirs(f) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    note(Mkdirs, f); super.mkdirs(f, permission)
+  }
+
+  private def note(kind: String, f: Path): Unit = {
+    bump(kind)
+    events.add(kind -> makeQualified(f).toUri.getPath.stripSuffix("/"))
   }
 }
 
@@ -57,9 +65,10 @@ object CountingFileSystem {
   val Creates = "create"
   val Renames = "rename"
   val Deletes = "delete"
+  val Mkdirs = "mkdirs"
 
   private val counters = new ConcurrentHashMap[String, AtomicLong]()
-  private val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
   private def bump(k: String): Unit =
     counters.computeIfAbsent(k, _ => new AtomicLong()).incrementAndGet()
 
@@ -70,10 +79,16 @@ object CountingFileSystem {
   }
 
   /** The local paths of the dirs `body` listed, in listing order. */
-  def dirsListedDuring(body: => Unit): Seq[String] = {
-    listed.clear()
+  def dirsListedDuring(body: => Unit): Seq[String] =
+    pathsDuring(body).getOrElse(DirListing, Seq.empty)
+
+  /** The local paths `body` listed (dirs), created, renamed (sources) and
+    * made dirs of, per kind, in call order. */
+  def pathsDuring(body: => Unit): Map[String, Seq[String]] = {
+    events.clear()
     body
-    scala.jdk.CollectionConverters.CollectionHasAsScala(listed).asScala.toSeq
+    scala.jdk.CollectionConverters.CollectionHasAsScala(events).asScala.toSeq
+      .groupMap(_._1)(_._2)
   }
 
   /** Counter deltas over `body`. */

@@ -390,6 +390,76 @@ class SnapshotStoreSpec extends GraftSpec {
     // a store without termExpr has no index
     val plain = new SnapshotStore(spark, root + "_plain", numBuckets = 2, deleteKeys = Seq("k"))
     assert(plain.candidateBuckets(Seq("x")).isEmpty)
+
+    // through folds: a bucket-local fold writes the hot bucket's base to
+    // snap_<id>B and consolidates the quiet chain into snap_<id>C, a full
+    // fold rewrites every base; each writes its own sidecar, and every
+    // stored term's bucket stays a candidate at every step. Each data dir's
+    // record holds every part file's on-disk length.
+    val froot = root + "_fold"
+    val fst = new SnapshotStore(spark, froot, numBuckets = 4, deleteKeys = Seq("k"),
+      maxDeltas = 2, foldBucketBytes = 50000L, termExpr = Some(array(col("t1"), col("t2"))))
+    def frows(r: Seq[(String, (String, String, String))]) =
+      r.map { case (k, (t1, t2, pad)) => (k, t1, t2, pad) }.toDF("k", "t1", "t2", "pad")
+        .withColumn("bucket", fst.bucketCol(col("k")))
+    def keysOf(ks: Iterable[String]) = ks.toSeq.toDF("k").withColumn("bucket", fst.bucketCol(col("k")))
+    val fkeys = (1 to 64).map(i => s"k$i")
+    val fkb = frows(fkeys.map(_ -> (("", "", "")))).select("k", "bucket").as[(String, Int)]
+      .collect().toMap
+    val hot = fkeys.filter(fkb(_) == fkb("k1"))
+    val quiet = fkeys.filterNot(fkb(_) == fkb("k1"))
+    val prnd = new scala.util.Random(11)
+    def fat(): String = Array.fill(10000)((' ' + prnd.nextInt(94)).toChar).mkString
+    var fmodel: Map[String, (String, String, String)] =
+      fkeys.map(k => k -> ((s"base_$k", if (k.length % 2 == 0) "shared" else null, ""))).toMap
+    def checkFold(when: String): Unit = {
+      fmodel.foreach { case (k, (t1, t2, _)) =>
+        Seq(t1, t2).filter(_ != null).foreach { t =>
+          assert(fst.candidateBuckets(Seq(t)).get.contains(fkb(k)), s"$when: $t's bucket pruned away")
+        }
+      }
+      assert(fst.read().get.select("k", "t1").as[(String, String)].collect().toMap ==
+        fmodel.map { case (k, v) => k -> v._1 }, when)
+      recordsMatchDisk(froot, when)
+    }
+    def fcommit(id: Long, adds: Map[String, (String, String, String)]): Unit = {
+      fst.commitDelta(frows(adds.toSeq), keysOf(adds.keys), adds.size, id)
+      fmodel = fmodel ++ adds
+    }
+    fst.commitFull(frows(fmodel.toSeq), 0L)
+    checkFold("after the full commit")
+    for (b <- 1 to 3) {
+      fcommit(b, (hot.take(6).map(k => k -> ((s"hot${b}_$k", null, fat()))) ++
+        quiet.slice(2 * b, 2 * b + 2).map(k => k -> ((s"quiet${b}_$k", s"q$b", "")))).toMap)
+      checkFold(s"after delta $b")
+    }
+    val m3 = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      s"$froot/manifest_${f"${3L}%014d"}.txt"))
+    assert(m3.contains(f"snap_${3L}%014dB/bucket=") && m3.contains(f"snap_${3L}%014dC\t"),
+      s"no bucket-local fold at 3: $m3")
+    // fat rows in every bucket: the next fold finds no quiet bucket
+    for (b <- 4 to 5)
+      fcommit(b, fkeys.groupBy(fkb).values.flatMap(_.take(6))
+        .map(k => k -> ((s"all${b}_$k", null, fat()))).toMap)
+    val m5 = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      s"$froot/manifest_${f"${5L}%014d"}.txt"))
+    assert(!m5.contains("D\t") && m5.contains(f"snap_${5L}%014dB/bucket="), s"no full fold at 5: $m5")
+    checkFold("after the full fold")
+  }
+
+  /** Every data dir's `_record.txt` under `root` names part files whose
+    * on-disk lengths equal the recorded ones. */
+  private def recordsMatchDisk(root: String, when: String): Unit = {
+    val records = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.getFileName.toString == "_record.txt")
+    assert(records.nonEmpty, s"$when: no record under $root")
+    records.foreach { r =>
+      java.nio.file.Files.readAllLines(r).toArray.map(_.toString).drop(1).foreach { l =>
+        val Array(_, n, f) = l.split("\t", 3)
+        val onDisk = r.getParent.resolve(f).toFile
+        assert(onDisk.length == n.toLong, s"$when: $onDisk is ${onDisk.length} B, recorded $n")
+      }
+    }
   }
 
   test("multi-writer guard: a live foreign lease fails a stage loudly, store intact") {
@@ -603,4 +673,99 @@ class SnapshotStoreSpec extends GraftSpec {
     }
     assert(st.read().get.count() == 500)
   }
+
+  test("store writes use no output committer: no listing, no _temporary, no _SUCCESS") {
+    // each write task writes its buckets' parquet under their final names
+    // and returns them; the record is built from those results. The only
+    // renames left are the temp files of the record, manifest, sidecar and
+    // pointer (Spark's committer listed, made `_temporary` trees, renamed
+    // every part file and wrote `_SUCCESS`)
+    val local = tmpDir("store_nocommit")
+    val st = new SnapshotStore(spark, s"countfs://$local", numBuckets = 8,
+      deleteKeys = Seq("k"), termExpr = Some(array(col("t"))))
+    def rows(kt: Seq[(String, String)]) = kt.toDF("k", "t")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    val base = rows((1 to 100).map(i => s"k$i" -> s"t$i"))
+    val adds = rows((1 to 30).map(i => s"n$i" -> s"u$i"))
+    def buckets(df: org.apache.spark.sql.DataFrame) = df.select("bucket").distinct().count()
+    val parts = buckets(base) + 2 * buckets(adds) // one per bucket: base, adds, tombstones
+    val paths = CountingFileSystem.pathsDuring {
+      st.commitFull(base, 0L)
+      st.stageDelta(adds, adds.select("k", "bucket"), 30L, 1L)
+    }
+    def of(kind: String) = paths.getOrElse(kind, Seq.empty)
+    assert(of(CountingFileSystem.DirListing).isEmpty, s"listed ${of(CountingFileSystem.DirListing)}")
+    val made = of(CountingFileSystem.Creates) ++ of(CountingFileSystem.Mkdirs)
+    assert(!made.exists(p => p.contains("_temporary") || p.endsWith("_SUCCESS")), s"made $made")
+    assert(of(CountingFileSystem.Creates).count(_.endsWith(".parquet")) == parts,
+      s"part files: ${of(CountingFileSystem.Creates).filter(_.endsWith(".parquet"))}")
+    val renamed = of(CountingFileSystem.Renames).map(p => new org.apache.hadoop.fs.Path(p).getName)
+    assert(renamed.nonEmpty && renamed.forall(
+      _.matches("(_record\\.txt|manifest_[0-9]+\\.txt|_terms\\.bloom|_latest)\\.tmp[0-9]+")),
+      s"renamed $renamed")
+    st.finalizeCommit(1L)
+    assert(st.read().get.count() == 130)
+  }
+
+  test("a write task failing midway fails the stage; a re-stage reads each row once") {
+    // the term expression throws in the write task once, after the task has
+    // written its earlier buckets; the stage fails, nothing the attempt
+    // wrote is named by a record, and a re-stage of the same id replaces
+    // the dir and reads every row exactly once
+    val root = tmpDir("store_taskfail")
+    StoreSpecFailOnce.armed.set(true)
+    val failOnce = udf { (t: String) =>
+      if (t == "boom" && StoreSpecFailOnce.armed.getAndSet(false)) sys.error("injected task failure")
+      t
+    }
+    val st = new SnapshotStore(spark, root, numBuckets = 16, deleteKeys = Seq("k"),
+      termExpr = Some(array(failOnce(col("t")))))
+    def rows(kt: Seq[(String, String)]) = kt.toDF("k", "t")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    val base = (1 to 100).map(i => s"k$i" -> s"t$i")
+    st.commitFull(rows(base), 0L)
+    // "boom" rides on the add whose bucket sorts last: its task writes the
+    // rest of its buckets first
+    val fresh = (1 to 60).map(i => s"n$i" -> s"u$i")
+    val last = rows(fresh).select("k", "bucket").as[(String, Int)].collect().maxBy(_._2)._1
+    val adds = fresh.map { case (k, t) => k -> (if (k == last) "boom" else t) } :+ ("k1" -> "t1b")
+    val e = intercept[Exception](st.stageDelta(rows(adds), rows(adds).select("k", "bucket"),
+      adds.size, 1L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected task failure")), e.toString)
+    val snap1 = new java.io.File(s"$root/snap_${f"${1L}%014d"}")
+    def parquetUnder(d: java.io.File): Seq[String] =
+      if (!d.exists) Seq.empty
+      else java.nio.file.Files.walk(d.toPath).toArray.map(_.toString).filter(_.endsWith(".parquet"))
+        .map(p => d.toPath.relativize(java.nio.file.Paths.get(p)).toString).toSeq
+    def recorded(d: java.io.File): Set[String] = Seq("add", "tomb").flatMap { side =>
+      val r = new java.io.File(d, s"$side/_record.txt")
+      if (!r.exists) Seq.empty
+      else java.nio.file.Files.readAllLines(r.toPath).toArray.map(_.toString).drop(1)
+        .map(l => s"$side/" + l.split("\t", 3)(2)).toSeq
+    }.toSet
+    assert(parquetUnder(snap1).forall(f => !recorded(snap1).contains(f)),
+      s"a failed attempt's file is named by a record: ${parquetUnder(snap1)}")
+    assert(st.latest.contains(0L) && !st.isStagedNotFinal(1L))
+    st.stageDelta(rows(adds), rows(adds).select("k", "bucket"), adds.size, 1L)
+    st.finalizeCommit(1L)
+    val back = st.read().get.select("k", "t").as[(String, String)].collect().toSeq
+    assert(back.size == 160 && back.toMap == (base.toMap ++ adds), s"${back.size} rows")
+    assert(parquetUnder(snap1).toSet == recorded(snap1), "a file on disk is named by no record")
+  }
+
+  test("a write that splits a bucket across tasks fails loudly") {
+    val st = new SnapshotStore(spark, tmpDir("store_split"), numBuckets = 2, deleteKeys = Seq("k"))
+    val df = (1 to 200).map(i => s"k$i" -> i).toDF("k", "v")
+      .withColumn("bucket", st.bucketCol(col("k"))).repartition(4)
+    val e = intercept[RuntimeException](st.commitFull(df, 0L, assumePartitioned = true))
+    assert(e.getMessage.contains("written by"), e.getMessage)
+    assert(st.latest.isEmpty)
+  }
+}
+
+/** Arms the one failure of the failing-write-task spec (a JVM-wide flag:
+  * local-mode tasks run in the test JVM). */
+object StoreSpecFailOnce {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
