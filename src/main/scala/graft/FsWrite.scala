@@ -64,6 +64,21 @@ object FsWrite {
   def atomic(fs: FileSystem, path: Path, text: String): Unit =
     atomic(fs, path)(_.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
+  /** `out` that also keeps the MD5 and the count of the bytes written
+    * through it, so a writer knows its file's checksum and length without
+    * reading the file back. */
+  final class Digesting(out: java.io.OutputStream) extends java.io.FilterOutputStream(out) {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    private var n = 0L
+    override def write(b: Int): Unit = { out.write(b); md.update(b.toByte); n += 1 }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      out.write(b, off, len); md.update(b, off, len); n += len
+    }
+    def bytes: Long = n
+    /** Hex MD5 of every byte so far; call once, after the last write. */
+    def md5Hex: String = md.digest().map("%02x".format(_)).mkString
+  }
+
   /** Move a finished temp file onto `path`. On `file:` this is one
     * rename(2), which replaces `path` atomically: a reader or a crash sees
     * the old file or the new one, never neither (stale `.crc`s of either

@@ -74,34 +74,23 @@ object Micro {
       // summary ROW per zip — the manifest bodies, O(members) each, are
       // staged executor-side by the zip build) and the per-graph metadata
       // maps (O(graphs)). GRAFT_TIMING prints the publish-internal phase
-      // split (inventory/zipBuild/graphMetadata/sweep).
+      // split (readRecord/batchRecords/zipBuild/recordAppend/graphMetadata).
       val graphs = sys.env("PUBLISH_SCALE").toInt
       val filesPerGraph = 10
       val root = Bench.scratchRoot("micro_pub")
       val patchDir = s"$root/patches"
-      import org.apache.spark.sql.functions.col
-      // synth patch files, executor-side (distributed file creation)
-      val hconf2 = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
+      import org.apache.spark.sql.functions._
+      // synth patch files through the writer (one quad per file, so the
+      // batch carries its write record like a pipeline batch)
       time(s"synth $graphs graphs x $filesPerGraph files") {
-        spark.range(0, graphs.toLong * filesPerGraph, 1, 64).foreachPartition {
-          (it: Iterator[java.lang.Long]) =>
-          val fs = new org.apache.hadoop.fs.Path(patchDir)
-            .getFileSystem(hconf2.value)
-          it.foreach { i =>
-            val g = i / filesPerGraph; val k = i % filesPerGraph
-            val gb64 = java.util.Base64.getEncoder.encodeToString(
-              s"https://g$g.example.org/".getBytes("UTF-8"))
-            val p = new org.apache.hadoop.fs.Path(
-              s"$patchDir/g_b64=$gb64/rdf_out_00000000000000-$k%014d")
-            val out = graft.FsWrite.create(fs, p)
-            try out.write(
-              (s"+ <http://kg.example.org/e$i> <http://kg.example.org/p> " +
-                s"<http://kg.example.org/o$k> <https://g$g.example.org/> .\n")
-                .getBytes("UTF-8"))
-            finally out.close()
-          }
-        }
+        val g = concat(lit("https://g"), (col("id") / filesPerGraph).cast("long"), lit(".example.org/"))
+        graft.plans.PatchWriter.write(spark, spark.range(0, graphs.toLong * filesPerGraph).select(
+          lit("+").as("op"), concat(lit("http://kg.example.org/e"), col("id")).as("s"),
+          lit("http://kg.example.org/p").as("p"),
+          concat(lit("http://kg.example.org/o"), col("id") % filesPerGraph).as("oLex"),
+          lit(graft.model.TermKind.Iri).as("oKind"), lit(null).cast("string").as("oDtype"),
+          lit(null).cast("string").as("oLang"), g.as("g")),
+          s"$patchDir/batch_0", "00000000000000", maxq = 1)
       }
       val infos = time(s"publish (expect ~${graphs * filesPerGraph / 2} zips)") {
         graft.publish.ZipPublisher.publish(spark, patchDir, s"$root/sink", filesPerZip = 2)

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.rdf.NQuadFormatter
 import graft.FsWrite
 import graft.Timing.timed
+import java.nio.charset.StandardCharsets
 
 /** S5/A2 — chunked RDF-patch file sink.
   *
@@ -47,6 +48,16 @@ import graft.Timing.timed
   * file (at most nSubs(g) files per graph are smaller than maxq, and
   * nSubs is minimal for the size) — the reference bounds only the MAXIMUM
   * per file (buffer_nquads.sql:24-27).
+  *
+  * The write record: each write task digests every file as it writes it
+  * and returns one [[Written]] row per file — graph, name, length, md5,
+  * body lines and write time, what the reference's resourcesync-generator
+  * packs per patch file and its `vql_*_count.txt` files count. The driver
+  * writes them to `<outDir>/_record.txt` ([[RecordName]]) before `write`
+  * returns, so before the batch's commit marker; the leading `_` keeps the
+  * record out of Spark file sources. A batch dir without a record is
+  * incomplete: the publisher reads records, never the patch tree, and
+  * publishes no batch that has none ([[graft.publish.ZipPublisher]]).
   */
 object PatchWriter {
 
@@ -59,7 +70,39 @@ object PatchWriter {
       s"# base64         $b64",
       s"# amount         $amount")
 
-  /** patches: (op + quad cols). Returns number of files written. */
+  /** One patch file as its write task wrote it: graph dir, file name,
+    * bytes, hex md5, body lines (quads) and the UTC write time to the
+    * second, the file's `lastmod` wherever it is published. */
+  final case class Written(g_b64: String, file: String, bytes: Long, md5: String,
+                           lines: Long, lastmod: String)
+
+  /** A batch dir's write record: one tab-separated [[Written]] line per
+    * patch file. */
+  val RecordName = "_record.txt"
+
+  private[graft] val IsoUtc = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
+
+  /** Write `dir`'s record, all or nothing. */
+  def writeRecord(fs: FileSystem, dir: Path, rows: Seq[Written]): Unit =
+    FsWrite.atomic(fs, new Path(dir, RecordName), rows.sortBy(r => (r.g_b64, r.file))
+      .map(r => Seq(r.g_b64, r.file, r.bytes, r.md5, r.lines, r.lastmod).mkString("", "\t", "\n"))
+      .mkString)
+
+  /** `dir`'s record, or None when the batch has none: its files are not
+    * all written yet. One open, with no existence check before it. */
+  def readRecord(fs: FileSystem, dir: Path): Option[Seq[Written]] = {
+    val in = try fs.open(new Path(dir, RecordName))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    Some(text.split('\n').toSeq.filter(_.nonEmpty).map { l =>
+      val Array(g, file, bytes, md5, lines, lastmod) = l.split('\t')
+      Written(g, file, bytes.toLong, md5, lines.toLong, lastmod)
+    })
+  }
+
+  /** patches: (op + quad cols). Writes the files and the batch's record;
+    * returns the number of files written. */
   def write(spark: SparkSession, patches: DataFrame, outDir: String,
             checkpoint: String, maxq: Int = 100000): Long = {
     import spark.implicits._
@@ -110,7 +153,6 @@ object PatchWriter {
     // stream each sub straight into its final files
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val fileCount = spark.sparkContext.longAccumulator("patchFiles")
     val out = outDir
     val fsRoot = new Path(out)
     val fs0 = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -118,15 +160,16 @@ object PatchWriter {
     FsWrite.mkdirs(fs0, fsRoot)
     val mq = maxq
 
-    timed("patch.writePass") { keyed
+    val written = timed("patch.writePass") { keyed
       .repartition(P, col("g_b64"), col("sub"))
       .sortWithinPartitions(col("g_b64"), col("sub"), col("h"))
       .withColumn("line", NQuadFormatter.patchLine(col("op"), col("s"), col("p"),
         col("oLex"), col("oKind"), col("oDtype"), col("oLang"), col("g")))
       .select("g", "g_b64", "sub", "serial0", "line")
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
         val fs = new Path(out).getFileSystem(hconf.value)
         val buf = new java.util.ArrayList[String](math.min(mq, 1 << 16))
+        val files = scala.collection.mutable.ArrayBuffer.empty[Written]
         var curKey: (String, Int) = null
         var curG = ""
         var nextSerial = 0L
@@ -138,15 +181,16 @@ object PatchWriter {
           // thousands of page-sized ones — the syscall path is the one
           // resource that does not scale with cores on a single box
           // (BENCH.md §Scaling residual)
+          val d = new FsWrite.Digesting(FsWrite.create(fs, p, bufferSize = 1 << 20))
           val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            FsWrite.create(fs, p, bufferSize = 1 << 20),
-            java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
+            d, StandardCharsets.UTF_8), 1 << 20)
           headerLines(checkpoint, curG, b64, buf.size).foreach { l => w.write(l); w.write('\n') }
           val n = buf.size
           var i = 0
           while (i < n) { w.write(buf.get(i)); w.write('\n'); i += 1 }
           w.close()
-          fileCount.add(1L)
+          files += Written(b64, p.getName, d.bytes, d.md5Hex, n.toLong,
+            IsoUtc.format(java.time.Instant.now()))
           nextSerial += 1
           buf.clear()
         }
@@ -159,8 +203,10 @@ object PatchWriter {
           buf.add(r.getString(4))
         }
         flushFile()
-      } }
-    fileCount.value
+        files.iterator
+      }.collect().toSeq }
+    writeRecord(fs0, fsRoot, written)
+    written.size.toLong
   }
 
   /** The dump-report trailer file (dump_nquads.sql:58-83 emits these five
@@ -181,11 +227,7 @@ object PatchWriter {
     val p = new Path(outDir, f"rdf_out_$checkpoint-${99999999999998L}%014d")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = FsWrite.create(fs, p)
-    try out.write(lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(lines.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
-
-  /** Read a patch dir back (for tests / reconciliation). */
-  def readLines(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "false").text(dir + "/*")
 }

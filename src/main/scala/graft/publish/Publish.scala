@@ -1,10 +1,12 @@
 package graft.publish
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import graft.FsWrite
+import graft.plans.PatchWriter
 import graft.Timing.timed
 
 /** S7/W2 — the resourcesync-generator re-expressed: package committed patch
@@ -13,102 +15,36 @@ import graft.Timing.timed
   * capability-list.xml, .well-known/resourcesync) exactly as
   * zipsynchronizer.py:111-312 and syncdirector.py:70-123 do.
   *
-  * Spark-first shape: the file inventory is ONE driver-side Hadoop
-  * `listStatus` walk of the patch tree (names, lengths and mtimes only — a
-  * Spark file source would run one parallel-listing job per batch directory,
-  * each holding more graph dirs than Spark lists on the driver, so the
-  * inventory cost grew with every batch ever written). Resources already in
-  * complete zips are dropped before any byte is read; the rest are
-  * checksummed by executor tasks that stream each file through MD5. Batch
-  * windows are per-GRAPH (the window partitions by graph_b64 — never a
-  * global single-task sort). Zip creation is a distributed pass keyed by
-  * (graph, batch): each task streams its member files straight into the
-  * final zip. Only the tiny per-zip summary returns to the driver for the
-  * XML writes.
+  * What a publish packs is known from the write records: every batch dir
+  * the pipeline writes holds a `_record.txt` with each patch file's graph,
+  * name, length, md5 and write time ([[graft.plans.PatchWriter]]), as the
+  * reference's generator packs them per file. A publish lists the patches
+  * root only, reads the records of the batches it has not yet published
+  * and of the batches holding the graphs' live end-part members, and plans
+  * every window on the driver from those rows: it never walks the patch
+  * tree and never reads a patch file but to copy it into a zip. Zip
+  * creation is one distributed pass over the planned zips: each task
+  * streams its members straight into the final zip, digesting it as it
+  * writes. Only the tiny per-zip summary returns to the driver for the XML
+  * writes.
   *
   * The reference's complete `part_def_N` vs provisional `part_end_N` split
   * (zipsynchronizer.py:133-173) is the `is_complete` flag on the last
   * window: an incomplete window is deleted and rebuilt on the next run IF
   * its membership changed (J3 identity comparison, zipsynchronizer.py:
-  * 149-156), and indices increase monotonically across runs exactly like
-  * create_zip's max-index+1 scan (zipsynchronizer.py:274-281).
+  * 149-156), and indices increase monotonically across runs like
+  * create_zip's max-index+1 scan (zipsynchronizer.py:274-281), over every
+  * zip the graph ever had, so no name is reused.
   *
   * What the sink holds is known from one place, the publish record
   * `sinkDir/_published` that [[ZipPublisher.publish]] appends to: every
-  * built zip with its summary, members and run. Indices, J3 and every XML
-  * document derive from it; nothing publish wrote is read back from disk,
-  * and no publish lists a graph dir it does not rewrite. The reference
-  * scrubs crashed runs by scanning the sink; here the record's append is
-  * the commit point, and the next publish finishes a crashed run's tail.
+  * built zip with its summary, members, run and the last patch batch the
+  * run published through. Indices, J3 and every XML document derive from
+  * it; nothing publish wrote is read back from disk, and no publish lists a
+  * graph dir it does not rewrite. The reference scrubs crashed runs by
+  * scanning the sink; here the record's append is the commit point, and
+  * the next publish finishes a crashed run's tail.
   */
-object ManifestBuilder {
-
-  /** One patch file as the listing sees it, before any byte is read. */
-  final case class Listed(resource: String, graph_b64: String, length: Long, lastmod: String)
-
-  private val GraphDir = "g_b64=([^/]+)/".r
-  private[publish] val IsoUtc = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
-
-  /** Every `rdf_out_*` file under `patchDir`, found by one recursive
-    * `listStatus` walk on the driver. Same rows as the `binaryFile` source
-    * with `recursiveFileLookup` gave: `_`/`.` entries skipped, the file's
-    * qualified path string as `resource`, graph from the first `g_b64=`
-    * directory, and UTC `lastmod` to the second. The walk touches only names, lengths and
-    * mtimes — no permission lookup, no block locations, which on the local
-    * file system each cost a process spawn. F6 analogue (split-graphs.sh:
-    * 78-85): files with no graph (the dump-report trailer) are not
-    * publishable resources. */
-  def list(spark: SparkSession, patchDir: String): Seq[Listed] = {
-    val root = new Path(patchDir)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Listed]
-    def walk(dir: Path): Unit = f.listStatus(dir).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) ()
-      else if (st.isDirectory) walk(st.getPath)
-      else if (name.startsWith("rdf_out_")) {
-        val res = st.getPath.toString
-        GraphDir.findFirstMatchIn(res).foreach(m => out += Listed(res, m.group(1),
-          st.getLen, IsoUtc.format(java.time.Instant.ofEpochMilli(st.getModificationTime))))
-      }
-    }
-    walk(f.makeQualified(root))
-    out.toSeq
-  }
-
-  /** `files` plus the md5 of each file's content, streamed by executor
-    * tasks — the only step that reads patch bytes. */
-  def checksummed(spark: SparkSession, files: Dataset[Listed]): DataFrame = {
-    import spark.implicits._
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    files.map { l =>
-      val p = new Path(l.resource)
-      (l.resource, l.graph_b64, l.length, md5Hex(p.getFileSystem(hconf.value), p), l.lastmod)
-    }.toDF("resource", "graph_b64", "length", "md5", "lastmod")
-  }
-
-  /** Hex MD5 of a file's bytes, streamed in 64 KB reads. */
-  private[publish] def md5Hex(f: FileSystem, p: Path): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = f.open(p)
-    val buf = new Array[Byte](65536)
-    try {
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
-  }
-}
-
-/** One inventory file with its greedy window assignment (typed row for the
-  * byte-aware batching pass). */
-final case class WindowedFile(graph_b64: String, resource: String, md5: String,
-                              length: Long, lastmod: String, batch: Long,
-                              is_complete: Boolean)
-
-/** The actual artifact emitter: zips + the four ResourceSync XML kinds. */
 object ZipPublisher {
 
   final case class ZipInfo(graph_b64: String, zipName: String, complete: Boolean,
@@ -220,9 +156,22 @@ object ZipPublisher {
     * manifest order. */
   final case class Member(resource: String, md5: String, length: Long, lastmod: String)
 
+  /** One row of the publish record: a built zip's summary and members, the
+    * run that built it and the last patch batch that run published
+    * through. */
+  private[publish] final case class Recorded(graph_b64: String, zipName: String,
+      complete: Boolean, nResources: Long, length: Long, md5: String, lastmod: String,
+      members: Seq[Member], run: Long, throughBatch: Long)
+
+  /** A zip a run builds, its members in manifest order. */
+  private[publish] final case class Planned(graph_b64: String, zipName: String,
+      complete: Boolean, members: Seq[Member])
+
   /** The name families the publisher writes into a graph dir: zips, their
     * sidecars and staged temps, and the resource dump documents. */
   private val OwnedPrefixes = Seq("part_", "manifest_part_", "resource-dump")
+
+  private val BatchDir = "batch_(\\d+)".r
 
   /** The zips a consumer sees in one graph: every def zip, plus the end
     * part of the latest run that built into the graph (none when that
@@ -236,21 +185,78 @@ object ZipPublisher {
   private def baseName(resource: String): String =
     resource.substring(resource.lastIndexOf('/') + 1)
 
-  /** A member's J3 identity: its file name and md5. */
-  private def identity(resource: Column, md5: Column): Column =
-    concat_ws("|", regexp_extract(resource, "([^/]+)$", 1), md5)
+  /** The batch dir a resource was written in. */
+  private def batchDirOf(resource: String): String =
+    resource.substring(0, resource.lastIndexOf("/g_b64="))
 
-  /** One digest of a set of member identities, so the record hands the
-    * driver 32 characters per end part instead of its member list. */
-  private def membershipDigest(identities: Column): Column =
-    md5(concat_ws("\n", sort_array(identities)))
+  /** Members' J3 identities: file name and md5. */
+  private def contentIds(ms: Seq[Member]): Set[(String, String)] =
+    ms.map(m => (baseName(m.resource), m.md5)).toSet
 
   /** Highest `part_def`/`part_end` index among `zips` (-1 when none). */
   private def maxIndex(zips: Seq[ZipInfo], complete: Boolean): Int = zips
     .collect { case z if z.complete == complete => z.zipName.split('_').last.toInt }
     .maxOption.getOrElse(-1)
 
-  /** Publish one committed patch directory into `sinkDir`:
+  /** Greedy windows over one graph's members in resource order: a window
+    * closes at `filesPerZip` files or at `maxZipBytes` member bytes,
+    * whichever comes first (zipsynchronizer.py:26-31 / syncdirector.py:
+    * 53-55 — the 50 MB sitemap-community limit a consumer relies on), and a
+    * member that would overflow a non-empty window opens the next one.
+    * Returns the closed windows and the open rest, the graph's end part. */
+  private def windows(ms: Seq[Member], filesPerZip: Int, maxZipBytes: Long)
+      : (Seq[Seq[Member]], Seq[Member]) = {
+    val closed = Seq.newBuilder[Seq[Member]]
+    var cur = Vector.empty[Member]
+    var bytes = 0L
+    def close(): Unit = { closed += cur; cur = Vector.empty; bytes = 0L }
+    ms.foreach { m =>
+      if (cur.nonEmpty && bytes + m.length > maxZipBytes) close()
+      cur :+= m; bytes += m.length
+      if (cur.size >= filesPerZip || bytes >= maxZipBytes) close()
+    }
+    (closed.result(), cur)
+  }
+
+  /** Build one planned zip (executor side): stream its members into a
+    * task-attempt-unique temp beside the final name, digesting the zip as
+    * it is written, rename it into place, and write its sidecar XMLs
+    * (manifest_<zip>.xml, plus <zip>.xml for an end part) STAGED under the
+    * temp's suffix: the driver renames them into place after the record
+    * commit (the crash tests' post-commit window still sees zero
+    * metadata). Returns the zip's one summary line and the suffix — never
+    * the manifest body, which is O(members). */
+  private def buildZip(p: Planned, sink: String, conf: Configuration): (ZipInfo, String) = {
+    val zfs = new Path(sink).getFileSystem(conf)
+    val gDir = new Path(sink, p.graph_b64)
+    val stage = s".tmpzip${java.util.UUID.randomUUID().toString.take(8)}"
+    val tmpPath = new Path(gDir, s"${p.zipName}.zip$stage")
+    val manifest = manifestXml(p.members.map(m => (baseName(m.resource), m.md5, m.length, m.lastmod)))
+      .getBytes(StandardCharsets.UTF_8)
+    val out = new FsWrite.Digesting(FsWrite.create(zfs, tmpPath))
+    val zos = new java.util.zip.ZipOutputStream(out)
+    zos.setLevel(1) // speed over ratio: patch text compresses well anyway
+    zos.putNextEntry(new java.util.zip.ZipEntry("manifest.xml"))
+    zos.write(manifest); zos.closeEntry()
+    p.members.foreach { m =>
+      val src = new Path(m.resource)
+      zos.putNextEntry(new java.util.zip.ZipEntry(src.getName))
+      val in = src.getFileSystem(conf).open(src)
+      try org.apache.commons.io.IOUtils.copy(in, zos) finally in.close()
+      zos.closeEntry()
+    }
+    zos.close()
+    FsWrite.replace(zfs, tmpPath, new Path(gDir, s"${p.zipName}.zip"))
+    sidecarNames(p.zipName, p.complete).foreach { n =>
+      val o = FsWrite.create(zfs, new Path(gDir, n + stage))
+      try o.write(manifest) finally o.close()
+    }
+    (ZipInfo(p.graph_b64, p.zipName, p.complete, p.members.size.toLong, out.bytes, out.md5Hex,
+      p.members.map(_.lastmod).max), stage)
+  }
+
+  /** Publish the committed patch batches under `patchDir` (`batch_<id>`
+    * dirs, each with its write record) into `sinkDir`:
     *
     *  - complete windows of `filesPerZip` resources -> `part_def_N.zip`
     *    (immutable; never rewritten once present);
@@ -261,22 +267,31 @@ object ZipPublisher {
     *    sidecar; per-graph `resource-dump.xml` + `capability-list.xml`; one
     *    top-level `.well-known/resourcesync` over all graphs.
     *
-    * Zip bytes are written by executors (foreachPartition over
-    * (graph, batch) groups); the driver only writes the small XML set.
+    * A batch is new when its id is above the `throughBatch` mark the
+    * record holds. A run takes the new batches in id order, up to the first
+    * without a write record, and windows each graph's new files together
+    * with its live end part's members, whose md5s it re-reads from their
+    * batches' records: a file rewritten through the writer under the same
+    * name changes the end's identity and rebuilds it (J3). Files of graphs
+    * outside `graphIndex`, when given, are not built, and once the run's
+    * mark passes their batch no later run builds them either. Zip bytes
+    * are written by executors, one task per group of planned zips; the
+    * driver only plans and writes the small XML set.
     *
     * The publish record, the compacted-append table `sinkDir/_published`,
     * is the only source of truth about the sink. Each run that builds zips
-    * appends one row per zip — its [[ZipInfo]], its [[Member]]s and the
-    * run's sequence number — and that append is the run's commit point;
-    * `_published/_done` names the last run whose metadata tail finished.
-    * Every index, J3's end membership, every XML document and every
-    * deletion derives from the record: no sink XML or sidecar is read back
-    * and no graph dir is listed except the ones this run rewrites. Those
-    * are the graphs it built zips into plus the graphs of any recorded run
-    * later than `_done` (a crash after the append), whose sidecars are
-    * rewritten from the recorded members. A rewritten graph dir keeps
-    * exactly its live zips, their sidecars and its dump documents: a zip
-    * no commit recorded is never listed, and is deleted there.
+    * appends one row per zip — its [[ZipInfo]], its [[Member]]s, the run's
+    * sequence number and its batch mark — and that append is the run's
+    * commit point; `_published/_done` names the last run whose metadata
+    * tail finished. Every index, J3's end membership, every XML document and
+    * every deletion derives from the record: no sink XML or sidecar is read
+    * back and no graph dir is listed except the ones this run rewrites.
+    * Those are the graphs it built zips into plus the graphs of any
+    * recorded run later than `_done` (a crash after the append), whose
+    * sidecars are rewritten from the recorded members. A rewritten graph
+    * dir keeps exactly its live zips, their sidecars and its dump
+    * documents: a zip no commit recorded is never listed, and is deleted
+    * there.
     *
     * Returns per-zip summary rows for this run (empty if nothing changed).
     */
@@ -290,36 +305,39 @@ object ZipPublisher {
               onPublishedForTests: () => Unit = () => (),
               metadataThreads: Int = 8): Seq[ZipInfo] = {
     import spark.implicits._
-    val f = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val f = new Path(sinkDir).getFileSystem(hadoopConf)
     FsWrite.mkdirs(f, new Path(sinkDir))
     val stateDir = s"$sinkDir/_published"
     val donePath = new Path(stateDir, "_done")
 
-    // the record: one small row per recorded zip comes back — its summary,
-    // run, and for an end part the digest of its membership (members stay
-    // in the table) — plus the last run whose metadata tail finished
+    // the record, one row per graph: its zips, each with its run and batch
+    // mark, and its latest end part's run and members (an older end's
+    // members never leave the executors)
     val record = graft.state.CompactedAppendTable.read(spark, stateDir)
-    val recordedRows: Seq[(ZipInfo, Long, String)] = timed("publish.readRecord") {
+    val graphRecords: Seq[(String, Seq[(ZipInfo, Long, Long)], (Long, Seq[Member]))] =
       record.toSeq.flatMap { r =>
-        val zipCols = r.columns.filterNot(Set("run", "members")).map(col)
-        r.select(struct(zipCols: _*), col("run"),
-          when(!col("complete"), membershipDigest(
-            transform(col("members"), m => identity(m("resource"), m("md5"))))))
-          .as[(ZipInfo, Long, String)].collect()
+        val zipCols = Encoders.product[ZipInfo].schema.fieldNames.toSeq.map(col)
+        timed("publish.readRecord")(r.groupBy("graph_b64").agg(
+            collect_list(struct(struct(zipCols: _*).as("_1"), col("run").as("_2"),
+              col("throughBatch").as("_3"))),
+            max_by(struct(col("run").as("_1"), col("members").as("_2")),
+              when(!col("complete"), col("run"))))
+          .as[(String, Seq[(ZipInfo, Long, Long)], (Long, Seq[Member]))].collect())
       }
-    }
-    val recorded: Seq[(ZipInfo, Long)] = recordedRows.map(r => (r._1, r._2))
+    val recorded: Seq[(ZipInfo, Long)] = graphRecords.flatMap(_._2.map(z => (z._1, z._2)))
+    val mark = graphRecords.flatMap(_._2.map(_._3)).maxOption.getOrElse(-1L)
+    val run = recorded.map(_._2).maxOption.fold(0L)(_ + 1)
+    val byGraph: Map[String, Seq[ZipInfo]] = graphRecords.map { case (g, zs, _) => g -> zs.map(_._1) }.toMap
     val done = if (record.isEmpty) -1L else try {
       val in = f.open(donePath)
       try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong finally in.close()
     } catch { case _: java.io.FileNotFoundException => -1L }
-    val run = recorded.map(_._2).maxOption.fold(0L)(_ + 1)
-    val byGraph: Map[String, Seq[(ZipInfo, Long)]] = recorded.groupBy(_._1.graph_b64)
     // members of the zips of runs whose metadata tail never finished: the
     // sidecars they staged are rewritten from these (a crash-recovery read)
-    val pending = recorded.filter(_._2 > done)
-    val pendingManifests: Map[(String, String), String] = record match {
-      case Some(r) if pending.nonEmpty =>
+    val unfinished = recorded.filter(_._2 > done)
+    val unfinishedManifests: Map[(String, String), String] = record match {
+      case Some(r) if unfinished.nonEmpty =>
         r.filter(col("run") > done).select("graph_b64", "zipName", "members")
           .as[(String, String, Seq[Member])].collect()
           .map { case (g, z, ms) =>
@@ -328,233 +346,111 @@ object ZipPublisher {
       case _ => Map.empty
     }
 
-    // inventory minus already-definitively-published resources, pruned
-    // BEFORE the checksum pass so published files are never read again; when
-    // the pipeline's graph-folder index is supplied, the fan-out is driven
-    // by it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
-    val listed = timed("publish.inventory")(ManifestBuilder.list(spark, patchDir)).toDF()
-    val inGraphs = graphIndex match {
-      case None => listed
-      case Some(gi) => listed.join(
-        broadcast(gi.select(col("g_b64").as("graph_b64")).distinct()),
-        Seq("graph_b64"), "left_semi")
-    }
-    val unpublished = record.fold(inGraphs)(r => inGraphs.join(
-      r.filter(col("complete")).select(explode(col("members.resource")).as("resource")),
-      Seq("resource"), "left_anti"))
-    val inv = ManifestBuilder.checksummed(spark, unpublished.as[ManifestBuilder.Listed])
-
-    // Greedy per-graph windows over the unpublished remainder: a window
-    // closes at `filesPerZip` files OR `maxZipBytes` member bytes, whichever
-    // first (zipsynchronizer.py:26-31 / syncdirector.py:53-55 — the 50 MB
-    // sitemap-community limit a consumer relies on; 1000 default-size patch
-    // files would otherwise pack ~12.5 GB into one zip). Window completeness
-    // is only known when the window CLOSES — a stateful scan no fixed-frame
-    // SQL window expresses — so this is a typed pass that buffers at most
-    // one window; everything downstream stays declarative.
-    val fpz = filesPerZip
-    val mzb = maxZipBytes
-    val windowed0 = inv
-      .select(col("graph_b64"), col("resource"), col("md5"),
-        col("length").cast("long").as("length"), col("lastmod"))
-      .repartition(col("graph_b64"))
-      .sortWithinPartitions("graph_b64", "resource")
-      .as[(String, String, String, Long, String)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        // each next() cuts and yields ONE window, so the task buffers at
-        // most `filesPerZip` rows regardless of how many files a hot graph
-        // has — a 10^12-doc graph's inventory never materializes in one task
-        val windows = new Iterator[Seq[WindowedFile]] {
-          private var curGraph: String = _
-          private var batch = 0L
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[WindowedFile] = {
-            val g = buf.head._1
-            if (g != curGraph) { curGraph = g; batch = 0L }
-            val cur = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, String)]
-            var bytes = 0L
-            var closedFull = false
-            while (!closedFull && buf.hasNext && buf.head._1 == g) {
-              val r = buf.head
-              if (cur.nonEmpty && bytes + r._4 > mzb) closedFull = true // r starts the NEXT window
-              else {
-                buf.next()
-                cur += ((r._2, r._3, r._4, r._5)); bytes += r._4
-                if (cur.size >= fpz || bytes >= mzb) closedFull = true
-              }
-            }
-            val out = cur.map { case (res, m, len, lm) =>
-              WindowedFile(g, res, m, len, lm, batch, closedFull) }
-            batch += 1
-            out.toSeq
-          }
-        }
-        windows.flatten
-      }
-      .toDF()
-    val windowed = timed("publish.windowedInventory") {
-      windowed0.localCheckpoint() // consumed 3x below (J3 check, zip build, record)
+    // what to window, from write records only: the new batches' files and
+    // the members of each graph's live end part (the end of the graph's
+    // latest run), refreshed from their batches' records. When the
+    // pipeline's graph-folder index is supplied, the fan-out is driven by
+    // it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
+    val inIndex: String => Boolean = graphIndex.fold((_: String) => true)(
+      _.select("g_b64").distinct().as[String].collect().toSet)
+    val liveEnds: Map[String, Seq[Member]] = graphRecords.collect {
+      case (g, zs, end) if end != null && end._1 == zs.map(_._2).max && inIndex(g) => g -> end._2
+    }.toMap
+    val pf = new Path(patchDir).getFileSystem(hadoopConf)
+    val patchRoot = pf.makeQualified(new Path(patchDir))
+    def recordOf(dir: Path): Option[Seq[(String, Member)]] =
+      PatchWriter.readRecord(pf, dir).map(_.map(w =>
+        w.g_b64 -> Member(s"$dir/g_b64=${w.g_b64}/${w.file}", w.md5, w.bytes, w.lastmod)))
+    val (through, candidates) = timed("publish.batchRecords") {
+      // the batches past the mark, in id order, up to the first without a
+      // record: its files may not all be written yet
+      val ids = (try pf.listStatus(patchRoot).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .map(_.getPath.getName).collect { case BatchDir(id) => id.toLong }.filter(_ > mark).sorted
+      val fresh: Seq[(Long, Seq[(String, Member)])] = ids.iterator
+        .map(id => id -> recordOf(new Path(patchRoot, s"batch_$id")))
+        .takeWhile(_._2.isDefined).map { case (id, ms) => id -> ms.get }.toSeq
+      // an end member its batch's record no longer lists keeps its recorded row
+      val current: Map[String, Member] = liveEnds.values.flatten.map(m => batchDirOf(m.resource))
+        .toSeq.distinct.flatMap(d => recordOf(new Path(d)).toSeq.flatten)
+        .map { case (_, m) => m.resource -> m }.toMap
+      val candidates: Map[String, Seq[Member]] =
+        (liveEnds.toSeq.flatMap { case (g, ms) => ms.map(m => g -> current.getOrElse(m.resource, m)) } ++
+          fresh.flatMap(_._2).filter(gm => inIndex(gm._1)))
+          .groupMap(_._1)(_._2).map { case (g, ms) => g -> ms.sortBy(_.resource) }
+      (fresh.lastOption.fold(mark)(_._1), candidates)
     }
 
     // J3: a graph is rebuilt when it has a complete window or its end
-    // membership, as (basename, md5) pairs, differs from its recorded
-    // current end's — a member whose CONTENT changed under the same name
-    // triggers a rebuild, exactly the reference's resource+checksum identity
-    // (zipsynchronizer.py:149-156). Both sides are membership digests: ONE
-    // small row per graph comes back, never the file rows.
-    val liveByGraph: Map[String, Seq[ZipInfo]] = byGraph.map { case (g, zs) => g -> live(zs) }
-    val endDigest: Map[ZipInfo, String] =
-      recordedRows.collect { case (z, _, d) if !z.complete => z -> d }.toMap
-    val currentEnd: Map[String, String] = liveByGraph.flatMap { case (g, zs) =>
-      zs.find(!_.complete).map(z => g -> endDigest(z))
-    }
-    val rebuilt: Seq[(String, Long, Boolean)] = windowed.groupBy("graph_b64").agg(
-        coalesce(max(when(col("is_complete"), col("batch") + 1)), lit(0L)).as("nDefs"),
-        collect_list(when(!col("is_complete"), identity(col("resource"), col("md5")))).as("end"))
-      .select(col("graph_b64"), col("nDefs"), membershipDigest(col("end")), size(col("end")) > 0)
-      .as[(String, Long, String, Boolean)].collect().toSeq
-      .collect { case (g, nDefs, end, hasEnd)
-        if nDefs > 0 || !currentEnd.get(g).contains(end) => (g, nDefs, hasEnd) }
-
-    // zip NAMES, max-index+1 over the graph's live zips (reference
-    // semantics, zipsynchronizer.py:274-281): window k of a rebuilt graph is
-    // part_def_<defBase + k>, its trailing incomplete window part_end_<endBase>.
-    // They double as the crash-cleanup manifest (zipsynchronizer.py:69-109:
-    // on failure delete every provisional artifact of the failed run, then
-    // re-raise).
-    val planned: Seq[(String, Long, String)] = rebuilt.flatMap { case (g, nDefs, hasEnd) =>
-      val zs = liveByGraph.getOrElse(g, Nil)
-      val (defBase, endBase) = (maxIndex(zs, complete = true) + 1, maxIndex(zs, complete = false) + 1)
-      (0L until nDefs).map(k => (g, k, f"part_def_${defBase + k}%05d")) ++
-        (if (hasEnd) Seq((g, nDefs, f"part_end_$endBase%05d")) else Nil)
-    }
-    val plannedZips = planned.map { case (g, _, name) => (g, name) }
-    val assigned = windowed
-      .join(broadcast(planned.toDF("graph_b64", "batch", "zipName")), Seq("graph_b64", "batch"))
-
-    // distributed zip build: stream each (graph, zip) group's files straight
-    // into the final zip; only the one-line summary per zip returns. The
-    // explicit partition count keeps adaptive execution from coalescing
-    // the build into one task.
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val sink = sinkDir
-    val buildJob = assigned
-      .select("graph_b64", "zipName", "is_complete", "resource", "md5", "length", "lastmod")
-      .repartition(spark.sparkContext.defaultParallelism, col("graph_b64"), col("zipName"))
-      .sortWithinPartitions("graph_b64", "zipName", "resource")
-      .mapPartitions { it =>
-        val groups = new Iterator[(String, String, Boolean, Seq[(String, String, Long, String)])] {
-          val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): (String, String, Boolean, Seq[(String, String, Long, String)]) = {
-            val h = buf.head
-            val (g, name, complete) = (h.getString(0), h.getString(1), h.getBoolean(2))
-            val members = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, String)]
-            while (buf.hasNext && buf.head.getString(0) == g && buf.head.getString(1) == name) {
-              val r = buf.next()
-              members += ((r.getString(3), r.getString(4), r.getLong(5), r.getString(6)))
-            }
-            (g, name, complete, members.toSeq)
-          }
-        }
-        groups.map { case (g, name, complete, members) =>
-          // a zip entry is named by the member's basename; two batches
-          // written under one checkpoint repeat `rdf_out_<ckpt>-<serial>`
-          // in a graph, which ZipOutputStream would reject opaquely
-          val byName = scala.collection.mutable.HashMap.empty[String, String]
-          members.foreach { case (res, _, _, _) =>
-            val base = baseName(res)
-            byName.put(base, res).foreach { other =>
-              throw new IllegalStateException(s"graph $g: zip $name would hold two " +
-                s"members named $base: $other and $res (patch batches written " +
-                "under the same checkpoint)")
-            }
-          }
-          val zfs = new Path(sink).getFileSystem(hconf.value)
-          val gDir = new Path(sink, g)
-          val zipPath = new Path(gDir, s"$name.zip")
-          // task-attempt-unique temp + rename-on-commit: a speculative or
-          // retried task never exposes a half-written final zip
-          val stage = s".tmpzip${java.util.UUID.randomUUID().toString.take(8)}"
-          val tmpPath = new Path(gDir, s"$name.zip$stage")
-          val manifest = manifestXml(members.map { case (res, m, len, lm) =>
-            (baseName(res), m, len, lm)
-          })
-          val zos = new java.util.zip.ZipOutputStream(FsWrite.create(zfs, tmpPath))
-          zos.setLevel(1) // speed over ratio: patch text compresses well anyway
-          zos.putNextEntry(new java.util.zip.ZipEntry("manifest.xml"))
-          zos.write(manifest.getBytes(StandardCharsets.UTF_8)); zos.closeEntry()
-          members.foreach { case (res, _, _, _) =>
-            val p = new Path(res.stripPrefix("file:"))
-            zos.putNextEntry(new java.util.zip.ZipEntry(p.getName))
-            val in = zfs.open(p)
-            try org.apache.commons.io.IOUtils.copy(in, zos) finally in.close()
-            zos.closeEntry()
-          }
-          zos.close()
-          FsWrite.replace(zfs, tmpPath, zipPath)
-          val st = zfs.getFileStatus(zipPath)
-          val md5hex = ManifestBuilder.md5Hex(zfs, zipPath)
-          // the sidecar XMLs (manifest_<zip>.xml, plus <zip>.xml for an end
-          // part) are written here, where the member rows are, but STAGED
-          // under the zip's temp suffix: the driver renames them into place
-          // after the record commit (the crash tests' post-commit window
-          // still sees zero metadata). ONE summary line per zip returns —
-          // NOT the manifest body: the manifest is O(zip members), so
-          // collecting it made the zip-build collect O(total member rows) on
-          // the driver (~150 B/member — multi-GB driver ingress at a
-          // 50k-zip publish).
-          sidecarNames(name, complete).foreach { n =>
-            val out = FsWrite.create(zfs, new Path(gDir, n + stage))
-            try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
-          }
-          (ZipInfo(g, name, complete, members.size.toLong, st.getLen, md5hex,
-            members.map(_._4).max), stage)
-        }
+    // window's (basename, md5) set differs from its live end's recorded
+    // one — a member whose CONTENT changed under the same name triggers a
+    // rebuild, exactly the reference's resource+checksum identity
+    // (zipsynchronizer.py:149-156). Zip NAMES are max-index+1 over every
+    // zip the graph ever recorded (zipsynchronizer.py:274-281), so a
+    // superseded end's name is never reused. They double as the
+    // crash-cleanup manifest (zipsynchronizer.py:69-109: on failure delete
+    // every provisional artifact of the failed run, then re-raise).
+    val planned: Seq[Planned] = candidates.toSeq.sortBy(_._1).flatMap { case (g, ms) =>
+      val (defs, end) = windows(ms, filesPerZip, maxZipBytes)
+      if (defs.isEmpty && liveEnds.get(g).exists(e => contentIds(e) == contentIds(end))) Nil
+      else {
+        val zs = byGraph.getOrElse(g, Nil)
+        val (defBase, endBase) = (maxIndex(zs, complete = true) + 1, maxIndex(zs, complete = false) + 1)
+        defs.zipWithIndex.map { case (w, k) => Planned(g, f"part_def_${defBase + k}%05d", complete = true, w) } ++
+          (if (end.nonEmpty) Seq(Planned(g, f"part_end_$endBase%05d", complete = false, end)) else Nil)
       }
+    }
+    // a zip entry is named by the member's basename; two batches written
+    // under one checkpoint repeat `rdf_out_<ckpt>-<serial>` in a graph
+    planned.foreach { p =>
+      p.members.groupBy(m => baseName(m.resource)).collectFirst { case (base, Seq(a, b, _*)) =>
+        throw new IllegalStateException(s"graph ${p.graph_b64}: zip ${p.zipName} would hold " +
+          s"two members named $base: ${a.resource} and ${b.resource} (patch batches written " +
+          "under the same checkpoint)")
+      }
+    }
 
-    // crash/retry discipline (zipsynchronizer.py:69-109): zips build first;
-    // the record append commits BEFORE any destructive step or metadata
-    // write, so a crash in between re-runs against consistent state — the
-    // left_anti prune sees exactly the completed zips, and the next run
-    // finishes this one's metadata tail. Any failure up to and including
-    // the append deletes every artifact this run created and re-raises.
+    // crash/retry discipline (zipsynchronizer.py:69-109): zips build first,
+    // one task per group of planned zips (no exchange, so adaptive execution
+    // has nothing to coalesce); the record append commits BEFORE any
+    // destructive step or metadata write, so a crash in between re-runs
+    // against consistent state, and the next run finishes this one's
+    // metadata tail. Any failure up to and including the append deletes
+    // every artifact this run created and re-raises.
+    val conf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
+    val sink = sinkDir
     val built = try {
-      val rows = if (planned.isEmpty) Array.empty[(ZipInfo, String)]
-        else timed("publish.zipBuild")(buildJob.collect())
+      val rows = if (planned.isEmpty) Seq.empty[(ZipInfo, String)]
+        else timed("publish.zipBuild")(
+          planned.toDS().mapPartitions(_.map(buildZip(_, sink, conf.value))).collect().toSeq)
       if (rows.nonEmpty) {
-        onBuiltForTests(rows.map(_._1).toSeq)
-        // one row per built zip, its members gathered from the windows in
-        // manifest order; compacted-append layout bounds the record's file
-        // count across thousands of publish runs, ~4M members per file
-        val members = assigned
-          .groupBy("graph_b64", "zipName")
-          .agg(sort_array(collect_list(struct(col("resource"), col("md5"), col("length"),
-            col("lastmod")))).as("members"))
+        onBuiltForTests(rows.map(_._1))
+        // one row per built zip with its members, in one file; the
+        // compacted-append layout bounds the record's file count across
+        // thousands of publish runs, ~4M members per file
+        val members = planned.map(p => (p.graph_b64, p.zipName) -> p.members).toMap
         timed("publish.recordAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
-          rows.map(_._1).toSeq.toDF().join(members, Seq("graph_b64", "zipName"))
-            .withColumn("run", lit(run)),
+          rows.map { case (z, _) => Recorded(z.graph_b64, z.zipName, z.complete, z.nResources,
+            z.length, z.md5, z.lastmod, members((z.graph_b64, z.zipName)), run, through)
+          }.toDF().coalesce(1),
           targetFiles = zips => (zips / 4000L + 1L).toInt))
       }
-      rows.toSeq
+      rows
     } catch {
       case e: Throwable =>
-        cleanupPlanned(f, sinkDir, plannedZips)
+        cleanupPlanned(f, sinkDir, planned.map(p => (p.graph_b64, p.zipName)))
         throw e
     }
-    if (built.isEmpty && pending.isEmpty) return Seq.empty
+    if (built.isEmpty && unfinished.isEmpty) return Seq.empty
     // beyond this point zips + record are COMMITTED: a crash below leaves
     // a run later than `_done`, whose graphs the next publish rewrites
     onPublishedForTests()
 
-    val nowIso = ManifestBuilder.IsoUtc.format(java.time.Instant.now())
+    val nowIso = PatchWriter.IsoUtc.format(java.time.Instant.now())
     val builtInfos: Seq[ZipInfo] = built.map(_._1)
     val stages: Map[ZipInfo, String] = built.toMap
     val zipsOf: Map[String, Seq[(ZipInfo, Long)]] =
       (recorded ++ builtInfos.map(_ -> run)).groupBy(_._1.graph_b64)
-    val rewrite = (builtInfos ++ pending.map(_._1)).map(_.graph_b64).distinct
+    val rewrite = (builtInfos ++ unfinished.map(_._1)).map(_.graph_b64).distinct
 
     // per-graph metadata. Graphs are independent (disjoint directories), so
     // the writes run on a small thread pool: serially this driver loop is
@@ -572,7 +468,7 @@ object ZipPublisher {
         stages.get(z) match {
           case Some(stage) =>
             names.foreach(n => FsWrite.replace(f, new Path(gDir, n + stage), new Path(gDir, n)))
-          case None => pendingManifests.get((g, z.zipName)).foreach(xml =>
+          case None => unfinishedManifests.get((g, z.zipName)).foreach(xml =>
             names.foreach(n => FsWrite.atomic(f, new Path(gDir, n), xml)))
         }
       }
@@ -592,7 +488,7 @@ object ZipPublisher {
     // top-level source description over every recorded graph
     FsWrite.atomic(f, new Path(sinkDir, ".well-known/resourcesync"),
       sourceDescriptionXml(zipsOf.keys.toSeq.map(g => s"$publishUrl$g/capability-list.xml")))
-    FsWrite.atomic(f, donePath, (if (built.nonEmpty) run else pending.map(_._2).max).toString)
+    FsWrite.atomic(f, donePath, (if (built.nonEmpty) run else unfinished.map(_._2).max).toString)
 
     builtInfos
   }

@@ -443,7 +443,7 @@ final class QuadLogPipeline(
     val epoch = facts.epoch.getOrElse(sys.error("bootstrap first"))
     recoverPartialCommit()
     if (alreadyCommitted(batchId)) return BatchResult(batchId, 0, 0, 0) // idempotent re-run
-    val (newContrib, remap) = timed("incr.phase.derive")(derive(batchId, changed))
+    val (newContrib, remap, canonStaged) = timed("incr.phase.derive")(derive(batchId, changed))
     val (touchedUrls, remapUrls) =
       timed("incr.phase.touchedUrls")(touchedUrlSet(remap, changed, deletedUrls))
     try {
@@ -455,22 +455,23 @@ final class QuadLogPipeline(
       val files = timed("incr.phase.sinks")(
         sinks(batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, nTouched,
           deletedUrls))
-      timed("incr.phase.commit")(commit(epoch, batchId, changed, patchesC, files))
+      timed("incr.phase.commit")(commit(epoch, batchId, changed, patchesC, files, canonStaged))
     } finally touchedUrls.unpersist()
   }
 
-  /** Phase derive: the changed pages' canonical contributions and, after a
-    * cluster merge, the checkpointed (oldRep -> newRep) pairs and count. */
+  /** Phase derive: the changed pages' canonical contributions, after a
+    * cluster merge the checkpointed (oldRep -> newRep) pairs and count, and
+    * whether the canon store staged a snapshot for the batch. */
   private def derive(batchId: Long, changed: Dataset[Page])
-      : (DataFrame, Option[(DataFrame, Long)]) = {
+      : (DataFrame, Option[(DataFrame, Long)], Boolean) = {
     // CHANGED-page extraction materialized ONCE: both the canon IRI pass
     // and the contribution rewrite consume it, and lazily each re-ran the
     // extraction kernel. Unlike bootstrap (corpus-sized — deliberately
     // recomputed, see rawQuads), this is O(batch) rows in the block store,
     // the same bound as newSide in signedDelta.
     val rawNew = timed("incr.rawNew")(rawQuads(changed).localCheckpoint())
-    val (newContrib, remapPairs) =
-      if (!canonicalize) (rawNew, None)
+    val (newContrib, remapPairs, canonStaged) =
+      if (!canonicalize) (rawNew, None, false)
       else {
         val (view, viewRows, remapped, canonChanged, canonChangedRows) = extendedCanonMap(rawNew)
         // STAGED, not committed: the extended map must move atomically with
@@ -481,7 +482,10 @@ final class QuadLogPipeline(
         // rewritten. Staging keeps canon.read() on the OLD snapshot until
         // the single marker-guarded finalize in commit flips all three.
         // MOR delta: only the CHANGED rows land (tombstones = their ids).
-        timed("incr.canonStage")(
+        // A batch with no changed id stages nothing, as the graph index
+        // commits nothing without a new graph: canon keeps its snapshot.
+        val stage = canonChangedRows > 0
+        if (stage) timed("incr.canonStage")(
           canon.stageDelta(
             additions = IriCanonicalizer.withSignatures(canonChanged)
               .withColumn("bucket", canon.bucketCol(col("id"))),
@@ -489,7 +493,7 @@ final class QuadLogPipeline(
               .withColumn("bucket", canon.bucketCol(col("id"))),
             tombstoneRows = canonChangedRows,
             id = batchId)) // one map row per id by construction
-        (rewriteIfNonTrivial(rawNew, view, viewRows), remapped)
+        (rewriteIfNonTrivial(rawNew, view, viewRows), remapped, stage)
       }
     // Cluster merges are rare so the pair set is usually tiny, but it stays
     // DISTRIBUTED: a semi-join against it (auto-broadcast when small)
@@ -500,7 +504,7 @@ final class QuadLogPipeline(
     val remap = remapPairs
       .map { r => val c = r.localCheckpoint(); c -> c.count() }
       .filter(_._2 > 0)
-    (newContrib.withColumn("bucket", contrib.bucketCol(col("url"))), remap)
+    (newContrib.withColumn("bucket", contrib.bucketCol(col("url"))), remap, canonStaged)
   }
 
   /** Phase touchedUrls: changed, deleted and remap-affected urls (CACHED;
@@ -736,7 +740,7 @@ final class QuadLogPipeline(
 
   /** Phase commit. */
   private def commit(epoch: String, batchId: Long, changed: Dataset[Page],
-                     patchesC: DataFrame, files: Long): BatchResult = {
+                     patchesC: DataFrame, files: Long, canonStaged: Boolean): BatchResult = {
     // one job for both tallies (checkpointed patches)
     val tallies = timed("incr.tallies")(patchesC.groupBy("op").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap)
@@ -745,11 +749,11 @@ final class QuadLogPipeline(
     // lineage BEFORE the marker: a crash before the marker recomputes the
     // batch (duplicate lineage rows are harmless — readers aggregate);
     // after the marker, recovery replays the pointer flips below.
-    // The marker-guarded finalize flips ALL staged stores (canon included —
-    // it moves atomically with the data it canonicalizes).
+    // The marker-guarded finalize flips ALL staged stores (canon, when it
+    // staged — it moves atomically with the data it canonicalizes).
     timed("incr.lineage")(writeLineage(epoch, batchId, changed, added, deleted, files))
     FsWrite.atomic(hfs, markerPath, batchId.toString)
-    if (canonicalize) canon.finalizeCommit(batchId)
+    if (canonStaged) canon.finalizeCommit(batchId)
     facts.finalizeCommit(batchId)
     contrib.finalizeCommit(batchId)
     // expire snapshots the just-finalized commits unreferenced (folded

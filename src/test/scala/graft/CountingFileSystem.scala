@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.{ContentSummary, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ContentSummary, FSDataInputStream, FSDataOutputStream, FileStatus, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import java.util.concurrent.ConcurrentHashMap
@@ -10,12 +11,14 @@ import java.util.concurrent.atomic.AtomicLong
   * calls made on it: listings of a directory (`listStatus` on a file, which
   * Spark's file index issues for every path it is handed, is not a
   * listing), content summaries, status probes (`exists`, `getFileStatus`),
-  * creates, renames, deletes and mkdirs. The test session registers it as
+  * opens, creates, renames, deletes and mkdirs. The test session registers it as
   * `fs.countfs.impl`; a spec roots its data at `countfs://` + a local path
   * and compares [[CountingFileSystem.counts]] before and after the code it
-  * pins, or asks which paths it listed, created, renamed or made dirs of
-  * ([[CountingFileSystem.pathsDuring]]). Counts are JVM-wide, and specs run
-  * one at a time. */
+  * pins, or asks which paths it listed, probed, opened, created, renamed
+  * or made dirs of ([[CountingFileSystem.pathsDuring]]). The status probes
+  * the local `listStatus` makes of each child count as part of the one
+  * listing, as on a file system that lists in one call. Counts are
+  * JVM-wide, and specs run one at a time. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -24,13 +27,20 @@ class CountingFileSystem extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     if (pathToFile(f).isDirectory) note(DirListing, f)
-    super.listStatus(f)
+    inListing.set(true)
+    try super.listStatus(f) finally inListing.set(false)
   }
   override def getContentSummary(f: Path): ContentSummary = {
     bump(ContentSummaries); super.getContentSummary(f)
   }
-  override def exists(f: Path): Boolean = { bump(StatusProbes); super.exists(f) }
-  override def getFileStatus(f: Path): FileStatus = { bump(StatusProbes); super.getFileStatus(f) }
+  override def exists(f: Path): Boolean = { note(StatusProbes, f); super.exists(f) }
+  override def getFileStatus(f: Path): FileStatus = {
+    if (!inListing.get) note(StatusProbes, f)
+    super.getFileStatus(f)
+  }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    note(Opens, f); super.open(f, bufferSize)
+  }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
                       blockSize: Long, progress: Progressable): FSDataOutputStream = {
     note(Creates, f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
@@ -50,6 +60,8 @@ class CountingFileSystem extends RawLocalFileSystem {
     note(Mkdirs, f); super.mkdirs(f, permission)
   }
 
+  private val inListing = ThreadLocal.withInitial[Boolean](() => false)
+
   private def note(kind: String, f: Path): Unit = {
     bump(kind)
     events.add(kind -> makeQualified(f).toUri.getPath.stripSuffix("/"))
@@ -62,6 +74,7 @@ object CountingFileSystem {
   val DirListing = "listStatus(dir)"
   val ContentSummaries = "getContentSummary"
   val StatusProbes = "exists/getFileStatus"
+  val Opens = "open"
   val Creates = "create"
   val Renames = "rename"
   val Deletes = "delete"
@@ -82,8 +95,8 @@ object CountingFileSystem {
   def dirsListedDuring(body: => Unit): Seq[String] =
     pathsDuring(body).getOrElse(DirListing, Seq.empty)
 
-  /** The local paths `body` listed (dirs), created, renamed (sources) and
-    * made dirs of, per kind, in call order. */
+  /** The local paths `body` listed (dirs), probed, opened, created,
+    * renamed (sources) and made dirs of, per kind, in call order. */
   def pathsDuring(body: => Unit): Map[String, Seq[String]] = {
     events.clear()
     body

@@ -1,9 +1,10 @@
 package graft.publish
 
-import graft.GraftSpec
+import graft.{CountingFileSystem, GraftSpec}
+import graft.plans.PatchWriter
 import graft.sources.{ExpectedKg, PageGen}
 import graft.streaming.QuadLogPipeline
-import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -37,11 +38,32 @@ class PublishSpec extends GraftSpec {
   private val g64 = java.util.Base64.getEncoder
     .encodeToString("http://graph.example.org/g1".getBytes("UTF-8"))
 
-  private def writePatch(src: String, serial: Int): Unit = {
-    val dir = Paths.get(src, s"g_b64=$g64")
+  /** Write patch file `serial` of graph g1 into `src/batch_<batch>` and
+    * re-record the batch. */
+  private def writePatch(src: String, serial: Int, batch: Int = 0): Unit = {
+    val dir = Paths.get(src, s"batch_$batch", s"g_b64=$g64")
     Files.createDirectories(dir)
     Files.writeString(dir.resolve(f"rdf_out_00000000000000-$serial%014d"),
       Fixture.sampleBody(serial))
+    recordBatch(Paths.get(src, s"batch_$batch"))
+  }
+
+  /** Write a batch dir's record the way PatchWriter does: one row per
+    * patch file under its `g_b64=` dirs, with the file's length, md5, body
+    * lines and the time of writing. */
+  private def recordBatch(batch: java.nio.file.Path): Unit = {
+    val rows = batch.toFile.listFiles().toSeq.filter(_.getName.startsWith("g_b64=")).flatMap { g =>
+      g.listFiles().toSeq.filter(_.getName.startsWith("rdf_out_")).map { f =>
+        val bytes = Files.readAllBytes(f.toPath)
+        val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+          .map("%02x".format(_)).mkString
+        val lines = new String(bytes, "UTF-8").split('\n').count(l => l.nonEmpty && !l.startsWith("#"))
+        PatchWriter.Written(g.getName.stripPrefix("g_b64="), f.getName, bytes.length.toLong, md5,
+          lines.toLong, PatchWriter.IsoUtc.format(java.time.Instant.now()))
+      }
+    }
+    PatchWriter.writeRecord(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
+      new Path(batch.toUri), rows)
   }
   private object Fixture {
     def sampleBody(i: Int): String =
@@ -49,7 +71,7 @@ class PublishSpec extends GraftSpec {
   }
   private def exists(p: String): Boolean = new java.io.File(p).exists()
 
-  test("listed inventory == the binaryFile formulation on a bootstrap-plus-batch tree") {
+  test("the write record == the binaryFile formulation on a bootstrap-plus-batch tree") {
     val root = tmpDir("publist")
     val n = 60L
     val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
@@ -69,14 +91,59 @@ class PublishSpec extends GraftSpec {
         regexp_extract(col("path"), "g_b64=([^/]+)/", 1).as("graph_b64"),
         col("length"),
         md5(col("content")).as("md5"),
-        date_format(col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("lastmod"))
+        size(filter(split(col("content").cast("string"), "\n"),
+          l => l =!= "" && !l.startsWith("#"))).cast("long").as("lines"),
+        unix_timestamp(col("modificationTime")).as("mtime"))
       .filter(col("graph_b64") =!= "") // the dump trailer names no graph
-    val got = ManifestBuilder.checksummed(spark, ManifestBuilder.list(spark, patchDir).toDS())
-    assert(got.schema.map(f => (f.name, f.dataType)) == oracle.schema.map(f => (f.name, f.dataType)))
-    val (gotRows, want) = (got.collect().toSet, oracle.collect().toSet)
+      .as[(String, String, Long, String, Long, Long)].collect()
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val got = Seq("batch_0", "batch_1").flatMap { b =>
+      val dir = fs.makeQualified(new Path(s"$patchDir/$b"))
+      PatchWriter.readRecord(fs, dir).get.map(w =>
+        (s"$dir/g_b64=${w.g_b64}/${w.file}", w.g_b64, w.bytes, w.md5, w.lines,
+          java.time.Instant.parse(w.lastmod).getEpochSecond))
+    }
+    val (gotRows, want) = (got.map(r => r.copy(_6 = 0L)).toSet, oracle.map(r => r.copy(_6 = 0L)).toSet)
     assert(files.count() == want.size + 1, "the tree holds exactly one trailer")
     assert(new java.io.File(s"$patchDir/batch_1").isDirectory && want.size > 60)
-    assert(gotRows == want, s"extra=${(gotRows -- want).take(2)} missing=${(want -- gotRows).take(2)}")
+    assert(got.size == want.size && gotRows == want,
+      s"extra=${(gotRows -- want).take(2)} missing=${(want -- gotRows).take(2)}")
+    // lastmod is the write time: within a second or two of the file's mtime
+    val mtime = oracle.map(r => r._1 -> r._6).toMap
+    got.foreach(r => assert(math.abs(r._6 - mtime(r._1)) <= 2, s"lastmod of ${r._1}"))
+  }
+
+  test("recorded md5s and lengths are the bytes on disk: every patch file, every zip") {
+    val root = tmpDir("pubmd5")
+    val sink = tmpDir("pubmd5_sink")
+    val n = 60L
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
+      canonicalize = false, maxq = 40)
+    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000")
+    assert(ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 3).nonEmpty)
+    pipe.incremental(1L, "20240102000000",
+      spark.createDataset(ExpectedKg.changedIndices(n, 1).map(PageGen.pageFor(_, 1))),
+      spark.createDataset(ExpectedKg.deletedIndices(n, 1).map(PageGen.urlFor)))
+    assert(ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 3).nonEmpty)
+    def md5Of(p: java.nio.file.Path) = java.security.MessageDigest.getInstance("MD5")
+      .digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val written = Seq(0, 1).flatMap { b =>
+      val dir = Paths.get(root, "patches", s"batch_$b")
+      PatchWriter.readRecord(fs, new Path(dir.toUri)).get.map(w => (dir.resolve(s"g_b64=${w.g_b64}/${w.file}"), w))
+    }
+    assert(written.size > 60)
+    written.foreach { case (f, w) =>
+      val body = Files.readAllLines(f).toArray.count { case l: String => l.nonEmpty && !l.startsWith("#") }
+      assert((w.md5, w.bytes, w.lines) == ((md5Of(f), Files.size(f), body.toLong)), s"record of $f")
+    }
+    val zips = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
+      .select("graph_b64", "zipName", "md5", "length").as[(String, String, String, Long)].collect()
+    assert(zips.length > 20)
+    zips.foreach { case (g, z, m, len) =>
+      val f = Paths.get(sink, g, s"$z.zip")
+      if (Files.exists(f)) assert((m, len) == ((md5Of(f), Files.size(f))), s"record of $f")
+    }
   }
 
   test("publish runs as many Spark jobs for 4 batch dirs as for 1 (no per-dir listing job)") {
@@ -84,13 +151,16 @@ class PublishSpec extends GraftSpec {
     // for listing on the driver, the shape of a pipeline batch
     def tree(batches: Int): String = {
       val src = tmpDir(s"pubj$batches")
-      for (b <- 0 until batches; gi <- 0 until 40) {
-        val g = java.util.Base64.getEncoder
-          .encodeToString(s"http://graph.example.org/j$gi".getBytes("UTF-8"))
-        val dir = Paths.get(src, s"batch_$b", s"g_b64=$g")
-        Files.createDirectories(dir)
-        Files.writeString(dir.resolve(f"rdf_out_$b%014d-00000000000000"),
-          s"+ <http://s$b> <http://p> <http://o> <http://graph.example.org/j$gi> .\n")
+      for (b <- 0 until batches) {
+        for (gi <- 0 until 40) {
+          val g = java.util.Base64.getEncoder
+            .encodeToString(s"http://graph.example.org/j$gi".getBytes("UTF-8"))
+          val dir = Paths.get(src, s"batch_$b", s"g_b64=$g")
+          Files.createDirectories(dir)
+          Files.writeString(dir.resolve(f"rdf_out_$b%014d-00000000000000"),
+            s"+ <http://s$b> <http://p> <http://o> <http://graph.example.org/j$gi> .\n")
+        }
+        recordBatch(Paths.get(src, s"batch_$b"))
       }
       src
     }
@@ -108,12 +178,13 @@ class PublishSpec extends GraftSpec {
 
   test("a publish whose files all sit in complete zips reads none of their bytes") {
     val src = tmpDir("pubr_src"); val sink = tmpDir("pubr_sink")
-    val dir = Paths.get(src, s"g_b64=$g64")
+    val dir = Paths.get(src, "batch_0", s"g_b64=$g64")
     Files.createDirectories(dir)
     val line = "+ <http://s> <http://p> <http://o> <http://graph.example.org/g1> .\n"
     val body = line * ((1 << 20) / line.length)
     (0 until 4).foreach(i =>
       Files.writeString(dir.resolve(f"rdf_out_00000000000000-$i%014d"), s"$body# $i\n"))
+    recordBatch(Paths.get(src, "batch_0"))
     val r1 = ZipPublisher.publish(spark, src, sink, filesPerZip = 2)
     assert(r1.map(_.zipName).sorted == Seq("part_def_00000", "part_def_00001"))
     def bytesRead: Long = scala.jdk.CollectionConverters.ListHasAsScala(
@@ -128,7 +199,7 @@ class PublishSpec extends GraftSpec {
 
   test("two batches under one checkpoint fail loudly, naming graph, zip and both files") {
     val src = tmpDir("pubd_src"); val sink = tmpDir("pubd_sink")
-    Seq("batch_0", "batch_1").foreach(b => writePatch(s"$src/$b", 0))
+    Seq(0, 1).foreach(b => writePatch(src, 0, batch = b))
     val e = intercept[Exception](ZipPublisher.publish(spark, src, sink, filesPerZip = 10))
     val msg = e.getMessage
     Seq(g64, "part_end_00000", s"batch_0/g_b64=$g64/rdf_out_", s"batch_1/g_b64=$g64/rdf_out_")
@@ -193,7 +264,7 @@ class PublishSpec extends GraftSpec {
 
     // run 3: +2 resources (4 total) -> def part of 3 + NEW end part of 1;
     // the old end part and its sidecars are removed (do_publish tail)
-    (2 until 4).foreach(writePatch(src, _))
+    (2 until 4).foreach(writePatch(src, _, batch = 1))
     val r3 = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
     assert(r3.map(_.zipName).sorted == Seq("part_def_00000", "part_end_00001"))
     assert(r3.find(_.complete).get.nResources == 3)
@@ -213,7 +284,7 @@ class PublishSpec extends GraftSpec {
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3).isEmpty)
 
     // run 5: +3 -> previous end member + new ones regroup: def_00001 + end_00002
-    (4 until 7).foreach(writePatch(src, _))
+    (4 until 7).foreach(writePatch(src, _, batch = 2))
     val r5 = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
     assert(r5.map(_.zipName).sorted == Seq("part_def_00001", "part_end_00002"))
     val dump2 = Files.readString(Paths.get(s"$sink/$g64/resource-dump.xml"))
@@ -225,7 +296,7 @@ class PublishSpec extends GraftSpec {
     val src = tmpDir("pubb_src"); val sink = tmpDir("pubb_sink")
     // 4 small files + 1 big one; cap chosen so big lands alone in its window
     (0 until 2).foreach(writePatch(src, _))
-    val dir = Paths.get(src, s"g_b64=$g64")
+    val dir = Paths.get(src, "batch_0", s"g_b64=$g64")
     Files.writeString(dir.resolve(f"rdf_out_00000000000000-${2}%014d"),
       "x" * 5000) // oversized vs the 1KB cap below
     (3 until 5).foreach(writePatch(src, _))
@@ -246,10 +317,12 @@ class PublishSpec extends GraftSpec {
     assert(r1.map(_.zipName) == Seq("part_end_00000"))
     // unchanged -> idempotent
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 10).isEmpty)
-    // same basename, NEW content -> md5 differs -> rebuild under bumped index
-    Files.writeString(Paths.get(src, s"g_b64=$g64")
+    // same basename, NEW content, the batch re-recorded as its writer
+    // would -> md5 differs -> rebuild under bumped index
+    Files.writeString(Paths.get(src, "batch_0", s"g_b64=$g64")
       .resolve(f"rdf_out_00000000000000-${1}%014d"),
       Fixture.sampleBody(1) + "+ <http://extra> <http://p> <http://o> <http://graph.example.org/g1> .\n")
+    recordBatch(Paths.get(src, "batch_0"))
     val r3 = ZipPublisher.publish(spark, src, sink, filesPerZip = 10)
     assert(r3.map(_.zipName) == Seq("part_end_00001"), s"got ${r3.map(_.zipName)}")
     assert(!exists(s"$sink/$g64/part_end_00000.zip"))
@@ -347,7 +420,7 @@ class PublishSpec extends GraftSpec {
     assert(members.sorted == (0 until 7).map(i => f"part_def_$i%05d.zip").sorted)
 
     // evolution: two more files -> 9 zips -> chunks regrow/regroup cleanly
-    (7 until 9).foreach(writePatch(src, _))
+    (7 until 9).foreach(writePatch(src, _, batch = 1))
     val r2 = ZipPublisher.publish(spark, src, sink, filesPerZip = 1,
       maxItemsInList = 3)
     assert(r2.size == 2)
@@ -366,7 +439,7 @@ class PublishSpec extends GraftSpec {
     def multiGraphPatch(src: String, graph: Int): Unit = {
       val g = java.util.Base64.getEncoder
         .encodeToString(s"http://graph.example.org/many$graph".getBytes("UTF-8"))
-      val dir = Paths.get(src, s"g_b64=$g")
+      val dir = Paths.get(src, "batch_0", s"g_b64=$g")
       Files.createDirectories(dir)
       Files.writeString(dir.resolve("rdf_out_00000000000000-00000000000000"),
         s"# at checkpoint  00000000000000\n+ <http://s$graph> <http://p> <http://o> <http://graph.example.org/many$graph> .\n")
@@ -382,6 +455,7 @@ class PublishSpec extends GraftSpec {
     def timeTail(tag: String, nGraphs: Int, threads: Int): Double = {
       val src = tmpDir(s"pubmany_src_$tag"); val sink = tmpDir(s"pubmany_sink_$tag")
       (0 until nGraphs).foreach(multiGraphPatch(src, _))
+      recordBatch(Paths.get(src, "batch_0"))
       val mark = new java.util.concurrent.atomic.AtomicLong
       val r = ZipPublisher.publish(spark, src, sink, filesPerZip = 1,
         onPublishedForTests = () => mark.set(System.nanoTime()),
@@ -417,7 +491,7 @@ class PublishSpec extends GraftSpec {
       .map(_.zipName) == Seq("part_end_00000"))
     // run 2: 2 more files (4 total -> def_00000 + end_00001) crashes AFTER
     // the record append, BEFORE the metadata tail
-    (2 until 4).foreach(writePatch(src, _))
+    (2 until 4).foreach(writePatch(src, _, batch = 1))
     intercept[RuntimeException] {
       ZipPublisher.publish(spark, src, sink, filesPerZip = 3,
         onPublishedForTests = () => throw new RuntimeException("post-state crash"))
@@ -447,15 +521,17 @@ class PublishSpec extends GraftSpec {
       .foreach(n => Files.copy(gDir.resolve("part_end_00000.zip"), gDir.resolve(n)))
     val dumpBefore = Files.readString(gDir.resolve("resource-dump.xml"))
     // a publish into graph B leaves graph A alone
-    val dirB = Paths.get(srcB, s"g_b64=$gB")
+    // (one sink's batch ids rise across both patch roots)
+    val dirB = Paths.get(srcB, "batch_1", s"g_b64=$gB")
     Files.createDirectories(dirB)
     Files.writeString(dirB.resolve(f"rdf_out_00000000000000-${0}%014d"),
       "# at checkpoint  00000000000000\n+ <http://s> <http://p> <http://o> <http://graph.example.org/g2> .\n")
+    recordBatch(Paths.get(srcB, "batch_1"))
     assert(ZipPublisher.publish(spark, srcB, sink, filesPerZip = 3).forall(_.graph_b64 == gB))
     assert(Files.readString(gDir.resolve("resource-dump.xml")) == dumpBefore)
     // a publish into graph A rewrites it: listed are the recorded zips only,
     // and the copies are gone
-    writePatch(srcA, 2)
+    writePatch(srcA, 2, batch = 2)
     assert(ZipPublisher.publish(spark, srcA, sink, filesPerZip = 3)
       .map(_.zipName) == Seq("part_def_00000"))
     assertSettled(srcA, sink, filesPerZip = 3)
@@ -470,10 +546,11 @@ class PublishSpec extends GraftSpec {
       .encodeToString(s"http://graph.example.org/c$i".getBytes("UTF-8"))
     val src = tmpDir("pubc40_src"); val local = tmpDir("pubc40_sink")
     def patch(i: Int, serial: Int): Unit = {
-      val dir = Paths.get(src, s"g_b64=${gOf(i)}")
+      val dir = Paths.get(src, s"batch_$serial", s"g_b64=${gOf(i)}")
       Files.createDirectories(dir)
       Files.writeString(dir.resolve(f"rdf_out_00000000000000-$serial%014d"),
         s"+ <http://s$serial> <http://p> <http://o> <http://graph.example.org/c$i> .\n")
+      recordBatch(Paths.get(src, s"batch_$serial"))
     }
     (0 until 40).foreach(patch(_, 0))
     val sink = s"countfs://$local"
@@ -506,12 +583,116 @@ class PublishSpec extends GraftSpec {
       // stage event of the publish, so the listener has seen them all
       jobsRunBy(assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 1).size == 8))
     } finally spark.sparkContext.removeSparkListener(l)
-    // two stages of a publish run a typed mapPartitions: the window cut,
-    // then the zip build, the last one (the record append after it runs none)
+    // one stage of a publish runs a typed mapPartitions: the zip build
+    // (windows are planned on the driver; the record append runs none)
     val typed = scala.jdk.CollectionConverters.CollectionHasAsScala(stages).asScala
       .filter(_._1.contains("MapPartitions")).toSeq
-    assert(typed.size == 2, s"stages: $stages")
+    assert(typed.size == 1, s"stages: $stages")
     assert(typed.last._2 > 1, s"zip build ran in ${typed.last._2} task(s)")
+  }
+
+  test("an end absorbed into a def zip never has its name reused") {
+    val src = tmpDir("pubn_src"); val sink = tmpDir("pubn_sink")
+    (0 until 2).foreach(writePatch(src, _))
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
+      .map(_.zipName) == Seq("part_end_00000"))
+    // the third file closes the window: the end's members move into a def
+    // zip, and the graph's latest run has no end part
+    writePatch(src, 2, batch = 1)
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
+      .map(_.zipName) == Seq("part_def_00000"))
+    // a new end takes the next index over every end the graph ever had
+    writePatch(src, 3, batch = 2)
+    assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
+      .map(_.zipName) == Seq("part_end_00001"))
+    val names = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
+      .select("zipName").as[String].collect().toSeq
+    assert(names.distinct.size == names.size, s"a zip name recorded twice: ${names.sorted}")
+    assertSettled(src, sink, filesPerZip = 3)
+  }
+
+  /** `n` '+' patch rows in graph `g`, one file each at maxq 1. */
+  private def patchRows(g: String, from: Int, n: Int) = (from until from + n).map(i =>
+    ("+", s"http://s$i", "http://p", s"http://o$i", graft.model.TermKind.Iri,
+      null: String, null: String, g)).toDF("op", "s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
+
+  test("a batch dir without its write record is not published; re-running the batch publishes it") {
+    val root = tmpDir("pubrec"); val sink = tmpDir("pubrec_sink")
+    val g = "http://graph.example.org/g1"
+    def write(b: Int) = PatchWriter.write(spark, patchRows(g, 10 * b, 2), s"$root/batch_$b",
+      f"$b%014d", maxq = 1)
+    write(0)
+    assert(ZipPublisher.publish(spark, root, sink, filesPerZip = 10).map(_.nResources) == Seq(2L))
+    // batch 1's files landed, its record did not (a crash in between);
+    // batch 2 is complete, but publishing stops at the first incomplete batch
+    write(1); write(2)
+    assert(Files.deleteIfExists(Paths.get(root, "batch_1", PatchWriter.RecordName)))
+    assert(ZipPublisher.publish(spark, root, sink, filesPerZip = 10).isEmpty)
+    write(1) // the re-run
+    val r = ZipPublisher.publish(spark, root, sink, filesPerZip = 10)
+    assert(r.map(z => (z.zipName, z.nResources)) == Seq(("part_end_00001", 6L)), s"got $r")
+    assertSettled(root, sink, filesPerZip = 10)
+  }
+
+  test("countfs: publishing a batch after 2 or 8 published ones opens only new and end-part files") {
+    // each batch writes 4 files into one graph and is published alone; at
+    // filesPerZip 3 every third publish leaves no end part, so after 2 and
+    // after 8 publishes the graph's end part holds batch k-1's last 2 files
+    def run(published: Int): Map[String, Seq[String]] = {
+      val local = tmpDir(s"pubcnt$published")
+      val (src, sink) = (s"countfs://$local/patches", s"countfs://$local/sink")
+      def batch(b: Int): Unit = {
+        val dir = Paths.get(s"$local/patches", s"batch_$b", s"g_b64=$g64")
+        Files.createDirectories(dir)
+        (0 until 4).foreach(i =>
+          Files.writeString(dir.resolve(f"rdf_out_$b%014d-$i%014d"), Fixture.sampleBody(i)))
+        recordBatch(Paths.get(s"$local/patches", s"batch_$b"))
+      }
+      (0 until published).foreach { b => batch(b); ZipPublisher.publish(spark, src, sink, filesPerZip = 3) }
+      batch(published)
+      var out = Seq.empty[ZipPublisher.ZipInfo]
+      val calls = CountingFileSystem.pathsDuring {
+        out = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
+      }
+      assert(out.map(_.zipName).forall(_.startsWith("part_def_")) && out.size == 2, s"built $out")
+      // the record's own table reads grow with its file count; the rest
+      // must not grow with the batches published
+      calls.map { case (k, ps) =>
+        k -> ps.filterNot(_.contains("/sink/_published")).map(_.stripPrefix(local))
+      }
+    }
+    val (two, eight) = (run(2), run(8))
+    def of(calls: Map[String, Seq[String]], kind: String) = calls.getOrElse(kind, Nil)
+    Seq(2 -> two, 8 -> eight).foreach { case (k, calls) =>
+      assert(of(calls, CountingFileSystem.DirListing).toSet == Set("/patches", s"/sink/$g64"),
+        s"listed ${of(calls, CountingFileSystem.DirListing)}")
+      val opened = of(calls, CountingFileSystem.Opens)
+      val newFiles = (0 until 4).map(i => f"/patches/batch_$k/g_b64=$g64/rdf_out_$k%014d-$i%014d")
+      newFiles.foreach(f => assert(opened.count(_ == f) == 1, s"$f opened ${opened.count(_ == f)}x"))
+      assert(!opened.exists(_.startsWith(s"/patches/batch_${k - 2}/")),
+        s"opened a file of a batch all in def zips: $opened")
+      assert(opened.forall(p => p.startsWith(s"/patches/batch_$k/") ||
+        p.startsWith(s"/patches/batch_${k - 1}/")), s"opened $opened")
+    }
+    assert(two.map { case (k, v) => k -> v.size } == eight.map { case (k, v) => k -> v.size },
+      s"calls after 2: $two\nafter 8: $eight")
+  }
+
+  test("publishing one churn batch runs a pinned number of Spark jobs") {
+    val root = tmpDir("pubjobs"); val sink = tmpDir("pubjobs_sink")
+    val n = 60L
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4, canonicalize = false, maxq = 40)
+    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000")
+    ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 3)
+    pipe.incremental(1L, "20240102000000",
+      spark.createDataset(ExpectedKg.changedIndices(n, 1).map(PageGen.pageFor(_, 1))),
+      spark.createDataset(ExpectedKg.deletedIndices(n, 1).map(PageGen.urlFor)))
+    var zips = 0
+    val jobs = jobsRunBy { zips = ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 3).size }
+    assert(zips > 0)
+    // the record read (its aggregation's map stage is a job of its own
+    // under adaptive execution), the zip build and the record append
+    assert(jobs == 4, s"publish ran $jobs Spark jobs")
   }
 
   /** The recorded live zips of graph `g`: every def zip plus the end part
