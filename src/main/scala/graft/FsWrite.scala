@@ -6,10 +6,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 /** The one write path for the files the engine writes itself: patch files,
   * publish zips and XML, the stores' parquet part files (written by their
   * tasks, `graft.state.BucketWrite`), store manifests, records, pointers,
-  * markers, sidecars and the lease. Only the parquet of the committer-based
-  * append tables (`CompactedAppendTable`: lineage, `_published`) still goes
-  * through Spark's writer. On `file:` it
-  * writes through java.nio: without libhadoop, Hadoop's local `create` and
+  * markers, sidecars, the lease, and the driver's record files
+  * ([[RecordFile]]: lineage, `_published`). On `file:` it writes through
+  * java.nio: without libhadoop, Hadoop's local `create` and
   * `mkdir` set each permission by running `chmod` as a child process (a
   * file in a new dir: about 9 ms, against 0.1-0.2 ms through nio, on a
   * 4-vCPU VM). Modes come from the process umask (0644 / 0755 under 022,

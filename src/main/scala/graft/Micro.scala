@@ -73,8 +73,10 @@ object Micro {
       // What must stay bounded on the driver: the zip-build collect (one
       // summary ROW per zip — the manifest bodies, O(members) each, are
       // staged executor-side by the zip build) and the per-graph metadata
-      // maps (O(graphs)). GRAFT_TIMING prints the publish-internal phase
-      // split (readRecord/batchRecords/zipBuild/recordAppend/graphMetadata).
+      // maps (O(graphs)). A no-op re-publish then reads the whole publish
+      // record, with the heap's peak reset before it. GRAFT_TIMING prints
+      // the publish-internal phase split (readRecord, batchRecords,
+      // zipBuild, recordAppend, graphMetadata).
       val graphs = sys.env("PUBLISH_SCALE").toInt
       val filesPerGraph = 10
       val root = Bench.scratchRoot("micro_pub")
@@ -97,6 +99,15 @@ object Micro {
       }
       println(s"[micro] publish zips=${infos.size} " +
         s"(driver rows = 1/zip, manifests executor-side)")
+      val heap = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.lang.management.ManagementFactory.getMemoryPoolMXBeans).asScala
+        .filter(_.getType == java.lang.management.MemoryType.HEAP)
+      System.gc(); heap.foreach(_.resetPeakUsage())
+      time("no-op re-publish") {
+        graft.publish.ZipPublisher.publish(spark, patchDir, s"$root/sink", filesPerZip = 2)
+      }
+      println(f"[micro] re-publish peak heap ${heap.map(_.getPeakUsage.getUsed).sum / 1e6}%.0f MB " +
+        "(sum of the heap pools' peaks)")
       spark.stop(); return
     }
     if (sys.env.contains("CANON_SCALE")) {

@@ -2,10 +2,9 @@ package graft.publish
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
-import graft.FsWrite
+import graft.{FsWrite, RecordFile}
 import graft.plans.PatchWriter
 import graft.Timing.timed
 
@@ -37,12 +36,12 @@ import graft.Timing.timed
   * zip the graph ever had, so no name is reused.
   *
   * What the sink holds is known from one place, the publish record
-  * `sinkDir/_published` that [[ZipPublisher.publish]] appends to: every
-  * built zip with its summary, members, run and the last patch batch the
-  * run published through. Indices, J3 and every XML document derive from
-  * it; nothing publish wrote is read back from disk, and no publish lists a
-  * graph dir it does not rewrite. The reference scrubs crashed runs by
-  * scanning the sink; here the record's append is the commit point, and
+  * `sinkDir/_published` ([[PublishRecord]]) that [[ZipPublisher.publish]]
+  * adds one file to per run: every built zip with its summary, members, run
+  * and the last patch batch the run published through. Indices, J3 and
+  * every XML document derive from it; nothing publish wrote is read back
+  * from disk, and no publish lists a graph dir it does not rewrite. The reference scrubs crashed runs by
+  * scanning the sink; here the run's record file is the commit point, and
   * the next publish finishes a crashed run's tail.
   */
 object ZipPublisher {
@@ -159,9 +158,8 @@ object ZipPublisher {
   /** One row of the publish record: a built zip's summary and members, the
     * run that built it and the last patch batch that run published
     * through. */
-  private[publish] final case class Recorded(graph_b64: String, zipName: String,
-      complete: Boolean, nResources: Long, length: Long, md5: String, lastmod: String,
-      members: Seq[Member], run: Long, throughBatch: Long)
+  private[graft] final case class Recorded(zip: ZipInfo, members: Seq[Member], run: Long,
+                                           throughBatch: Long)
 
   /** A zip a run builds, its members in manifest order. */
   private[publish] final case class Planned(graph_b64: String, zipName: String,
@@ -278,12 +276,15 @@ object ZipPublisher {
     * are written by executors, one task per group of planned zips; the
     * driver only plans and writes the small XML set.
     *
-    * The publish record, the compacted-append table `sinkDir/_published`,
-    * is the only source of truth about the sink. Each run that builds zips
-    * appends one row per zip — its [[ZipInfo]], its [[Member]]s, the run's
-    * sequence number and its batch mark — and that append is the run's
-    * commit point; `_published/_done` names the last run whose metadata
-    * tail finished. Every index, J3's end membership, every XML document and
+    * The publish record `sinkDir/_published` ([[PublishRecord]]), driver
+    * record files, is the only source of truth about the sink. Each run
+    * that builds zips writes one row per zip — its [[ZipInfo]], its
+    * [[Member]]s, the run's sequence number and its batch mark — as its own
+    * file, and that file's rename is the run's commit point;
+    * `_published/_done` names the last run whose metadata tail finished. A
+    * run reads the record on the driver with no Spark job, and keeps the
+    * members of each graph's latest end part and of the runs past `_done`
+    * only. Every index, J3's end membership, every XML document and
     * every deletion derives from the record: no sink XML or sidecar is read
     * back and no graph dir is listed except the ones this run rewrites.
     * Those are the graphs it built zips into plus the graphs of any
@@ -308,42 +309,21 @@ object ZipPublisher {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val f = new Path(sinkDir).getFileSystem(hadoopConf)
     FsWrite.mkdirs(f, new Path(sinkDir))
-    val stateDir = s"$sinkDir/_published"
-    val donePath = new Path(stateDir, "_done")
+    val stateDir = new Path(sinkDir, "_published")
 
-    // the record, one row per graph: its zips, each with its run and batch
-    // mark, and its latest end part's run and members (an older end's
-    // members never leave the executors)
-    val record = graft.state.CompactedAppendTable.read(spark, stateDir)
-    val graphRecords: Seq[(String, Seq[(ZipInfo, Long, Long)], (Long, Seq[Member]))] =
-      record.toSeq.flatMap { r =>
-        val zipCols = Encoders.product[ZipInfo].schema.fieldNames.toSeq.map(col)
-        timed("publish.readRecord")(r.groupBy("graph_b64").agg(
-            collect_list(struct(struct(zipCols: _*).as("_1"), col("run").as("_2"),
-              col("throughBatch").as("_3"))),
-            max_by(struct(col("run").as("_1"), col("members").as("_2")),
-              when(!col("complete"), col("run"))))
-          .as[(String, Seq[(ZipInfo, Long, Long)], (Long, Seq[Member]))].collect())
-      }
-    val recorded: Seq[(ZipInfo, Long)] = graphRecords.flatMap(_._2.map(z => (z._1, z._2)))
-    val mark = graphRecords.flatMap(_._2.map(_._3)).maxOption.getOrElse(-1L)
-    val run = recorded.map(_._2).maxOption.fold(0L)(_ + 1)
-    val byGraph: Map[String, Seq[ZipInfo]] = graphRecords.map { case (g, zs, _) => g -> zs.map(_._1) }.toMap
-    val done = if (record.isEmpty) -1L else try {
-      val in = f.open(donePath)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong finally in.close()
-    } catch { case _: java.io.FileNotFoundException => -1L }
-    // members of the zips of runs whose metadata tail never finished: the
-    // sidecars they staged are rewritten from these (a crash-recovery read)
-    val unfinished = recorded.filter(_._2 > done)
-    val unfinishedManifests: Map[(String, String), String] = record match {
-      case Some(r) if unfinished.nonEmpty =>
-        r.filter(col("run") > done).select("graph_b64", "zipName", "members")
-          .as[(String, String, Seq[Member])].collect()
-          .map { case (g, z, ms) =>
-            (g, z) -> manifestXml(ms.map(m => (baseName(m.resource), m.md5, m.length, m.lastmod)))
-          }.toMap
-      case _ => Map.empty
+    // the record: every zip with its run, the batch mark, `_done`, each
+    // graph's latest end part's run and members, and the members of the
+    // zips of runs past `_done` (no older member list is kept)
+    val rec = timed("publish.readRecord")(PublishRecord.read(f, stateDir))
+    val recorded = rec.zips
+    val run = rec.run
+    val byGraph: Map[String, Seq[ZipInfo]] = recorded.groupMap(_._1.graph_b64)(_._1)
+    val lastRun: Map[String, Long] = recorded.groupMapReduce(_._1.graph_b64)(_._2)(math.max)
+    // the zips of runs whose metadata tail never finished: the sidecars
+    // they staged are rewritten from their recorded members
+    val unfinished = recorded.filter(_._2 > rec.done)
+    val unfinishedManifests: Map[(String, String), String] = rec.unfinished.map { case (k, ms) =>
+      k -> manifestXml(ms.map(m => (baseName(m.resource), m.md5, m.length, m.lastmod)))
     }
 
     // what to window, from write records only: the new batches' files and
@@ -353,9 +333,9 @@ object ZipPublisher {
     // it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
     val inIndex: String => Boolean = graphIndex.fold((_: String) => true)(
       _.select("g_b64").distinct().as[String].collect().toSet)
-    val liveEnds: Map[String, Seq[Member]] = graphRecords.collect {
-      case (g, zs, end) if end != null && end._1 == zs.map(_._2).max && inIndex(g) => g -> end._2
-    }.toMap
+    val liveEnds: Map[String, Seq[Member]] = rec.ends.collect {
+      case (g, (r, ms)) if r == lastRun(g) && inIndex(g) => g -> ms
+    }
     val pf = new Path(patchDir).getFileSystem(hadoopConf)
     val patchRoot = pf.makeQualified(new Path(patchDir))
     def recordOf(dir: Path): Option[Seq[(String, Member)]] =
@@ -365,7 +345,7 @@ object ZipPublisher {
       // the batches past the mark, in id order, up to the first without a
       // record: its files may not all be written yet
       val ids = (try pf.listStatus(patchRoot).toSeq catch { case _: java.io.FileNotFoundException => Nil })
-        .map(_.getPath.getName).collect { case BatchDir(id) => id.toLong }.filter(_ > mark).sorted
+        .map(_.getPath.getName).collect { case BatchDir(id) => id.toLong }.filter(_ > rec.mark).sorted
       val fresh: Seq[(Long, Seq[(String, Member)])] = ids.iterator
         .map(id => id -> recordOf(new Path(patchRoot, s"batch_$id")))
         .takeWhile(_._2.isDefined).map { case (id, ms) => id -> ms.get }.toSeq
@@ -377,7 +357,7 @@ object ZipPublisher {
         (liveEnds.toSeq.flatMap { case (g, ms) => ms.map(m => g -> current.getOrElse(m.resource, m)) } ++
           fresh.flatMap(_._2).filter(gm => inIndex(gm._1)))
           .groupMap(_._1)(_._2).map { case (g, ms) => g -> ms.sortBy(_.resource) }
-      (fresh.lastOption.fold(mark)(_._1), candidates)
+      (fresh.lastOption.fold(rec.mark)(_._1), candidates)
     }
 
     // J3: a graph is rebuilt when it has a complete window or its end
@@ -424,15 +404,10 @@ object ZipPublisher {
           planned.toDS().mapPartitions(_.map(buildZip(_, sink, conf.value))).collect().toSeq)
       if (rows.nonEmpty) {
         onBuiltForTests(rows.map(_._1))
-        // one row per built zip with its members, in one file; the
-        // compacted-append layout bounds the record's file count across
-        // thousands of publish runs, ~4M members per file
+        // one row per built zip with its members, in the run's file
         val members = planned.map(p => (p.graph_b64, p.zipName) -> p.members).toMap
-        timed("publish.recordAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
-          rows.map { case (z, _) => Recorded(z.graph_b64, z.zipName, z.complete, z.nResources,
-            z.length, z.md5, z.lastmod, members((z.graph_b64, z.zipName)), run, through)
-          }.toDF().coalesce(1),
-          targetFiles = zips => (zips / 4000L + 1L).toInt))
+        timed("publish.recordAppend")(PublishRecord.append(f, stateDir, rec,
+          rows.map { case (z, _) => Recorded(z, members((z.graph_b64, z.zipName)), run, through) }))
       }
       rows
     } catch {
@@ -488,7 +463,8 @@ object ZipPublisher {
     // top-level source description over every recorded graph
     FsWrite.atomic(f, new Path(sinkDir, ".well-known/resourcesync"),
       sourceDescriptionXml(zipsOf.keys.toSeq.map(g => s"$publishUrl$g/capability-list.xml")))
-    FsWrite.atomic(f, donePath, (if (built.nonEmpty) run else unfinished.map(_._2).max).toString)
+    FsWrite.atomic(f, new Path(stateDir, PublishRecord.Done),
+      (if (built.nonEmpty) run else unfinished.map(_._2).max).toString)
 
     builtInfos
   }
@@ -532,5 +508,82 @@ object ZipPublisher {
             .foreach(p => f.delete(p, false))
       } catch { case _: Exception => }
     }
+  }
+}
+
+/** The publish record `sinkDir/_published`: [[graft.RecordFile]]s of
+  * [[ZipPublisher.Recorded]] rows. Each run that builds zips writes its
+  * rows as `run_<r>`, and that file's rename is the run's commit point.
+  * Runs are numbered 0, 1, 2, … with no gap. A run whose number is a
+  * multiple of [[WholeEvery]] writes the whole record instead: the files of
+  * the runs since the previous such run, byte for byte, then its own rows;
+  * it then deletes every older file, so at most [[WholeEvery]] run files
+  * exist. A reader lists the dir once and reads from the newest whole run
+  * on; a run file missing there fails loudly. [[Done]] names the last run
+  * whose metadata tail finished. */
+private[graft] object PublishRecord {
+  import ZipPublisher.{Member, Recorded, ZipInfo}
+
+  val WholeEvery = 64
+  val Done = "_done"
+  private val RunFile = "run_(\\d+)".r
+
+  /** The record as a run reads it: every recorded zip with its run, the
+    * highest batch mark, the `_done` run (-1 when none), each graph's latest
+    * end part with its run and members, the members of the zips of runs
+    * past `_done`, the files read (from the newest whole run on) and every
+    * file listed. An older end's members are dropped as they are parsed. */
+  final case class Read(zips: Seq[(ZipInfo, Long)], mark: Long, done: Long,
+                        ends: Map[String, (Long, Seq[Member])],
+                        unfinished: Map[(String, String), Seq[Member]],
+                        window: Seq[Path], listed: Seq[Path]) {
+    /** The next run's number. */
+    val run: Long = zips.map(_._2).maxOption.fold(0L)(_ + 1)
+  }
+
+  def read(fs: FileSystem, dir: Path): Read = {
+    val listed = try fs.listStatus(dir).toSeq.map(_.getPath)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val runs: Map[Long, Path] = listed.flatMap(p => p.getName match {
+      case RunFile(r) => Some(r.toLong -> p)
+      case _ => None
+    }).toMap
+    if (runs.isEmpty) return Read(Nil, -1L, -1L, Map.empty, Map.empty, Nil, listed)
+    val last = runs.keys.max
+    val window = (last - last % WholeEvery to last).map(r => runs.getOrElse(r,
+      throw new IllegalStateException(s"publish record $dir: ${new Path(dir, s"run_$r")} is " +
+        s"missing; the record's runs since the last whole one end at run_$last")))
+    val done = listed.find(_.getName == Done).fold(-1L) { p =>
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong finally in.close()
+    }
+    val zips = Seq.newBuilder[(ZipInfo, Long)]
+    var mark = -1L
+    val ends = scala.collection.mutable.Map.empty[String, (Long, Seq[Member])]
+    val unfinished = Map.newBuilder[(String, String), Seq[Member]]
+    window.foreach(RecordFile.foreach(fs, _, classOf[Recorded]) { r =>
+      val z = r.zip
+      zips += z -> r.run
+      mark = math.max(mark, r.throughBatch)
+      if (!z.complete && ends.get(z.graph_b64).forall(_._1 <= r.run)) ends(z.graph_b64) = r.run -> r.members
+      if (r.run > done) unfinished += (z.graph_b64, z.zipName) -> r.members
+    })
+    Read(zips.result(), mark, done, ends.toMap, unfinished.result(), window, listed)
+  }
+
+  /** Commit the run after `prior` with `rows`, all of that run: its file
+    * lands whole or not at all. A whole-record run then deletes every file
+    * `prior` listed but `_done`: the runs it holds, and the leftovers of a
+    * crash (files an earlier whole run did not get to delete, temps). */
+  def append(fs: FileSystem, dir: Path, prior: Read, rows: Seq[Recorded]): Unit = {
+    val whole = prior.run % WholeEvery == 0
+    FsWrite.atomic(fs, new Path(dir, s"run_${prior.run}")) { out =>
+      if (whole) prior.window.foreach { p =>
+        val in = fs.open(p)
+        try org.apache.commons.io.IOUtils.copy(in, out) finally in.close()
+      }
+      rows.foreach(r => out.write(RecordFile.line(r)))
+    }
+    if (whole) prior.listed.filter(_.getName != Done).foreach(fs.delete(_, false))
   }
 }

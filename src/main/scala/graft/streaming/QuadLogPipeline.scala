@@ -51,9 +51,11 @@ import graft.state.{SnapshotStore, TermBloom}
   * facts store), sinks (patch files, graph index, staged facts and contrib
   * deltas, concurrently) and commit (tallies, lineage, marker, flips).
   *
-  * Checkpoint/resume (reference T2, vql_lastlogsuffix.txt): the lineage
-  * table records per-bucket url ranges, the batch watermark and counts; a
-  * re-run of an already-committed batch is a no-op (idempotent, T8).
+  * Checkpoint/resume (reference T2, vql_lastlogsuffix.txt): each batch
+  * writes its lineage — per-bucket url ranges, the watermark and counts —
+  * as one driver record file, `lineage/batch_<id>`, like the reference's
+  * `vql_*.txt` files; a re-run of an already-committed batch is a no-op
+  * (idempotent, T8).
   *
   * Crash atomicity across the two data stores (the facts/contrib pair must
   * move together): merges are STAGED (data + manifest, no pointer flip),
@@ -747,8 +749,9 @@ final class QuadLogPipeline(
     val added = tallies.getOrElse("+", 0L)
     val deleted = tallies.getOrElse("-", 0L)
     // lineage BEFORE the marker: a crash before the marker recomputes the
-    // batch (duplicate lineage rows are harmless — readers aggregate);
-    // after the marker, recovery replays the pointer flips below.
+    // batch, whose re-run replaces the batch's lineage file (every lineage
+    // sum counts the batch once); after the marker, recovery replays the
+    // pointer flips below.
     // The marker-guarded finalize flips ALL staged stores (canon, when it
     // staged — it moves atomically with the data it canonicalizes).
     timed("incr.lineage")(writeLineage(epoch, batchId, changed, added, deleted, files))
@@ -918,13 +921,14 @@ final class QuadLogPipeline(
   // --- lineage / checkpoint --------------------------------------------------
 
   /** Per-bucket lineage rows (BASELINE.json: url range, warc_ts watermark,
-    * quad counts per partition). */
+    * quad counts per partition), collected from one aggregation and written
+    * as the batch's record file `lineage/batch_<id>`. A re-run of the batch
+    * replaces the file, so no row is ever counted twice. */
   private def writeLineage(epoch: String, batchId: Long,
                            pages: Dataset[Page], added: Long, deleted: Long,
                            files: Long): Unit = {
-    val perBucket = pages.toDF()
-      .withColumn("bucket", contrib.bucketCol(col("url")))
-      .groupBy("bucket")
+    val rows = pages.toDF()
+      .groupBy(contrib.bucketCol(col("url")).as("partitionId"))
       .agg(min("url").as("urlLo"), max("url").as("urlHi"),
         max("warc_ts").as("watermark"))
       .withColumn("epoch", lit(epoch))
@@ -932,27 +936,47 @@ final class QuadLogPipeline(
       .withColumn("added", lit(added))
       .withColumn("deleted", lit(deleted))
       .withColumn("files", lit(files))
-      .withColumnRenamed("bucket", "partitionId")
-    // compacted-append layout: one tiny file per batch would otherwise
-    // accumulate forever and every watermark/prune read would list and
-    // open thousands of files (the reference's counts files are O(1))
-    graft.state.CompactedAppendTable.append(spark, lineageDir, perBucket)
+      .as[QuadLogPipeline.Lineage].collect().sortBy(_.partitionId)
+    graft.RecordFile.write(hfs, new Path(lineageDir, s"batch_$batchId"), rows.toSeq)
   }
 
-  def lineage: DataFrame =
-    graft.state.CompactedAppendTable.read(spark, lineageDir)
-      .getOrElse(sys.error(s"no lineage at $lineageDir"))
-
-  def watermark: Option[java.sql.Timestamp] = {
-    if (!graft.state.CompactedAppendTable.exists(spark, lineageDir)) return None
-    val r = lineage.agg(max("watermark")).head()
-    if (r.isNullAt(0)) None else Some(r.getTimestamp(0))
+  /** Every lineage row of the current epoch, read on the driver from the
+    * batches' record files (no Spark job). */
+  def lineage: DataFrame = {
+    val rows = QuadLogPipeline.readLineage(hfs, new Path(lineageDir))
+    if (rows.isEmpty) sys.error(s"no lineage at $lineageDir")
+    rows.toDF()
   }
+
+  def watermark: Option[java.sql.Timestamp] =
+    QuadLogPipeline.readLineage(hfs, new Path(lineageDir)).flatMap(r => Option(r.watermark))
+      .maxOption.map(java.sql.Timestamp.from)
 
   /** Current graph state as quads (for verification / reconciliation A7). */
   def currentQuads: DataFrame =
     facts.read().map(_.filter(col("support") > 0).select(quadCols.map(col): _*))
       .getOrElse(spark.emptyDataFrame)
+}
+
+object QuadLogPipeline {
+
+  /** One lineage row: a contrib bucket's url range and newest `warc_ts` in
+    * one batch, with the batch's counts. */
+  final case class Lineage(partitionId: Int, urlLo: String, urlHi: String,
+                           watermark: java.time.Instant, epoch: String, batchId: Long,
+                           added: Long, deleted: Long, files: Long)
+
+  private val LineageFile = "batch_(\\d+)".r
+
+  /** The lineage rows of the batch files under `dir`, in batch order (none
+    * when `dir` is absent). */
+  private[graft] def readLineage(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Lineage] =
+    (try fs.listStatus(dir).toSeq.map(_.getPath) catch { case _: java.io.FileNotFoundException => Nil })
+      .flatMap(p => p.getName match {
+        case LineageFile(id) => Some(id.toLong -> p)
+        case _ => None
+      })
+      .sortBy(_._1).flatMap { case (_, p) => graft.RecordFile.read(fs, p, classOf[Lineage]) }
 }
 
 final case class BatchResult(batchId: Long, added: Long, deleted: Long, files: Long)

@@ -137,8 +137,7 @@ class PublishSpec extends GraftSpec {
       val body = Files.readAllLines(f).toArray.count { case l: String => l.nonEmpty && !l.startsWith("#") }
       assert((w.md5, w.bytes, w.lines) == ((md5Of(f), Files.size(f), body.toLong)), s"record of $f")
     }
-    val zips = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
-      .select("graph_b64", "zipName", "md5", "length").as[(String, String, String, Long)].collect()
+    val zips = recorded(sink).map { case (z, _) => (z.graph_b64, z.zipName, z.md5, z.length) }
     assert(zips.length > 20)
     zips.foreach { case (g, z, m, len) =>
       val f = Paths.get(sink, g, s"$z.zip")
@@ -605,8 +604,7 @@ class PublishSpec extends GraftSpec {
     writePatch(src, 3, batch = 2)
     assert(ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
       .map(_.zipName) == Seq("part_end_00001"))
-    val names = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
-      .select("zipName").as[String].collect().toSeq
+    val names = recorded(sink).map(_._1.zipName)
     assert(names.distinct.size == names.size, s"a zip name recorded twice: ${names.sorted}")
     assertSettled(src, sink, filesPerZip = 3)
   }
@@ -655,27 +653,32 @@ class PublishSpec extends GraftSpec {
         out = ZipPublisher.publish(spark, src, sink, filesPerZip = 3)
       }
       assert(out.map(_.zipName).forall(_.startsWith("part_def_")) && out.size == 2, s"built $out")
-      // the record's own table reads grow with its file count; the rest
-      // must not grow with the batches published
-      calls.map { case (k, ps) =>
-        k -> ps.filterNot(_.contains("/sink/_published")).map(_.stripPrefix(local))
-      }
+      calls.map { case (k, ps) => k -> ps.map(_.stripPrefix(local)) }
     }
     val (two, eight) = (run(2), run(8))
     def of(calls: Map[String, Seq[String]], kind: String) = calls.getOrElse(kind, Nil)
+    val runFile = "/sink/_published/run_"
     Seq(2 -> two, 8 -> eight).foreach { case (k, calls) =>
-      assert(of(calls, CountingFileSystem.DirListing).toSet == Set("/patches", s"/sink/$g64"),
+      assert(of(calls, CountingFileSystem.DirListing).toSet ==
+        Set("/patches", s"/sink/$g64", "/sink/_published"),
         s"listed ${of(calls, CountingFileSystem.DirListing)}")
       val opened = of(calls, CountingFileSystem.Opens)
       val newFiles = (0 until 4).map(i => f"/patches/batch_$k/g_b64=$g64/rdf_out_$k%014d-$i%014d")
       newFiles.foreach(f => assert(opened.count(_ == f) == 1, s"$f opened ${opened.count(_ == f)}x"))
       assert(!opened.exists(_.startsWith(s"/patches/batch_${k - 2}/")),
         s"opened a file of a batch all in def zips: $opened")
+      // the record: its done mark and each run file since its last whole
+      // run (run 0, as fewer than 64 runs were published), once
+      assert(opened.filter(_.startsWith("/sink/")).sorted ==
+        ((0 until k).map(r => s"$runFile$r") :+ "/sink/_published/_done").sorted, s"opened $opened")
       assert(opened.forall(p => p.startsWith(s"/patches/batch_$k/") ||
-        p.startsWith(s"/patches/batch_${k - 1}/")), s"opened $opened")
+        p.startsWith(s"/patches/batch_${k - 1}/") || p.startsWith("/sink/_published/")),
+        s"opened $opened")
     }
-    assert(two.map { case (k, v) => k -> v.size } == eight.map { case (k, v) => k -> v.size },
-      s"calls after 2: $two\nafter 8: $eight")
+    // only the run files read grow with the batches published
+    def sizes(calls: Map[String, Seq[String]]) =
+      calls.map { case (k, v) => k -> v.count(!_.startsWith(runFile)) }
+    assert(sizes(two) == sizes(eight), s"calls after 2: $two\nafter 8: $eight")
   }
 
   test("publishing one churn batch runs a pinned number of Spark jobs") {
@@ -690,17 +693,19 @@ class PublishSpec extends GraftSpec {
     var zips = 0
     val jobs = jobsRunBy { zips = ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 3).size }
     assert(zips > 0)
-    // the record read (its aggregation's map stage is a job of its own
-    // under adaptive execution), the zip build and the record append
-    assert(jobs == 4, s"publish ran $jobs Spark jobs")
+    // the zip build; the record is read and written on the driver
+    assert(jobs == 1, s"publish ran $jobs Spark jobs")
   }
+
+  /** Every zip the publish record of `sink` holds, with its run. */
+  private def recorded(sink: String): Seq[(ZipPublisher.ZipInfo, Long)] =
+    PublishRecord.read(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
+      new Path(s"$sink/_published")).zips
 
   /** The recorded live zips of graph `g`: every def zip plus the end part
     * of the graph's latest run. */
   private def liveZips(sink: String, g: String): Set[String] = {
-    val rec = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
-      .filter(col("graph_b64") === g)
-      .select("zipName", "complete", "run").as[(String, Boolean, Long)].collect()
+    val rec = recorded(sink).collect { case (z, r) if z.graph_b64 == g => (z.zipName, z.complete, r) }
     val last = rec.map(_._3).max
     rec.collect { case (z, c, r) if c || r == last => z }.toSet
   }
@@ -709,8 +714,7 @@ class PublishSpec extends GraftSpec {
     * dump lists exactly its recorded live zips, each with its sidecars; the
     * dir holds no other zip and no temp; a further publish builds nothing. */
   private def assertSettled(src: String, sink: String, filesPerZip: Int): Unit = {
-    val graphs = graft.state.CompactedAppendTable.read(spark, s"$sink/_published").get
-      .select("graph_b64").distinct().as[String].collect()
+    val graphs = recorded(sink).map(_._1.graph_b64).distinct
     graphs.foreach { g =>
       val live = liveZips(sink, g)
       val dump = Files.readString(Paths.get(s"$sink/$g/resource-dump.xml"))

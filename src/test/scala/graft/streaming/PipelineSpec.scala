@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.GraftSpec
 import graft.plans.QuadDiff
-import graft.sources.PageGen
+import graft.sources.{ExpectedKg, PageGen}
 import graft.extract.TextExtractor
 import org.apache.spark.sql.functions._
 
@@ -395,6 +395,41 @@ class PipelineSpec extends GraftSpec {
     pipe.bootstrap(s0, "epoch-2", "00000000000001")
     assert(pipe.lineage.select("epoch").distinct().as[String].collect().toSeq == Seq("epoch-2"))
     assert(pipe.watermark.contains(s0.agg(max("warc_ts")).head().getTimestamp(0)))
+  }
+
+  test("a batch re-run after a crash between its lineage and its marker counts once") {
+    val root = tmpDir("graft_lineage_rerun")
+    val n = 40L
+    val changed = spark.createDataset(ExpectedKg.changedIndices(n, 1).map(PageGen.pageFor(_, 1)))
+    val deleted = spark.createDataset(ExpectedKg.deletedIndices(n, 1).map(PageGen.urlFor))
+    def pipeline(r: String) = {
+      val p = new QuadLogPipeline(spark, r, numBuckets = 4, canonicalize = false)
+      p.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000"); p
+    }
+    // the single run
+    val clean = pipeline(tmpDir("graft_lineage_once"))
+    clean.incremental(1L, "20240102000000", changed, deleted)
+    // the crash: once the batch reads its pages (after its recovery check),
+    // a non-empty directory occupies the commit marker's path, so the
+    // marker's rename fails after the lineage write
+    val pipe = pipeline(root)
+    val occupant = s"$root/_commit/occupied"
+    val occupying = changed.map { p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(occupant)); p
+    }
+    intercept[Exception](pipe.incremental(1L, "20240102000000", occupying, deleted))
+    assert(pipe.lineage.filter(col("batchId") === 1L).count() > 0, "the crash came before the lineage write")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/_commit"))
+    pipe.incremental(1L, "20240102000000", changed, deleted)
+    def perPartition(p: QuadLogPipeline) = p.lineage.filter(col("batchId") === 1L)
+      .groupBy("partitionId").agg(count(lit(1)).as("n"), sum("added").as("added"))
+      .as[(Int, Long, Long)].collect().sortBy(_._1).toSeq
+    val rows = perPartition(pipe)
+    assert(rows.nonEmpty && rows.forall(_._2 == 1L), s"(partitionId, rows, added): $rows")
+    assert(rows == perPartition(clean))
+    assert(pipe.lineage.agg(sum("added")).head() == clean.lineage.agg(sum("added")).head())
+    // the lineage and its watermark are read on the driver
+    assert(jobsRunBy { pipe.lineage; pipe.watermark } == 0)
   }
 
   test("an INVALID bootstrap dump leaves no epoch, so incremental refuses to run") {
