@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataOutputStream, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** The one write path for the files the engine writes itself: patch files,
@@ -49,15 +53,32 @@ object FsWrite {
     case None => fs.mkdirs(path)
   }
 
+  /** Run the write job `job` with `conf` shipped to its tasks as ONE
+    * broadcast, destroyed when the job returns. A Hadoop configuration in a
+    * task closure (about 110 KB, over 1000 keys) is deserialized by every
+    * task, 8-10 ms each under a C1-only JIT; a broadcast is fetched once
+    * per executor. */
+  def withTaskConf[T](spark: SparkSession, conf: Configuration)
+                     (job: Broadcast[SerializableConfiguration] => T): T = {
+    val b = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    try job(b) finally b.destroy()
+  }
+
   /** Replace `path` all or nothing: `write` fills a temp file beside it
     * (named after it, so a `_` target's temp stays hidden from Spark), then
     * [[replace]] moves it into place. A throwing `write`, or a crash before
-    * the rename, leaves the previous content. */
+    * the rename, leaves the previous content; a throwing `write` or a failed
+    * rename also deletes the temp file (best effort) before rethrowing. */
   def atomic(fs: FileSystem, path: Path)(write: java.io.OutputStream => Unit): Unit = {
     val tmp = new Path(path.getParent, s"${path.getName}.tmp${System.nanoTime()}")
-    val out = create(fs, tmp)
-    try write(out) finally out.close()
-    replace(fs, tmp, path)
+    try {
+      val out = create(fs, tmp)
+      try write(out) finally out.close()
+      replace(fs, tmp, path)
+    } catch { case e: Throwable =>
+      try fs.delete(tmp, false) catch { case _: Throwable => }
+      throw e
+    }
   }
 
   def atomic(fs: FileSystem, path: Path, text: String): Unit =

@@ -171,8 +171,9 @@ object Micro {
       }
       // --- NEW shape ---
       val newRewrite = {
-        val (view, viewRows, _, _, _) = time("NEW extendedCanonMap (pruned view + fresh check)")(
+        val ext = time("NEW extendedCanonMap (pruned view + fresh check)")(
           pipe.extendedCanonMap(batch))
+        val (view, viewRows) = (ext.view, ext.viewRows)
         println(s"[micro] canon view rows: $viewRows of $n (buckets: " +
           s"${pipe.lastCanonBuckets.map(_.size).getOrElse(-1)}/${pipe.canon.numBuckets})")
         time("NEW rewrite join (view -> broadcast)")(

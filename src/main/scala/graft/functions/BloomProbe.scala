@@ -75,4 +75,12 @@ object BloomProbe {
       }
       .treeReduce(_ orWith _, depth = 2)
   }
+
+  /** The filter [[build]] makes for `n` keys, from hashes the driver already
+    * holds: the same bits, with no Spark job. */
+  def onDriver(hashes: Iterable[Long], n: Long, maxBits: Long): TermBloom = {
+    val bl = TermBloom.sized(math.max(n, 1L), maxBits)
+    hashes.foreach(bl.put)
+    bl
+  }
 }

@@ -101,10 +101,16 @@ object PatchWriter {
     })
   }
 
-  /** patches: (op + quad cols). Writes the files and the batch's record;
-    * returns the number of files written. */
+  /** What a [[write]] wrote: its file count and its body lines per op
+    * (`+`, `-`). */
+  final case class Wrote(files: Long, lines: Map[String, Long]) {
+    def added: Long = lines.getOrElse("+", 0L)
+    def deleted: Long = lines.getOrElse("-", 0L)
+  }
+
+  /** patches: (op + quad cols). Writes the files and the batch's record. */
   def write(spark: SparkSession, patches: DataFrame, outDir: String,
-            checkpoint: String, maxq: Int = 100000): Long = {
+            checkpoint: String, maxq: Int = 100000): Wrote = {
     import spark.implicits._
     val P = math.max(spark.sparkContext.defaultParallelism * 2, 16)
 
@@ -113,13 +119,16 @@ object PatchWriter {
       .withColumn("g_b64", base64(col("g").cast("binary")))
       .withColumn("h", xxhash64(quadColumns: _*))
 
-    // pass 1: per-graph counts -> minimal data-proportional sub fan-out.
-    // The graph dimension is tiny relative to the quads (one row per graph;
-    // even 10^6 graphs are tens of MB), so it is collected once and rides
-    // along as a broadcast — never an exchange of the quad stream.
-    val nSubs: Seq[(String, Int)] = timed("patch.gcounts") {
-      keyed0.groupBy("g_b64").agg(count(lit(1))).as[(String, Long)].collect().toSeq
-    }.map { case (g, n) => (g, math.max((n + maxq - 1) / maxq, 1L).toInt) }
+    // pass 1: per-(graph, op) counts -> minimal data-proportional sub
+    // fan-out per graph, and the write's per-op tallies. The graph dimension
+    // is tiny relative to the quads (at most two rows per graph; even 10^6
+    // graphs are tens of MB), so it is collected once and rides along as a
+    // broadcast — never an exchange of the quad stream.
+    val gOpCounts = timed("patch.gcounts") {
+      keyed0.groupBy("g_b64", "op").agg(count(lit(1))).as[(String, String, Long)].collect().toSeq
+    }
+    val nSubs: Seq[(String, Int)] = gOpCounts.groupMapReduce(_._1)(_._3)(_ + _).toSeq
+      .map { case (g, n) => (g, math.max((n + maxq - 1) / maxq, 1L).toInt) }
 
     // pass 2: per-(graph, sub) counts -> first-serial offsets (prefix sum of
     // per-sub file counts over a tiny table: nSubs rows per graph, windowed
@@ -151,23 +160,23 @@ object PatchWriter {
 
     // pass 3 — THE one full-data exchange: cluster by (graph, sub), sort,
     // stream each sub straight into its final files
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     val out = outDir
     val fsRoot = new Path(out)
-    val fs0 = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs0 = fsRoot.getFileSystem(hadoopConf)
     if (fs0.exists(fsRoot)) fs0.delete(fsRoot, true) // idempotent rewrite (T7)
     FsWrite.mkdirs(fs0, fsRoot)
     val mq = maxq
 
-    val written = timed("patch.writePass") { keyed
+    val lines = keyed
       .repartition(P, col("g_b64"), col("sub"))
       .sortWithinPartitions(col("g_b64"), col("sub"), col("h"))
       .withColumn("line", NQuadFormatter.patchLine(col("op"), col("s"), col("p"),
         col("oLex"), col("oKind"), col("oDtype"), col("oLang"), col("g")))
       .select("g", "g_b64", "sub", "serial0", "line")
-      .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val fs = new Path(out).getFileSystem(hconf.value)
+    val written = timed("patch.writePass")(FsWrite.withTaskConf(spark, hadoopConf) { hconf =>
+      lines.mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
+        val fs = new Path(out).getFileSystem(hconf.value.value)
         val buf = new java.util.ArrayList[String](math.min(mq, 1 << 16))
         val files = scala.collection.mutable.ArrayBuffer.empty[Written]
         var curKey: (String, Int) = null
@@ -204,9 +213,10 @@ object PatchWriter {
         }
         flushFile()
         files.iterator
-      }.collect().toSeq }
+      }.collect().toSeq
+    })
     writeRecord(fs0, fsRoot, written)
-    written.size.toLong
+    Wrote(written.size.toLong, gOpCounts.groupMapReduce(_._2)(_._3)(_ + _))
   }
 
   /** The dump-report trailer file (dump_nquads.sql:58-83 emits these five

@@ -396,12 +396,12 @@ object ZipPublisher {
     // against consistent state, and the next run finishes this one's
     // metadata tail. Any failure up to and including the append deletes
     // every artifact this run created and re-raises.
-    val conf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
     val sink = sinkDir
     val built = try {
       val rows = if (planned.isEmpty) Seq.empty[(ZipInfo, String)]
-        else timed("publish.zipBuild")(
-          planned.toDS().mapPartitions(_.map(buildZip(_, sink, conf.value))).collect().toSeq)
+        else timed("publish.zipBuild")(FsWrite.withTaskConf(spark, hadoopConf) { conf =>
+          planned.toDS().mapPartitions(_.map(buildZip(_, sink, conf.value.value))).collect().toSeq
+        })
       if (rows.nonEmpty) {
         onBuiltForTests(rows.map(_._1))
         // one row per built zip with its members, in the run's file

@@ -15,7 +15,6 @@ import org.apache.spark.sql.execution.datasources.BasicWriteTaskStatsTracker
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 import graft.FsWrite
 
 /** Bucket-partitioned parquet written with no output committer: one Spark
@@ -54,7 +53,6 @@ private[state] object BucketWrite {
     val dataSchema = StructType(df.schema.filter(_.name != "bucket").map(_.copy(nullable = true)))
     val job = Job.getInstance(new Configuration(spark.sparkContext.hadoopConfiguration))
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
     // data columns, then the bucket, then the terms: the task writes the
     // first n fields, switches file on the bucket and hashes the terms
     val staged = df.sortWithinPartitions("bucket")
@@ -62,10 +60,12 @@ private[state] object BucketWrite {
         terms.map(_.cast("array<string>")): _*)
     val qe = staged.queryExecution
     val bloomTermsPerRow = terms.map(_ => termsPerRow)
-    SQLExecution.withNewExecutionId(qe, Some(s"write $dir")) {
-      qe.toRdd.mapPartitionsWithIndex { (p, rows) =>
-        writeTask(dir, conf.value, dataSchema, p, rows, bloomTermsPerRow)
-      }.collect().toSeq
+    FsWrite.withTaskConf(spark, job.getConfiguration) { conf =>
+      SQLExecution.withNewExecutionId(qe, Some(s"write $dir")) {
+        qe.toRdd.mapPartitionsWithIndex { (p, rows) =>
+          writeTask(dir, conf.value.value, dataSchema, p, rows, bloomTermsPerRow)
+        }.collect().toSeq
+      }
     }
   }
 

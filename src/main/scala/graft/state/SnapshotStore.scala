@@ -1,9 +1,12 @@
 package graft.state
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import graft.FsWrite
 import graft.Timing.timed
@@ -43,11 +46,18 @@ import graft.Timing.timed
   * its buckets' parquet under final names, with no output committer, and
   * returns each file's bucket, name and length, plus its term bloom for a
   * [[termExpr]] store), so a write neither walks the dir nor reads its
-  * parquet back. Reads, folds and size gates are planned from the record
-  * alone: Spark gets the recorded files by name, so a read lists no dir,
-  * probes no path, infers no footer schema and never reads a file the
-  * commit did not record — a failed or retried task's file included. A
-  * data dir without a record is an error.
+  * parquet back. Reads, folds and size gates are planned from the records
+  * alone. A read is at most two parquet relations, each over a
+  * [[RecordIndex]] (Spark's `FileIndex`) built from the recorded
+  * (file, length) pairs: the rows — the base's and every delta's add files
+  * — with the partition columns `(bucket, _wtag)`, and the tombstones with
+  * `(bucket, _ttag)`, where a tag is the snapshot that wrote the file (-1
+  * for the base). The fold joins the two on those tags. A read of some
+  * buckets ([[readBuckets]]) builds its indexes over those buckets' files
+  * only, and a filter on a partition column prunes through the index. A
+  * read lists no dir, probes no path, reads no footer, starts no job and
+  * never reads a file the commit did not record — a failed or retried
+  * task's file included. A data dir without a record is an error.
   *
   * Rename is atomic on HDFS-like filesystems (and the local FS used here);
   * an object-store deployment would swap this class for a real catalog —
@@ -190,10 +200,10 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   // --- pointer / manifest ------------------------------------------------
 
-  def latest: Option[Long] = {
-    val p = new Path(root, "_latest")
-    if (!fs.exists(p)) None else Some(readText(p).trim.toLong)
-  }
+  /** The latest snapshot id: one open of `_latest`, no existence probe. */
+  def latest: Option[Long] =
+    try Some(readText(new Path(root, "_latest")).trim.toLong)
+    catch { case _: java.io.FileNotFoundException => None }
 
   private def readText(path: Path): String = {
     val in = fs.open(path)
@@ -254,18 +264,38 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
                                  val files: Map[Int, Seq[(String, Long)]]) {
     def bytes(keep: Int => Boolean): Long =
       files.collect { case (b, parts) if keep(b) => parts.map(_._2).sum }.sum
+  }
 
-    /** Spark read of the recorded files of the buckets `keep` passes, by
-      * name, with `basePath` at the dir so the `bucket` partition column
-      * comes back from the layout: no listing, no existence check, no
-      * footer inference, and a file the record does not name is never
-      * read. None when no such bucket holds a file. */
-    def read(keep: Int => Boolean): Option[DataFrame] = {
-      val paths = files.toSeq.filter(f => keep(f._1)).sortBy(_._1)
-        .flatMap(_._2).map { case (f, _) => s"$dir/$f" }
-      if (paths.isEmpty) None
-      else Some(spark.read.schema(schema).option("basePath", dir).parquet(paths: _*))
+  /** One side of a fold: a data dir's record, the tag of the snapshot that
+    * wrote it (-1 for the base) and the buckets of it the fold reads. */
+  private final class Side(val tag: Long, val rec: DataRecord, val scope: Int => Boolean) {
+    def bytes: Long = rec.bytes(scope)
+  }
+
+  /** The sides of `sides` holding a file of a bucket `keep` passes, scoped
+    * to those buckets. */
+  private def live(sides: Seq[Side], keep: Int => Boolean): Seq[Side] =
+    sides.map(s => new Side(s.tag, s.rec, b => keep(b) && s.scope(b)))
+      .filter(s => s.rec.files.keys.exists(s.scope))
+
+  /** The recorded files of `sides` as one parquet relation: the columns of
+    * the first side's schema but `bucket`, then the partition columns
+    * `bucket` and `tagCol`, one partition per (bucket, side) in the side's
+    * scope. Built from the records alone ([[RecordIndex]]); the index holds
+    * only the scoped buckets' files, so the relation's input files and size
+    * (Spark's broadcast estimate) are those of the buckets read. */
+  private def relation(sides: Seq[Side], tagCol: String): DataFrame = {
+    val parts = for {
+      s <- sides
+      (b, files) <- s.rec.files.toSeq.sortBy(_._1) if s.scope(b)
+    } yield InternalRow(b, s.tag) -> files.map { case (f, n) =>
+      new FileStatus(n, false, 1, 0L, 0L, fs.makeQualified(new Path(s.rec.dir, f)))
     }
+    val index = new RecordIndex(sides.map(s => new Path(s.rec.dir)),
+      StructType(Seq(StructField("bucket", IntegerType), StructField(tagCol, LongType))), parts)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(sides.head.rec.schema.filterNot(_.name == "bucket")), None, new ParquetFileFormat,
+      Map.empty)(spark))
   }
 
   /** `<dir>/_record.txt` (the `_` prefix keeps parquet listings blind to
@@ -310,6 +340,10 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     sidecarAt.foreach(writeTermSidecar(_, parts.flatMap(p => p.bloom.map(p.bucket -> _)).toMap))
     rec
   }
+
+  /** The `sub` side (`add` or `tomb`) of each delta of `deltas`. */
+  private def deltaSides(deltas: Seq[DeltaRef], sub: String): Seq[Side] =
+    deltas.map(d => new Side(d.tag, record(s"${d.dir}/$sub"), b => d.scope.forall(_(b))))
 
   /** The manifest's base buckets that `keep` passes, grouped by the data
     * dir holding them, in dir order. */
@@ -393,9 +427,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   }
 
   /** Cap on distinct snap dirs the base may fragment across: each distinct
-    * dir is one parquet relation per read (driver-side listing + footer
-    * inference — the round-5 non-scaling-latency lesson, StoreSpec guard),
-    * so partial folds escalate to a full fold past this bound. */
+    * dir is one more record every read opens on the driver, so partial
+    * folds escalate to a full fold past this bound. */
   val maxBaseDirs: Int = 4
 
   /** Bound-tripped chain compaction, BUCKET-LOCAL (Iceberg-style partial
@@ -461,10 +494,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
             sidecarAt.foreach(writeTermSidecar(_, Map.empty))
         }
       consolidate("add", assemble(Map.empty, chain, Some(quietSorted)), Some(consDir))
-      consolidate("tomb", chain
-        .flatMap(d => record(s"${d.dir}/tomb").read(b => quiet(b) && d.scope.forall(_(b))))
-        .map(_.select((deleteKeys :+ "bucket").map(col): _*))
-        .reduceOption(_ unionByName _).map(_.distinct()), None)
+      val tombs = live(deltaSides(chain, "tomb"), quiet)
+      consolidate("tomb", Option.when(tombs.nonEmpty)(
+        relation(tombs, "_ttag").select((deleteKeys :+ "bucket").map(col): _*).distinct()), None)
       val newBase = (0 until numBuckets).map { b =>
         b -> (if (written(b)) s"$baseDir/bucket=$b"
               else if (hot.contains(b)) "" // hot bucket emptied by its tombstones
@@ -581,44 +613,35 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
   private def assemble(base: Map[Int, String], deltas: Seq[DeltaRef],
                        buckets: Option[Seq[Int]]): Option[DataFrame] = {
     val wanted: Int => Boolean = buckets.fold((_: Int) => true)(_.toSet)
-    // ONE relation per base data dir (after a full commit or a full fold
-    // every bucket shares one), not one per bucket
-    val baseDf = baseByDir(base, wanted).flatMap { case (dir, bs) => record(dir).read(bs) }
-      .reduceOption(_ unionByName _)
-    if (deltas.isEmpty) return baseDf
-    def inDelta(d: DeltaRef)(b: Int): Boolean = wanted(b) && d.scope.forall(_(b))
-    def side(sub: String): Seq[(Long, DataFrame)] =
-      deltas.flatMap(d => record(s"${d.dir}/$sub").read(inDelta(d)).map(d.tag -> _))
-    val adds = side("add")
-    val tombs = side("tomb")
-    val tagged = baseDf.map(df => -1L -> df).toSeq ++ adds
-    if (tagged.isEmpty) return None
+    // scoped to the wanted buckets: that is the bucket pruning, before any
+    // scan
+    val adds = live(baseByDir(base, wanted).map { case (dir, bs) => new Side(-1L, record(dir), bs) } ++
+      deltaSides(deltas, "add"), wanted)
+    if (adds.isEmpty) return None
     // Every snapshot in the fold carries the head's column set, or the read
     // fails naming the snapshot: folding to the common columns would drop
     // a column from the whole store because one snapshot lacks it. The
     // schemas are the recorded ones, so the check starts no job.
-    val headCols = tagged.head._2.columns.toSeq
-    tagged.tail.foreach { case (tag, df) =>
-      if (df.columns.toSet != headCols.toSet)
-        sys.error(s"$root: snapshot ${if (tag < 0) "base" else tag.toString} has columns " +
-          s"[${df.columns.mkString(", ")}], the fold's head has [${headCols.mkString(", ")}]")
+    val headCols = adds.head.rec.schema.fieldNames.toSeq
+    adds.tail.foreach { s =>
+      val cols = s.rec.schema.fieldNames
+      if (cols.toSet != headCols.toSet)
+        sys.error(s"$root: snapshot ${if (s.tag < 0) "base" else s.tag.toString} has columns " +
+          s"[${cols.mkString(", ")}], the fold's head has [${headCols.mkString(", ")}]")
     }
-    val rows = tagged.map { case (tag, df) =>
-      df.withColumn("_wtag", lit(tag))
-    }.reduce(_ unionByName _)
+    val rows = relation(adds, "_wtag")
+    val tombs = live(deltaSides(deltas, "tomb"), wanted)
     if (tombs.isEmpty) return Some(rows.drop("_wtag"))
     // tombstone keys renamed `_t_<key>`, so the condition names each side
     val tombKeys = deleteKeys.map("_t_" + _)
-    val tombAll = tombs.map { case (tag, df) =>
-      df.select(deleteKeys.zip(tombKeys).map { case (k, t) => col(k).as(t) }: _*)
-        .withColumn("_ttag", lit(tag))
-    }.reduce(_ unionByName _)
+    val tombAll = relation(tombs, "_ttag")
+      .select(deleteKeys.zip(tombKeys).map { case (k, t) => col(k).as(t) } :+ col("_ttag"): _*)
     val laterTomb = deleteKeys.zip(tombKeys)
       .map { case (k, t) => col(k) <=> col(t) }.reduce(_ && _) &&
       col("_ttag") > col("_wtag")
     // broadcast gate: the recorded bytes of the tombstone files this fold
     // reads (no extra job)
-    val tombBytes = deltas.map(d => record(s"${d.dir}/tomb").bytes(inDelta(d))).sum
+    val tombBytes = tombs.map(_.bytes).sum
     if (tombBytes <= tombBroadcastBytes)
       Some(rows.join(broadcast(tombAll), laterTomb, "left_anti").drop("_wtag"))
     else {

@@ -5,12 +5,13 @@ import scala.concurrent.duration.Duration
 import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.FsWrite
 import graft.Timing.timed
 import graft.model.Page
 import graft.canon.IriCanonicalizer
+import graft.functions.BloomProbe
 import graft.plans.{PatchWriter, QuadDiff}
 import graft.state.{SnapshotStore, TermBloom}
 
@@ -77,6 +78,7 @@ final class QuadLogPipeline(
     maxDeltas: Int = 4) {
 
   import spark.implicits._
+  import QuadLogPipeline.Lineage
 
   graft.Preflight.assertSession(spark) // refuse to run misconfigured
 
@@ -166,11 +168,12 @@ final class QuadLogPipeline(
 
   /** Extend the persisted canonical map with this batch's IRIs.
     *
-    * Returns (view, viewRows, remapped, changed, changedRows):
+    * Returns a [[CanonExtension]]:
     *  - `view`    = the EXTENDED map restricted to (a superset of) the
     *    batch's candidate IRIs — everything the batch rewrite can match.
     *    Churn-sized at ANY accumulated map size, so the rewrite join
-    *    stays a BROADCAST at target scale.
+    *    stays a BROADCAST at target scale. Its row count and whether any
+    *    row maps an id to another canonical come from one action.
     *  - `changed` = exactly the rows that differ from the stored map
     *    (fresh ids + members of clusters a new edge touched) — the canon
     *    store's merge-on-read delta. At bootstrap (empty store) it is the
@@ -194,80 +197,100 @@ final class QuadLogPipeline(
     * invariant that every canonical value is also an id row, which every
     * map this pipeline writes satisfies (see extendChangedGivenFresh).
     * False positives only widen `view`/`oldPruned` by harmless rows that
-    * match nothing in the batch.
+    * match nothing in the batch. The IRI count comes with the IRI
+    * checkpoint's own job; under the collect gate one collect of (id,
+    * xxhash64(id)) feeds both tiers, the bloom built on the driver with
+    * the bits a distributed build sets.
     *
     * A batch with no fresh id (the common churn batch) changes no cluster:
     * its view is `oldPruned` itself, and the whole stored map is never
-    * read. Only a batch with fresh ids reads it, once: below
+    * read, nor planned. Only a batch with fresh ids reads it, once: below
     * [[canonCheckpointBytes]] (id, canonical, sig) is materialized one
     * time and both the map and the signature scan of
     * [[IriCanonicalizer.verifiedPairsStored]] derive from it. */
-  private[graft] def extendedCanonMap(rawQuads: DataFrame)
-      : (DataFrame, Long, Option[DataFrame], DataFrame, Long) = {
-    val iris = timed("canon.iris")(candidateIris(rawQuads).localCheckpoint())
-    canon.read() match {
-      case None =>
-        val cm = timed("canonicalMap")(
-          IriCanonicalizer.canonicalMap(spark, iris).localCheckpoint())
-        lastCanonBuckets = None
-        val n = cm.count()
-        (cm, n, None, cm, n)
-      case Some(full) =>
-        // Persisted signatures (`sig` column, written by every canon
-        // commit) route extendChangedGivenFresh through
-        // verifiedPairsStored, so no shingle/signature pass over the
-        // accumulated domain ever runs per batch.
-        val stored = full.select("id", "canonical")
-        val nIris = iris.count()
-        // tier 1 — sidecar bucket pruning (collect gate mirrors the remap
-        // scan's: 100k strings ≈ a few MB on the driver)
-        val buckets =
-          if (nIris > canonProbeLimit) None
-          else canon.candidateBuckets(iris.as[String].collect().toSeq)
-        lastCanonBuckets = buckets
-        val oldView = buckets.fold(stored)(bs =>
-          canon.readBuckets(bs).map(_.select("id", "canonical")).getOrElse(stored.limit(0)))
-        // tier 2 — bloom row pruning inside the scan (codegen predicate)
-        val irisBloom = spark.sparkContext.broadcast(
-          graft.functions.BloomProbe.build(
-            iris.select(xxhash64(col("id"))), nIris, factsPruneBloomMaxBits))
-        val oldPruned = timed("canon.oldPruned")(
-          oldView.filter(graft.functions.BloomProbe(irisBloom, xxhash64(col("id"))))
-            .localCheckpoint())
-        irisBloom.unpersist()
-        val fresh = iris.join(oldPruned.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint()
-        if (fresh.isEmpty) (oldPruned, oldPruned.count(), None, oldPruned.limit(0), 0L)
+  private[graft] def extendedCanonMap(rawQuads: DataFrame): CanonExtension = {
+    val seen = Observation("canon.iris")
+    val iris = timed("canon.iris")(
+      candidateIris(rawQuads).observe(seen, count(lit(1)).as("n")).localCheckpoint())
+    val nIris = seen.get("n").asInstanceOf[Long]
+    // the recorded bytes are 0 exactly when a read would find no file
+    val canonBytes = canon.approxDataBytes
+    if (canonBytes == 0) {
+      val cm = timed("canonicalMap")(
+        IriCanonicalizer.canonicalMap(spark, iris).localCheckpoint())
+      lastCanonBuckets = None
+      val (n, nonTrivial) = viewStats(cm)
+      CanonExtension(cm, n, nonTrivial, None, cm, n)
+    } else {
+      // Persisted signatures (`sig` column, written by every canon
+      // commit) route extendChangedGivenFresh through
+      // verifiedPairsStored, so no shingle/signature pass over the
+      // accumulated domain ever runs per batch.
+      lazy val full = canon.read().get
+      // tier 1 — sidecar bucket pruning (collect gate mirrors the remap
+      // scan's: 100k strings ≈ a few MB on the driver); the same collect
+      // gives tier 2 its hashes
+      val (buckets, irisBloom) =
+        if (nIris > canonProbeLimit) (None,
+          BloomProbe.build(iris.select(xxhash64(col("id"))), nIris, factsPruneBloomMaxBits))
         else {
-          // Small stores: materialize the folded map once — the domain
-          // union, the touched-cluster splits, the signature scan and the
-          // remap join all read it, and each lazy read re-runs the
-          // merge-on-read fold. Past the byte gate they go to the store
-          // lazily: a per-batch O(map) materialization is exactly the
-          // cost this path exists to shed.
-          val m =
-            if (canon.approxDataBytes > canonCheckpointBytes) full
-            else timed("canon.readOld")(full.select("id", "canonical", "sig").localCheckpoint())
-          val o = m.select("id", "canonical")
-          // lazy checkpoint: the count materializes it, in one job
-          val changed = IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
-              storedSigs = Some(m.select("id", "sig")))
-            .localCheckpoint(eager = false)
-          val changedRows = timed("canonicalMap")(changed.count())
-          // rewrite view: pruned old rows minus the ones `changed`
-          // replaces, plus the changed rows the batch can actually reference
-          val view = timed("canon.view")(
-            oldPruned.join(changed.select("id"), Seq("id"), "left_anti")
-              .unionByName(changed.join(iris, Seq("id"), "left_semi"))
-              .localCheckpoint())
-          val remapped = o
-            .join(changed.withColumnRenamed("canonical", "rep2"), Seq("id"))
-            .filter(col("canonical") =!= col("rep2"))
-            .select(col("canonical").as("id"), col("rep2").as("canonical"))
-            .distinct()
-          (view, view.count(), Some(remapped), changed, changedRows)
+          val idHashes = iris.select(col("id"), xxhash64(col("id"))).as[(String, Long)].collect()
+          (canon.candidateBuckets(idHashes.map(_._1).toSeq),
+            BloomProbe.onDriver(idHashes.map(_._2), nIris, factsPruneBloomMaxBits))
         }
+      lastCanonBuckets = buckets
+      val oldView = buckets.fold(full.select("id", "canonical"))(bs =>
+        canon.readBuckets(bs).map(_.select("id", "canonical"))
+          .getOrElse(iris.select(col("id"), col("id").as("canonical")).limit(0)))
+      // tier 2 — bloom row pruning inside the scan (codegen predicate); the
+      // action over the pruned rows materializes their lazy checkpoint
+      val bloomB = spark.sparkContext.broadcast(irisBloom)
+      val oldPruned = oldView.filter(BloomProbe(bloomB, xxhash64(col("id"))))
+        .localCheckpoint(eager = false)
+      val (prunedRows, prunedNonTrivial) = timed("canon.oldPruned")(viewStats(oldPruned))
+      bloomB.unpersist()
+      // lazy checkpoint: the count materializes it, in one job
+      val fresh = iris.join(oldPruned.select("id"), Seq("id"), "left_anti")
+        .localCheckpoint(eager = false)
+      if (fresh.count() == 0)
+        CanonExtension(oldPruned, prunedRows, prunedNonTrivial, None, oldPruned.limit(0), 0L)
+      else {
+        // Small stores: materialize the folded map once — the domain
+        // union, the touched-cluster splits, the signature scan and the
+        // remap join all read it, and each lazy read re-runs the
+        // merge-on-read fold. Past the byte gate they go to the store
+        // lazily: a per-batch O(map) materialization is exactly the
+        // cost this path exists to shed.
+        val m =
+          if (canonBytes > canonCheckpointBytes) full
+          else timed("canon.readOld")(full.select("id", "canonical", "sig").localCheckpoint())
+        val o = m.select("id", "canonical")
+        // lazy checkpoint: the count materializes it, in one job
+        val changed = IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
+            storedSigs = Some(m.select("id", "sig")))
+          .localCheckpoint(eager = false)
+        val changedRows = timed("canonicalMap")(changed.count())
+        // rewrite view: pruned old rows minus the ones `changed`
+        // replaces, plus the changed rows the batch can actually reference
+        val view = oldPruned.join(changed.select("id"), Seq("id"), "left_anti")
+          .unionByName(changed.join(iris, Seq("id"), "left_semi"))
+          .localCheckpoint(eager = false)
+        val (viewRows, nonTrivial) = timed("canon.view")(viewStats(view))
+        val remapped = o
+          .join(changed.withColumnRenamed("canonical", "rep2"), Seq("id"))
+          .filter(col("canonical") =!= col("rep2"))
+          .select(col("canonical").as("id"), col("rep2").as("canonical"))
+          .distinct()
+        CanonExtension(view, viewRows, nonTrivial, Some(remapped), changed, changedRows)
+      }
     }
+  }
+
+  /** A rewrite view's row count and whether some row maps an id to another
+    * canonical (else the rewrite is the identity), from one action. */
+  private def viewStats(view: DataFrame): (Long, Boolean) = {
+    val r = view.agg(count(lit(1)), count(when(col("id") =!= col("canonical"), 1))).head()
+    (r.getLong(0), r.getLong(1) > 0)
   }
 
   /** Canon-map probe gate (same rationale and size as
@@ -298,28 +321,23 @@ final class QuadLogPipeline(
     val out =
       if (!canonicalize) quads
       else {
-        val (view, viewRows, _, _, _) = extendedCanonMap(quads)
-        rewriteIfNonTrivial(quads, view, viewRows)
+        rewriteIfNonTrivial(quads, extendedCanonMap(quads))
       }
     out.withColumn("bucket", contrib.bucketCol(col("url")))
   }
 
   /** identity view -> skip the rewrite joins AND the per-page re-dedup.
-    * `view` is the batch-restricted rewrite view from [[extendedCanonMap]]
+    * The view is the batch-restricted rewrite view from [[extendedCanonMap]]
     * (checkpointed, churn-sized), so both the triviality check and the
     * broadcast gate read the PRUNED size — at target scale the full map is
     * billions of rows (see IriCanonicalizer.broadcastRowLimit) but the
     * view stays batch-sized and the rewrite stays a broadcast join. */
-  private def rewriteIfNonTrivial(quads: DataFrame, view: DataFrame,
-                                  viewRows: Long): DataFrame = {
-    val nonTrivial = viewRows > 0 &&
-      !view.filter(col("id") =!= col("canonical")).isEmpty
+  private def rewriteIfNonTrivial(quads: DataFrame, ext: CanonExtension): DataFrame =
     // every caller feeds extraction output (url-grouped within partitions),
     // so the broadcast path deduplicates with the narrow streaming pass
-    if (nonTrivial) IriCanonicalizer.canonicalizeAttributed(quads, view, viewRows,
+    if (ext.nonTrivial) IriCanonicalizer.canonicalizeAttributed(quads, ext.view, ext.viewRows,
       urlGrouped = true)
     else quads
-  }
 
   /** Raw extraction for one batch — deliberately LAZY (re-evaluated by each
     * consumer: IRI distinct, delta aggregation, store merge). Measured on
@@ -372,10 +390,10 @@ final class QuadLogPipeline(
         // `sig` is persisted at write time (a deterministic function of the
         // id string) so no later batch ever recomputes signatures over the
         // accumulated domain — see extendedCanonMap / verifiedPairsStored.
-        val (view, viewRows, _, changed, _) = extendedCanonMap(raw)
-        canon.commitFull(IriCanonicalizer.withSignatures(changed)
+        val ext = extendedCanonMap(raw)
+        canon.commitFull(IriCanonicalizer.withSignatures(ext.changed)
           .withColumn("bucket", canon.bucketCol(col("id"))), 0L)
-        rewriteIfNonTrivial(raw, view, viewRows)
+        rewriteIfNonTrivial(raw, ext)
       }
     timed("bootstrap.commitContrib")(contrib.commitFull(
       contribData.withColumn("bucket", contrib.bucketCol(col("url"))), 0L))
@@ -390,28 +408,29 @@ final class QuadLogPipeline(
     // measured scaling residual in BENCH.md §Scaling).
     val sBack = facts.read().get
     val patches = sBack.select((lit("+").as("op") +: quadCols.map(col)): _*)
-    // A4: the fingerprint re-check and the metadata count are independent
-    // read-only jobs over inputs the sinks never touch — submitted WITH the
-    // sinks, but settled before the trailer below, which is the externally
-    // visible completion artifact (dump_nquads.sql:75-78 invalidates before
-    // declaring complete). A torn snapshot raises while the trailer,
-    // lineage and epoch are absent.
-    val Seq(_, files: Long, _, added: Long) = fanIn(
+    // A4: the fingerprint re-check and the lineage aggregation are
+    // independent read-only jobs over inputs the sinks never touch —
+    // submitted WITH the sinks, but settled before the trailer below, which
+    // is the externally visible completion artifact (dump_nquads.sql:75-78
+    // invalidates before declaring complete). A torn snapshot raises while
+    // the trailer, lineage and epoch are absent. The quad count is the
+    // patch writer's '+' tally: one line per facts row.
+    val Seq(_, wrote: PatchWriter.Wrote, _, lineage: Seq[Lineage] @unchecked) = fanIn(
       () => timed("bootstrap.recheckFp")(assertSnapshotStable(pages, fp0)),
       () => timed("bootstrap.patchFiles")(
         PatchWriter.write(spark, patches, s"$root/patches/batch_0", checkpoint, maxq)),
       () => graphIdx.commitFull(graphDim(sBack, 0L), 0L),
-      () => timed("bootstrap.addedCount")(sBack.count())) // parquet metadata count
+      () => timed("bootstrap.lineageRows")(lineageRows(epoch, 0L, pages)))
     // dump-report trailer file (dump_nquads.sql:58-83 / sample fixture)
     val isoNow = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
     PatchWriter.writeDumpReport(spark, s"$root/patches/batch_0", checkpoint,
       started = isoNow.format(java.time.Instant.ofEpochMilli(startedAtMs)),
       completed = isoNow.format(java.time.Instant.now()),
-      quadCount = added, fileCount = files)
-    timed("bootstrap.lineage")(writeLineage(epoch, 0L, pages, added, 0L, files))
+      quadCount = wrote.added, fileCount = wrote.files)
+    timed("bootstrap.lineage")(writeLineage(0L, lineage, wrote))
     facts.setEpoch(epoch) // the completion point: incremental reads it
-    BatchResult(0L, added, 0L, files)
+    BatchResult(0L, wrote.added, 0L, wrote.files)
   }
 
   /** (count, order-independent xxhash64 signature) of a page snapshot —
@@ -454,10 +473,10 @@ final class QuadLogPipeline(
       val delta = timed("incr.phase.delta")(signedDelta(newContrib, oldContrib, remap, remapUrls))
       urlBloom.foreach(_.unpersist()) // oldContrib consumers are materialized
       val (patchesC, newFactRows) = timed("incr.phase.transition")(transition(delta))
-      val files = timed("incr.phase.sinks")(
-        sinks(batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, nTouched,
-          deletedUrls))
-      timed("incr.phase.commit")(commit(epoch, batchId, changed, patchesC, files, canonStaged))
+      val (wrote, lineage) = timed("incr.phase.sinks")(
+        sinks(epoch, batchId, checkpoint, patchesC, newFactRows, delta, touchedUrls, nTouched,
+          changed, deletedUrls))
+      timed("incr.phase.commit")(commit(batchId, wrote, lineage, canonStaged))
     } finally touchedUrls.unpersist()
   }
 
@@ -475,7 +494,7 @@ final class QuadLogPipeline(
     val (newContrib, remapPairs, canonStaged) =
       if (!canonicalize) (rawNew, None, false)
       else {
-        val (view, viewRows, remapped, canonChanged, canonChangedRows) = extendedCanonMap(rawNew)
+        val ext = extendedCanonMap(rawNew)
         // STAGED, not committed: the extended map must move atomically with
         // the facts/contrib stores. A crash after an early canon commit but
         // before the batch marker would make the re-run derive remapPairs
@@ -486,16 +505,16 @@ final class QuadLogPipeline(
         // MOR delta: only the CHANGED rows land (tombstones = their ids).
         // A batch with no changed id stages nothing, as the graph index
         // commits nothing without a new graph: canon keeps its snapshot.
-        val stage = canonChangedRows > 0
+        val stage = ext.changedRows > 0
         if (stage) timed("incr.canonStage")(
           canon.stageDelta(
-            additions = IriCanonicalizer.withSignatures(canonChanged)
+            additions = IriCanonicalizer.withSignatures(ext.changed)
               .withColumn("bucket", canon.bucketCol(col("id"))),
-            tombstones = canonChanged.select(col("id"))
+            tombstones = ext.changed.select(col("id"))
               .withColumn("bucket", canon.bucketCol(col("id"))),
-            tombstoneRows = canonChangedRows,
+            tombstoneRows = ext.changedRows,
             id = batchId)) // one map row per id by construction
-        (rewriteIfNonTrivial(rawNew, view, viewRows), remapped, stage)
+        (rewriteIfNonTrivial(rawNew, ext), ext.remapped, stage)
       }
     // Cluster merges are rare so the pair set is usually tiny, but it stays
     // DISTRIBUTED: a semi-join against it (auto-broadcast when small)
@@ -594,7 +613,7 @@ final class QuadLogPipeline(
     val urlBloom =
       if (nTouched <= urlBroadcastKeyLimit || oldInBuckets.columns.isEmpty) None
       else Some(spark.sparkContext.broadcast(
-        graft.functions.BloomProbe.build(
+        BloomProbe.build(
           touchedUrls.select(xxhash64(col("url"))), nTouched,
           factsPruneBloomMaxBits)))
     val oldContrib =
@@ -604,7 +623,7 @@ final class QuadLogPipeline(
         val touched = urlBloom match {
           case None => oldInBuckets.join(broadcast(urls), Seq("url"), "left_semi")
           case Some(b) => oldInBuckets
-            .filter(graft.functions.BloomProbe(b, xxhash64(col("url"))))
+            .filter(BloomProbe(b, xxhash64(col("url"))))
             .join(urls, Seq("url"), "left_semi")
         }
         if (!remapping) touched
@@ -648,12 +667,11 @@ final class QuadLogPipeline(
       .agg(sum("w").as("d"))
       .filter(col("d") =!= 0L)
       .withColumn("bucket", facts.bucketCol(quadKey: _*))
-    val dC = timed("incr.delta") {
-      d.localCheckpoint() // small net-delta set; cuts the extraction lineage
-    }
-    // one action for the bucket list AND the churn count the prune-tier
-    // gate in transition reads
-    val deltaBucketCounts = timed("incr.factBuckets") {
+    // small net-delta set, checkpointed to cut the extraction lineage; ONE
+    // action materializes it and yields the bucket list AND the churn count
+    // the prune-tier gate in transition reads
+    val dC = d.localCheckpoint(eager = false)
+    val deltaBucketCounts = timed("incr.delta") {
       dC.groupBy("bucket").agg(count(lit(1)).as("n")).as[(Int, Long)].collect()
     }
     SignedDelta(newSide, dC, deltaBucketCounts)
@@ -695,10 +713,10 @@ final class QuadLogPipeline(
           .drop("_qh")
       } else {
         val churnBloom = spark.sparkContext.broadcast(
-          graft.functions.BloomProbe.build(
+          BloomProbe.build(
             dC.select(xxhash64(quadKey: _*)), nDelta, factsPruneBloomMaxBits))
         df => df.filter(
-          graft.functions.BloomProbe(churnBloom, xxhash64(quadKey: _*)))
+          BloomProbe(churnBloom, xxhash64(quadKey: _*)))
       }
     val oldFacts = timed("incr.oldFactsScan") {
       pruneKeys(
@@ -712,18 +730,22 @@ final class QuadLogPipeline(
     (patches.localCheckpoint(), newFactRows) // small; read by write + tally
   }
 
-  /** Phase sinks: returns the number of patch files written. */
-  private def sinks(batchId: Long, checkpoint: String, patchesC: DataFrame,
+  /** Phase sinks: returns what the patch writer wrote and the batch's
+    * lineage rows, their counts not yet stamped. */
+  private def sinks(epoch: String, batchId: Long, checkpoint: String, patchesC: DataFrame,
                     newFactRows: DataFrame, delta: SignedDelta, touchedUrls: DataFrame,
-                    nTouched: Long, deletedUrls: Dataset[String]): Long = {
+                    nTouched: Long, changed: Dataset[Page], deletedUrls: Dataset[String])
+      : (PatchWriter.Wrote, Seq[Lineage]) = {
     // Independent jobs over checkpointed/committed inputs and different
     // directories: the IO-bound patch files overlap the compute-bound
     // merges (BENCH.md §Scaling residual: sequential phases idled cores).
     // New graphs only arrive with '+' patches, so the index reads the tiny
     // patchesC. MERGE-ON-READ commits: O(batch) additions + tombstones;
     // coverage holds by construction: every newFactRows quad is in dC, and
-    // every newSide url is in touchedUrls.
-    val Seq(files: Long, _*) = fanIn(
+    // every newSide url is in touchedUrls. The lineage aggregation over the
+    // changed pages reads neither.
+    val Seq(wrote: PatchWriter.Wrote, _, _, _, lineage: Seq[Lineage] @unchecked) =
+      fanIn(
       () => timed("incr.patchFiles")(
         PatchWriter.write(spark, patchesC, s"$root/patches/batch_$batchId", checkpoint, maxq)),
       () => appendGraphIndex(patchesC, batchId),
@@ -736,25 +758,22 @@ final class QuadLogPipeline(
         additions = delta.newSide.join(deletedUrls.toDF("url"), Seq("url"), "left_anti"),
         tombstones = touchedUrls,
         tombstoneRows = nTouched,
-        id = batchId))) // touchedUrls is a union-distinct
-    files
+        id = batchId)), // touchedUrls is a union-distinct
+      () => timed("incr.lineageRows")(lineageRows(epoch, batchId, changed)))
+    (wrote, lineage)
   }
 
-  /** Phase commit. */
-  private def commit(epoch: String, batchId: Long, changed: Dataset[Page],
-                     patchesC: DataFrame, files: Long, canonStaged: Boolean): BatchResult = {
-    // one job for both tallies (checkpointed patches)
-    val tallies = timed("incr.tallies")(patchesC.groupBy("op").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val added = tallies.getOrElse("+", 0L)
-    val deleted = tallies.getOrElse("-", 0L)
+  /** Phase commit: the tallies are the patch writer's (its per-graph
+    * count pass counts per op), so the phase starts no Spark job. */
+  private def commit(batchId: Long, wrote: PatchWriter.Wrote,
+                     lineage: Seq[Lineage], canonStaged: Boolean): BatchResult = {
     // lineage BEFORE the marker: a crash before the marker recomputes the
     // batch, whose re-run replaces the batch's lineage file (every lineage
     // sum counts the batch once); after the marker, recovery replays the
     // pointer flips below.
     // The marker-guarded finalize flips ALL staged stores (canon, when it
     // staged — it moves atomically with the data it canonicalizes).
-    timed("incr.lineage")(writeLineage(epoch, batchId, changed, added, deleted, files))
+    timed("incr.lineage")(writeLineage(batchId, lineage, wrote))
     FsWrite.atomic(hfs, markerPath, batchId.toString)
     if (canonStaged) canon.finalizeCommit(batchId)
     facts.finalizeCommit(batchId)
@@ -763,7 +782,7 @@ final class QuadLogPipeline(
     // bases, superseded full rewrites) — disk stays O(live state), not
     // O(history). Single writer, everything finalized: safe window.
     Seq(canon, facts, contrib, graphIdx).foreach(_.vacuum())
-    BatchResult(batchId, added, deleted, files)
+    BatchResult(batchId, wrote.added, wrote.deleted, wrote.files)
   }
 
   /** Runs each sink on [[sinkEc]] and returns their results in argument
@@ -921,24 +940,29 @@ final class QuadLogPipeline(
   // --- lineage / checkpoint --------------------------------------------------
 
   /** Per-bucket lineage rows (BASELINE.json: url range, warc_ts watermark,
-    * quad counts per partition), collected from one aggregation and written
-    * as the batch's record file `lineage/batch_<id>`. A re-run of the batch
-    * replaces the file, so no row is ever counted twice. */
-  private def writeLineage(epoch: String, batchId: Long,
-                           pages: Dataset[Page], added: Long, deleted: Long,
-                           files: Long): Unit = {
-    val rows = pages.toDF()
+    * quad counts per partition) of `pages`, collected from one aggregation
+    * that can run beside the sinks; their counts are 0 until
+    * [[writeLineage]] stamps the batch's. */
+  private def lineageRows(epoch: String, batchId: Long,
+                          pages: Dataset[Page]): Seq[Lineage] =
+    pages.toDF()
       .groupBy(contrib.bucketCol(col("url")).as("partitionId"))
       .agg(min("url").as("urlLo"), max("url").as("urlHi"),
         max("warc_ts").as("watermark"))
       .withColumn("epoch", lit(epoch))
       .withColumn("batchId", lit(batchId))
-      .withColumn("added", lit(added))
-      .withColumn("deleted", lit(deleted))
-      .withColumn("files", lit(files))
-      .as[QuadLogPipeline.Lineage].collect().sortBy(_.partitionId)
-    graft.RecordFile.write(hfs, new Path(lineageDir, s"batch_$batchId"), rows.toSeq)
-  }
+      .withColumn("added", lit(0L))
+      .withColumn("deleted", lit(0L))
+      .withColumn("files", lit(0L))
+      .as[Lineage].collect().sortBy(_.partitionId).toSeq
+
+  /** The batch's lineage rows, stamped with what its patch writer wrote, as
+    * its record file `lineage/batch_<id>`. A re-run of the batch replaces
+    * the file, so no row is ever counted twice. */
+  private def writeLineage(batchId: Long, rows: Seq[Lineage],
+                           wrote: PatchWriter.Wrote): Unit =
+    graft.RecordFile.write(hfs, new Path(lineageDir, s"batch_$batchId"),
+      rows.map(_.copy(added = wrote.added, deleted = wrote.deleted, files = wrote.files)))
 
   /** Every lineage row of the current epoch, read on the driver from the
     * batches' record files (no Spark job). */
@@ -980,6 +1004,14 @@ object QuadLogPipeline {
 }
 
 final case class BatchResult(batchId: Long, added: Long, deleted: Long, files: Long)
+
+/** [[QuadLogPipeline.extendedCanonMap]]'s answer: the batch's rewrite
+  * view with its row count and whether it maps any id to another canonical,
+  * the superseded-representative pairs, and the changed map rows with their
+  * count. */
+private[graft] final case class CanonExtension(view: DataFrame, viewRows: Long, nonTrivial: Boolean,
+                                               remapped: Option[DataFrame], changed: DataFrame,
+                                               changedRows: Long)
 
 /** The delta phase's hand-off: new contribution rows, the checkpointed
   * non-zero per-quad support delta `dC` and its rows per facts bucket. */

@@ -17,7 +17,8 @@ import java.util.concurrent.atomic.AtomicLong
   * pins, or asks which paths it listed, probed, opened, created, renamed
   * or made dirs of ([[CountingFileSystem.pathsDuring]]). The status probes
   * the local `listStatus` makes of each child count as part of the one
-  * listing, as on a file system that lists in one call. Counts are
+  * listing, and the probe the local `open` makes of its file as part of
+  * the open, as on a file system that lists or opens in one call. Counts are
   * JVM-wide, and specs run one at a time. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
@@ -27,19 +28,21 @@ class CountingFileSystem extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     if (pathToFile(f).isDirectory) note(DirListing, f)
-    inListing.set(true)
-    try super.listStatus(f) finally inListing.set(false)
+    inOneCall.set(true)
+    try super.listStatus(f) finally inOneCall.set(false)
   }
   override def getContentSummary(f: Path): ContentSummary = {
     bump(ContentSummaries); super.getContentSummary(f)
   }
   override def exists(f: Path): Boolean = { note(StatusProbes, f); super.exists(f) }
   override def getFileStatus(f: Path): FileStatus = {
-    if (!inListing.get) note(StatusProbes, f)
+    if (!inOneCall.get) note(StatusProbes, f)
     super.getFileStatus(f)
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    note(Opens, f); super.open(f, bufferSize)
+    note(Opens, f)
+    inOneCall.set(true)
+    try super.open(f, bufferSize) finally inOneCall.set(false)
   }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
                       blockSize: Long, progress: Progressable): FSDataOutputStream = {
@@ -60,7 +63,7 @@ class CountingFileSystem extends RawLocalFileSystem {
     note(Mkdirs, f); super.mkdirs(f, permission)
   }
 
-  private val inListing = ThreadLocal.withInitial[Boolean](() => false)
+  private val inOneCall = ThreadLocal.withInitial[Boolean](() => false)
 
   private def note(kind: String, f: Path): Unit = {
     bump(kind)

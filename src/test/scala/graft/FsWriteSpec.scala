@@ -49,6 +49,25 @@ class FsWriteSpec extends AnyFunSuite {
     assert(read(fs, p) == "gen_2")
   }
 
+  test("atomic leaves no temp file when the write throws or the rename fails") {
+    val fs = localFs()
+    val dir = tmp()
+    val p = new Path(dir, "_pointer")
+    FsWrite.atomic(fs, p, "gen_1")
+    intercept[RuntimeException] {
+      FsWrite.atomic(fs, p) { out => out.write("gen_2 torn".getBytes(UTF_8)); sys.error("boom") }
+    }
+    assert(read(fs, p) == "gen_1")
+    assert(new java.io.File(dir).list().toSeq == Seq("_pointer"))
+    // a non-empty directory at the target: the rename fails, the directory
+    // (the previous content) stays, and so does nothing else
+    val occupied = new Path(dir, "_commit")
+    write(FsWrite.create(fs, new Path(occupied, "occupant")), "held")
+    intercept[java.io.IOException](FsWrite.atomic(fs, occupied, "1"))
+    assert(read(fs, new Path(occupied, "occupant")) == "held")
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("_commit", "_pointer"))
+  }
+
   test("atomic over an existing file on file: replaces it without deleting it first") {
     // a delete-then-rename leaves no file between its two steps, so a crash
     // there loses a pointer the store cannot rebuild; one rename(2) cannot

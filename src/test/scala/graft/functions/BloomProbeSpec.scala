@@ -29,6 +29,19 @@ class BloomProbeSpec extends GraftSpec {
     b.unpersist()
   }
 
+  test("the driver-built filter over collected xxhash64 keys has the distributed build's bits") {
+    // the canon prune collects (id, xxhash64(id)) and builds on the driver
+    val ids = (0 until 3000).map(i => s"http://kg.example.org/e$i").toDS().toDF("id").repartition(5)
+    val hashes = ids.select(xxhash64(col("id"))).as[Long].collect()
+    for (maxBits <- Seq(1L << 27, 1L << 12)) {
+      val dist = BloomProbe.build(ids.select(xxhash64(col("id"))), 3000L, maxBits)
+      val local = BloomProbe.onDriver(hashes, 3000L, maxBits)
+      assert(local.k == dist.k && local.bits.sameElements(dist.bits), s"maxBits=$maxBits")
+    }
+    assert(BloomProbe.onDriver(Nil, 0L, 1L << 20).bits
+      .sameElements(BloomProbe.build(ids.limit(0).select(xxhash64(col("id"))), 0L, 1L << 20).bits))
+  }
+
   test("saturation past maxBits degrades FPR but never membership") {
     // cap the filter far below 10 bits/key: ~1.6 bits/key here
     val n = 10000L

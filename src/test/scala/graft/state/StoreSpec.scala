@@ -521,37 +521,113 @@ class SnapshotStoreSpec extends GraftSpec {
   }
 
   test("planning read() and readBuckets() over a delta chain starts no Spark job") {
-    // every data dir records its schema and part files, so planning a read
-    // runs no footer-inference job (one per relation before: base + 2 x 2
-    // delta sides here) and asks the filesystem nothing about a data dir:
-    // counted on the counting file system, no dir listing and no content
-    // summary (the read and the size gate used to probe and list every
-    // bucket dir); and a data dir that lost its record fails loudly
-    val local = tmpDir("store13")
-    val st = new SnapshotStore(spark, s"countfs://$local", numBuckets = 16,
-      deleteKeys = Seq("k"), maxDeltas = 8)
-    def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
-      .withColumn("bucket", st.bucketCol(col("k")))
-    st.commitFull(rows((1 to 200).map(i => s"k$i" -> i)), 0L)
-    for (b <- 1 to 2) {
-      val adds = rows((1 to 40).map(i => s"k${i * b}" -> (1000 * b + i)))
-      st.commitDelta(adds, adds.select("k", "bucket"), adds.count(), b.toLong)
-    }
-    var jobs = -1
-    val calls = CountingFileSystem.during {
-      jobs = jobsRunBy {
-        st.read().get
-        st.readBuckets(Seq(0, 5, 9)).get
-        assert(st.approxDataBytes > 0)
+    // every data dir records its schema and part files, and a read is a
+    // file index built from those records, so planning a read runs no
+    // footer-inference or listing job (Spark lists in a job past 32 paths:
+    // 3 jobs at 64 buckets before) and asks the filesystem nothing about a
+    // data dir: counted on the counting file system, no dir listing, no
+    // status probe and no content summary at 16, 64 or 256 buckets; and a
+    // data dir that lost its record fails loudly
+    for (nb <- Seq(16, 64, 256)) {
+      val local = tmpDir(s"store13_$nb")
+      val st = new SnapshotStore(spark, s"countfs://$local", numBuckets = nb,
+        deleteKeys = Seq("k"), maxDeltas = 8)
+      def rows(kv: Seq[(String, Int)]) = kv.toDF("k", "v")
+        .withColumn("bucket", st.bucketCol(col("k")))
+      st.commitFull(rows((1 to 2 * nb).map(i => s"k$i" -> i)), 0L)
+      for (b <- 1 to 2) {
+        val adds = rows((1 to nb / 2).map(i => s"k${i * b}" -> (1000 * b + i)))
+        st.commitDelta(adds, adds.select("k", "bucket"), adds.count(), b.toLong)
+      }
+      var jobs = -1
+      val calls = CountingFileSystem.during {
+        jobs = jobsRunBy {
+          st.read().get
+          st.readBuckets(Seq(0, 5, 9)).get
+          assert(st.approxDataBytes > 0)
+        }
+      }
+      assert(jobs == 0, s"read planning at $nb buckets ran $jobs Spark jobs")
+      assert(Seq(CountingFileSystem.DirListing, CountingFileSystem.StatusProbes,
+        CountingFileSystem.ContentSummaries).forall(calls(_) == 0),
+        s"read planning at $nb buckets called $calls")
+      assert(st.read().get.count() == 2 * nb)
+      if (nb == 16) {
+        assert(new java.io.File(s"$local/snap_${f"${0L}%014d"}/_record.txt").delete())
+        val e = intercept[RuntimeException](st.read())
+        assert(e.getMessage.contains("no data record"), e.getMessage)
       }
     }
-    assert(jobs == 0, s"read planning ran $jobs Spark jobs")
-    assert(calls(CountingFileSystem.DirListing) == 0 &&
-      calls(CountingFileSystem.ContentSummaries) == 0, s"read planning called $calls")
-    assert(st.read().get.count() == 200)
-    assert(new java.io.File(s"$local/snap_${f"${0L}%014d"}/_record.txt").delete())
-    val e = intercept[RuntimeException](st.read())
-    assert(e.getMessage.contains("no data record"), e.getMessage)
+  }
+
+  test("a bucket read through the record index equals the explicit-path fold, row for row") {
+    // Oracle: the read this store made before its file index — one
+    // explicit-path spark.read.parquet per data dir of the bucket, each
+    // tagged with its snapshot, unioned, then the same temporal anti-join —
+    // over a chain with a bucket-local fold (a scoped delta) and deletes.
+    // A filter on `bucket` over the whole read must prune through the
+    // index too: Spark never re-checks a partition column after the scan.
+    val root = tmpDir("storeidx")
+    val nb = 4
+    val st = new SnapshotStore(spark, root, numBuckets = nb,
+      deleteKeys = Seq("k"), maxDeltas = 2, foldBucketBytes = 50000L)
+    def rows(kv: Seq[(String, String)]) = kv.toDF("k", "v")
+      .withColumn("bucket", st.bucketCol(col("k")))
+    val keys = (1 to 120).map(i => s"k$i")
+    val kb = rows(keys.map(_ -> "x")).select("k", "bucket").as[(String, Int)].collect().toMap
+    val hot = keys.filter(kb(_) == kb("k1"))
+    val quiet = keys.filterNot(kb(_) == kb("k1"))
+    val prnd = new scala.util.Random(11)
+    def fat(): String = Array.fill(10000)((' ' + prnd.nextInt(94)).toChar).mkString
+    def explicitPathFold(b: Int): Seq[(String, String, Int)] = {
+      def text(p: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+      val id = text(s"$root/_latest").trim.toLong
+      val lines = text(s"$root/manifest_${f"$id%014d"}.txt").split("\n").toSeq
+      val baseDir = lines.filterNot(_.startsWith("D\t")).map(_.split("\t", -1))
+        .collectFirst { case Array(bb, p) if bb.toInt == b && p.nonEmpty => p.stripSuffix(s"/bucket=$b") }
+      val deltas = lines.filter(_.startsWith("D\t")).map(_.split("\t", -1)).collect {
+        case Array(_, tag, dir, scope) if scope == "*" || scope.split(",").contains(b.toString) =>
+          tag.toLong -> dir
+      }
+      def read(dir: String): Option[org.apache.spark.sql.DataFrame] = {
+        val rec = text(s"$dir/_record.txt").split("\n").toSeq
+        val files = rec.tail.map(_.split("\t", 3)).collect { case Array(bb, _, f) if bb.toInt == b => s"$dir/$f" }
+        if (files.isEmpty) None
+        else Some(spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(rec.head)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]).option("basePath", dir).parquet(files: _*))
+      }
+      val tagged = (baseDir.flatMap(read).map(_.withColumn("_wtag", lit(-1L))) ++
+        deltas.flatMap { case (t, d) => read(s"$d/add").map(_.withColumn("_wtag", lit(t))) })
+        .reduceOption(_ unionByName _)
+      val tombs = deltas.flatMap { case (t, d) =>
+        read(s"$d/tomb").map(_.select(col("k").as("_t_k"), lit(t).as("_ttag")))
+      }.reduceOption(_ unionByName _)
+      tagged.fold(Seq.empty[(String, String, Int)]) { r =>
+        tombs.fold(r)(t => r.join(broadcast(t), col("k") <=> col("_t_k") && col("_ttag") > col("_wtag"),
+          "left_anti")).select("k", "v", "bucket").as[(String, String, Int)].collect().toSeq.sorted
+      }
+    }
+    def check(when: String): Unit = (0 until nb).foreach { b =>
+      val want = explicitPathFold(b)
+      assert(want.nonEmpty, s"bucket $b empty $when")
+      def got(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v", "bucket").as[(String, String, Int)].collect().toSeq.sorted
+      assert(got(st.readBuckets(Seq(b)).get) == want, s"readBuckets($b) $when")
+      assert(got(st.read().get.filter(col("bucket") === b)) == want, s"read() filtered to $b $when")
+    }
+    st.commitFull(rows(keys.map(_ -> "base")), 0L)
+    check("after the full commit")
+    var scoped = false
+    for (t <- 1 to 5) {
+      val adds = hot.take(6).map(k => k -> s"${fat()}$t") ++ quiet.slice(3 * t, 3 * t + 3).map(_ -> s"q$t")
+      val deletes = quiet.slice(40 + 2 * t, 42 + 2 * t)
+      st.commitDelta(rows(adds), (adds.map(_._1) ++ deletes).toDF("k")
+        .withColumn("bucket", st.bucketCol(col("k"))), adds.size + deletes.size, t.toLong)
+      scoped ||= java.nio.file.Files.readString(java.nio.file.Paths.get(
+        s"$root/manifest_${f"${t.toLong}%014d"}.txt")).linesIterator.exists(l => l.startsWith("D\t") && !l.endsWith("\t*"))
+      check(s"after delta $t")
+    }
+    assert(scoped, "no bucket-local fold left a scoped delta")
   }
 
   test("a part file the commit did not record is never read: reads and the fold") {

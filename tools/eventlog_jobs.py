@@ -2,7 +2,7 @@
 """Summarize a Spark event log by job call site.
 
 Usage:
-    python3 tools/eventlog_jobs.py LOG [--jobs A-B] [--list] [--top N]
+    python3 tools/eventlog_jobs.py LOG [--jobs A-B] [--list | --gaps] [--top N]
 
 LOG is one event-log file (plain, or zstd-compressed with a `.zst`/`.zstd`
 suffix) or a rolling event-log directory. For the jobs in the window (all
@@ -11,7 +11,11 @@ number of jobs and tasks and the tasks' run, CPU and deserialize seconds,
 then the totals and the window's wall time during which no job was running
 (from the first job's submission to the last job's completion). `--list`
 prints one line per job instead (id, start offset, duration, tasks, call
-site), which is how to find the id window of one engine call.
+site), which is how to find the id window of one engine call. `--gaps`
+prints one line per job with the time no job was running just before it
+(from the latest completion of the jobs submitted before it, in the window),
+then the window's total, which is the summary's no-job time: it attributes
+that time to the call site that ended each gap.
 
 Getting a log from the benchmark without changing it: SparkConf reads every
 `spark.*` JVM system property, so
@@ -85,6 +89,8 @@ def main():
     ap.add_argument("log")
     ap.add_argument("--jobs", help="inclusive job-id window A-B")
     ap.add_argument("--list", action="store_true", help="one line per job")
+    ap.add_argument("--gaps", action="store_true",
+                    help="one line per job with the no-job time before it")
     ap.add_argument("--top", type=int, default=30, help="call sites shown")
     args = ap.parse_args()
 
@@ -111,6 +117,20 @@ def main():
     if not window:
         sys.exit(f"no jobs with ids in {lo}-{hi}")
     t0 = jobs[window[0]]["start"]
+
+    if args.gaps:
+        busy_until, total = None, 0
+        for j in sorted(window, key=lambda j: (jobs[j]["start"], j)):
+            job = jobs[j]
+            gap = 0 if busy_until is None else max(0, job["start"] - busy_until)
+            total += gap
+            print(f"{j:6d} {(job['start'] - t0) / 1e3:9.3f}s  idle before {gap / 1e3:7.3f}s  "
+                  f"{job['site']}")
+            end = job["end"] or job["start"]
+            busy_until = end if busy_until is None else max(busy_until, end)
+        print(f"no job running {total / 1e3:.3f}s before the {len(window)} jobs "
+              f"{window[0]}-{window[-1]}")
+        return
 
     if args.list:
         for j in window:
