@@ -101,6 +101,16 @@ object PatchWriter {
     })
   }
 
+  private val BatchDir = "batch_(\\d+)".r
+
+  /** The `batch_<id>` dirs under the patches root `root`, as (id, dir) in
+    * id order, each dir named under `root` as given; none when `root` is
+    * absent. One listing. */
+  def batches(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    (try fs.listStatus(root).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+      .map(_.getPath.getName).collect { case n @ BatchDir(id) => id.toLong -> new Path(root, n) }
+      .sortBy(_._1)
+
   /** What a [[write]] wrote: its file count and its body lines per op
     * (`+`, `-`). */
   final case class Wrote(files: Long, lines: Map[String, Long]) {

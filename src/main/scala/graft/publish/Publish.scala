@@ -2,7 +2,7 @@ package graft.publish
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 import graft.{FsWrite, RecordFile}
 import graft.plans.PatchWriter
@@ -169,8 +169,6 @@ object ZipPublisher {
     * sidecars and staged temps, and the resource dump documents. */
   private val OwnedPrefixes = Seq("part_", "manifest_part_", "resource-dump")
 
-  private val BatchDir = "batch_(\\d+)".r
-
   /** The zips a consumer sees in one graph: every def zip, plus the end
     * part of the latest run that built into the graph (none when that
     * run's windows all closed). `zips` carries each zip's run. */
@@ -270,11 +268,10 @@ object ZipPublisher {
     * without a write record, and windows each graph's new files together
     * with its live end part's members, whose md5s it re-reads from their
     * batches' records: a file rewritten through the writer under the same
-    * name changes the end's identity and rebuilds it (J3). Files of graphs
-    * outside `graphIndex`, when given, are not built, and once the run's
-    * mark passes their batch no later run builds them either. Zip bytes
-    * are written by executors, one task per group of planned zips; the
-    * driver only plans and writes the small XML set.
+    * name changes the end's identity and rebuilds it (J3). The records
+    * decide which graphs a run builds: every graph with a new file or a
+    * live end. Zip bytes are written by executors, one task per group of
+    * planned zips; the driver only plans and writes the small XML set.
     *
     * The publish record `sinkDir/_published` ([[PublishRecord]]), driver
     * record files, is the only source of truth about the sink. Each run
@@ -299,7 +296,6 @@ object ZipPublisher {
   def publish(spark: SparkSession, patchDir: String, sinkDir: String,
               filesPerZip: Int = 1000,
               publishUrl: String = "http://example.com/",
-              graphIndex: Option[DataFrame] = None,
               maxZipBytes: Long = MaxZipBytes,
               maxItemsInList: Int = MaxItemsInList,
               onBuiltForTests: Seq[ZipInfo] => Unit = _ => (),
@@ -328,13 +324,9 @@ object ZipPublisher {
 
     // what to window, from write records only: the new batches' files and
     // the members of each graph's live end part (the end of the graph's
-    // latest run), refreshed from their batches' records. When the
-    // pipeline's graph-folder index is supplied, the fan-out is driven by
-    // it (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
-    val inIndex: String => Boolean = graphIndex.fold((_: String) => true)(
-      _.select("g_b64").distinct().as[String].collect().toSet)
+    // latest run), refreshed from their batches' records
     val liveEnds: Map[String, Seq[Member]] = rec.ends.collect {
-      case (g, (r, ms)) if r == lastRun(g) && inIndex(g) => g -> ms
+      case (g, (r, ms)) if r == lastRun(g) => g -> ms
     }
     val pf = new Path(patchDir).getFileSystem(hadoopConf)
     val patchRoot = pf.makeQualified(new Path(patchDir))
@@ -344,10 +336,9 @@ object ZipPublisher {
     val (through, candidates) = timed("publish.batchRecords") {
       // the batches past the mark, in id order, up to the first without a
       // record: its files may not all be written yet
-      val ids = (try pf.listStatus(patchRoot).toSeq catch { case _: java.io.FileNotFoundException => Nil })
-        .map(_.getPath.getName).collect { case BatchDir(id) => id.toLong }.filter(_ > rec.mark).sorted
-      val fresh: Seq[(Long, Seq[(String, Member)])] = ids.iterator
-        .map(id => id -> recordOf(new Path(patchRoot, s"batch_$id")))
+      val fresh: Seq[(Long, Seq[(String, Member)])] = PatchWriter.batches(pf, patchRoot)
+        .filter(_._1 > rec.mark).iterator
+        .map { case (id, dir) => id -> recordOf(dir) }
         .takeWhile(_._2.isDefined).map { case (id, ms) => id -> ms.get }.toSeq
       // an end member its batch's record no longer lists keeps its recorded row
       val current: Map[String, Member] = liveEnds.values.flatten.map(m => batchDirOf(m.resource))
@@ -355,7 +346,7 @@ object ZipPublisher {
         .map { case (_, m) => m.resource -> m }.toMap
       val candidates: Map[String, Seq[Member]] =
         (liveEnds.toSeq.flatMap { case (g, ms) => ms.map(m => g -> current.getOrElse(m.resource, m)) } ++
-          fresh.flatMap(_._2).filter(gm => inIndex(gm._1)))
+          fresh.flatMap(_._2))
           .groupMap(_._1)(_._2).map { case (g, ms) => g -> ms.sortBy(_.resource) }
       (fresh.lastOption.fold(rec.mark)(_._1), candidates)
     }

@@ -714,11 +714,11 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       .foreach(p => fs.delete(p, false))
   } }
 
-  /** Epoch handshake (reference vql_started_at.txt, T6 cascading reset). */
-  def epoch: Option[String] = {
-    val p = new Path(root, "_epoch")
-    if (!fs.exists(p)) None else Some(readText(p).trim)
-  }
+  /** Epoch handshake (reference vql_started_at.txt, T6 cascading reset):
+    * one open of `_epoch`, no existence probe. */
+  def epoch: Option[String] =
+    try Some(readText(new Path(root, "_epoch")).trim)
+    catch { case _: java.io.FileNotFoundException => None }
   def setEpoch(e: String): Unit = FsWrite.atomic(fs, new Path(root, "_epoch"), e)
 
   /** Wipe the store (epoch-mismatch reset — split-graphs.sh:171's `rm -Rf`,

@@ -19,11 +19,11 @@ import graft.state.{SnapshotStore, TermBloom}
   * reference's three chained components (quad-logger -> graph-splitter ->
   * resourcesync-generator) as one incremental batch job over page snapshots.
   *
-  * State layout (all four stores are [[SnapshotStore]]s: bucketed,
-  * atomically committed; contrib, facts, canon AND the graph index commit
-  * MERGE-ON-READ deltas per batch — O(batch) writes with bounded chains,
-  * folded bucket-locally — NO store-sized write exists in any per-batch
-  * path; full commits happen only at bootstrap):
+  * State layout (all three stores are [[SnapshotStore]]s: bucketed,
+  * atomically committed; contrib, facts and canon commit MERGE-ON-READ
+  * deltas per batch — O(batch) writes with bounded chains, folded
+  * bucket-locally — NO store-sized write exists in any per-batch path;
+  * full commits happen only at bootstrap):
   *
   *  - `contrib`  — per-PAGE quad contributions, bucketed by xxhash64(url).
   *                 The unit of incremental work: a batch only ever touches
@@ -44,13 +44,16 @@ import graft.state.{SnapshotStore, TermBloom}
   *                 facts are rewritten and the change surfaces as ordinary
   *                 -/+ patches (remap flow in [[incremental]]).
   *
+  * The graph-folder index is no store: [[graphIndex]] derives it from the
+  * patch batches' write records.
+  *
   * An [[incremental]] batch runs as named phases, each timed as
   * `incr.phase.<name>`, with work proportional to |changed pages|, not
   * |table|: derive (extract, extend and stage the canon map, canonicalize),
   * touchedUrls and touch (the touched urls and their stored contributions),
   * delta (the signed per-quad support delta), transition (vs the pruned
-  * facts store), sinks (patch files, graph index, staged facts and contrib
-  * deltas, concurrently) and commit (tallies, lineage, marker, flips).
+  * facts store), sinks (patch files, staged facts and contrib deltas,
+  * concurrently) and commit (tallies, lineage, marker, flips).
   *
   * Checkpoint/resume (reference T2, vql_lastlogsuffix.txt): each batch
   * writes its lineage — per-bucket url ranges, the watermark and counts —
@@ -108,44 +111,29 @@ final class QuadLogPipeline(
   val canon = new SnapshotStore(spark, s"$root/canon", math.min(numBuckets, 8),
     deleteKeys = Seq("id"), maxDeltas = maxDeltas,
     termExpr = Some(array(col("id"))))
-  /** A8 — first-seen graph dimension (split-graphs.sh:99-102's
-    * vql_graph_folder.csv): (g, g_b64, firstBatch), insert-if-absent per
-    * batch; the publish stage's per-graph fan-out reads it. MERGE-ON-READ
-    * like every other store: a batch commits only its NEW graphs as a
-    * delta (most batches: none — a metadata-only manifest), never a
-    * rewrite of the accumulated dimension. At thousands of graphs the old
-    * read+commitFull was invisible; at the millions the per-domain graph
-    * model implies, it was the last O(accumulated) write in a batch. */
-  val graphIdx = new SnapshotStore(spark, s"$root/graphidx", 1,
-    deleteKeys = Seq("g"), maxDeltas = maxDeltas)
   private val lineageDir = s"$root/lineage"
+  private val patchesDir = s"$root/patches"
   private val quadCols = QuadDiff.quadCols
 
-  /** The accumulated graph-folder index (empty DataFrame before bootstrap). */
-  def graphIndex: DataFrame =
-    graphIdx.read().map(_.select("g", "g_b64", "firstBatch"))
-      .getOrElse(spark.emptyDataFrame)
-
-  private def graphDim(withG: DataFrame, batchId: Long): DataFrame =
-    withG.select(col("g")).distinct()
-      .withColumn("g_b64", base64(col("g").cast("binary")))
-      .withColumn("firstBatch", lit(batchId))
-      .withColumn("bucket", lit(0))
-
-  /** Per-batch insert-if-absent as a MOR delta: additions = graphs first
-    * seen this batch (anti-joined against the accumulated index — a READ
-    * of the small dimension, never a rewrite); tombstones = the same keys
-    * (the coverage contract; they match nothing, being new). A batch with
-    * no new graphs commits nothing: the index is committed on its own,
-    * outside the commit marker, and no batch reads its `latest`. */
-  private def appendGraphIndex(withG: DataFrame, batchId: Long): Unit = {
-    val gs = graphDim(withG, batchId)
-    val existing = graphIdx.read().map(_.select("g"))
-      .getOrElse(sys.error("graph index missing: bootstrap first"))
-    // lazy checkpoint: the count materializes it, in one job
-    val fresh = gs.join(existing, Seq("g"), "left_anti").localCheckpoint(eager = false)
-    val n = fresh.count()
-    if (n > 0) graphIdx.commitDelta(fresh, fresh.select("g", "bucket"), n, batchId)
+  /** A8 — the graph-folder index (split-graphs.sh:99-102's
+    * vql_graph_folder.csv): (g, g_b64, firstBatch), each graph with the
+    * first committed batch that wrote a patch file of it. Built on the
+    * driver from the committed batches' write records, with no Spark job:
+    * one listing of the patches root and one record read per batch. `g`
+    * is `g_b64` decoded; the writer encodes it with Spark's unwrapped
+    * `base64`, so the round trip is exact. Empty before bootstrap. */
+  def graphIndex: DataFrame = {
+    val committed = facts.latest.getOrElse(-1L)
+    val firstBatch = PatchWriter.batches(hfs, new Path(patchesDir)).filter(_._1 <= committed)
+      .flatMap { case (id, dir) =>
+        PatchWriter.readRecord(hfs, dir)
+          .getOrElse(sys.error(s"committed patch batch $dir has no write record"))
+          .map(_.g_b64 -> id)
+      }
+      .groupMapReduce(_._1)(_._2)(math.min)
+    firstBatch.toSeq.sorted.map { case (b64, id) =>
+      (new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"), b64, id)
+    }.toDF("g", "g_b64", "firstBatch")
   }
 
   // --- extraction front-end ------------------------------------------------
@@ -361,16 +349,19 @@ final class QuadLogPipeline(
     * scale the deserialized-row cache was the memory-bandwidth bottleneck,
     * and at target scale caching the corpus is impossible regardless.
     *
-    * Recovery is a re-run: bootstrap resets every store first. Its
-    * completion point is `facts/_epoch`, written last — after the trailer
-    * and lineage — so a dump that failed (an INVALID fingerprint re-check,
-    * a sink error, a crash) leaves no epoch and [[incremental]] refuses to
-    * run on top of it. */
+    * Recovery is a re-run: bootstrap resets every store, the patch
+    * batches and the lineage first (split-graphs.sh:171's cascading
+    * `rm -Rf`), so no batch of an earlier epoch is published on top of the
+    * new dump. Its completion point is `facts/_epoch`, written last —
+    * after the trailer and lineage — so a dump that failed (an INVALID
+    * fingerprint re-check, a sink error, a crash) leaves no epoch and
+    * [[incremental]] refuses to run on top of it. */
   def bootstrap(pages: Dataset[Page], epoch: String, checkpoint: String): BatchResult = {
     val startedAtMs = System.currentTimeMillis()
-    contrib.reset(); facts.reset(); canon.reset(); graphIdx.reset()
-    hfs.delete(new Path(lineageDir), true) // lineage rows are per epoch
-    if (hfs.exists(markerPath)) hfs.delete(markerPath, false)
+    contrib.reset(); facts.reset(); canon.reset()
+    // patch batches and lineage rows are per epoch
+    Seq(patchesDir, lineageDir).foreach(d => hfs.delete(new Path(d), true))
+    hfs.delete(markerPath, false)
     // A4 (vql_check_trx, dump_nquads.sql:75-78, 98-143): fingerprint the
     // input snapshot at the START of the dump; re-checked before the
     // completion trailer — a drifting source (concurrent inserts/deletes
@@ -401,13 +392,8 @@ final class QuadLogPipeline(
       facts.commitFull(supportCounts(contrib.read().get), 0L, assumePartitioned = true))
     // Patches dump from the COMMITTED facts parquet (cheap columnar scans —
     // measured: sourcing it from the `supports` plan re-ran the whole
-    // support aggregation once per PatchWriter pass), overlapped with the
-    // graph-index commit: independent sinks, different directories, so one
-    // sink's serialized write syscalls run under the other's compute
-    // (sequential phases left the other cores idle during each write — the
-    // measured scaling residual in BENCH.md §Scaling).
-    val sBack = facts.read().get
-    val patches = sBack.select((lit("+").as("op") +: quadCols.map(col)): _*)
+    // support aggregation once per PatchWriter pass).
+    val patches = facts.read().get.select((lit("+").as("op") +: quadCols.map(col)): _*)
     // A4: the fingerprint re-check and the lineage aggregation are
     // independent read-only jobs over inputs the sinks never touch —
     // submitted WITH the sinks, but settled before the trailer below, which
@@ -415,16 +401,15 @@ final class QuadLogPipeline(
     // invalidates before declaring complete). A torn snapshot raises while
     // the trailer, lineage and epoch are absent. The quad count is the
     // patch writer's '+' tally: one line per facts row.
-    val Seq(_, wrote: PatchWriter.Wrote, _, lineage: Seq[Lineage] @unchecked) = fanIn(
+    val Seq(_, wrote: PatchWriter.Wrote, lineage: Seq[Lineage] @unchecked) = fanIn(
       () => timed("bootstrap.recheckFp")(assertSnapshotStable(pages, fp0)),
       () => timed("bootstrap.patchFiles")(
-        PatchWriter.write(spark, patches, s"$root/patches/batch_0", checkpoint, maxq)),
-      () => graphIdx.commitFull(graphDim(sBack, 0L), 0L),
+        PatchWriter.write(spark, patches, s"$patchesDir/batch_0", checkpoint, maxq)),
       () => timed("bootstrap.lineageRows")(lineageRows(epoch, 0L, pages)))
     // dump-report trailer file (dump_nquads.sql:58-83 / sample fixture)
     val isoNow = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
-    PatchWriter.writeDumpReport(spark, s"$root/patches/batch_0", checkpoint,
+    PatchWriter.writeDumpReport(spark, s"$patchesDir/batch_0", checkpoint,
       started = isoNow.format(java.time.Instant.ofEpochMilli(startedAtMs)),
       completed = isoNow.format(java.time.Instant.now()),
       quadCount = wrote.added, fileCount = wrote.files)
@@ -503,8 +488,8 @@ final class QuadLogPipeline(
         // rewritten. Staging keeps canon.read() on the OLD snapshot until
         // the single marker-guarded finalize in commit flips all three.
         // MOR delta: only the CHANGED rows land (tombstones = their ids).
-        // A batch with no changed id stages nothing, as the graph index
-        // commits nothing without a new graph: canon keeps its snapshot.
+        // A batch with no changed id stages nothing: canon keeps its
+        // snapshot.
         val stage = ext.changedRows > 0
         if (stage) timed("incr.canonStage")(
           canon.stageDelta(
@@ -739,16 +724,14 @@ final class QuadLogPipeline(
     // Independent jobs over checkpointed/committed inputs and different
     // directories: the IO-bound patch files overlap the compute-bound
     // merges (BENCH.md §Scaling residual: sequential phases idled cores).
-    // New graphs only arrive with '+' patches, so the index reads the tiny
-    // patchesC. MERGE-ON-READ commits: O(batch) additions + tombstones;
+    // MERGE-ON-READ commits: O(batch) additions + tombstones;
     // coverage holds by construction: every newFactRows quad is in dC, and
     // every newSide url is in touchedUrls. The lineage aggregation over the
     // changed pages reads neither.
-    val Seq(wrote: PatchWriter.Wrote, _, _, _, lineage: Seq[Lineage] @unchecked) =
+    val Seq(wrote: PatchWriter.Wrote, _, _, lineage: Seq[Lineage] @unchecked) =
       fanIn(
       () => timed("incr.patchFiles")(
-        PatchWriter.write(spark, patchesC, s"$root/patches/batch_$batchId", checkpoint, maxq)),
-      () => appendGraphIndex(patchesC, batchId),
+        PatchWriter.write(spark, patchesC, s"$patchesDir/batch_$batchId", checkpoint, maxq)),
       () => timed("incr.mergeFacts")(facts.stageDelta(
         additions = newFactRows.withColumn("bucket", facts.bucketCol(quadKey: _*)),
         tombstones = delta.dC.select((quadKey :+ col("bucket")): _*),
@@ -781,7 +764,7 @@ final class QuadLogPipeline(
     // expire snapshots the just-finalized commits unreferenced (folded
     // bases, superseded full rewrites) — disk stays O(live state), not
     // O(history). Single writer, everything finalized: safe window.
-    Seq(canon, facts, contrib, graphIdx).foreach(_.vacuum())
+    Seq(canon, facts, contrib).foreach(_.vacuum())
     BatchResult(batchId, wrote.added, wrote.deleted, wrote.files)
   }
 
@@ -912,13 +895,11 @@ final class QuadLogPipeline(
   private def markerPath = new Path(root, "_commit")
   private def hfs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The marker's batch id: one open, with no existence check before it. */
   private def commitMarker: Option[Long] = {
-    if (!hfs.exists(markerPath)) None
-    else {
-      val in = hfs.open(markerPath)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+    val in = try hfs.open(markerPath)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong) finally in.close()
   }
 
   /** Replay pointer flips for a batch whose marker was written but whose

@@ -13,8 +13,44 @@ import java.nio.file.{Files, Paths}
   * the pipeline's internal stores. */
 class ConsumerSpec extends GraftSpec {
   import spark.implicits._
+  import ConsumerSpec.consumeSink
 
-  private def consumeSink(sink: String): Set[graft.model.Quad] = {
+  test("published artifacts alone reconstruct the exact graph state (A7, consumer-side)") {
+    val root = tmpDir("consumer_root")
+    val sink = tmpDir("consumer_sink")
+    val n = 120L
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 8, canonicalize = true)
+    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000")
+    for (snap <- 1 to 2) {
+      val changed = spark.createDataset(
+        ExpectedKg.changedIndices(n, snap).map(PageGen.pageFor(_, snap)))
+      val deleted = spark.createDataset(
+        ExpectedKg.deletedIndices(n, snap).map(PageGen.urlFor))
+      pipe.incremental(snap.toLong, f"2024010${snap + 1}%d000000", changed, deleted)
+    }
+    // publish every batch dir; small zips + a tiny sitemap cap so the
+    // consumer also exercises the index layering
+    val zips = ZipPublisher.publish(spark, s"$root/patches", sink,
+      filesPerZip = 5, maxItemsInList = 4)
+    assert(zips.nonEmpty)
+
+    val reconstructed = consumeSink(sink)
+    val engineState = pipe.currentQuads
+      .as[graft.model.Quad].collect().toSet
+    assert(reconstructed == engineState,
+      s"consumer state diverged: extra=${(reconstructed -- engineState).take(3)} " +
+        s"missing=${(engineState -- reconstructed).take(3)}")
+    assert(engineState.nonEmpty)
+    // and it equals the closed-form corpus state too (independent oracle)
+    val expected = ExpectedKg.canonicalQuadSet(n, 2).map(q =>
+      graft.model.Quad(q.s, q.p, q.oLex, q.oKind, q.oDtype, q.oLang, q.g))
+    assert(reconstructed == expected)
+  }
+}
+
+object ConsumerSpec extends org.scalatest.Assertions {
+  /** The graph state a consumer rebuilds from the sink alone. */
+  def consumeSink(sink: String): Set[graft.model.Quad] = {
     val wellKnown = Paths.get(sink, ".well-known", "resourcesync")
     assert(Files.exists(wellKnown), "source description must exist")
     val capaRx = """<loc>([^<]+)</loc>""".r
@@ -60,37 +96,5 @@ class ConsumerSpec extends GraftSpec {
       }
     }
     state.toSet
-  }
-
-  test("published artifacts alone reconstruct the exact graph state (A7, consumer-side)") {
-    val root = tmpDir("consumer_root")
-    val sink = tmpDir("consumer_sink")
-    val n = 120L
-    val pipe = new QuadLogPipeline(spark, root, numBuckets = 8, canonicalize = true)
-    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "e1", "00000000000000")
-    for (snap <- 1 to 2) {
-      val changed = spark.createDataset(
-        ExpectedKg.changedIndices(n, snap).map(PageGen.pageFor(_, snap)))
-      val deleted = spark.createDataset(
-        ExpectedKg.deletedIndices(n, snap).map(PageGen.urlFor))
-      pipe.incremental(snap.toLong, f"2024010${snap + 1}%d000000", changed, deleted)
-    }
-    // publish every batch dir; small zips + a tiny sitemap cap so the
-    // consumer also exercises the index layering
-    val zips = ZipPublisher.publish(spark, s"$root/patches", sink,
-      filesPerZip = 5, maxItemsInList = 4, graphIndex = Some(pipe.graphIndex))
-    assert(zips.nonEmpty)
-
-    val reconstructed = consumeSink(sink)
-    val engineState = pipe.currentQuads
-      .as[graft.model.Quad].collect().toSet
-    assert(reconstructed == engineState,
-      s"consumer state diverged: extra=${(reconstructed -- engineState).take(3)} " +
-        s"missing=${(engineState -- reconstructed).take(3)}")
-    assert(engineState.nonEmpty)
-    // and it equals the closed-form corpus state too (independent oracle)
-    val expected = ExpectedKg.canonicalQuadSet(n, 2).map(q =>
-      graft.model.Quad(q.s, q.p, q.oLex, q.oKind, q.oDtype, q.oLang, q.g))
-    assert(reconstructed == expected)
   }
 }

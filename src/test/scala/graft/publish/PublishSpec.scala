@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
 class PublishSpec extends GraftSpec {
   import spark.implicits._
 
-  test("per-graph fan-out is driven by the pipeline's graph-folder index (A8)") {
+  test("graph-folder index == the bootstrap's patch graph dirs (A8)") {
     val root = tmpDir("publish3")
     val pipe = new QuadLogPipeline(spark, root, numBuckets = 4,
       canonicalize = false, maxq = 40)
@@ -23,14 +23,6 @@ class PublishSpec extends GraftSpec {
     val dirGraphs = new java.io.File(s"$root/patches/batch_0").listFiles()
       .filter(_.isDirectory).map(_.getName.stripPrefix("g_b64=")).toSet
     assert(idx.select("g_b64").collect().map(_.getString(0)).toSet == dirGraphs)
-
-    // publishing restricted to ONE indexed graph publishes only that graph
-    val one = idx.limit(1)
-    val sink = tmpDir("publish3_sink")
-    val out = ZipPublisher.publish(spark, s"$root/patches", sink,
-      filesPerZip = 1000, graphIndex = Some(one))
-    val g = one.select("g_b64").head().getString(0)
-    assert(out.nonEmpty && out.forall(_.graph_b64 == g))
   }
 
   // --- ZipPublisher scenarios (reference test_zipsynchronizer.py:25-94) ---

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.GraftSpec
 import graft.plans.QuadDiff
+import graft.publish.ConsumerSpec.consumeSink
 import graft.sources.{ExpectedKg, PageGen}
 import graft.extract.TextExtractor
 import org.apache.spark.sql.functions._
@@ -376,13 +377,68 @@ class PipelineSpec extends GraftSpec {
 
   test("epoch reset (T6): new epoch wipes and re-derives downstream state") {
     val root = tmpDir("graft_epoch")
+    val n = 30L
     val pipe = new QuadLogPipeline(spark, root, numBuckets = 4, canonicalize = false)
-    pipe.bootstrap(PageGen.snapshot(spark, 30, 0), "epoch-1", "00000000000000")
+    pipe.bootstrap(PageGen.snapshot(spark, n, 0), "epoch-1", "00000000000000")
     assert(pipe.facts.epoch.contains("epoch-1"))
-    val s1 = PageGen.snapshot(spark, 30, 1)
+    for (snap <- 1 to 2) pipe.incremental(snap.toLong, f"2024010${snap + 1}%d000000",
+      spark.createDataset(ExpectedKg.changedIndices(n, snap).map(PageGen.pageFor(_, snap))),
+      spark.createDataset(ExpectedKg.deletedIndices(n, snap).map(PageGen.urlFor)))
+    val s1 = PageGen.snapshot(spark, n, 1)
     pipe.bootstrap(s1, "epoch-2", "00000000000001") // cascading reset
     assert(pipe.facts.epoch.contains("epoch-2"))
     assert(QuadDiff.diff(pipe.currentQuads, pipe.extractedQuads(s1)).count() == 0)
+    // the reset takes epoch-1's patch batches with it: a publish into a
+    // fresh sink serves the new dump alone, not epoch-1's batch 2 on top
+    Seq(1, 2).foreach(b => assert(!new java.io.File(s"$root/patches/batch_$b").exists(),
+      s"epoch-1's patch batch $b is left"))
+    val sink = tmpDir("graft_epoch_sink")
+    graft.publish.ZipPublisher.publish(spark, s"$root/patches", sink, filesPerZip = 5)
+    assert(consumeSink(sink) == pipe.currentQuads.as[graft.model.Quad].collect().toSet)
+    assert(!new java.io.File(s"$root/graphidx").exists())
+  }
+
+  test("graphIndex is (g, min batch) over the patch files' graph headers") {
+    val root = tmpDir("graft_graph_index")
+    val pipe = new QuadLogPipeline(spark, root, numBuckets = 4, canonicalize = true, maxq = 40)
+    val s0 = PageGen.snapshot(spark, 10, 0)
+    pipe.bootstrap(s0, "e1", "00000000000000")
+    def graphOf(url: String) = url.substring(0, url.indexOf('/', "https://".length))
+    val boot = s0.collect().sortBy(_.url)
+    val known = boot.map(p => graphOf(p.url)).toSet
+    // batch 1 re-sends two bootstrap pages and adds the pages of two hosts
+    // the bootstrap lacked; batch 2 adds one more such host
+    val newPages = (10L until 500L).filterNot(i => known(graphOf(PageGen.urlFor(i))))
+      .groupBy(i => graphOf(PageGen.urlFor(i))).values.map(_.min).toSeq.sorted.take(3)
+    assert(newPages.size == 3)
+    pipe.incremental(1L, "20240102000000",
+      spark.createDataset(boot.take(2).toSeq ++ newPages.take(2).map(PageGen.pageFor(_, 0))),
+      spark.emptyDataset[String])
+    pipe.incremental(2L, "20240103000000",
+      spark.createDataset(newPages.drop(2).map(PageGen.pageFor(_, 0))), spark.emptyDataset[String])
+
+    var idx: org.apache.spark.sql.DataFrame = null
+    assert(jobsRunBy { idx = pipe.graphIndex } == 0, "graphIndex started a Spark job")
+    val rows = idx.as[(String, String, Long)].collect().toSet
+    // every patch file's `# graph` header, with its graph dir and batch
+    val onDisk = for {
+      b <- new java.io.File(s"$root/patches").listFiles().toSeq
+      g <- b.listFiles().toSeq if g.isDirectory
+      f <- g.listFiles().toSeq if f.getName.startsWith("rdf_out_")
+    } yield {
+      val header = java.nio.file.Files.readAllLines(f.toPath).get(1)
+      assert(header.startsWith("# graph          "), s"$f: $header")
+      (header.stripPrefix("# graph          "), g.getName.stripPrefix("g_b64="),
+        b.getName.stripPrefix("batch_").toLong)
+    }
+    val want = onDisk.groupMapReduce(t => (t._1, t._2))(_._3)(math.min)
+      .map { case ((g, b64), batch) => (g, b64, batch) }.toSet
+    assert(rows == want)
+    newPages.zip(Seq(1L, 1L, 2L)).foreach { case (i, batch) =>
+      val g = graphOf(PageGen.urlFor(i))
+      assert(rows.exists(r => r._1 == g && r._3 == batch), s"$g: $rows")
+    }
+    assert(!new java.io.File(s"$root/graphidx").exists())
   }
 
   test("bootstrap resets lineage with the stores: the watermark is the new epoch's") {
@@ -506,17 +562,18 @@ class PipelineSpec extends GraftSpec {
     // fresh IRI: it reads no whole canon map, checkpoints no empty canon
     // delta or remap set, plans its store reads without inference jobs,
     // writes its deltas in as many tasks as cores, builds contrib's term
-    // sidecar in its write tasks (no read-back job), with no new graph
-    // commits nothing to the graph index and, with no changed canon row,
-    // stages nothing in the canon store. It counts no row the driver
+    // sidecar in its write tasks (no read-back job), keeps no graph index
+    // (it is derived from the write records) and, with no changed canon
+    // row, stages nothing in the canon store. It counts no row the driver
     // already has: the IRI count rides on the IRI checkpoint, one collect
     // feeds the canon prune's buckets and bloom, one action each gives the
     // view's count and triviality and the fresh-id test, the delta's bucket
     // tally materializes its checkpoint, and the op tallies come from the
-    // patch writer's count pass. Measured here: 44 jobs; the same batch ran
+    // patch writer's count pass. Measured here: 41 jobs; the same batch ran
     // 70 before those cuts, 54 with the read-back, 53 with canon's
-    // empty-delta check and 52 with those counts (adaptive execution's
-    // map-stage jobs count too).
+    // empty-delta check, 52 with those counts and 44 with the graph-index
+    // store's anti-join and count (adaptive execution's map-stage jobs
+    // count too).
     val root = tmpDir("graft_jobs")
     val pipe = new QuadLogPipeline(spark, root, numBuckets = 16, canonicalize = true)
     val s0 = PageGen.snapshot(spark, N, 0)
@@ -529,7 +586,7 @@ class PipelineSpec extends GraftSpec {
     }
     assert(!new java.io.File(s"$root/canon/snap_${f"${1L}%014d"}").exists(),
       "the batch brought a fresh IRI: the canon store took a data delta")
-    assert(jobs <= 44, s"a churn batch ran $jobs Spark jobs")
+    assert(jobs <= 41, s"a churn batch ran $jobs Spark jobs")
     val kept = s0.filter(p => !dropped.contains(p.url))
     assert(QuadDiff.diff(pipe.currentQuads, pipe.extractedQuads(kept)).count() == 0)
   }

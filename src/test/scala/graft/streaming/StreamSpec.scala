@@ -37,11 +37,12 @@ class StreamSpec extends GraftSpec {
     assert(QuadDiff.diff(pipe.currentQuads, expected).count() == 0)
 
     // and the whole streamed changelog publishes end-to-end: zips + the
-    // ResourceSync metadata set over every committed batch dir, fanned out
-    // by the pipeline's graph index (three reference stages glued)
+    // ResourceSync metadata set over every committed batch dir, each
+    // published graph one of the pipeline's graph index (three reference
+    // stages glued)
     val sink = tmpDir("stream_sink")
     val zips = graft.publish.ZipPublisher.publish(spark, s"$root/patches", sink,
-      filesPerZip = 5, graphIndex = Some(pipe.graphIndex))
+      filesPerZip = 5)
     assert(zips.nonEmpty)
     assert(new java.io.File(s"$sink/.well-known/resourcesync").exists())
     val pubGraphs = zips.map(_.graph_b64).toSet
